@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.CorpusFile
 
@@ -16,39 +16,76 @@ object ClusterJob {
       totalBytes: Long, uniqueBytes: Long,
       candidatePairs: Long, verifiedPairs: Long, clusters: Long)
 
-  /** Compute-or-load a stage table WITH the per-phase wall + process-CPU
-    * metrics rows (reference: the per-phase throughput block of
-    * backup.log, src/do_backup.c:112-131). Only a FRESHLY COMPUTED stage
-    * appends its rows — a resumed (read-back) stage must not pollute the
-    * run log with near-zero phantom phases. Known (accepted) window: a
-    * crash BETWEEN a stage's _SUCCESS commit and its metrics append loses
-    * that stage's throughput rows — the resume never recomputes, so the
-    * timing is genuinely gone; metrics are a run log, not part of the
-    * resumability contract.
+  /** The run log of one public call: each freshly computed stage's wall
+    * and process-CPU rows (reference: the per-phase throughput block of
+    * backup.log, src/do_backup.c:112-131) plus the call's report blocks,
+    * kept in memory and appended in ONE write when the call ends
+    * ([[RunLog.apply]]). A resumed (read-back) stage logs nothing, so a
+    * resume never pollutes the log with near-zero phantom phases. The
+    * write runs from a `finally`: a call that throws still logs every
+    * stage it committed; a hard kill loses that call's rows — the resume
+    * never recomputes a committed stage, so its timing is gone. Metrics
+    * are a run log, not part of the resumability contract.
     */
-  private def instrumentedStage(spark: SparkSession, root: String,
-      name: String, runId: String)(f: => DataFrame): DataFrame = {
-    val osBean = java.lang.management.ManagementFactory
+  private final class RunLog(spark: SparkSession, root: String,
+      runId: String) {
+    private val rows =
+      scala.collection.mutable.ArrayBuffer.empty[TableIO.Metric]
+    private val osBean = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    val fresh = !TableIO.committed(s"$root/$name")
-    val c0 = osBean.getProcessCpuTime
-    val t0 = System.nanoTime()
-    val df = TableIO.stage(spark, root, name, runId)(f)
-    if (fresh)
-      TableIO.appendMetrics(spark, root, runId, name, Seq(
-        "wall_sec" -> (System.nanoTime() - t0) / 1e9,
-        "cpu_sec" -> (osBean.getProcessCpuTime - c0) / 1e9))
-    df
+
+    def add(stage: String, kv: (String, Double)*): Unit = {
+      val ts = new java.sql.Timestamp(System.currentTimeMillis())
+      kv.foreach { case (m, v) => rows += TableIO.Metric(stage, m, v, ts) }
+    }
+
+    /** Compute-or-load a stage table ([[TableIO.stage]]), logging its
+      * wall/cpu rows when this call computes it. */
+    def stage(name: String)(f: => DataFrame): DataFrame = {
+      val fresh = !TableIO.committed(s"$root/$name")
+      val c0 = osBean.getProcessCpuTime
+      val t0 = System.nanoTime()
+      val df = TableIO.stage(spark, root, name, runId)(f)
+      if (fresh)
+        add(name,
+          "wall_sec" -> (System.nanoTime() - t0) / 1e9,
+          "cpu_sec" -> (osBean.getProcessCpuTime - c0) / 1e9)
+      df
+    }
+
+    def flush(): Unit =
+      if (rows.nonEmpty) TableIO.appendMetrics(spark, root, runId, rows.toSeq)
+  }
+
+  private object RunLog {
+    /** Run `body` with a fresh log and write the log when it ends, also
+      * when it throws (a failing write is then suppressed into the
+      * original exception). */
+    def apply[T](spark: SparkSession, root: String, runId: String)(
+        body: RunLog => T): T = {
+      val log = new RunLog(spark, root, runId)
+      var failure: Throwable = null
+      try body(log)
+      catch { case t: Throwable => failure = t; throw t }
+      finally {
+        try log.flush()
+        catch {
+          case t: Throwable if failure != null => failure.addSuppressed(t)
+        }
+      }
+    }
   }
 
   def run(corpus: Dataset[CorpusFile], root: String, runId: String,
-      cfg: DedupConfig = DedupConfig()): Summary = {
+      cfg: DedupConfig = DedupConfig()): Summary =
+    RunLog(corpus.sparkSession, root, runId)(runCore(corpus, cfg, _))
+
+  private def runCore(corpus: Dataset[CorpusFile], cfg: DedupConfig,
+      log: RunLog): Summary = {
     val spark = corpus.sparkSession
     import spark.implicits._
-
-    def stage(name: String)(f: => DataFrame): DataFrame =
-      instrumentedStage(spark, root, name, runId)(f)
+    import log.stage
 
     // 1. featurize → signatures + chunk tables (content dropped here)
     lazy val featurized = DedupPipeline.featurize(corpus, cfg).toDF().persist()
@@ -68,7 +105,7 @@ object ClusterJob {
     }
 
     // 3. recipe with duplicate marking + container ids
-    val recipe = stage("recipe") {
+    stage("recipe") {
       DedupPipeline.recipe(
         chunks.drop("_lineage").as[ChunkRow],
         packed.drop("_lineage").as[PackedChunk])
@@ -90,19 +127,25 @@ object ClusterJob {
       ConnectedComponents.run(signatures.select($"fileId"), edges, cfg.ccMaxIter)
     }
 
-    // 7. metrics
-    val files = signatures.count()
-    val chunkStats = chunks.agg(
-      count(lit(1)), sum($"size")).as[(Long, Long)].head()
-    val uniqueStats = unique.agg(
-      count(lit(1)), sum($"size")).as[(Long, Long)].head()
+    // 7. metrics: ONE query over the committed tables, each tagged by
+    // source so a single aggregate reads every count and size sum
+    def tagged(t: Int, df: DataFrame, v: Column) =
+      df.select(lit(t).as("t"), v.cast("long").as("v"))
+    def cnt(t: Int) = count(when($"t" === t, 1))
+    def total(t: Int) = coalesce(sum(when($"t" === t, $"v")), lit(0L))
+    val r = Seq(
+        tagged(0, signatures, lit(null)), tagged(1, chunks, $"size"),
+        tagged(2, unique, $"size"), tagged(3, candidates, lit(null)),
+        tagged(4, verified, lit(null)), tagged(5, clusters, $"clusterId"))
+      .reduce(_ union _)
+      .agg(cnt(0), cnt(1), total(1), cnt(2), total(2), cnt(3), cnt(4),
+        countDistinct(when($"t" === 5, $"v")))
+      .as[(Long, Long, Long, Long, Long, Long, Long, Long)].head()
     val summary = Summary(
-      files = files,
-      chunks = chunkStats._1, uniqueChunks = uniqueStats._1,
-      totalBytes = chunkStats._2, uniqueBytes = uniqueStats._2,
-      candidatePairs = candidates.count(), verifiedPairs = verified.count(),
-      clusters = clusters.agg(countDistinct($"clusterId")).as[Long].head())
-    TableIO.appendMetrics(spark, root, runId, "summary", Seq(
+      files = r._1, chunks = r._2, uniqueChunks = r._4,
+      totalBytes = r._3, uniqueBytes = r._5,
+      candidatePairs = r._6, verifiedPairs = r._7, clusters = r._8)
+    log.add("summary",
       "files" -> summary.files.toDouble,
       "chunks" -> summary.chunks.toDouble,
       "unique_chunks" -> summary.uniqueChunks.toDouble,
@@ -112,7 +155,7 @@ object ClusterJob {
         else summary.totalBytes.toDouble / summary.uniqueBytes),
       "candidate_pairs" -> summary.candidatePairs.toDouble,
       "verified_pairs" -> summary.verifiedPairs.toDouble,
-      "clusters" -> summary.clusters.toDouble))
+      "clusters" -> summary.clusters.toDouble)
     sigsDs.unpersist()
     featurized.unpersist()
     summary
@@ -139,12 +182,17 @@ object ClusterJob {
     * Every stage resumes by skip like the core stages.
     */
   def run(corpus: Dataset[CorpusFile], root: String, runId: String,
-      settings: DestorSettings): Summary = {
-    val spark = corpus.sparkSession
+      settings: DestorSettings): Summary =
+    RunLog(corpus.sparkSession, root, runId) { log =>
+      val summary = runCore(corpus, settings.dedupConfig, log)
+      runDirectives(corpus.sparkSession, root, settings, log)
+      summary
+    }
+
+  private def runDirectives(spark: SparkSession, root: String,
+      settings: DestorSettings, log: RunLog): Unit = {
     import spark.implicits._
-    val summary = run(corpus, root, runId, settings.dedupConfig)
-    def stage(name: String)(f: => DataFrame): DataFrame =
-      instrumentedStage(spark, root, name, runId)(f)
+    import log.stage
     lazy val streamRec = DedupPipeline.streamRecipe(
       spark.read.format(TableIO.Format).load(s"$root/recipe")
         .drop("_lineage"))
@@ -163,18 +211,16 @@ object ClusterJob {
           .select(col("stream"), col("seq"), col("size"), col("containerId"),
             col("dup"), col("write"))
       }
-      // metrics append directly after the stage commit (not after
-      // har_sparse) so the documented crash window stays minimal
       if (rewriteFresh) {
         val rw = marked.agg(
           sum(when(col("dup") && col("write"), 1L).otherwise(0L)),
           sum(when(col("dup") && col("write"), col("size")).otherwise(0L)))
           .head()
-        TableIO.appendMetrics(spark, root, runId, "rewrite", Seq(
+        log.add("rewrite",
           "rewritten_chunks" ->
             (if (rw.isNullAt(0)) 0.0 else rw.getLong(0).toDouble),
           "rewritten_bytes" ->
-            (if (rw.isNullAt(1)) 0.0 else rw.getLong(1).toDouble)))
+            (if (rw.isNullAt(1)) 0.0 else rw.getLong(1).toDouble))
       }
       stage("har_sparse")(Rewrite.harSparseContainers(streamRec,
         settings.rewrite.harUtilizationThreshold,
@@ -212,7 +258,6 @@ object ClusterJob {
     if (settings.simulationLevel == "restore" ||
         settings.simulationLevel == "all")
       stage("restore_sim")(settings.restoreSim(simRecipe()))
-    summary
   }
 
   /** ONE incremental backup job against a chained container store — the
@@ -248,21 +293,21 @@ object ClusterJob {
     */
   def backup(corpus: Dataset[CorpusFile], root: String, runId: String,
       settings: DestorSettings, prevRoot: Option[String] = None,
-      payload: Long = Rewrite.ContainerPayload): TraceJobStats = {
-    val spark = corpus.sparkSession
-    val chunks = instrumentedStage(spark, root, "chunks", runId) {
-      DedupPipeline.chunkTableDF(
-          DedupPipeline.featurize(corpus, settings.dedupConfig).toDF())
-        .select(col("repo"), col("path"), col("commit"), col("chunkIdx"),
-          col("size"), col("fp"), col("zero"))
+      payload: Long = Rewrite.ContainerPayload): TraceJobStats =
+    RunLog(corpus.sparkSession, root, runId) { log =>
+      val chunks = log.stage("chunks") {
+        DedupPipeline.chunkTableDF(
+            DedupPipeline.featurize(corpus, settings.dedupConfig).toDF())
+          .select(col("repo"), col("path"), col("commit"), col("chunkIdx"),
+            col("size"), col("fp"), col("zero"))
+      }
+      backupCore(
+        chunks.drop("_lineage")
+          .select(
+            concat_ws("@", col("repo"), col("path"), col("commit")).as("path"),
+            col("chunkIdx"), col("fp"), col("size")),
+        root, settings, prevRoot, payload, log)
     }
-    backupChunkStream(
-      chunks.drop("_lineage")
-        .select(
-          concat_ws("@", col("repo"), col("path"), col("commit")).as("path"),
-          col("chunkIdx"), col("fp"), col("size")),
-      root, runId, settings, prevRoot, payload)
-  }
 
   /** The chunk-stream core of [[backup]]: one chained backup job over an
     * ALREADY-CHUNKED stream (columns path, chunkIdx, fp, size — the
@@ -275,11 +320,16 @@ object ClusterJob {
     */
   def backupChunkStream(chunkStream: DataFrame, root: String, runId: String,
       settings: DestorSettings, prevRoot: Option[String] = None,
-      payload: Long = Rewrite.ContainerPayload): TraceJobStats = {
+      payload: Long = Rewrite.ContainerPayload): TraceJobStats =
+    RunLog(chunkStream.sparkSession, root, runId)(
+      backupCore(chunkStream, root, settings, prevRoot, payload, _))
+
+  private def backupCore(chunkStream: DataFrame, root: String,
+      settings: DestorSettings, prevRoot: Option[String], payload: Long,
+      log: RunLog): TraceJobStats = {
     val spark = chunkStream.sparkSession
     import spark.implicits._
-    def stage(name: String)(f: => DataFrame): DataFrame =
-      instrumentedStage(spark, root, name, runId)(f)
+    import log.stage
     val (prevIndex, prevSparse, nextCid, backupId) = prevRoot match {
       case Some(p) =>
         require(TableIO.committed(s"$p/index"),
@@ -300,12 +350,13 @@ object ClusterJob {
         }
         // backup id = max surviving "bN" stream label in the prev root's
         // committed recipe table + 1 — the recipe is part of the
-        // resumability contract (metrics are not: the documented crash
-        // window can lose the metrics row, and a guessed id would
-        // duplicate a stream label that expire-by-label later deletes).
+        // resumability contract (metrics are not: a hard kill can lose
+        // the metrics rows, and a guessed id would duplicate a stream
+        // label that expire-by-label later deletes).
         // `final_recipe` is a backup() root; `recipes` an expire() root.
         // Fallback (a zero-row recipe, i.e. a valid empty backup): the
-        // metrics backup_id row. Neither present ⇒ fail loudly.
+        // metrics backup_id row, scanned only then. Neither present ⇒
+        // fail loudly.
         val recTbl = Seq("final_recipe", "recipes")
           .find(t => TableIO.committed(s"$p/$t"))
         val fromLabels = recTbl.flatMap { t =>
@@ -317,7 +368,7 @@ object ClusterJob {
             case r => Some(r.getLong(0) + 1L)
           }
         }
-        val fromMetrics =
+        lazy val fromMetrics =
           try spark.read.format(TableIO.Format).load(s"$p/metrics")
             .filter(col("stage") === "backup" &&
               col("metric") === "backup_id")
@@ -358,8 +409,7 @@ object ClusterJob {
               Long)]
             .toDF("stream", "seq", "path", "fp", "size", "dup", "write",
               "containerId"),
-          prevIndex, Seq.empty[Long].toDF("containerId"),
-          0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)
+          prevIndex, Seq.empty[Long].toDF("containerId"))
       else
         TracePipeline.oneJob(seqd, prevIndex, prevSparse, nextCid, settings,
           payload)
@@ -371,45 +421,25 @@ object ClusterJob {
       if (settings.rewrite.enableHar) stage("har_sparse")(res.sparse).count()
       else 0L
     val fr = finalRec.drop("_lineage")
-    // empty committed recipe = a no-op backup (fresh OR resumed): the
-    // stats aggregates below would decode null sums, and the restore sim
-    // has nothing to replay — zero everything except the backup id
-    val frEmpty = fr.isEmpty
+    // stats rebuilt from the committed stage tables in one aggregate —
+    // identical whether this run computed the stages or resumed them
+    val base = TracePipeline.recipeStats(backupId, fr, nextCid)
+    // an empty committed recipe is a no-op backup (fresh OR resumed): the
+    // restore sim has nothing to replay
     val doSim = (settings.simulationLevel == "restore" ||
-      settings.simulationLevel == "all") && !frEmpty
+      settings.simulationLevel == "all") && base.chunks > 0
     val sim =
-      if (doSim) {
-        val s = stage("restore_sim")(settings.restoreSim(
+      if (doSim)
+        stage("restore_sim")(settings.restoreSim(
             fr.select(col("stream"), col("seq"), col("containerId"),
               col("size"))))
           .select(col("containerReads"), col("speedFactor"), col("cfl"))
           .as[(Long, Double, Double)].head()
-        s
-      } else (0L, 0.0, 0.0)
-    // stats rebuilt from the committed stage tables — identical whether
-    // this run computed the stages or resumed them
-    val (files, nChunks, dataSize, uniqC, uniqS, rwC, rwS) =
-      if (frEmpty) (0L, 0L, 0L, 0L, 0L, 0L, 0L)
-      else fr.agg(
-        countDistinct(col("path")), count(lit(1)),
-        sum(col("size")).cast("long"),
-        sum(when(!col("dup"), 1L).otherwise(0L)),
-        sum(when(!col("dup"), col("size")).otherwise(0L)).cast("long"),
-        sum(when(col("dup") && col("write"), 1L).otherwise(0L)),
-        sum(when(col("dup") && col("write"), col("size")).otherwise(0L))
-          .cast("long"))
-        .as[(Long, Long, Long, Long, Long, Long, Long)].head()
-    val containersWritten =
-      if (frEmpty) 0L
-      else fr.filter(col("write")).agg(max(col("containerId"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0) - nextCid + 1L
-      }
-    val stats = TraceJobStats(backupId, files, nChunks, dataSize,
-      uniqC, uniqS, rwC, rwS, uniqS + rwS, containersWritten, sparseCount,
-      sim._1, sim._2, sim._3)
+      else (0L, 0.0, 0.0)
+    val stats = base.copy(sparse_containers = sparseCount,
+      container_reads = sim._1, speed_factor = sim._2, cfl = sim._3)
     if (freshFinal)
-      TableIO.appendMetrics(spark, root, runId, "backup", Seq(
+      log.add("backup",
         "backup_id" -> stats.backup_id.toDouble,
         "files" -> stats.files.toDouble,
         "chunks" -> stats.chunks.toDouble,
@@ -423,7 +453,7 @@ object ClusterJob {
         "sparse_containers" -> stats.sparse_containers.toDouble,
         "container_reads" -> stats.container_reads.toDouble,
         "speed_factor" -> stats.speed_factor,
-        "cfl" -> stats.cfl))
+        "cfl" -> stats.cfl)
     stats
   }
 
@@ -459,8 +489,15 @@ object ClusterJob {
     */
   def expire(spark: SparkSession, chainRoots: Seq[String],
       expiredBackup: String, outRoot: String, runId: String,
-      payload: Long = Rewrite.ContainerPayload): ExpireStats = {
+      payload: Long = Rewrite.ContainerPayload): ExpireStats =
+    RunLog(spark, outRoot, runId)(
+      expireCore(spark, chainRoots, expiredBackup, outRoot, payload, _))
+
+  private def expireCore(spark: SparkSession, chainRoots: Seq[String],
+      expiredBackup: String, outRoot: String, payload: Long,
+      log: RunLog): ExpireStats = {
     import spark.implicits._
+    import log.stage
     // a chain root is a backup() root (final_recipe) OR a previous
     // expire() root (recipes, multi-label) — retention composes: the
     // compacted root chains into the next backup AND into the next expiry
@@ -471,8 +508,6 @@ object ClusterJob {
         s"chain root $r has no committed final_recipe/recipes stage — " +
           "expire only completed backup()/expire() roots")
     }
-    def stage(name: String)(f: => DataFrame): DataFrame =
-      instrumentedStage(spark, outRoot, name, runId)(f)
     def rec(r: String): DataFrame =
       spark.read.format(TableIO.Format).load(s"$r/${recTable(r).get}")
         .drop("_lineage")
@@ -525,16 +560,15 @@ object ClusterJob {
     val stats = ExpireStats(expired, before._1, after._1, mig._1, mig._2,
       before._2, after._2, index.count())
     if (freshMig) {
-      TableIO.appendMetrics(spark, outRoot, runId, "backup", Seq(
-        "backup_id" -> maxBid.toDouble))
-      TableIO.appendMetrics(spark, outRoot, runId, "expire", Seq(
-          "rows_before" -> stats.rowsBefore.toDouble,
-          "rows_after" -> stats.rowsAfter.toDouble,
-          "migrated_chunks" -> stats.migratedChunks.toDouble,
-          "migrated_bytes" -> stats.migratedBytes.toDouble,
-          "containers_before" -> stats.containersBefore.toDouble,
-          "containers_after" -> stats.containersAfter.toDouble,
-          "index_fps" -> stats.indexFps.toDouble))
+      log.add("backup", "backup_id" -> maxBid.toDouble)
+      log.add("expire",
+        "rows_before" -> stats.rowsBefore.toDouble,
+        "rows_after" -> stats.rowsAfter.toDouble,
+        "migrated_chunks" -> stats.migratedChunks.toDouble,
+        "migrated_bytes" -> stats.migratedBytes.toDouble,
+        "containers_before" -> stats.containersBefore.toDouble,
+        "containers_after" -> stats.containersAfter.toDouble,
+        "index_fps" -> stats.indexFps.toDouble)
     }
     stats
   }

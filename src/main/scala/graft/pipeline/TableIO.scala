@@ -13,40 +13,51 @@ import org.apache.spark.sql.functions._
   *
   * Every stage table carries per-partition lineage: the stage name, the
   * writing task's partition id, and the run id that produced it.
+  *
+  * The `metrics` table is the run log. It is not part of the resumability
+  * contract: a job keeps its rows in memory and appends them in one write
+  * per call ([[appendMetrics]]), so a hard kill loses that call's rows.
   */
 object TableIO {
 
   final val Format = "parquet" // swap for "iceberg" with a catalog
 
+  /** One run-log row: `value` of `metric` for `stage`, recorded at `ts`. */
+  final case class Metric(stage: String, metric: String, value: Double,
+      ts: java.sql.Timestamp)
+
   def committed(path: String): Boolean =
     new java.io.File(s"$path/_SUCCESS").exists()
 
   /** Compute-or-load a stage table. On resume, a committed stage is read
-    * back and its compute is never invoked.
+    * back and its compute is never invoked. A fresh stage is read back
+    * with the schema it just wrote, so only a resumed stage pays for the
+    * footer-inference job; the file source makes every field nullable
+    * either way, so both paths return the same schema.
     */
   def stage(spark: SparkSession, root: String, name: String, runId: String)(
       compute: => DataFrame): DataFrame = {
     val path = s"$root/$name"
-    if (!committed(path)) {
-      compute
+    if (committed(path)) spark.read.format(Format).load(path)
+    else {
+      val out = compute
         .withColumn("_lineage",
           struct(lit(name).as("stage"), spark_partition_id().as("part"),
             lit(runId).as("runId")))
-        .write.mode("overwrite").format(Format).save(path)
+      out.write.mode("overwrite").format(Format).save(path)
+      spark.read.schema(out.schema).format(Format).load(path)
     }
-    spark.read.format(Format).load(path)
   }
 
-  /** Append metrics rows (the run log — reference backup.log/destor.stat,
-    * src/do_backup.c:155-186, src/destor.c:134-213).
+  /** Append run-log rows in one write (the reference's backup.log /
+    * destor.stat, src/do_backup.c:155-186, src/destor.c:134-213). Columns:
+    * metric, value, runId, stage, ts.
     */
   def appendMetrics(spark: SparkSession, root: String, runId: String,
-      stage: String, kv: Seq[(String, Double)]): Unit = {
+      rows: Seq[Metric]): Unit = {
     import spark.implicits._
-    kv.toDF("metric", "value")
-      .withColumn("runId", lit(runId))
-      .withColumn("stage", lit(stage))
-      .withColumn("ts", current_timestamp())
+    rows.toDS()
+      .select($"metric", $"value", lit(runId).as("runId"), $"stage", $"ts")
       .write.mode("append").format(Format).save(s"$root/metrics")
   }
 }

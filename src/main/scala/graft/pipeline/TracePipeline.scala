@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-backup-job output row of [[TracePipeline.run]] — the backup.log
@@ -14,18 +14,16 @@ final case class TraceJobStats(
     stored_size: Long, containers_written: Long, sparse_containers: Long,
     container_reads: Long, speed_factor: Double, cfl: Double)
 
-/** Everything ONE backup job against a cumulative store produces (the
-  * distributed state a follow-up job chains from plus the stats scalars):
-  * the job's final recipe, the upserted fingerprint index, the trimmed
-  * HAR sparse list for the NEXT job, and the backup.log counters.
-  * All three DataFrames are localCheckpoint-materialized — safe to use
-  * after the job's internal caches are freed.
+/** The distributed state ONE backup job against a cumulative store
+  * produces, which a follow-up job chains from: the job's final recipe,
+  * the upserted fingerprint index and the trimmed HAR sparse list for the
+  * NEXT job. Its backup.log counters come from
+  * [[TracePipeline.recipeStats]] over `finalRec`. All three DataFrames
+  * are localCheckpoint-materialized — safe to use after the job's
+  * internal caches are freed.
   */
 final case class TraceJobResult(
-    finalRec: DataFrame, newIndex: DataFrame, sparse: DataFrame,
-    containersWritten: Long, files: Long, chunks: Long, dataSize: Long,
-    uniqueChunks: Long, uniqueSize: Long,
-    rewrittenChunks: Long, rewrittenSize: Long)
+    finalRec: DataFrame, newIndex: DataFrame, sparse: DataFrame)
 
 /** Trace-driven pipeline — the reference's `simulation-level all`
   * evaluation mode (src/destor.c:263-366 dispatch; src/trace_phase.c:
@@ -95,8 +93,6 @@ object TracePipeline {
   private[graft] def oneJob(seqd: DataFrame, index: DataFrame,
       prevSparse: DataFrame, nextCid: Long, settings: DestorSettings,
       payload: Long): TraceJobResult = {
-    val spark = seqd.sparkSession
-    import spark.implicits._
     val first = seqd.groupBy(col("fp")).agg(min(col("seq")).as("firstSeq"))
     val marked = seqd
       .join(index, Seq("fp"), "left")
@@ -137,20 +133,6 @@ object TracePipeline {
       .select(col("stream"), col("seq"), col("path"), col("fp"),
         col("size"), col("dup"), col("write"), col("containerId"))
       .localCheckpoint(true)
-    val core = finalRec.agg(
-      countDistinct(col("path")), count(lit(1)),
-      sum(col("size")).cast("long"),
-      sum(when(!col("dup"), 1L).otherwise(0L)),
-      sum(when(!col("dup"), col("size")).otherwise(0L)).cast("long"),
-      sum(when(col("dup") && col("write"), 1L).otherwise(0L)),
-      sum(when(col("dup") && col("write"), col("size")).otherwise(0L))
-        .cast("long"))
-      .as[(Long, Long, Long, Long, Long, Long, Long)].head()
-    val (files, chunks, dataSize, uniqC, uniqS, rwC, rwS) = core
-    val containersWritten = packed.agg(max(col("packCid"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0) - nextCid + 1L
-    }
     val sparseList =
       if (settings.rewrite.enableHar)
         Rewrite.harSparseContainers(finalRec,
@@ -162,8 +144,33 @@ object TracePipeline {
       .union(copies.select(col("fp"), col("lc.packCid").as("idxCid")))
       .localCheckpoint(true)
     written.unpersist(); packed.unpersist()
-    TraceJobResult(finalRec, newIndex, sparseList, containersWritten,
-      files, chunks, dataSize, uniqC, uniqS, rwC, rwS)
+    TraceJobResult(finalRec, newIndex, sparseList)
+  }
+
+  /** The backup.log scalars of one job's final recipe in ONE aggregate:
+    * files, chunks, data/unique/rewritten sizes, stored size and the
+    * containers written past `nextCid` (every written row points at its
+    * packed container, so their max is the job's high water). An empty
+    * recipe yields all zeros. The sparse-list and restore-sim fields are
+    * left 0 for the caller to fill in.
+    */
+  private[graft] def recipeStats(backupId: Long, finalRec: DataFrame,
+      nextCid: Long): TraceJobStats = {
+    val dup = col("dup")
+    val rewritten = dup && col("write")
+    def total(c: Column) =
+      coalesce(sum(c).cast("long"), lit(0L))
+    val r = finalRec.agg(
+        countDistinct(col("path")), count(lit(1)), total(col("size")),
+        count(when(!dup, 1)), total(when(!dup, col("size"))),
+        count(when(rewritten, 1)), total(when(rewritten, col("size"))),
+        max(when(col("write"), col("containerId"))))
+      .head()
+    val containersWritten =
+      if (r.isNullAt(7)) 0L else r.getLong(7) - nextCid + 1L
+    TraceJobStats(backupId, r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
+      r.getLong(4) + r.getLong(6), containersWritten, 0L, 0L, 0.0, 0.0)
   }
 
   def run(jobs: Seq[DataFrame], settings: DestorSettings,
@@ -199,6 +206,7 @@ object TracePipeline {
         seqd.unpersist()
       } else {
         val r = oneJob(seqd, index, prevSparse, nextCid, settings, payload)
+        val base = recipeStats(b, r.finalRec, nextCid)
         val rs = settings.restoreSim(
             r.finalRec.select(col("stream"), col("seq"), col("containerId"),
               col("size")))
@@ -206,12 +214,10 @@ object TracePipeline {
           .as[(Long, Double, Double)].head()
         val sparseCount =
           if (settings.rewrite.enableHar) r.sparse.count() else 0L
-        stats += TraceJobStats(b, r.files, r.chunks, r.dataSize,
-          r.uniqueChunks, r.uniqueSize, r.rewrittenChunks, r.rewrittenSize,
-          r.uniqueSize + r.rewrittenSize, r.containersWritten, sparseCount,
-          rs._1, rs._2, rs._3)
+        stats += base.copy(sparse_containers = sparseCount,
+          container_reads = rs._1, speed_factor = rs._2, cfl = rs._3)
         index = r.newIndex
-        nextCid += r.containersWritten
+        nextCid += base.containers_written
         prevSparse = r.sparse
         seqd.unpersist()
       }
