@@ -2999,9 +2999,10 @@ object Queries {
     * lineitem-derived chunk stream is WRITTEN as THREE reference-format
     * `.trace` backups (fp = 40-hex from md5, so DuckDB recomputes it),
     * read back through [[graft.sources.TraceSource]], and replayed
-    * through [[graft.pipeline.TracePipeline]] under the SHIPPED
-    * destor.config (fastcdc/HAR/LRU-30; only `simulation-level all`
-    * overridden the way the reference CLI would with -p) — dedup against
+    * through [[graft.pipeline.TracePipeline]] under
+    * [[graft.pipeline.DestorConfig.ShippedDirectives]] (fastcdc/HAR/LRU-30;
+    * only `simulation-level all` added the way the reference CLI would
+    * with -p) — dedup against
     * the cumulative index, per-occurrence packing at payload 512, HAR
     * sparse rewriting, LRU-30 restore simulation. Three backups because
     * that is the first length at which HAR can fire at all: backup-1
@@ -3040,11 +3041,8 @@ object Queries {
           stream0.filter(col("b") === b).drop("b"), f)
         graft.sources.TraceSource.read(spark, f).toDF()
       }
-      val shipped = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/root/reference/destor.config")),
-        java.nio.charset.StandardCharsets.UTF_8)
       val settings = pipeline.DestorConfig.parse(
-        shipped + "\nsimulation-level all\n")
+        pipeline.DestorConfig.ShippedDirectives + "\nsimulation-level all\n")
       val out = settings.tracePipeline(jobs, payload = 512)
         .withColumn("speed_factor", round(col("speed_factor"), 6))
         .withColumn("cfl", round(col("cfl"), 6))

@@ -152,6 +152,58 @@ final case class DestorSettings(
   */
 object DestorConfig {
 
+  /** The effective directives of destor's shipped `destor.config`, as far
+    * as this repo records them — the engine's own copy, so no entry point
+    * reads the reference tree at run time. Not a verbatim copy: the
+    * upstream comments are dropped, and so is every directive the repo
+    * does not record. Provenance, line by line:
+    *
+    *  - `working-directory`, `backup-retention-time`: DestorConfigSpec's
+    *    `raw` assertions
+    *  - chunk-*: fastcdc (destor.config:28, SURVEY.md P7) at
+    *    2048/8192/65536 (destor.config:30-34, FIXTURES.md)
+    *  - the quoted `"block locality caching"` preset on its leading-space
+    *    line, prefetching 1, value length 1: DestorConfigSpec
+    *  - key size 20: destor.config:77 (SURVEY.md)
+    *  - content-defined segments of 1024, boundary 128 10240:
+    *    destor.config:96-99 (SURVEY.md W6)
+    *  - rewrite-*: `no`, HAR yes 0.5/0.05, cache-aware no, cbr minimal
+    *    utility 0.5 from DestorConfigSpec; capping 14 at destor.config:139
+    *    (SURVEY.md W4)
+    *  - `restore-cache lru 30`, opt window 1000000: DestorConfigSpec
+    *
+    * Omitted, because neither source records the shipped value:
+    * `log-level`, `fingerprint-index-cache-size` and
+    * `fingerprint-index-sampling-method` (the first two only ever land in
+    * `raw`; the block-locality-caching preset forces uniform/1 sampling
+    * whatever the file says), plus any other upstream directive. Where
+    * the upstream file is present, DestorConfigSpec checks that it parses
+    * to the same settings as this string, `raw` aside.
+    */
+  val ShippedDirectives: String =
+    """working-directory "/mnt/sda/destor/"
+      |chunk-algorithm fastcdc
+      |chunk-avg-size 8192
+      |chunk-max-size 65536
+      |chunk-min-size 2048
+      | fingerprint-index exact logical "block locality caching"
+      |fingerprint-index-key-size 20
+      |fingerprint-index-value-length 1
+      |fingerprint-index-segment-algorithm content-defined 1024
+      |fingerprint-index-segment-boundary 128 10240
+      |fingerprint-index-segment-prefetching 1
+      |rewrite-algorithm no
+      |rewrite-capping-level 14
+      |rewrite-cbr-minimal-utility 0.5
+      |rewrite-enable-har yes
+      |rewrite-har-utilization-threshold 0.5
+      |rewrite-har-rewrite-limit 0.05
+      |rewrite-enable-cache-aware no
+      |restore-cache lru 30
+      |restore-opt-window-size 1000000
+      |backup-retention-time 20
+      |""".stripMargin
+
   /** Faithful sdssplitargs tokenizer (reference src/utils/sds.c):
     * whitespace-split; double quotes decode \\xHH hex escapes and
     * \\n \\r \\t \\b \\a (any other backslashed char is itself); single

@@ -51,9 +51,14 @@ class TraceCliSpec extends AnyFunSuite {
     val f = java.nio.file.Files.createTempFile("graft_cli2_", ".trace")
     f.toFile.deleteOnExit()
     ClusterJob.trace(corpus, f.toString, DedupConfig())
-    val shipped = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/destor.config")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    // the shipped settings: the upstream file where the reference tree
+    // is present, else the engine's own copy of its directives
+    val ref = java.nio.file.Paths.get("/root/reference/destor.config")
+    val shipped =
+      if (java.nio.file.Files.isRegularFile(ref))
+        new String(java.nio.file.Files.readAllBytes(ref),
+          java.nio.charset.StandardCharsets.UTF_8)
+      else DestorConfig.ShippedDirectives
     val settings = DestorConfig.parse(shipped + "\nsimulation-level all\n")
     val job = graft.sources.TraceSource.read(spark, f.toString).toDF()
     val out = settings.tracePipeline(Seq(job)).collect()
