@@ -2,10 +2,13 @@
 """Local stand-in for the driver's DuckDB correctness compare.
 
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
-For each query dir under verifyOutDir with an oracle_sql.json entry:
-register sfDir parquet as views, run the oracle SQL, compare to the
-Spark parquet output (columns sorted by name, rows sorted, values
-stringified) and print MATCH/MISMATCH per query.
+Checks exactly the queries the last `graft.Verify` run into verifyOutDir
+selected (its verify_stamp.json). A selected query whose output is absent
+or older than the stamp (it threw in Verify) is MISSING. For each fresh
+output with an oracle_sql.json entry: register sfDir parquet as views, run
+the oracle SQL, compare to the Spark parquet output (columns sorted by
+name, rows sorted, values stringified) and print MATCH/MISMATCH per query.
+Exits non-zero on any MISMATCH or MISSING.
 """
 import sys, json, glob, os
 import duckdb
@@ -36,12 +39,23 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
-    n_match = n_mismatch = 0
-    for name in sorted(os.listdir(out_dir)):
+    # written by Verify before its first query: an output older than it
+    # is a previous run's, left behind by a query that threw in this one
+    stamp = os.path.join(out_dir, "verify_stamp.json")
+    if not os.path.isfile(stamp):
+        print(f"no verify_stamp.json in {out_dir}: run graft.Verify into it")
+        sys.exit(2)
+    with open(stamp) as f:
+        selected = json.load(f)["selected"]
+    started = os.path.getmtime(stamp)
+    n_match = n_mismatch = n_missing = 0
+    for name in sorted(selected):
         qdir = os.path.join(out_dir, name)
-        if not os.path.isdir(qdir):
-            continue
         files = glob.glob(os.path.join(qdir, "*.parquet"))
+        if not files or min(map(os.path.getmtime, files)) < started:
+            print(f"{name:24s} MISSING (no output written by the last Verify run)")
+            n_missing += 1
+            continue
         if name not in oracles:
             cnt = con.execute(
                 f"SELECT count(*) FROM read_parquet({files!r})").fetchone()[0]
@@ -72,8 +86,8 @@ def main():
         else:
             print(f"{name:24s} MATCH rows={len(sr)}")
             n_match += 1
-    print(f"\n{n_match} match, {n_mismatch} mismatch")
-    sys.exit(1 if n_mismatch else 0)
+    print(f"\n{n_match} match, {n_mismatch} mismatch, {n_missing} missing")
+    sys.exit(1 if n_mismatch or n_missing else 0)
 
 if __name__ == "__main__":
     main()

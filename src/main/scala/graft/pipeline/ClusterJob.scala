@@ -1,6 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.CorpusFile
 
@@ -53,6 +57,20 @@ object ClusterJob {
           "cpu_sec" -> (osBean.getProcessCpuTime - c0) / 1e9)
       df
     }
+
+    /** [[stage]] plus the aggregates `stats` over the stage's rows:
+      * observed on a fresh stage's write, so they cost no job of their
+      * own, and one query over a resumed stage. */
+    def observedStage(name: String, stats: Column*)(
+        f: => DataFrame): (DataFrame, Row) =
+      if (TableIO.committed(s"$root/$name")) {
+        val df = stage(name)(f)
+        (df, df.agg(stats.head, stats.tail: _*).head())
+      } else {
+        val obs = Observation()
+        val df = stage(name)(f.observe(obs, stats.head, stats.tail: _*))
+        (df, Await.result(obs.future, Duration.Inf))
+      }
 
     def flush(): Unit =
       if (rows.nonEmpty) TableIO.appendMetrics(spark, root, runId, rows.toSeq)
@@ -329,45 +347,44 @@ object ClusterJob {
       log: RunLog): TraceJobStats = {
     val spark = chunkStream.sparkSession
     import spark.implicits._
-    import log.stage
+    // a table read with just the columns this job uses: a declared schema
+    // runs no parquet footer-inference job
+    def load(r: String, table: String, schema: String): DataFrame =
+      spark.read.schema(schema).format(TableIO.Format).load(s"$r/$table")
     val (prevIndex, prevSparse, nextCid, backupId) = prevRoot match {
       case Some(p) =>
         require(TableIO.committed(s"$p/index"),
           s"prevRoot $p has no committed index stage — chain only from a " +
             "completed backup() root")
-        val idx = spark.read.format(TableIO.Format).load(s"$p/index")
-          .select(col("fp"), col("idxCid"))
+        val idx = load(p, "index", "fp STRING, idxCid BIGINT")
         val sp =
           if (TableIO.committed(s"$p/har_sparse"))
-            spark.read.format(TableIO.Format).load(s"$p/har_sparse")
-              .select(col("containerId"))
+            load(p, "har_sparse", "containerId BIGINT")
           else Seq.empty[Long].toDF("containerId")
-        // every written container holds someone's latest copy, so the
-        // index max IS the store's high-water container id
-        val nc = idx.agg(max(col("idxCid"))).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0) + 1L
-        }
-        // backup id = max surviving "bN" stream label in the prev root's
-        // committed recipe table + 1 — the recipe is part of the
-        // resumability contract (metrics are not: a hard kill can lose
-        // the metrics rows, and a guessed id would duplicate a stream
-        // label that expire-by-label later deletes).
+        // ONE aggregate reads both scalars. The store's high-water
+        // container id: every written container holds someone's latest
+        // copy, so the index max IS it. The backup id: max surviving "bN"
+        // stream label in the prev root's committed recipe table + 1 — the
+        // recipe is part of the resumability contract (metrics are not: a
+        // hard kill can lose the metrics rows, and a guessed id would
+        // duplicate a stream label that expire-by-label later deletes).
         // `final_recipe` is a backup() root; `recipes` an expire() root.
         // Fallback (a zero-row recipe, i.e. a valid empty backup): the
         // metrics backup_id row, scanned only then. Neither present ⇒
         // fail loudly.
-        val recTbl = Seq("final_recipe", "recipes")
-          .find(t => TableIO.committed(s"$p/$t"))
-        val fromLabels = recTbl.flatMap { t =>
-          spark.read.format(TableIO.Format).load(s"$p/$t")
-            .select(regexp_extract(col("stream"), "^b(\\d+)$", 1)
-              .cast("long").as("bid"))
-            .agg(max(col("bid"))).head() match {
-            case r if r.isNullAt(0) => None
-            case r => Some(r.getLong(0) + 1L)
+        val noId = lit(null).cast("long")
+        val labels = Seq("final_recipe", "recipes")
+          .find(t => TableIO.committed(s"$p/$t")).toSeq.map { t =>
+            load(p, t, "stream STRING").select(noId.as("cid"),
+              regexp_extract(col("stream"), "^b(\\d+)$", 1).cast("long")
+                .as("bid"))
           }
-        }
+        val ids = (idx.select(col("idxCid").as("cid"), noId.as("bid")) +:
+            labels).reduce(_ union _)
+          .agg(max(col("cid")), max(col("bid"))).head()
+        val nc = if (ids.isNullAt(0)) 0L else ids.getLong(0) + 1L
+        val fromLabels =
+          if (ids.isNullAt(1)) None else Some(ids.getLong(1) + 1L)
         lazy val fromMetrics =
           try spark.read.format(TableIO.Format).load(s"$p/metrics")
             .filter(col("stage") === "backup" &&
@@ -387,56 +404,48 @@ object ClusterJob {
         (Seq.empty[(String, Long)].toDF("fp", "idxCid"),
           Seq.empty[Long].toDF("containerId"), 0L, 1L)
     }
-    val label = s"b$backupId"
-    // the whole store step computes lazily and AT MOST ONCE — a pure
-    // resume (all stages committed) never forces it
-    lazy val res = {
-      val stream = chunkStream
-        .select(col("path"),
-          col("chunkIdx").cast("long").as("chunkIdx"), col("fp"),
-          col("size").cast("int").as("size"), lit(label).as("stream"),
-          lit(1L).as("one"))
-      val seqd = DedupPipeline.streamPrefix(stream, "stream",
-          Seq("path", "chunkIdx"), "one", "pre")
-        .withColumn("seq", col("pre") + 1L).drop("one", "pre")
-      if (seqd.isEmpty)
-        // an empty corpus snapshot is a valid no-op backup (the same
-        // guard TracePipeline.run applies per trace job — oneJob requires
-        // non-empty input): empty recipe, index carried unchanged, empty
-        // HAR monitor
-        TraceJobResult(
-          Seq.empty[(String, Long, String, String, Int, Boolean, Boolean,
-              Long)]
-            .toDF("stream", "seq", "path", "fp", "size", "dup", "write",
-              "containerId"),
-          prevIndex, Seq.empty[Long].toDF("containerId"))
-      else
-        TracePipeline.oneJob(seqd, prevIndex, prevSparse, nextCid, settings,
-          payload)
-    }
+    val storeStages = Seq("final_recipe", "index") ++
+      (if (settings.rewrite.enableHar) Seq("har_sparse") else Nil)
     val freshFinal = !TableIO.committed(s"$root/final_recipe")
-    val finalRec = stage("final_recipe")(res.finalRec)
-    stage("index")(res.newIndex)
-    val sparseCount =
-      if (settings.rewrite.enableHar) stage("har_sparse")(res.sparse).count()
-      else 0L
-    val fr = finalRec.drop("_lineage")
-    // stats rebuilt from the committed stage tables in one aggregate —
-    // identical whether this run computed the stages or resumed them
-    val base = TracePipeline.recipeStats(backupId, fr, nextCid)
+    // The store step runs only while a store stage is uncommitted (a pure
+    // resume never forces it), and each stage write is its table's ONE
+    // materialization: the stats, the HAR monitor and the restore sim
+    // read the committed final_recipe. An empty corpus snapshot is a valid
+    // no-op backup (oneJob takes empty input).
+    val (fr, base) =
+      if (storeStages.forall(t => TableIO.committed(s"$root/$t"))) {
+        def committed(t: String) = spark.read.format(TableIO.Format)
+          .load(s"$root/$t").drop("_lineage")
+        val fr = committed("final_recipe")
+        val sparseCount =
+          if (settings.rewrite.enableHar) committed("har_sparse").count()
+          else 0L
+        (fr, TracePipeline.recipeStats(backupId, fr, nextCid)
+          .copy(sparse_containers = sparseCount))
+      } else {
+        val r = TracePipeline.oneJob(backupId,
+          TracePipeline.sequence(chunkStream, s"b$backupId"), prevIndex,
+          prevSparse, nextCid, settings, payload, (name, df) => {
+            val (t, n) = log.observedStage(name, count(lit(1)))(df)
+            (t.drop("_lineage"), n.getLong(0))
+          })
+        (r.finalRec, r.stats)
+      }
     // an empty committed recipe is a no-op backup (fresh OR resumed): the
-    // restore sim has nothing to replay
+    // restore sim has nothing to replay. The sim has one row (one stream),
+    // so its max() aggregates read that row.
     val doSim = (settings.simulationLevel == "restore" ||
       settings.simulationLevel == "all") && base.chunks > 0
     val sim =
-      if (doSim)
-        stage("restore_sim")(settings.restoreSim(
-            fr.select(col("stream"), col("seq"), col("containerId"),
-              col("size"))))
-          .select(col("containerReads"), col("speedFactor"), col("cfl"))
-          .as[(Long, Double, Double)].head()
-      else (0L, 0.0, 0.0)
-    val stats = base.copy(sparse_containers = sparseCount,
+      if (doSim) {
+        val (_, r) = log.observedStage("restore_sim",
+            max(col("containerReads")), max(col("speedFactor")),
+            max(col("cfl")))(
+          settings.restoreSim(fr.select(col("stream"), col("seq"),
+            col("containerId"), col("size"))))
+        (r.getLong(0), r.getDouble(1), r.getDouble(2))
+      } else (0L, 0.0, 0.0)
+    val stats = base.copy(
       container_reads = sim._1, speed_factor = sim._2, cfl = sim._3)
     if (freshFinal)
       log.add("backup",
@@ -508,57 +517,62 @@ object ClusterJob {
         s"chain root $r has no committed final_recipe/recipes stage — " +
           "expire only completed backup()/expire() roots")
     }
-    def rec(r: String): DataFrame =
-      spark.read.format(TableIO.Format).load(s"$r/${recTable(r).get}")
+    // each chain root's recipe is read (one footer-inference job) once
+    val recs = chainRoots.map { r =>
+      r -> spark.read.format(TableIO.Format).load(s"$r/${recTable(r).get}")
         .drop("_lineage")
+    }.toMap
+    val chain = chainRoots.map(recs).reduce(_ unionByName _)
     // `expiredBackup` selects ONE backup: either a stream label ("b2") —
     // required when the chain has been compacted before, since a
     // compacted root carries several labels — or, convenience for
     // uncompacted chains, a chain-root path whose recipe has exactly one
-    // label
+    // label (which that root then carries)
     val expired =
       if (chainRoots.contains(expiredBackup)) {
-        val labels = rec(expiredBackup).select(col("stream")).distinct()
+        val labels = recs(expiredBackup).select(col("stream")).distinct()
           .as[String].collect()
         require(labels.length == 1,
           s"expiredBackup root $expiredBackup carries ${labels.length} " +
             "stream labels — pass the label of the one backup to expire")
         labels.head
-      } else expiredBackup
-    require(
-      chainRoots.exists(r => !rec(r).filter(col("stream") === expired)
-        .isEmpty),
-      s"no chain root carries stream label '$expired'")
+      } else {
+        require(!chain.filter(col("stream") === expiredBackup).isEmpty,
+          s"no chain root carries stream label '$expiredBackup'")
+        expiredBackup
+      }
     // the whole expiry computes lazily and at most once (pure resumes
     // never force it); version = the backup's stream label
     lazy val res = GC.expireChain(
-      chainRoots.map(rec).reduce(_ unionByName _)
-        .withColumn("version", col("stream")),
-      expired, payload)
+      chain.withColumn("version", col("stream")), expired, payload)
     val freshMig = !TableIO.committed(s"$outRoot/migration")
     val migration = stage("migration")(res.migration)
     val recipes = stage("recipes") {
       res.recipes.drop("version")
     }
     val index = stage("index")(res.index)
-    val before = chainRoots.map(rec).reduce(_ unionByName _)
-      .agg(count(lit(1)), countDistinct(col("containerId")))
-      .as[(Long, Long)].head()
-    val after = recipes.drop("_lineage")
-      .agg(count(lit(1)), countDistinct(col("containerId")))
-      .as[(Long, Long)].head()
-    val mig = migration.drop("_lineage")
-      .agg(count(lit(1)), coalesce(sum(col("size")), lit(0L)))
-      .as[(Long, Long)].head()
-    val maxBid = recipes.drop("_lineage")
-      .select(regexp_extract(col("stream"), "^b(\\d+)$", 1).cast("long")
-        .as("bid"))
-      .agg(max(col("bid"))).head() match {
-      case r if r.isNullAt(0) => 1L
-      case r => r.getLong(0)
-    }
-    val stats = ExpireStats(expired, before._1, after._1, mig._1, mig._2,
-      before._2, after._2, index.count())
+    // every stats value in ONE query over the chain and the committed
+    // tables, each tagged by source (as run's summary does)
+    def tagged(t: Int, df: DataFrame, cid: Column, v: Column) =
+      df.select(lit(t).as("t"), cid.cast("long").as("cid"),
+        v.cast("long").as("v"))
+    def cnt(t: Int) = count(when(col("t") === t, 1))
+    def cids(t: Int) = countDistinct(when(col("t") === t, col("cid")))
+    val noValue = lit(null)
+    val r = Seq(
+        tagged(0, chain, col("containerId"), noValue),
+        tagged(1, recipes, col("containerId"),
+          regexp_extract(col("stream"), "^b(\\d+)$", 1)),
+        tagged(2, migration, noValue, col("size")),
+        tagged(3, index, noValue, noValue))
+      .reduce(_ union _)
+      .agg(cnt(0), cids(0), cnt(1), cids(1), cnt(2),
+        coalesce(sum(when(col("t") === 2, col("v"))), lit(0L)),
+        max(when(col("t") === 1, col("v"))), cnt(3))
+      .head()
+    val maxBid = if (r.isNullAt(6)) 1L else r.getLong(6)
+    val stats = ExpireStats(expired, r.getLong(0), r.getLong(2), r.getLong(4),
+      r.getLong(5), r.getLong(1), r.getLong(3), r.getLong(7))
     if (freshMig) {
       log.add("backup", "backup_id" -> maxBid.toDouble)
       log.add("expire",

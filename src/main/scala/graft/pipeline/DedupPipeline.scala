@@ -277,7 +277,15 @@ object DedupPipeline {
     * exactly-zero offsets are elided (they are the lookup default).
     */
   private[graft] def streamPrefix(df: DataFrame, streamCol: String,
-      orderCols: Seq[String], valueCol: String, out: String): DataFrame = {
+      orderCols: Seq[String], valueCol: String, out: String): DataFrame =
+    streamPrefixTotal(df, streamCol, orderCols, valueCol, out)._1
+
+  /** [[streamPrefix]] plus the sum of `valueCol` over ALL rows, which its
+    * counts job collects anyway (each partition reports its own total), so
+    * a caller that needs the grand total pays no query for it. */
+  private[graft] def streamPrefixTotal(df: DataFrame, streamCol: String,
+      orderCols: Seq[String], valueCol: String,
+      out: String): (DataFrame, Long) = {
     val spark = df.sparkSession
     require(df.schema(valueCol).dataType ==
         org.apache.spark.sql.types.LongType,
@@ -311,11 +319,13 @@ object DedupPipeline {
       var pid = -1
       var firstStream: String = null; var firstSum = 0L
       var curStream: String = null; var curSum = 0L
+      var partTotal = 0L
       it.foreach { r =>
         val k0 = r.get(sIdx); val v = r.getLong(vIdx)
         require(k0 != null, s"streamPrefix: null $streamCol key unsupported")
         val k = k0.toString
         pid = r.getInt(pIdx)
+        partTotal += v
         if (curStream == null) { curStream = k; curSum = v }
         else if (k == curStream) curSum += v
         else {
@@ -323,19 +333,23 @@ object DedupPipeline {
           curStream = k; curSum = v
         }
       }
+      // the partition total rides on the partition's first row only
       if (curStream == null) Iterator.empty
-      else if (firstStream == null) Iterator((pid, curStream, curSum))
-      else Iterator((pid, firstStream, firstSum), (pid, curStream, curSum))
+      else if (firstStream == null)
+        Iterator((pid, curStream, curSum, partTotal))
+      else Iterator((pid, firstStream, firstSum, partTotal),
+        (pid, curStream, curSum, 0L))
     }(org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.scalaInt,
       org.apache.spark.sql.Encoders.STRING,
+      org.apache.spark.sql.Encoders.scalaLong,
       org.apache.spark.sql.Encoders.scalaLong)).collect()
     val offsets: Map[Int, Map[String, Long]] = {
       val m = scala.collection.mutable.Map
         .empty[Int, scala.collection.mutable.Map[String, Long]]
       counts.groupBy(_._2).foreach { case (stream, rows) =>
         var cum = 0L
-        rows.sortBy(_._1).foreach { case (pid, _, n) =>
+        rows.sortBy(_._1).foreach { case (pid, _, n, _) =>
           if (cum != 0) // zero offsets are the getOrElse default
             m.getOrElseUpdate(pid, scala.collection.mutable.Map.empty)(stream) = cum
           cum += n
@@ -350,7 +364,7 @@ object DedupPipeline {
     // LAZY offset pass: rows are sorted by (stream, order) within each
     // frozen pid, so the running sum resets exactly at (pid, stream) run
     // boundaries — no per-row map updates, no second materialization.
-    ordered.mapPartitions { it =>
+    val prefixed = ordered.mapPartitions { it =>
       val off = offB.value
       var curPid = -1; var curKey: String = null; var running = 0L
       it.map { r =>
@@ -365,6 +379,7 @@ object DedupPipeline {
         org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1) :+ before)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
+    (prefixed, counts.map(_._4).sum)
   }
 
   /** Per-stream consecutive-run detection over rows ordered by

@@ -150,16 +150,16 @@ object GC {
     */
   def expireChain(recipes: DataFrame, expiredVersion: String,
       payload: Long = Rewrite.ContainerPayload): ChainExpiry = {
+    // one row per copy, live iff a surviving backup references it
     val copies = recipes.groupBy(col("fp"), col("containerId"))
-      .agg(min(col("size")).as("size")).persist()
-    val live = recipes.filter(col("version") =!= expiredVersion)
-      .select(col("fp"), col("containerId")).distinct().persist()
-    val dead = copies.join(live, Seq("fp", "containerId"), "left_anti")
-    val affected = dead.select(col("containerId")).distinct()
-    val survivors = copies
+      .agg(min(col("size")).as("size"),
+        max(col("version") =!= expiredVersion).as("live"))
+      .persist()
+    val affected = copies.filter(!col("live"))
+      .select(col("containerId")).distinct()
+    val survivors = copies.filter(col("live"))
       .join(affected, Seq("containerId"), "left_semi")
-      .join(live, Seq("fp", "containerId"), "left_semi")
-    val base = recipes.agg(max(col("containerId"))).head() match {
+    val base = copies.agg(max(col("containerId"))).head() match {
       case r if r.isNullAt(0) => 0L
       case r => r.getLong(0) + 1L
     }
@@ -174,7 +174,7 @@ object GC {
       .select(col("fp"), col("cid").as("old_cid"),
         col("sz").as("size"), col("new_cid"))
       .localCheckpoint(true)
-    copies.unpersist(); live.unpersist()
+    copies.unpersist()
     val rewritten = recipes.filter(col("version") =!= expiredVersion)
       .join(migration.select(col("fp"), col("old_cid").as("containerId"),
           col("new_cid")), Seq("fp", "containerId"), "left")

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -86,25 +85,7 @@ object Rewrite {
           .otherwise(when(col("coverage") >= 1, 0.0)
             .otherwise(round(lit(1.0) - col("coverage"), 6))))
       .persist()
-    // Discrete (1-limit)-quantile over a utility histogram — the batch
-    // analog of the reference's 10k-bucket running histogram
-    // (src/cbr_rewrite.c:38-55). Utilities are pre-rounded to 1e-6, so the
-    // histogram is ≤1e6 rows regardless of input size and the quantile is
-    // engine-independent (no interpolation): threshold = the smallest
-    // utility whose cumulative count reaches ceil((1-limit)·n). The
-    // cumulative scan is the two-phase distributed prefix
-    // ([[DedupPipeline.streamPrefix]], one synthetic stream — range
-    // partitioning spreads the histogram, offsets are O(partitions)), so
-    // only O(1) scalars ever reach the driver — never the histogram rows.
-    val hist = withUtil.groupBy(col("utility")).agg(count(lit(1)).as("cnt"))
-      .withColumn("s", lit("h"))
-    val cum = DedupPipeline.streamPrefix(hist, "s", Seq("utility"), "cnt", "cumBefore")
-    val n = cum.agg(coalesce(sum(col("cnt")), lit(0L))).first().getLong(0)
-    val k = math.ceil((1.0 - limit) * n).toLong
-    val threshold = Option(
-      cum.filter(col("cumBefore") + col("cnt") >= k)
-        .agg(min(col("utility"))).first().get(0))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0)
+    val threshold = cbrThreshold(withUtil.select(col("utility")), limit)
     val tEff = math.max(minUtility, threshold)
     // neighbor propagation: record runs of each container's duplicates
     // (gap ≤ bufferSize keeps the containerRecord buffered), then the
@@ -138,6 +119,25 @@ object Rewrite {
     out
   }
 
+  /** CBR's discrete (1−limit)-quantile over the run's utilities — the
+    * batch analog of the reference's 10k-bucket running histogram
+    * (src/cbr_rewrite.c:38-55): the smallest utility whose cumulative
+    * count reaches ceil((1−limit)·n), and 0.0 when there are no rows. No
+    * interpolation, so the threshold is engine-independent. Utilities are
+    * rounded to 1e-6 in [0, 1], so ONE aggregate query sends the driver at
+    * most 1,000,001 (utility, count) histogram rows whatever the input
+    * size — never the utility rows — and the cumulative scan runs there.
+    */
+  private[pipeline] def cbrThreshold(utilities: DataFrame,
+      limit: Double): Double = {
+    val hist = utilities.groupBy(col("utility")).agg(count(lit(1)))
+      .collect().map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
+    val n = hist.iterator.map(_._2).sum
+    val k = math.ceil((1.0 - limit) * n).toLong
+    var cum = 0L
+    hist.find { case (_, c) => cum += c; cum >= k }.map(_._1).getOrElse(0.0)
+  }
+
   /** W2 CFL-style selective dedup runs (reference: src/cfl_rewrite.c):
     * consecutive same-container duplicates form a run; a run whose total
     * bytes are below usageThreshold × payload is rewritten whole.
@@ -169,49 +169,28 @@ object Rewrite {
       utilizationThreshold: Double = 0.5,
       rewriteLimit: Double = 0.05,
       payload: Long = ContainerPayload): DataFrame = {
-    val spark = recipe.sparkSession
-    import spark.implicits._
-    val util = recipe.groupBy(col("containerId"))
-      .agg(sum(col("size")).as("refBytes"))
-      .withColumn("utilization", col("refBytes") / lit(payload.toDouble))
-      .persist()
-    val total = util.agg(sum(col("refBytes"))).head().getLong(0)
     // Keep the ascending-size prefix with cumulative bytes ≤ limit × total
     // (equivalent to the reference's trim-largest loop,
-    // src/har_rewrite.c:166-177). The cumulative sum is a two-phase
-    // distributed prefix sum (range-partition + per-partition totals +
-    // broadcast offsets — same pattern as DedupPipeline.packContainers),
-    // NOT a global unpartitioned window: at 100 TB ≈ 25M containers a
-    // single-partition WindowExec would funnel everything through one task.
-    val sparse = util.filter(col("utilization") < utilizationThreshold)
-      .select(col("containerId"), col("refBytes")).as[(Long, Long)]
-    val sorted = sparse
-      .repartitionByRange(col("refBytes"), col("containerId"))
-      .sortWithinPartitions(col("refBytes"), col("containerId"))
-      .persist()
-    val perPart = sorted.mapPartitions { it =>
-      var bytes = 0L
-      it.foreach(bytes += _._2)
-      Iterator((TaskContext.getPartitionId(), bytes))
-    }.collect().sortBy(_._1)
-    val prefix = new Array[Long](perPart.length + 1)
-    perPart.foreach { case (pid, b) => prefix(pid + 1) = b }
-    var i = 1
-    while (i < prefix.length) { prefix(i) += prefix(i - 1); i += 1 }
-    val prefixB = spark.sparkContext.broadcast(prefix)
+    // src/har_rewrite.c:166-177). Sparseness is monotone in refBytes, so
+    // over ALL containers in (refBytes, containerId) order the sparse ones
+    // come first and each one's running prefix is its sparse-list prefix.
+    // The two-phase distributed prefix sum ([[DedupPipeline
+    // .streamPrefixTotal]], one synthetic stream) returns the total bytes
+    // from the same counts job — never a global unpartitioned window: at
+    // 100 TB ≈ 25M containers a single-partition WindowExec would funnel
+    // everything through one task. The result is lazy over the
+    // checkpointed sort; the caller materializes it.
+    val util = recipe.groupBy(col("containerId"))
+      .agg(sum(col("size")).as("refBytes"))
+      .withColumn("s", lit("h"))
+    val (prefixed, total) = DedupPipeline.streamPrefixTotal(util, "s",
+      Seq("refBytes", "containerId"), "refBytes", "pre")
     val cap = (rewriteLimit * total).toLong
-    val payloadD = payload.toDouble
-    val out = sorted.mapPartitions { it =>
-      var cum = prefixB.value(TaskContext.getPartitionId())
-      it.flatMap { case (cid, bytes) =>
-        cum += bytes
-        if (cum <= cap) Iterator.single((cid, bytes, bytes / payloadD))
-        else Iterator.empty
-      }
-    }.toDF("containerId", "refBytes", "utilization")
-      .localCheckpoint(true)
-    sorted.unpersist(); util.unpersist()
-    out
+    prefixed
+      .withColumn("utilization", col("refBytes") / lit(payload.toDouble))
+      .filter(col("utilization") < utilizationThreshold &&
+        col("pre") + col("refBytes") <= cap)
+      .select(col("containerId"), col("refBytes"), col("utilization"))
   }
 
   /** J7 inherited-sparse marking (reference: src/har_rewrite.c:197-207):

@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Per-backup-job output row of [[TracePipeline.run]] — the backup.log
@@ -17,13 +20,15 @@ final case class TraceJobStats(
 /** The distributed state ONE backup job against a cumulative store
   * produces, which a follow-up job chains from: the job's final recipe,
   * the upserted fingerprint index and the trimmed HAR sparse list for the
-  * NEXT job. Its backup.log counters come from
-  * [[TracePipeline.recipeStats]] over `finalRec`. All three DataFrames
-  * are localCheckpoint-materialized — safe to use after the job's
-  * internal caches are freed.
+  * NEXT job, each materialized once by the caller's
+  * [[TracePipeline.Materialize]] — safe to use after the job's internal
+  * caches are freed — plus the job's backup.log counters
+  * ([[TracePipeline.recipeStats]] over `finalRec`, with the sparse-list
+  * size; the restore-sim fields are left 0).
   */
 final case class TraceJobResult(
-    finalRec: DataFrame, newIndex: DataFrame, sparse: DataFrame)
+    finalRec: DataFrame, newIndex: DataFrame, sparse: DataFrame,
+    stats: TraceJobStats)
 
 /** Trace-driven pipeline — the reference's `simulation-level all`
   * evaluation mode (src/destor.c:263-366 dispatch; src/trace_phase.c:
@@ -75,76 +80,115 @@ final case class TraceJobResult(
   *
   * [[oneJob]] is the single-backup core; [[graft.pipeline.ClusterJob
   * .backup]] reuses it verbatim for REAL corpora (read+chunk+hash feeding
-  * the same dedup→rewrite→pack store semantics, checkpointed stages,
-  * roots chained exactly like successive trace jobs chain in memory).
+  * the same dedup→rewrite→pack store semantics, roots chained exactly
+  * like successive trace jobs chain in memory): here each result table is
+  * localCheckpointed, there its checkpointed stage write is its one
+  * materialization.
   */
 object TracePipeline {
 
+  /** How [[oneJob]] materializes each result table: given the table's
+    * stage name ("final_recipe", "har_sparse", "index") and its plan,
+    * returns the materialized table and its row count. */
+  type Materialize = (String, DataFrame) => (DataFrame, Long)
+
+  /** In-memory materialization: an eager localCheckpoint, the row count
+    * observed on the same job. */
+  val checkpoint: Materialize = (_, df) => {
+    val obs = Observation()
+    val c = df.observe(obs, count(lit(1))).localCheckpoint(true)
+    (c, Await.result(obs.future, Duration.Inf).getLong(0))
+  }
+
+  /** A job's chunk stream (path, chunkIdx, fp, size) as ONE stream
+    * labelled `label`, with a contiguous 1-based `seq` in (path, chunkIdx)
+    * order — two-phase distributed rank, never a window sort. */
+  private[graft] def sequence(chunks: DataFrame, label: String): DataFrame =
+    DedupPipeline.streamPrefix(
+        chunks.select(col("path"),
+          col("chunkIdx").cast("long").as("chunkIdx"), col("fp"),
+          col("size").cast("int").as("size"), lit(label).as("stream"),
+          lit(1L).as("one")),
+        "stream", Seq("path", "chunkIdx"), "one", "pre")
+      .withColumn("seq", col("pre") + 1L).drop("one", "pre")
+
   /** One backup job against the cumulative store. `seqd` is the job's
-    * chunk stream with a contiguous per-stream 1-based `seq` already
-    * assigned (columns stream:string, seq:long, path:string, fp:string,
-    * size:int) and must be non-empty; `index` is fp → idxCid (the latest
-    * written copy per fingerprint); `prevSparse` is the previous job's
-    * trimmed sparse-container list (containerId); `nextCid` is the first
-    * free container id. When HAR is off, `sparse` returns `prevSparse`
-    * unchanged (the reference only maintains the monitor when
-    * rewrite-enable-har is set).
+    * [[sequence]]d chunk stream (columns path, chunkIdx, fp, size, stream,
+    * seq) and may be empty (a valid no-op backup: empty recipe, index
+    * carried unchanged, empty HAR monitor); `index` is fp → idxCid (the
+    * latest written copy per fingerprint); `prevSparse` is the previous
+    * job's trimmed sparse-container list (containerId); `nextCid` is the
+    * first free container id. When HAR is off, `sparse` returns
+    * `prevSparse` unchanged (the reference only maintains the monitor
+    * when rewrite-enable-har is set). `materialize` is the ONLY
+    * materialization of each result table; the stats and the HAR monitor
+    * read the materialized recipe.
     */
-  private[graft] def oneJob(seqd: DataFrame, index: DataFrame,
-      prevSparse: DataFrame, nextCid: Long, settings: DestorSettings,
-      payload: Long): TraceJobResult = {
+  private[graft] def oneJob(backupId: Long, seqd: DataFrame,
+      index: DataFrame, prevSparse: DataFrame, nextCid: Long,
+      settings: DestorSettings, payload: Long,
+      materialize: Materialize): TraceJobResult = {
     val first = seqd.groupBy(col("fp")).agg(min(col("seq")).as("firstSeq"))
+    // every rewrite pass reads its input more than once (cbr: context
+    // window + per-stream max; cap, cfl: a self-join), so the joins run
+    // once, in their own job: a persisted input would be cached by one
+    // job per read inside the pass's first query (adaptive execution does
+    // not share cache stages), whose tasks race for the same blocks
     val marked = seqd
       .join(index, Seq("fp"), "left")
       .join(first, Seq("fp"))
       .withColumn("dup",
         col("idxCid").isNotNull || col("seq") > col("firstSeq"))
       .withColumn("containerId", coalesce(col("idxCid"), lit(-1L)))
+      .localCheckpoint(true)
     val passed = settings.rewritePass(marked, payload)
     val hared =
       if (settings.rewrite.enableHar) Rewrite.harMark(passed, prevSparse)
       else passed
-    val written = Rewrite.writePredicate(hared).persist()
+    val written = Rewrite.writePredicate(hared)
     // pack every written occurrence in stream order; ids continue past
     // the previous jobs' containers (stream is constant within one job,
-    // so grouping the prefix sum by it is the single-stream fold)
+    // so grouping the prefix sum by it is the single-stream fold). The
+    // prefix runs over ALL rows, an unwritten one weighing 0, so each row
+    // carries its own pack id and no join brings it back.
     val packed = DedupPipeline.streamPrefix(
-        written.filter(col("write"))
-          .select(col("fp"), col("seq"),
-            col("size").cast("long").as("sz"), col("stream").as("s")),
-        "s", Seq("seq"), "sz", "pre")
-      .withColumn("packCid",
+        written.withColumn("sz",
+          when(col("write"), col("size").cast("long")).otherwise(0L)),
+        "stream", Seq("seq"), "sz", "pre")
+      .withColumn("packCid", when(col("write"),
         (lit(nextCid) +
           floor(greatest(col("pre") + col("sz") - 1, lit(0L)) / payload))
-          .cast("long"))
-      .select(col("fp"), col("seq"), col("packCid"))
-      .persist()
-    val copies = packed.groupBy(col("fp")).agg(
-      min(struct(col("seq"), col("packCid"))).as("fc"),
-      max(struct(col("seq"), col("packCid"))).as("lc"))
-    val finalRec = written
-      .join(packed.select(col("seq"), col("packCid")), Seq("seq"), "left")
-      .join(copies.select(col("fp"), col("fc.packCid").as("firstCopyCid")),
+          .cast("long")))
+    // pack ids never decrease along the stream, so a fingerprint's first
+    // written copy this job has its smallest pack id and its last copy
+    // the largest — and every pack id is past every indexed one
+    val copies = packed.filter(col("write")).select(col("fp"), col("packCid"))
+    val (finalRec, _) = materialize("final_recipe", packed
+      .join(copies.groupBy(col("fp")).agg(min(col("packCid"))
+          .as("firstCopyCid")),
         Seq("fp"), "left")
       .withColumn("containerId",
         coalesce(col("packCid"),
           when(col("idxCid").isNotNull, col("idxCid"))
             .otherwise(col("firstCopyCid"))))
       .select(col("stream"), col("seq"), col("path"), col("fp"),
-        col("size"), col("dup"), col("write"), col("containerId"))
-      .localCheckpoint(true)
-    val sparseList =
+        col("size"), col("dup"), col("write"), col("containerId")))
+    val stats = recipeStats(backupId, finalRec, nextCid)
+    val (sparseList, sparseCount) =
       if (settings.rewrite.enableHar)
-        Rewrite.harSparseContainers(finalRec,
-            settings.rewrite.harUtilizationThreshold,
-            settings.rewrite.harRewriteLimit, payload)
-          .select(col("containerId")).localCheckpoint(true)
-      else prevSparse
-    val newIndex = index.join(copies.select(col("fp")), Seq("fp"), "left_anti")
-      .union(copies.select(col("fp"), col("lc.packCid").as("idxCid")))
-      .localCheckpoint(true)
-    written.unpersist(); packed.unpersist()
-    TraceJobResult(finalRec, newIndex, sparseList)
+        materialize("har_sparse",
+          Rewrite.harSparseContainers(finalRec,
+              settings.rewrite.harUtilizationThreshold,
+              settings.rewrite.harRewriteLimit, payload)
+            .select(col("containerId")))
+      else (prevSparse, 0L)
+    // latest copy wins: the max over the old entry and this job's copies
+    val (newIndex, _) = materialize("index",
+      index.select(col("fp"), col("idxCid"))
+        .union(copies)
+        .groupBy(col("fp")).agg(max(col("idxCid")).as("idxCid")))
+    TraceJobResult(finalRec, newIndex, sparseList,
+      stats.copy(sparse_containers = sparseCount))
   }
 
   /** The backup.log scalars of one job's final recipe in ONE aggregate:
@@ -184,43 +228,23 @@ object TracePipeline {
     val stats = scala.collection.mutable.ArrayBuffer.empty[TraceJobStats]
     jobs.zipWithIndex.foreach { case (job0, i) =>
       val b = i + 1L
-      val label = s"b$b"
-      // one stream per job, global seq by (path, chunkIdx) — two-phase
-      // distributed rank, never a window sort
-      val seqd = DedupPipeline.streamPrefix(
-          job0.select(col("path"),
-            col("chunkIdx").cast("long").as("chunkIdx"), col("fp"),
-            col("size").cast("int").as("size"), lit(label).as("stream"),
-            lit(1L).as("one")),
-          "stream", Seq("path", "chunkIdx"), "one", "pre")
-        .withColumn("seq", col("pre") + 1L).drop("one", "pre")
-        .persist()
-      if (seqd.isEmpty) {
-        // an empty trace job (a trace of just `stream end`) is a valid
-        // no-op backup: emit a zero-stats row; the index/cid state carries
-        // unchanged and the HAR monitor of an empty recipe is empty
-        stats += TraceJobStats(b, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L,
-          0L, 0L, 0.0, 0.0)
-        if (settings.rewrite.enableHar)
-          prevSparse = Seq.empty[Long].toDF("containerId")
-        seqd.unpersist()
-      } else {
-        val r = oneJob(seqd, index, prevSparse, nextCid, settings, payload)
-        val base = recipeStats(b, r.finalRec, nextCid)
-        val rs = settings.restoreSim(
+      // an empty trace job (a trace of just `stream end`) is a valid no-op
+      // backup: zero stats, the index/cid state carries unchanged and the
+      // HAR monitor of an empty recipe is empty
+      val r = oneJob(b, sequence(job0, s"b$b"), index, prevSparse, nextCid,
+        settings, payload, checkpoint)
+      val rs =
+        if (r.stats.chunks == 0) (0L, 0.0, 0.0)
+        else settings.restoreSim(
             r.finalRec.select(col("stream"), col("seq"), col("containerId"),
               col("size")))
           .select(col("containerReads"), col("speedFactor"), col("cfl"))
           .as[(Long, Double, Double)].head()
-        val sparseCount =
-          if (settings.rewrite.enableHar) r.sparse.count() else 0L
-        stats += base.copy(sparse_containers = sparseCount,
-          container_reads = rs._1, speed_factor = rs._2, cfl = rs._3)
-        index = r.newIndex
-        nextCid += base.containers_written
-        prevSparse = r.sparse
-        seqd.unpersist()
-      }
+      stats += r.stats.copy(
+        container_reads = rs._1, speed_factor = rs._2, cfl = rs._3)
+      index = r.newIndex
+      nextCid += r.stats.containers_written
+      prevSparse = r.sparse
     }
     spark.createDataset(stats.toSeq).toDF()
   }
