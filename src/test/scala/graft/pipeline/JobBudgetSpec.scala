@@ -70,10 +70,10 @@ class JobBudgetSpec extends AnyFunSuite {
     val n = files.size
     within("fresh backup", jobsOf(ClusterJob.backup(
       corpusOf(files.take(n * 2 / 3)), b1, "jb-b1", settings, None, 4096L)),
-      36)
+      35)
     within("chained backup", jobsOf(ClusterJob.backup(
       corpusOf(files.drop(n / 3)), b2, "jb-b2", settings, Some(b1), 4096L)),
-      40)
+      39)
     within("expire", jobsOf(ClusterJob.expire(
       spark, Seq(b1, b2), "b1", ex, "jb-ex", 4096L)), 23)
   }
