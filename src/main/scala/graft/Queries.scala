@@ -314,44 +314,21 @@ object Queries {
 
   /** A7 CBR utility quantile: exact discrete quantiles picked by global
     * rank (element at ceil(q·n)) — engine-independent, no interpolation.
-    * The rank is a two-phase distributed row_number (range-partition +
-    * per-partition counts + broadcast offsets), not a single-partition
-    * global window — the value at rank k is tie-insensitive, so the result
-    * is deterministic even though tied rows get arbitrary ranks.
+    * The rank is the distributed running count of one stream
+    * ([[DedupPipeline.streamPrefixTotal]] of 1s, rank = pre + 1, n from
+    * the same counts job), not a single-partition global window — the
+    * value at rank k is tie-insensitive, so the result is deterministic
+    * even though tied rows get arbitrary ranks.
     */
   def qQuantile(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val o = t(spark, dir, "orders")
-    // ONE eager materialization with frozen partition ids (r6 — the
-    // streamPrefix pattern: formerly persist + a checkpointed rank pass,
-    // writing the data twice); per-partition counts via codegen'd groupBy
-    // over the frozen pid, rank pass lazy on the checkpointed blocks.
-    val sorted = o.select(cents(col("o_totalprice")).as("c"))
-      .repartitionByRange(col("c"))
-      .sortWithinPartitions(col("c"))
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(false) // lazy: the perPart aggregate below
-      // materializes the blocks in the same job (streamPrefix pattern)
-    val perPart = sorted.groupBy(col("_pid")).agg(count(lit(1)).as("n"))
-      .as[(Int, Long)].collect().sortBy(_._1)
-    val maxPid = if (perPart.isEmpty) -1 else perPart.map(_._1).max
-    val prefix = new Array[Long](maxPid + 2)
-    perPart.foreach { case (pid, cnt) => prefix(pid + 1) = cnt }
-    var i = 1
-    while (i < prefix.length) { prefix(i) += prefix(i - 1); i += 1 }
-    val n = prefix.last
-    val prefixB = spark.sparkContext.broadcast(prefix)
-    val ranked = sorted.as[(Long, Int)].mapPartitions { it =>
-      var curPid = Int.MinValue; var rn = 0L
-      it.map { case (c, pid) =>
-        if (pid != curPid) { curPid = pid; rn = prefixB.value(pid) }
-        rn += 1; (c, rn)
-      }
-    }.toDF("c", "rn")
-    ranked.agg(
-      max(when(col("rn") === math.ceil(n * 0.5).toLong, col("c"))).as("p50"),
-      max(when(col("rn") === math.ceil(n * 0.9).toLong, col("c"))).as("p90"),
-      max(when(col("rn") === math.ceil(n * 0.99).toLong, col("c"))).as("p99"))
+    val (ranked, n) = DedupPipeline.streamPrefixTotal(
+      o.select(cents(col("o_totalprice")).as("c"), lit("q").as("s"),
+        lit(1L).as("one")),
+      "s", Seq("c"), "one", "pre")
+    def at(q: Double) =
+      max(when(col("pre") + 1L === math.ceil(n * q).toLong, col("c")))
+    ranked.agg(at(0.5).as("p50"), at(0.9).as("p90"), at(0.99).as("p99"))
   }
 
   // ====================================================================

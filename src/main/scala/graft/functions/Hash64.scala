@@ -102,7 +102,9 @@ object Hash64 {
     * bytes[offsets(i), offsets(i+g)) — so rolling-gram hashing
     * (`hashString(new String(cps, i, g))`, one String + one encode per
     * position) reduces to `hashBytes(bytes, off(i), off(i+g)-off(i))`
-    * with zero per-position allocation and bit-identical values.
+    * with zero per-position allocation and bit-identical values. An
+    * unpaired surrogate (0xD800–0xDFFF) counts 1 byte: `getBytes(UTF_8)`
+    * replaces it with `?`.
     */
   def utf8Offsets(cps: Array[Int]): Array[Int] = {
     val off = new Array[Int](cps.length + 1)
@@ -110,7 +112,9 @@ object Hash64 {
     while (i < cps.length) {
       val c = cps(i)
       off(i + 1) = off(i) +
-        (if (c < 0x80) 1 else if (c < 0x800) 2 else if (c < 0x10000) 3 else 4)
+        (if (c < 0x80) 1 else if (c < 0x800) 2
+         else if (c >= 0xD800 && c <= 0xDFFF) 1
+         else if (c < 0x10000) 3 else 4)
       i += 1
     }
     off

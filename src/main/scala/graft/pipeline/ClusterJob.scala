@@ -258,14 +258,12 @@ object ClusterJob {
           case r if r.isNullAt(0) => 0L
           case r => r.getLong(0) + 1L
         }
-        val repacked = DedupPipeline.streamPrefix(
+        val repacked = DedupPipeline.pack(
             marked.filter(col("dup") && col("write"))
               .select(col("stream"), col("seq"),
                 col("size").cast("long").as("sz"), lit("all").as("s")),
-            "s", Seq("stream", "seq"), "sz", "pre")
-          .withColumn("newCid",
-            (lit(base) + floor(greatest(col("pre") + col("sz") - 1, lit(0L))
-              / Rewrite.ContainerPayload)).cast("long"))
+            "s", Seq("stream", "seq"), "sz", base, Rewrite.ContainerPayload,
+            "newCid")
           .select(col("stream"), col("seq"), col("newCid"))
         marked
           .join(repacked, Seq("stream", "seq"), "left")
@@ -645,84 +643,15 @@ object ClusterJob {
     * `simulation-level all` runs.
     */
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("trace")) {
-      val Array(_, corpusPath, outFile) = args.take(3)
-      val cfg = args.lift(3).map { cfgPath =>
-        val text = new String(java.nio.file.Files.readAllBytes(
+    val mode = args.headOption.filter(Set("trace", "restore", "expire"))
+    // every mode but expire takes an optional destor.config 4th argument
+    val settings = args.lift(3).filter(_ => !mode.contains("expire"))
+      .map { cfgPath =>
+        DestorConfig.parse(new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(cfgPath)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        DestorConfig.parse(text).dedupConfig
-      }.getOrElse(DedupConfig())
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      import spark.implicits._
-      val corpus = spark.read.parquet(corpusPath).as[CorpusFile]
-      val n = trace(corpus, outFile, cfg)
-      println(s"[clusterjob] trace chunks=$n out=$outFile")
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("restore")) {
-      val Array(_, corpusPath, outDir) = args.take(3)
-      val cfg = args.lift(3).map { cfgPath =>
-        val text = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(cfgPath)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        DestorConfig.parse(text).dedupConfig
-      }.getOrElse(DedupConfig())
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      import spark.implicits._
-      val corpus = spark.read.parquet(corpusPath).as[CorpusFile]
-      val res = Restore.materialize(corpus, cfg, outDir)
-      val tally = res.agg(count(lit(1)).as("files"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("restored_ok"),
-        sum(when(col("ok"), 0L).otherwise(1L)).as("restored_bad")).head()
-      println(s"[clusterjob] restore files=${tally.getLong(0)} " +
-        s"ok=${tally.getLong(1)} bad=${tally.getLong(2)} out=$outDir")
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("expire")) {
-      val Array(_, outRoot, expiredBackup, chain) = args.take(4)
-      val runId = args.lift(4).getOrElse(s"gc-${java.util.UUID.randomUUID()}")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val stats = expire(spark, chain.split(',').toSeq, expiredBackup,
-        outRoot, runId)
-      println(s"[clusterjob] $stats")
-      spark.stop()
-      return
-    }
-    val Array(corpusPath, root) = args.take(2)
-    val runId = args.lift(2).getOrElse(s"run-${java.util.UUID.randomUUID()}")
-    val settings = args.lift(3).map { cfgPath =>
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(cfgPath)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      DestorConfig.parse(text)
-    }
+          java.nio.charset.StandardCharsets.UTF_8))
+      }
+    val cfg = settings.fold(DedupConfig())(_.dedupConfig)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
@@ -733,15 +662,38 @@ object ClusterJob {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val corpus = spark.read.parquet(corpusPath).as[CorpusFile]
-    val s: Any = (settings, args.lift(4)) match {
-      case (st, Some(prev)) => // incremental-backup mode
-        backup(corpus, root, runId, st.getOrElse(DestorSettings()),
-          Some(prev).filter(_ != "-"))
-      case (Some(st), None) => run(corpus, root, runId, st)
-      case (None, None) => run(corpus, root, runId, DedupConfig())
+    def corpus(path: String) = spark.read.parquet(path).as[CorpusFile]
+    val report: Any = mode match {
+      case Some("trace") =>
+        val Array(_, corpusPath, outFile) = args.take(3)
+        val n = trace(corpus(corpusPath), outFile, cfg)
+        s"trace chunks=$n out=$outFile"
+      case Some("restore") =>
+        val Array(_, corpusPath, outDir) = args.take(3)
+        val tally = Restore.materialize(corpus(corpusPath), cfg, outDir)
+          .agg(count(lit(1)).as("files"),
+            sum(when(col("ok"), 1L).otherwise(0L)).as("restored_ok"),
+            sum(when(col("ok"), 0L).otherwise(1L)).as("restored_bad")).head()
+        s"restore files=${tally.getLong(0)} ok=${tally.getLong(1)} " +
+          s"bad=${tally.getLong(2)} out=$outDir"
+      case Some(_) => // expire
+        val Array(_, outRoot, expiredBackup, chain) = args.take(4)
+        val runId =
+          args.lift(4).getOrElse(s"gc-${java.util.UUID.randomUUID()}")
+        expire(spark, chain.split(',').toSeq, expiredBackup, outRoot, runId)
+      case None =>
+        val Array(corpusPath, root) = args.take(2)
+        val runId =
+          args.lift(2).getOrElse(s"run-${java.util.UUID.randomUUID()}")
+        (settings, args.lift(4)) match {
+          case (st, Some(prev)) => // incremental-backup mode
+            backup(corpus(corpusPath), root, runId,
+              st.getOrElse(DestorSettings()), Some(prev).filter(_ != "-"))
+          case (Some(st), None) => run(corpus(corpusPath), root, runId, st)
+          case (None, None) => run(corpus(corpusPath), root, runId, cfg)
+        }
     }
-    println(s"[clusterjob] $s")
+    println(s"[clusterjob] $report")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.chunking.{ChunkerConfig, Chunkers}
@@ -13,9 +12,6 @@ import graft.functions.Hash64
 final case class DedupConfig(
     chunker: ChunkerConfig = ChunkerConfig(),
     shingle: ShingleConfig = ShingleConfig(),
-    /** 4 MiB container minus 32 KiB meta
-      * (reference: src/storage/containerstore.h:13-16). */
-    containerPayload: Long = (4L * 1024 * 1024) - (32 * 1024),
     ccMaxIter: Int = 25)
 
 /** Per-chunk record (reference `struct chunk`, src/destor.h:288-294;
@@ -167,51 +163,22 @@ object DedupPipeline {
       .as[UniqueChunk]
   }
 
-  /** Order-preserving container assignment: unique chunks sorted by
-    * first-writer stream order, containerId = floor((cumEnd-1)/payload).
-    * (Analog of the reference's sequential 4 MiB packing,
-    * src/filter_phase.c:135-190; bin boundaries here are cumulative-sum
-    * based so the fold parallelises: range-sort, per-partition byte
-    * totals, then a map with broadcast prefix offsets — no single-node
-    * scan at any scale.)
+  /** Order-preserving container assignment: unique chunks in
+    * first-writer stream order, packed as ONE stream by [[pack]]. The
+    * order is total (unique chunks have distinct first-writer positions),
+    * so the ids are deterministic. The payload is destor's fixed
+    * [[Rewrite.ContainerPayload]]; `cfg` holds no packing knob.
     */
-  def packContainers(unique: Dataset[UniqueChunk], cfg: DedupConfig): Dataset[PackedChunk] = {
+  def packContainers(unique: Dataset[UniqueChunk],
+      @annotation.unused cfg: DedupConfig): Dataset[PackedChunk] = {
     val spark = unique.sparkSession
     import spark.implicits._
-    // ONE eager materialization with frozen partition ids (r6 — see
-    // streamPrefix: formerly persist + a second full checkpoint write);
-    // per-partition byte totals come from a codegen'd groupBy over the
-    // frozen pid instead of a typed per-row fold.
-    val sorted = unique
-      .repartitionByRange($"repo", $"path", $"commit", $"chunkIdx")
-      .sortWithinPartitions($"repo", $"path", $"commit", $"chunkIdx")
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(eager = false) // lazy: the perPart aggregate below
-      // materializes the blocks in the same job (see streamPrefix)
-    val perPart = sorted.groupBy($"_pid")
-      .agg(sum($"size").cast("long").as("bytes"))
-      .as[(Int, Long)].collect().sortBy(_._1)
-    val maxPid = if (perPart.isEmpty) -1 else perPart.map(_._1).max
-    val prefix = new Array[Long](maxPid + 2)
-    perPart.foreach { case (pid, b) => prefix(pid + 1) = b }
-    var i = 1
-    while (i < prefix.length) { prefix(i) += prefix(i - 1); i += 1 }
-    val prefixB = spark.sparkContext.broadcast(prefix)
-    val payload = cfg.containerPayload
-    val fpIdx = sorted.schema.fieldIndex("fp")
-    val szIdx = sorted.schema.fieldIndex("size")
-    val pIdx = sorted.schema.fieldIndex("_pid")
-    // LAZY packing pass keyed on the FROZEN pid (coalesce-safe)
-    sorted.toDF().mapPartitions { it =>
-      var curPid = Int.MinValue; var cum = 0L
-      it.map { r =>
-        val pid = r.getInt(pIdx)
-        if (pid != curPid) { curPid = pid; cum = prefixB.value(pid) }
-        val size = r.getInt(szIdx)
-        cum += size
-        PackedChunk(r.getString(fpIdx), size, (cum - 1) / payload)
-      }
-    }
+    pack(unique.withColumn("sz", $"size".cast("long"))
+        .withColumn("s", lit("all")),
+        "s", Seq("repo", "path", "commit", "chunkIdx"), "sz", 0L,
+        Rewrite.ContainerPayload, "containerId")
+      .select($"fp", $"size", $"containerId")
+      .as[PackedChunk]
   }
 
   /** Chunk table with duplicate marking + owning container — the recipe
@@ -242,9 +209,9 @@ object DedupPipeline {
     *
     * The per-stream rank is TWO-PHASE DISTRIBUTED (range-partition on the
     * full ordering, per-(partition, repo) counts, broadcast prefix
-    * offsets — the qQuantile/packContainers pattern), never a per-repo
-    * window: a mega-repo with 10^9 chunks would funnel its whole stream
-    * through one window-sort task. Repos are contiguous under the range
+    * offsets: [[streamPrefix]] of 1s), never a per-repo window: a
+    * mega-repo with 10^9 chunks would funnel its whole stream through
+    * one window-sort task. Repos are contiguous under the range
     * partitioning, so each partition carries only a handful of distinct
     * repo offsets and the driver-side count exchange is O(partitions).
     * The result is localCheckpoint-materialized so the sampled range
@@ -261,9 +228,8 @@ object DedupPipeline {
     * column) over rows ordered by `orderCols` within `streamCol`, added
     * as column `out` — TWO-PHASE DISTRIBUTED: range-partition on the full
     * ordering, per-(partition, stream) totals, broadcast prefix offsets,
-    * one running-sum map (the packContainers/qQuantile pattern). Never a
-    * per-stream window: a mega-stream with 10^9 rows would funnel one
-    * window-sort task. Streams are contiguous under the range
+    * one running-sum map. Never a per-stream window: a mega-stream with
+    * 10^9 rows would funnel one window-sort task. Streams are contiguous under the range
     * partitioning, so each partition carries only a handful of distinct
     * stream offsets and the driver exchange is O(partitions). The SORTED
     * input is localCheckpoint-materialized inside the counts job
@@ -279,6 +245,27 @@ object DedupPipeline {
   private[graft] def streamPrefix(df: DataFrame, streamCol: String,
       orderCols: Seq[String], valueCol: String, out: String): DataFrame =
     streamPrefixTotal(df, streamCol, orderCols, valueCol, out)._1
+
+  /** Container packing, the analog of destor's sequential fill of
+    * `payload`-byte containers in stream order (src/filter_phase.c:
+    * 135-190; 4 MiB minus 32 KiB of metadata,
+    * src/storage/containerstore.h:13-16). Boundaries are cumulative so
+    * the fold parallelizes: a row whose bytes end at running offset
+    * `pre + size` within its stream lands in container
+    * `out = base + floor(greatest(pre + size − 1, 0) / payload)`, ids
+    * continuing from `base`; the clamp puts a zero-size row at a
+    * stream's start in the first container. `pre` is [[streamPrefix]]'s,
+    * so no task sorts a whole stream. `sizeCol` must be LongType. This
+    * is the one statement of the packing rule; every packer calls it.
+    */
+  private[graft] def pack(df: DataFrame, streamCol: String,
+      orderCols: Seq[String], sizeCol: String, base: Long, payload: Long,
+      out: String): DataFrame =
+    streamPrefix(df, streamCol, orderCols, sizeCol, "pre")
+      .withColumn(out, (lit(base) +
+          floor(greatest(col("pre") + col(sizeCol) - 1, lit(0L)) / payload))
+        .cast("long"))
+      .drop("pre")
 
   /** [[streamPrefix]] plus the sum of `valueCol` over ALL rows, which its
     * counts job collects anyway (each partition reports its own total), so

@@ -60,14 +60,12 @@ object GC {
     *  2. containers holding ≥1 dead chunk are compacted: their SURVIVORS
     *     migrate into fresh densely-packed containers whose ids continue
     *     past the current max — cumulative-size packing in deterministic
-    *     (oldCid, fp) order via the two-phase distributed prefix sum
-    *     ([[DedupPipeline.streamPrefix]], the packContainers pattern —
-    *     never a global window sort);
+    *     (oldCid, fp) order by [[DedupPipeline.pack]] (never a global
+    *     window sort);
     *  3. the surviving versions' recipe rows are rewritten to the new
     *     container ids (deleted-version rows drop out).
     *
-    * Zero-size chunks ride along at their packing position (the
-    * `greatest(…, 0)` clamp keeps the first container id exact).
+    * Zero-size chunks ride along at their packing position.
     * Re-running on the rewritten recipe with the same deleted version is
     * a NO-OP: its dead set is empty, so no container is affected.
     */
@@ -85,14 +83,10 @@ object GC {
       case r if r.isNullAt(0) => 0L
       case r => r.getLong(0) + 1L
     }
-    val migration = DedupPipeline.streamPrefix(
+    val migration = DedupPipeline.pack(
         survivors.select(col("fp"), col("cid"),
           col("size").cast("long").as("sz"), lit("all").as("s")),
-        "s", Seq("cid", "fp"), "sz", "pre")
-      .withColumn("new_cid",
-        (lit(base) +
-          floor(greatest(col("pre") + col("sz") - 1, lit(0L)) / payload))
-          .cast("long"))
+        "s", Seq("cid", "fp"), "sz", base, payload, "new_cid")
       .select(col("fp"), col("cid").as("old_cid"),
         col("sz").as("size"), col("new_cid"))
       .localCheckpoint(true)
@@ -137,7 +131,7 @@ object GC {
     *  3. containers holding ≥1 dead copy compact: their LIVE copies
     *     migrate into fresh densely-packed containers past the chain's
     *     high-water id — cumulative-size packing in deterministic
-    *     (oldCid, fp) order via the two-phase distributed prefix sum;
+    *     (oldCid, fp) order by [[DedupPipeline.pack]];
     *  4. surviving recipes rewrite (fp, oldCid) → newCid; expired rows
     *     drop out;
     *  5. the inherited index is fp → max surviving containerId (the
@@ -163,14 +157,10 @@ object GC {
       case r if r.isNullAt(0) => 0L
       case r => r.getLong(0) + 1L
     }
-    val migration = DedupPipeline.streamPrefix(
+    val migration = DedupPipeline.pack(
         survivors.select(col("fp"), col("containerId").as("cid"),
           col("size").cast("long").as("sz"), lit("all").as("s")),
-        "s", Seq("cid", "fp"), "sz", "pre")
-      .withColumn("new_cid",
-        (lit(base) +
-          floor(greatest(col("pre") + col("sz") - 1, lit(0L)) / payload))
-          .cast("long"))
+        "s", Seq("cid", "fp"), "sz", base, payload, "new_cid")
       .select(col("fp"), col("cid").as("old_cid"),
         col("sz").as("size"), col("new_cid"))
       .localCheckpoint(true)

@@ -148,17 +148,14 @@ object TracePipeline {
     val written = Rewrite.writePredicate(hared)
     // pack every written occurrence in stream order; ids continue past
     // the previous jobs' containers (stream is constant within one job,
-    // so grouping the prefix sum by it is the single-stream fold). The
-    // prefix runs over ALL rows, an unwritten one weighing 0, so each row
-    // carries its own pack id and no join brings it back.
-    val packed = DedupPipeline.streamPrefix(
+    // so it is the single packing stream). The packing runs over ALL
+    // rows, an unwritten one weighing 0, so each row carries its own pack
+    // id and no join brings it back.
+    val packed = DedupPipeline.pack(
         written.withColumn("sz",
           when(col("write"), col("size").cast("long")).otherwise(0L)),
-        "stream", Seq("seq"), "sz", "pre")
-      .withColumn("packCid", when(col("write"),
-        (lit(nextCid) +
-          floor(greatest(col("pre") + col("sz") - 1, lit(0L)) / payload))
-          .cast("long")))
+        "stream", Seq("seq"), "sz", nextCid, payload, "packCid")
+      .withColumn("packCid", when(col("write"), col("packCid")))
     // pack ids never decrease along the stream, so a fingerprint's first
     // written copy this job has its smallest pack id and its last copy
     // the largest — and every pack id is past every indexed one

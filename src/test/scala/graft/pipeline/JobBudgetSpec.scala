@@ -61,8 +61,13 @@ class JobBudgetSpec extends AnyFunSuite {
   test("ClusterJob.run, fresh and resumed, stays within its job budget") {
     val root = freshDir()
     val corpus = corpusOf(files)
-    within("fresh run", jobsOf(ClusterJob.run(corpus, root, "jb-run")), 42)
+    within("fresh run", jobsOf(ClusterJob.run(corpus, root, "jb-run")), 41)
     within("resumed run", jobsOf(ClusterJob.run(corpus, root, "jb-run")), 12)
+  }
+
+  test("config-driven ClusterJob.run stays within its job budget") {
+    within("config run", jobsOf(ClusterJob.run(corpusOf(files), freshDir(),
+      "jb-cfg", settings)), 71)
   }
 
   test("backup (fresh and chained) and expire stay within their job budgets") {

@@ -58,7 +58,7 @@ class PipelineSpec extends AnyFunSuite {
       .as[(Long, Long)].collect()
     // every container except possibly the last stays within payload+maxChunk slack
     byContainer.foreach { case (_, bytes) =>
-      assert(bytes <= cfg.containerPayload + cfg.chunker.maxSize)
+      assert(bytes <= Rewrite.ContainerPayload + cfg.chunker.maxSize)
     }
     // containers are dense 0..n-1
     val ids = byContainer.map(_._1).sorted

@@ -194,6 +194,55 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("pack equals the sequential cumulative fill per stream (property)") {
+    val spark = graft.SparkTestSession.spark
+    import spark.implicits._
+    val payload = 100L
+    val rows: Gen[(List[(String, Long)], Long)] = for {
+      n <- Gen.chooseNum(0, 150)
+      streams <- Gen.chooseNum(1, 4)
+      xs <- Gen.listOfN(n, for {
+        s <- Gen.chooseNum(0, streams - 1)
+        v <- Gen.frequency(1 -> Gen.const(0L), 3 -> Gen.chooseNum(1L, 250L))
+      } yield (s"s$s", v))
+      base <- Gen.chooseNum(0L, 1000L)
+    } yield (xs, base)
+    def packed(data: Seq[(String, Int, Long)], base: Long) =
+      DedupPipeline.pack(data.toDF("stream", "k", "sz").repartition(8),
+          "stream", Seq("k"), "sz", base, payload, "cid")
+        .select($"k", $"cid").as[(Int, Long)].collect().toMap
+    forAll(rows, n = 12) { case (xs, base) =>
+      // the very first row weighs 0, so a stream can open on a zero-size row
+      val data = xs.zipWithIndex.map { case ((s, v), i) =>
+        (s, i, if (i == 0) 0L else v) }
+      val expect = data.groupBy(_._1).flatMap { case (_, rs) =>
+        var cum = 0L
+        rs.sortBy(_._2).map { case (_, k, v) =>
+          cum += v; k -> (base + math.max(cum - 1, 0L) / payload)
+        }
+      }
+      assert(packed(data, base) == expect)
+    }
+    assert(packed(Seq.empty, 7L).isEmpty)
+  }
+
+  test("utf8Offsets equal getBytes(UTF_8) prefix lengths, lone surrogates included (property)") {
+    // arbString never draws surrogates, so mix them in: adjacent high/low
+    // ones form pairs, the rest stay unpaired and encode as `?`
+    val chars: Gen[Char] = Gen.frequency(
+      4 -> org.scalacheck.Arbitrary.arbChar.arbitrary,
+      2 -> Gen.choose(0.toChar, 0x7f.toChar),
+      1 -> Gen.choose(0xd800.toChar, 0xdfff.toChar))
+    forAll(Gen.listOf(chars).map(_.mkString), n = 200) { s =>
+      val cps = s.codePoints().toArray
+      val off = graft.functions.Hash64.utf8Offsets(cps)
+      (0 to cps.length).foreach { i =>
+        assert(off(i) == new String(cps, 0, i)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8).length)
+      }
+    }
+  }
+
   test("top_k_by equals sort-take for arbitrary longs incl. extremes (property)") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
