@@ -6,9 +6,12 @@ Checks exactly the queries the last `graft.Verify` run into verifyOutDir
 selected (its verify_stamp.json). A selected query whose output is absent
 or older than the stamp (it threw in Verify) is MISSING. For each fresh
 output with an oracle_sql.json entry: register sfDir parquet as views, run
-the oracle SQL, compare to the Spark parquet output (columns sorted by
-name, rows sorted, values stringified) and print MATCH/MISMATCH per query.
-Exits non-zero on any MISMATCH or MISSING.
+the oracle SQL, compare to the Spark parquet output (column names and
+their DuckDB types, then rows sorted with values stringified) and print
+MATCH/MISMATCH per query. A column whose oracle type differs from the type
+DuckDB reads from the Spark parquet (say HUGEINT against BIGINT) is a
+TYPE-MISMATCH even when the values print alike: the driver's result hash
+sees the type. Exits non-zero on any MISMATCH or MISSING.
 """
 import sys, json, glob, os
 import duckdb
@@ -61,12 +64,14 @@ def main():
                 f"SELECT count(*) FROM read_parquet({files!r})").fetchone()[0]
             print(f"{name:24s} rows-only rows={cnt}")
             continue
-        spark_rel = con.execute(f"SELECT * FROM read_parquet({files!r})")
-        s_cols = [d[0] for d in spark_rel.description]
+        spark_rel = con.sql(f"SELECT * FROM read_parquet({files!r})")
+        s_cols = spark_rel.columns
+        s_types = dict(zip(s_cols, map(str, spark_rel.types)))
         s_rows = spark_rel.fetchall()
         try:
-            duck_rel = con.execute(oracles[name])
-            d_cols = [d[0] for d in duck_rel.description]
+            duck_rel = con.sql(oracles[name])
+            d_cols = duck_rel.columns
+            d_types = dict(zip(d_cols, map(str, duck_rel.types)))
             d_rows = duck_rel.fetchall()
         except Exception as ex:
             print(f"{name:24s} ORACLE-ERROR {ex}")
@@ -76,6 +81,11 @@ def main():
         dc, dr = norm(d_rows, d_cols)
         if sc != dc:
             print(f"{name:24s} SCHEMA-MISMATCH spark={sc} duck={dc}")
+            n_mismatch += 1
+        elif s_types != d_types:
+            diff = {c: (s_types[c], d_types[c])
+                    for c in sc if s_types[c] != d_types[c]}
+            print(f"{name:24s} TYPE-MISMATCH (spark, duck): {diff}")
             n_mismatch += 1
         elif sr != dr:
             diff = [(a, b) for a, b in zip(sr, dr) if a != b][:3]

@@ -4208,7 +4208,8 @@ object Queries {
          |    CASE WHEN i % 3 = 1 THEN 0 ELSE 16 + CAST(i % 4 AS INTEGER) * 8 END AS width,
          |    CASE WHEN i % 3 = 1 THEN 0 ELSE 16 END AS height
          |  FROM range(200) t(i))
-         |SELECT m.media_id, m.kind, m.width, m.height, f.luma_ppm, f.sha1
+         |SELECT m.media_id, m.kind, m.width, m.height,
+         |  CAST(f.luma_ppm AS BIGINT) AS luma_ppm, f.sha1
          |FROM m JOIN f USING (media_id)""".stripMargin,
     "m_resize" ->
       s"""WITH ab(media_id, bytes_fix) AS (VALUES
@@ -4230,12 +4231,12 @@ object Queries {
          |SELECT g.media_id,
          |  CASE g.k WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
          |  g.width, g.height, g.new_width, g.new_height,
-         |  CASE g.k
+         |  CAST(CASE g.k
          |    WHEN 0 THEN 11 + length(CAST(g.new_height AS VARCHAR)) + 3 * 12 * g.new_height
          |    WHEN 1 THEN ab.bytes_fix
          |    ELSE g.frames * (11 + length(CAST(g.w AS VARCHAR)) + 3 * g.w * 16)
-         |  END AS bytes,
-         |  rl.rl_ppm
+         |  END AS INTEGER) AS bytes,
+         |  CAST(rl.rl_ppm AS BIGINT) AS rl_ppm
          |FROM g LEFT JOIN ab USING (media_id) LEFT JOIN rl USING (media_id)""".stripMargin,
     "m_frame_sample" ->
       s"""WITH fh(media_id, frame_idx, b0, b1, b2, b3, b4, b5, b6, b7) AS (VALUES
@@ -4247,7 +4248,11 @@ object Queries {
          |  SELECT media_id, f AS frame_idx FROM (
          |    SELECT media_id, unnest(generate_series(0, frames - 1)) AS f FROM v)
          |  WHERE f % 2 = 0)
-         |SELECT g.media_id, g.frame_idx, b0, b1, b2, b3, b4, b5, b6, b7
+         |SELECT g.media_id, g.frame_idx,
+         |  CAST(b0 AS BIGINT) AS b0, CAST(b1 AS BIGINT) AS b1,
+         |  CAST(b2 AS BIGINT) AS b2, CAST(b3 AS BIGINT) AS b3,
+         |  CAST(b4 AS BIGINT) AS b4, CAST(b5 AS BIGINT) AS b5,
+         |  CAST(b6 AS BIGINT) AS b6, CAST(b7 AS BIGINT) AS b7
          |FROM grid g JOIN fh USING (media_id, frame_idx)""".stripMargin,
     // restore twin: the engine reassembles through chunk→dedup→recipe⋈
     // owner-slice→streaming digest; DuckDB states the lossless-roundtrip
@@ -5416,10 +5421,10 @@ object Queries {
         |  SELECT doc_id, count(*) AS n_spans, sum(span_len) AS dup_chars
         |  FROM spans GROUP BY doc_id)
         |SELECT d.doc_id, COALESCE(a.n_spans, 0) AS n_spans,
-        |  COALESCE(a.dup_chars, 0) AS dup_chars,
+        |  CAST(COALESCE(a.dup_chars, 0) AS BIGINT) AS dup_chars,
         |  length(d.text) AS char_len,
-        |  (COALESCE(a.dup_chars, 0) * 2000000 + length(d.text))
-        |    // (2 * length(d.text)) AS dup_ppm
+        |  CAST((COALESCE(a.dup_chars, 0) * 2000000 + length(d.text))
+        |    // (2 * length(d.text)) AS BIGINT) AS dup_ppm
         |FROM d LEFT JOIN agg a USING (doc_id)""".stripMargin,
     "d_self_rep" ->
       """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 16),
@@ -5449,10 +5454,10 @@ object Queries {
         |  SELECT doc_id, count(*) AS rep_spans, sum(span_len) AS rep_chars
         |  FROM spans GROUP BY doc_id)
         |SELECT d.doc_id, COALESCE(a.rep_spans, 0) AS rep_spans,
-        |  COALESCE(a.rep_chars, 0) AS rep_chars,
+        |  CAST(COALESCE(a.rep_chars, 0) AS BIGINT) AS rep_chars,
         |  length(d.text) AS char_len,
-        |  (COALESCE(a.rep_chars, 0) * 2000000 + length(d.text))
-        |    // (2 * length(d.text)) AS rep_ppm
+        |  CAST((COALESCE(a.rep_chars, 0) * 2000000 + length(d.text))
+        |    // (2 * length(d.text)) AS BIGINT) AS rep_ppm
         |FROM d LEFT JOIN agg a USING (doc_id)""".stripMargin,
     "d_suffix_rank" ->
       """WITH d AS (SELECT doc_id, text FROM documents
@@ -5474,7 +5479,7 @@ object Queries {
         |              unnest(generate_series(1, length(text) - 15)) AS i FROM d)),
         |c AS (SELECT gram, count(*) AS n, count(DISTINCT doc_id) AS nd
         |      FROM g GROUP BY gram)
-        |SELECT doc_id, char_len, count(*) AS n_grams,
+        |SELECT doc_id, CAST(char_len AS INTEGER) AS char_len, count(*) AS n_grams,
         |  CAST(sum(CASE WHEN c.n >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS dup_grams,
         |  CAST(sum(CASE WHEN c.nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS xdoc_grams
         |FROM g JOIN c USING (gram)
