@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+import graft.queries.NearDupQueries
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query implementations live in [[Queries]]; the dedup-cluster pipeline
+  * Query implementations live in the `graft.queries` family files,
+  * gathered by [[Queries]]; the dedup-cluster pipeline
   * in [[graft.pipeline.DedupPipeline]].
   */
 object SparkEntry {
@@ -10,7 +12,7 @@ object SparkEntry {
     * sf0.001; driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame =
-    Queries.dDocClusters(spark, "/root/testdata/sf0.001")
+    NearDupQueries.dDocClusters(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all

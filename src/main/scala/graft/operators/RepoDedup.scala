@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *  - [[forkPairs]] — fork / near-fork detection: repos as SETS of file
   *    content digests, Jaccard ≥ θ via the same lossless prefix-filter +
   *    length-filter + codegen'd merge-scan verify the token-bag clone
-  *    detector uses ([[graft.Queries.dClonePairs]] — Sajnani et al.,
+  *    detector uses ([[graft.queries.CloneQueries.dClonePairs]] — Sajnani et al.,
   *    ICSE 2016 adapted from bags to sets). One df-keyed join for
   *    rarity, one prefix-keyed candidate join, doc-keyed verify joins;
   *    file content never shuffles (only 16-byte digests). Boilerplate
@@ -249,7 +249,7 @@ object RepoDedup {
       .withColumn("new_ratio_pct", floor(col("n_new") * lit(100) / col("n_files")))
   }
 
-  /** Fork retention ACTION (the repo-level [[graft.Queries.dNeardupPrune]]
+  /** Fork retention ACTION (the repo-level [[graft.queries.NearDupQueries.dNeardupPrune]]
     * analog): per fork family keep ONE canonical repo — the one with the
     * most distinct file contents, ties broken by lexicographically
     * smallest name — and emit the keep/drop decision per repo. One

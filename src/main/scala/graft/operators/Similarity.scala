@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Approximate nearest neighbour over embedding columns.
   *
-  * Brute-force cosine top-k is the baseline (Queries.eAnnTopK); this is
+  * Brute-force cosine top-k is the baseline (graft.queries.EmbeddingQueries.eAnnTopK); this is
   * the scale path: IVF — deterministic coarse quantizer (first `nlist`
   * vectors by id serve as centroids), inverted lists per centroid, probe
   * the `nProbe` nearest lists per query. Candidate set shrinks by

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the initial explode is one 24-byte row per text
   * codepoint (the suffix array is Θ(corpus length) by definition — the
-  * same inherent volume [[graft.Queries.dDupSpans]] documents); each
+  * same inherent volume [[graft.queries.SpanQueries.dDupSpans]] documents); each
   * round is ONE doc-keyed hash join (the rank(pos+k) shift) + ONE range
   * partition with in-partition sort whose two mapPartitions passes
   * assign dense ranks from broadcast per-partition offsets (equal keys
@@ -69,7 +69,7 @@ object SuffixArray {
     * are identical (shorter suffixes rank by their full content,
     * termination-first, as in [[ranks]]). This is the exact,
     * collision-free form of the hashed 16-cp grams the sketch passes
-    * ([[graft.Queries.dDupSpans]]) key on: ≤ 1+log2(L) bounded shuffle
+    * ([[graft.queries.SpanQueries.dDupSpans]]) key on: ≤ 1+log2(L) bounded shuffle
     * rounds, Θ(corpus) fixed-width rows. The early exits remain sound
     * here: at a fixed point the partition can never split again, so the
     * partition at cover L equals the partition already reached.

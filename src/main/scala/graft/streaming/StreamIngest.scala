@@ -470,7 +470,7 @@ object StreamIngest {
       kept: Boolean)
 
   /** Streaming per-domain quota enforcement — the ingest-time twin of
-    * [[graft.Queries.dQuotaSample]]: one GroupState counter per source
+    * [[graft.queries.CurationQueries.dQuotaSample]]: one GroupState counter per source
     * caps how many documents a domain may contribute to the mix.
     * Keep-FIRST discipline (arrival rank ≤ quota — Append mode cannot
     * retract earlier emissions, the semDedupStream/neardupStream

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.{CloneQueries, CurationQueries, NearDupQueries, SpanQueries}
 
 /** Smoke: every registered query runs on sf0.001 and yields rows; every
   * oracle key refers to a real query. The value-level check against
@@ -35,7 +36,7 @@ class QueriesSpec extends AnyFunSuite {
     Seq((0L, base), (1L, base), (2L, near), (3L, other))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dMinhashCluster(spark, tmp)
+    val got = NearDupQueries.dMinhashCluster(spark, tmp)
       .as[(Long, Long)].collect().toMap
     assert(got(0L) === got(1L), "exact dups must share a cluster")
     assert(got(0L) === got(2L), "near dup (1-word edit) must join the cluster")
@@ -52,7 +53,7 @@ class QueriesSpec extends AnyFunSuite {
     Seq((0L, selfDup), (1L, unique), (2L, "short"), (3L, twoIslands))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dSelfRep(spark, tmp)
+    val got = SpanQueries.dSelfRep(spark, tmp)
       .select("doc_id", "rep_spans", "rep_chars", "char_len")
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(got(0L) === ((0L, 1L, 64L, 64L)), "periodic doc fully covered")
@@ -73,7 +74,7 @@ class QueriesSpec extends AnyFunSuite {
     Seq((0L, base), (1L, longer), (2L, base), (3L, other))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dNeardupPrune(spark, tmp)
+    val got = NearDupQueries.dNeardupPrune(spark, tmp)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map { case (id, cl, sz, canon, keep) => id -> ((cl, sz, canon, keep)) }
       .toMap
@@ -99,7 +100,7 @@ class QueriesSpec extends AnyFunSuite {
     Seq((0L, base), (1L, base), (2L, near), (3L, other))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dSimhashMd5(spark, tmp)
+    val got = NearDupQueries.dSimhashMd5(spark, tmp)
       .as[(Long, Long, Long)].collect()
       .map { case (a, b, h) => (a, b) -> h }.toMap
     assert(got((0L, 1L)) === 0L, "identical docs must pair at hamming 0")
@@ -120,7 +121,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("win").toString
     Seq((0L, a), (1L, b), (2L, c)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val fps = Queries.dWinnow(spark, tmp)
+    val fps = CurationQueries.dWinnow(spark, tmp)
       .as[(Long, String)].collect().groupBy(_._1)
       .map { case (d, r) => d -> r.map(_._2).toSet }
     assert(fps(0L).intersect(fps(1L)).nonEmpty,
@@ -146,7 +147,7 @@ class QueriesSpec extends AnyFunSuite {
     Seq((0L, doc0), (1L, doc1), (2L, doc2), (3L, doc3))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dDupSpans(spark, tmp)
+    val got = SpanQueries.dDupSpans(spark, tmp)
       .as[(Long, Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4)).sortBy(_._1).toList).toMap
     // the shared 30-cp block: grams fully inside it (15) merge into ONE
@@ -180,7 +181,7 @@ class QueriesSpec extends AnyFunSuite {
     (Seq((0L, doc0), (1L, doc1), (3L, doc3)) ++ hot)
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dDupSpanPairs(spark, tmp)
+    val got = SpanQueries.dDupSpanPairs(spark, tmp)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toList
     // the only surviving match: docs 0/1's shared 30-cp block -> one
     // maximal run of 15 consecutive grams on diagonal 0
@@ -206,7 +207,7 @@ class QueriesSpec extends AnyFunSuite {
       (10L, twin), (11L, twin))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dDupTrim(spark, tmp)
+    val got = SpanQueries.dDupTrim(spark, tmp)
       .as[(Long, Long, Long, Long, String)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
     val kept0 = doc0.substring(0, 20) + doc0.substring(50)
@@ -242,7 +243,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("dslcs").toString
     docs.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val runs = Queries.dDupSpanPairs(spark, tmp)
+    val runs = SpanQueries.dDupSpanPairs(spark, tmp)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
       .groupBy(r => (r._1, r._2)).view.mapValues(_.map(_._6).max).toMap
     assert(runs.keySet === Set((0L, 1L), (2L, 3L)))
@@ -262,7 +263,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("dss").toString
     Seq((0L, doc0), (1L, doc1), (2L, doc2)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dDupSpanStats(spark, tmp)
+    val got = SpanQueries.dDupSpanStats(spark, tmp)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
     val len0 = doc0.length.toLong
@@ -292,7 +293,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("dct").toString
     Seq((0L, evalDoc), (1L, dirty), (2L, clean)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dDecontam(spark, tmp)
+    val got = SpanQueries.dDecontam(spark, tmp)
       .as[(Long, Long, Long, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     // dirty: 12 tokens -> 5 shingles; exactly [alpha..theta] is in the
@@ -319,7 +320,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("clone").toString
     all.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dClonePairs(spark, tmp)
+    val got = CloneQueries.dClonePairs(spark, tmp)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
     // brute force, NO filtering: bag counts + pairwise sum-of-min
@@ -340,7 +341,7 @@ class QueriesSpec extends AnyFunSuite {
     assert(got.contains((0L, 101L)) && got((0L, 101L))._3 === 27L,
       "3-of-30 token edit stays above theta=0.7")
     // groups: 0, 100, 101 share a class labeled by min id 0
-    val groups = Queries.dCloneGroups(spark, tmp)
+    val groups = CloneQueries.dCloneGroups(spark, tmp)
       .as[(Long, Long)].collect().toMap
     assert(groups(100L) === groups(0L) && groups(101L) === groups(0L))
     assert(groups.size === all.size, "every doc labeled, singletons included")
@@ -359,7 +360,7 @@ class QueriesSpec extends AnyFunSuite {
       (5L, "fr", "s1", good + "tail"))   // kept (distinct text)
       .toDF("doc_id", "lang", "source", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val rows = Queries.dCuration(spark, tmp)
+    val rows = CurationQueries.dCuration(spark, tmp)
       .as[(String, String, Long, Long, Long, Long)].collect()
       .map { case (l, s, d, dq, dd, k) => (l, s) -> ((d, dq, dd, k)) }.toMap
     assert(rows(("en", "s0")) === ((3L, 1L, 1L, 1L)))
@@ -385,7 +386,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("quota").toString
     (big ++ small).toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dQuotaSample(spark, tmp)
+    val got = CurationQueries.dQuotaSample(spark, tmp)
       .as[(String, Long, Long)].collect()
       .groupBy(_._1).map { case (s, rs) =>
         s -> rs.sortBy(_._3).map(r => (r._2, r._3)).toSeq
@@ -411,7 +412,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("oov").toString
     Seq((0L, docA), (1L, docB)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dVocabOov(spark, tmp)
+    val got = CurationQueries.dVocabOov(spark, tmp)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got(0L) === ((32L, 0L, 0L)), "all-in-vocab doc has zero OOV")
@@ -420,7 +421,7 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("d_vocab_oov is non-vacuous on the driver corpus (boundary binds)") {
-    val oov = Queries.dVocabOov(spark, dir)
+    val oov = CurationQueries.dVocabOov(spark, dir)
       .agg(org.apache.spark.sql.functions.sum("oov")).collect()(0).getLong(0)
     assert(oov > 0, "fixture corpus must produce real OOV tokens")
   }
@@ -431,7 +432,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("bloom").toString
     docs.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dBloomDedup(spark, tmp)
+    val got = CurationQueries.dBloomDedup(spark, tmp)
       .as[(Long, Long, Boolean, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got.keySet === (1L until 20L by 2L).toSet, "batch = odd ids")
@@ -481,7 +482,7 @@ class QueriesSpec extends AnyFunSuite {
     def md5hex(t: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(t.getBytes("UTF-8")).map(x => f"$x%02x").mkString
-    val got = Queries.dParaDedup(spark, tmp)
+    val got = CurationQueries.dParaDedup(spark, tmp)
       .as[(Long, Long, Long, String)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got(0L) === ((2L, 2L, md5hex(s"$a\n$b"))))
@@ -498,7 +499,7 @@ class QueriesSpec extends AnyFunSuite {
       (2L, "date"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dTfidfTopterms(spark, tmp)
+    val got = CurationQueries.dTfidfTopterms(spark, tmp)
       .as[(Long, Long, String, Long)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
     // df: apple 1, banana 2, cherry 1, date 1; score = tf*1e9 div df
@@ -522,7 +523,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("mix").toString
     docs.toDF("doc_id", "lang", "source", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dMixAlloc(spark, tmp)
+    val got = CurationQueries.dMixAlloc(spark, tmp)
       .as[(String, String, Long, Long, Long)].collect()
     assert(got.length === 24, "sum of allocations = T exactly")
     val byG = got.groupBy(r => (r._1, r._2))
@@ -551,7 +552,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("lb").toString
     docs.toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dLangBalance(spark, tmp)
+    val got = CurationQueries.dLangBalance(spark, tmp)
       .as[(String, Long, Long, Long)].collect()
       .groupBy(_._1).map { case (l, rs) =>
         l -> rs.sortBy(_._3).map(r => (r._2, r._4)).toSeq
@@ -575,7 +576,7 @@ class QueriesSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("shard").toString
     docs.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = Queries.dShardStats(spark, tmp)
+    val got = CurationQueries.dShardStats(spark, tmp)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     // local replay of shard = m48 mod 8 over token mass

@@ -289,7 +289,7 @@ class PropertySpec extends AnyFunSuite {
       } yield (r, l, s))
     } yield xs.distinct
     forAll(rows, n = 10) { xs =>
-      val got = graft.Queries.boundedRankBefore(
+      val got = graft.queries.CurationQueries.boundedRankBefore(
           xs.toDF("rem", "lang", "source").repartition(3),
           Seq("rem" -> false, "lang" -> true, "source" -> true), "nb")
         .as[(Long, String, String, Long)].collect()
