@@ -56,21 +56,7 @@ object Restore {
       algo: String): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val chunks = DedupPipeline.chunkTableDF(features)
-    val unique = DedupPipeline.uniqueChunks(chunks.as[ChunkRow])
-    // bytes of each unique fp from its first-writer file slice
-    val corpusBin = corpus.select($"repo", $"path", $"commit",
-      encode($"content", "UTF-8").as("bin"))
-    val ownerSlices = unique
-      .select($"fp", $"repo", $"path", $"commit", $"chunkIdx")
-      .join(chunks.select($"fp", $"repo", $"path", $"commit", $"chunkIdx",
-          $"offset", $"size"),
-        Seq("fp", "repo", "path", "commit", "chunkIdx"))
-      .join(corpusBin, Seq("repo", "path", "commit"))
-      .select($"fp", expr("substring(bin, offset + 1, size)").as("bytes"))
-    chunks
-      .select($"fileId", $"chunkIdx", $"fp")
-      .join(ownerSlices, Seq("fp"))
+    chunkBytes(features, corpus)
       .select($"fileId", $"chunkIdx", $"bytes")
       .repartition(col("fileId"))
       .sortWithinPartitions(col("fileId"), col("chunkIdx"))
@@ -113,21 +99,7 @@ object Restore {
     val spark = corpus.sparkSession
     import spark.implicits._
     val features = DedupPipeline.featurize(corpus, cfg).toDF().persist()
-    val chunks = DedupPipeline.chunkTableDF(features)
-    val unique = DedupPipeline.uniqueChunks(chunks.as[ChunkRow])
-    val corpusBin = corpus.select($"repo", $"path", $"commit",
-      encode($"content", "UTF-8").as("bin"))
-    val ownerSlices = unique
-      .select($"fp", $"repo", $"path", $"commit", $"chunkIdx")
-      .join(chunks.select($"fp", $"repo", $"path", $"commit", $"chunkIdx",
-          $"offset", $"size"),
-        Seq("fp", "repo", "path", "commit", "chunkIdx"))
-      .join(corpusBin, Seq("repo", "path", "commit"))
-      .select($"fp", expr("substring(bin, offset + 1, size)").as("bytes"))
-    val written = chunks
-      .select($"fileId", $"repo", $"path", $"commit", $"chunkIdx", $"fp")
-      .join(ownerSlices, Seq("fp"))
-      .select($"fileId", $"repo", $"path", $"commit", $"chunkIdx", $"bytes")
+    val written = chunkBytes(features, corpus)
       .repartition(col("fileId"))
       .sortWithinPartitions(col("fileId"), col("chunkIdx"))
       .as[(Long, String, String, String, Int, Array[Byte])]
@@ -175,6 +147,32 @@ object Restore {
       .localCheckpoint(true) // the writes have happened; free the cache
     features.unpersist()
     res
+  }
+
+  /** The reassembly [[restoreDigests]] and [[materialize]] share: one row
+    * per recipe chunk, (fileId, repo, path, commit, chunkIdx, bytes), whose
+    * bytes are its fingerprint's first-writer file slice. Unordered; each
+    * reader shuffles on fileId and sorts by chunkIdx to stream files.
+    */
+  private def chunkBytes(features: DataFrame,
+      corpus: Dataset[CorpusFile]): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val chunks = DedupPipeline.chunkTableDF(features)
+    val unique = DedupPipeline.uniqueChunks(chunks.as[ChunkRow])
+    val corpusBin = corpus.select($"repo", $"path", $"commit",
+      encode($"content", "UTF-8").as("bin"))
+    val ownerSlices = unique
+      .select($"fp", $"repo", $"path", $"commit", $"chunkIdx")
+      .join(chunks.select($"fp", $"repo", $"path", $"commit", $"chunkIdx",
+          $"offset", $"size"),
+        Seq("fp", "repo", "path", "commit", "chunkIdx"))
+      .join(corpusBin, Seq("repo", "path", "commit"))
+      .select($"fp", expr("substring(bin, offset + 1, size)").as("bytes"))
+    chunks
+      .select($"fileId", $"repo", $"path", $"commit", $"chunkIdx", $"fp")
+      .join(ownerSlices, Seq("fp"))
+      .select($"fileId", $"repo", $"path", $"commit", $"chunkIdx", $"bytes")
   }
 
   /** Executor-side file write under outDir/<repo>/<commit>/<path> with
