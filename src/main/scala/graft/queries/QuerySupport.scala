@@ -3,7 +3,9 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.chunking.ChunkerConfig
 import graft.corpus.CorpusFile
+import graft.pipeline.DedupConfig
 
 /** One driver query: its registry name, its Spark build over the driver's
   * parquet tables in `dir`, and, where its semantics are SQL-expressible,
@@ -31,35 +33,40 @@ private[graft] object QuerySupport {
     * the whole machine. GUARDED: a production-scale table has millions
     * of row-group splits and never enters the branch, so no shuffle is
     * ever added at 100 TB — this only moves kilobytes of fixture rows.
+    * A frame with no input files (not a file scan) has an unknown split
+    * count and comes back unchanged.
     */
-  private[queries] val fileLenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[queries] def par(spark: SparkSession, df: DataFrame, key: String): DataFrame = {
-    val p = spark.sparkContext.defaultParallelism
-    // Gate on the scan's FILE SIZES (FS statuses, cached) instead of
-    // df.rdd.getNumPartitions: .rdd forced eager analysis + physical
-    // planning at query-CONSTRUCTION time for every wrapped query
-    // (round-5 ADVICE), charging planning overhead to every bench sample.
-    // splits ≈ Σ ceil(bytes / maxPartitionBytes) gates identically: a
-    // fixture file is one split (repartition), a production table is
-    // millions of splits (no-op) — unknown sizes conservatively skip the
+    // Gate on the scan's FILE SIZES instead of df.rdd.getNumPartitions:
+    // .rdd forced eager analysis + physical planning at query-CONSTRUCTION
+    // time for every wrapped query (round-5 ADVICE). splits ≈
+    // Σ ceil(bytes / maxPartitionBytes) gates identically: a fixture file
+    // is one split (repartition), a production table is millions of
+    // splits (no-op). Lengths are read fresh on every call (one status per
+    // file; the driver's tables are one file each), so a file rewritten in
+    // place is measured as it is now; an unreadable length skips the
     // repartition, matching production behavior.
+    val p = spark.sparkContext.defaultParallelism
+    val files = df.inputFiles
     val maxSplit = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
     val hconf = spark.sparkContext.hadoopConfiguration
-    val est = df.inputFiles.iterator.map { f =>
-      val len = fileLenCache.computeIfAbsent(f, { _ =>
+    val est = files.iterator.map { f =>
+      val len =
         try {
           val path = new org.apache.hadoop.fs.Path(f)
-          java.lang.Long.valueOf(
-            path.getFileSystem(hconf).getFileStatus(path).getLen)
-        } catch { case _: Throwable => java.lang.Long.valueOf(Long.MaxValue) }
-      }).longValue()
+          path.getFileSystem(hconf).getFileStatus(path).getLen
+        } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
       // division-form ceil: no overflow at the Long.MaxValue sentinel
       math.max(1L, len / maxSplit + (if (len % maxSplit > 0) 1L else 0L))
     }.sum
-    if (est < p) df.repartition(p, col(key)) else df
+    if (files.nonEmpty && est < p) df.repartition(p, col(key)) else df
   }
+
+  /** The fixed 256-byte chunking the documents queries use, so that
+    * documents of about 2 KB split into several chunks.
+    */
+  private[queries] val Fixed256 =
+    DedupConfig(chunker = ChunkerConfig("fixed", avgSize = 256))
 
   private[queries] def cents(c: org.apache.spark.sql.Column) =
     round(c * 100).cast("long")
