@@ -23,7 +23,12 @@ final case class ShingleConfig(
     rowsPerBand: Int = 4,
     /** exact-Jaccard acceptance threshold for a verified dup pair */
     tau: Double = 0.7,
-    /** LSH buckets larger than this are truncated (skew guard) */
+    /** LSH band buckets with more members than this are linked as a hub
+      * star (skew guard, [[DedupPipeline.candidatePairs]]): each member is
+      * a candidate with the bucket's smallest file id only, O(n) pairs
+      * instead of O(n²). A pair of members that verifies only against
+      * each other, not against the hub, gets no candidate from that
+      * bucket. */
     maxBucket: Int = 512,
     /** SimHash hamming radius considered near-dup */
     simhashRadius: Int = 3) {

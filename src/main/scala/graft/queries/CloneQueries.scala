@@ -260,6 +260,53 @@ object CloneQueries {
     operators.RepoDedup.commitDeltas(files)
   }
 
+  /** Oracle CTE chain shared by [[dForkFamilies]] and [[dForkPrune]]:
+    * repo content sets, fork edges at Jaccard ≥ 0.5, the recursive
+    * min-label closure `reach`, and `fam`, each family's smallest repo name
+    * and size.
+    */
+  private val forkFamilySql =
+    s"""WITH RECURSIVE $repoFilesSql,
+      |sets AS MATERIALIZED (SELECT DISTINCT repo, h FROM files),
+      |sizes AS (SELECT repo, count(*) AS n FROM sets GROUP BY 1),
+      |pairs AS (
+      |  SELECT a.repo AS repo_a, b.repo AS repo_b, count(*) AS inter
+      |  FROM sets a JOIN sets b ON b.h = a.h AND a.repo < b.repo
+      |  GROUP BY 1, 2),
+      |edges AS MATERIALIZED (
+      |  SELECT repo_a AS a, repo_b AS b FROM pairs
+      |  JOIN sizes sa ON sa.repo = repo_a
+      |  JOIN sizes sb ON sb.repo = repo_b
+      |  WHERE inter * 100 >= (sa.n + sb.n - inter) * 50),
+      |sym AS (SELECT a AS x, b AS y FROM edges UNION SELECT b, a FROM edges),
+      |reach(node, label) AS (
+      |  SELECT repo, repo FROM sizes
+      |  UNION
+      |  SELECT s.y, r.label FROM reach r JOIN sym s ON s.x = r.node
+      |  WHERE r.label < s.y),
+      |lab AS (SELECT node AS repo, min(label) AS cl FROM reach GROUP BY node),
+      |fam AS (SELECT cl, min(repo) AS family, count(*) AS family_size
+      |        FROM lab GROUP BY cl)""".stripMargin
+
+  /** Oracle CTE chain shared by [[dMerkleDirs]] and [[dMerklePrune]]: per
+    * (repo, dir), the file count and the 48-bit additive signature of its
+    * subtree's (relative path, content) terms.
+    */
+  private val merkleCensusSql =
+    s"""WITH $repoFilesSql,
+      |uf AS (SELECT DISTINCT repo, path, h FROM files),
+      |anc AS (
+      |  SELECT repo,
+      |    CASE WHEN i = 0 THEN '' ELSE array_to_string(p[1:i], '/') END AS dir,
+      |    md5(array_to_string(p[i+1:len(p)], '/') || ':' || h) AS mm
+      |  FROM (SELECT repo, h, p, unnest(range(0, len(p))) AS i
+      |        FROM (SELECT repo, h, string_split(path, '/') AS p FROM uf))),
+      |terms AS (SELECT DISTINCT repo, dir, ${h48Sql("mm")} AS term FROM anc),
+      |census AS (
+      |  SELECT repo, dir, count(*) AS n_files,
+      |    CAST(sum(CAST(term AS HUGEINT)) % 281474976710656 AS BIGINT) AS sig
+      |  FROM terms GROUP BY 1, 2)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     // brute-force bag join, NO prefix filter: hash-green proves the
     // Spark side's prefix filtering loses no pair
@@ -328,51 +375,11 @@ object CloneQueries {
         |JOIN sizes sb ON sb.repo = repo_b
         |WHERE inter * 100 >= (sa.n + sb.n - inter) * 50""".stripMargin)),
     QueryDef("d_fork_families", dForkFamilies, Some(
-      s"""WITH RECURSIVE $repoFilesSql,
-        |sets AS MATERIALIZED (SELECT DISTINCT repo, h FROM files),
-        |sizes AS (SELECT repo, count(*) AS n FROM sets GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.repo AS repo_a, b.repo AS repo_b, count(*) AS inter
-        |  FROM sets a JOIN sets b ON b.h = a.h AND a.repo < b.repo
-        |  GROUP BY 1, 2),
-        |edges AS MATERIALIZED (
-        |  SELECT repo_a AS a, repo_b AS b FROM pairs
-        |  JOIN sizes sa ON sa.repo = repo_a
-        |  JOIN sizes sb ON sb.repo = repo_b
-        |  WHERE inter * 100 >= (sa.n + sb.n - inter) * 50),
-        |sym AS (SELECT a AS x, b AS y FROM edges UNION SELECT b, a FROM edges),
-        |reach(node, label) AS (
-        |  SELECT repo, repo FROM sizes
-        |  UNION
-        |  SELECT s.y, r.label FROM reach r JOIN sym s ON s.x = r.node
-        |  WHERE r.label < s.y),
-        |lab AS (SELECT node AS repo, min(label) AS cl FROM reach GROUP BY node),
-        |fam AS (SELECT cl, min(repo) AS family, count(*) AS family_size
-        |        FROM lab GROUP BY cl)
+      s"""$forkFamilySql
         |SELECT l.repo, f.family, f.family_size
         |FROM lab l JOIN fam f USING (cl)""".stripMargin)),
     QueryDef("d_fork_prune", dForkPrune, Some(
-      s"""WITH RECURSIVE $repoFilesSql,
-        |sets AS MATERIALIZED (SELECT DISTINCT repo, h FROM files),
-        |sizes AS (SELECT repo, count(*) AS n FROM sets GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.repo AS repo_a, b.repo AS repo_b, count(*) AS inter
-        |  FROM sets a JOIN sets b ON b.h = a.h AND a.repo < b.repo
-        |  GROUP BY 1, 2),
-        |edges AS MATERIALIZED (
-        |  SELECT repo_a AS a, repo_b AS b FROM pairs
-        |  JOIN sizes sa ON sa.repo = repo_a
-        |  JOIN sizes sb ON sb.repo = repo_b
-        |  WHERE inter * 100 >= (sa.n + sb.n - inter) * 50),
-        |sym AS (SELECT a AS x, b AS y FROM edges UNION SELECT b, a FROM edges),
-        |reach(node, label) AS (
-        |  SELECT repo, repo FROM sizes
-        |  UNION
-        |  SELECT s.y, r.label FROM reach r JOIN sym s ON s.x = r.node
-        |  WHERE r.label < s.y),
-        |lab AS (SELECT node AS repo, min(label) AS cl FROM reach GROUP BY node),
-        |fam AS (SELECT cl, min(repo) AS family, count(*) AS family_size
-        |        FROM lab GROUP BY cl),
+      s"""$forkFamilySql,
         |fs AS (
         |  SELECT l.repo, f.family, f.family_size, s.n AS n_files
         |  FROM lab l JOIN fam f USING (cl) JOIN sizes s ON s.repo = l.repo),
@@ -386,38 +393,14 @@ object CloneQueries {
         |  fs.repo = c.canon AS keep
         |FROM fs JOIN canon c USING (family)""".stripMargin)),
     QueryDef("d_merkle_dirs", dMerkleDirs, Some(
-      s"""WITH $repoFilesSql,
-        |uf AS (SELECT DISTINCT repo, path, h FROM files),
-        |anc AS (
-        |  SELECT repo,
-        |    CASE WHEN i = 0 THEN '' ELSE array_to_string(p[1:i], '/') END AS dir,
-        |    md5(array_to_string(p[i+1:len(p)], '/') || ':' || h) AS mm
-        |  FROM (SELECT repo, h, p, unnest(range(0, len(p))) AS i
-        |        FROM (SELECT repo, h, string_split(path, '/') AS p FROM uf))),
-        |terms AS (SELECT DISTINCT repo, dir, ${h48Sql("mm")} AS term FROM anc),
-        |census AS (
-        |  SELECT repo, dir, count(*) AS n_files,
-        |    CAST(sum(CAST(term AS HUGEINT)) % 281474976710656 AS BIGINT) AS sig
-        |  FROM terms GROUP BY 1, 2),
+      s"""$merkleCensusSql,
         |shares AS (SELECT sig, n_files, count(*) AS n_locations,
         |    count(DISTINCT repo) AS n_repos
         |  FROM census GROUP BY 1, 2)
         |SELECT c.repo, c.dir, c.n_files, c.sig, s.n_locations, s.n_repos
         |FROM census c JOIN shares s USING (sig, n_files)""".stripMargin)),
     QueryDef("d_merkle_prune", dMerklePrune, Some(
-      s"""WITH $repoFilesSql,
-        |uf AS (SELECT DISTINCT repo, path, h FROM files),
-        |anc AS (
-        |  SELECT repo,
-        |    CASE WHEN i = 0 THEN '' ELSE array_to_string(p[1:i], '/') END AS dir,
-        |    md5(array_to_string(p[i+1:len(p)], '/') || ':' || h) AS mm
-        |  FROM (SELECT repo, h, p, unnest(range(0, len(p))) AS i
-        |        FROM (SELECT repo, h, string_split(path, '/') AS p FROM uf))),
-        |terms AS (SELECT DISTINCT repo, dir, ${h48Sql("mm")} AS term FROM anc),
-        |census AS (
-        |  SELECT repo, dir, count(*) AS n_files,
-        |    CAST(sum(CAST(term AS HUGEINT)) % 281474976710656 AS BIGINT) AS sig
-        |  FROM terms GROUP BY 1, 2),
+      s"""$merkleCensusSql,
         |shares AS (SELECT sig, n_files, count(*) AS n_locations,
         |    min(struct_pack(r := repo, d := dir)) AS c
         |  FROM census GROUP BY 1, 2)

@@ -196,6 +196,13 @@ object EmbeddingQueries {
     * untested. 0.30 sits in this corpus's near-dup tail — 236/270/3106
     * duels at sf0.001/0.01/0.1 — so the kept flags genuinely exercise
     * the pair scan and keep rule at every sf.
+    *
+    * Bounded approximation: `semDedup`'s `maxList` (100 000 members by
+    * default) caps the all-pairs duel. A larger list duels each member
+    * against its rim hub only, so it keeps every member the uncapped rule
+    * keeps and possibly more (a member that loses only to a non-hub
+    * member survives). Every list at the driver's scales is far below the
+    * cap, so the oracle's all-pairs replay is the exact contract here.
     */
   def eSemDedup(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.semDedup(
@@ -498,13 +505,11 @@ object EmbeddingQueries {
     * e_ivf_topk at full probe (nProbe = nlist ⇒ IVF ≡ brute force).
     */
   private val annBruteSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding AS q FROM embeddings WHERE vec_id < 20),
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q FROM embeddings WHERE vec_id < 20),
       |c AS (SELECT vec_id AS neighbor_id, embedding AS v FROM embeddings),
       |j AS (
       |  SELECT query_id, neighbor_id,
-      |    list_aggregate(list_transform(list_zip(q, v), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
-      |      / (sqrt(list_aggregate(list_transform(q, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-      |       * sqrt(list_aggregate(list_transform(v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cosine
+      |    ${cosSql("q", "v")} AS cosine
       |  FROM q, c WHERE query_id <> neighbor_id)
       |SELECT query_id, neighbor_id, rk, round(cosine, 4) AS cosine_r FROM (
       |  SELECT query_id, neighbor_id, cosine,
@@ -538,12 +543,10 @@ object EmbeddingQueries {
         |  round(sum(list_aggregate(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')), 3) AS sum_norm2
         |FROM embeddings GROUP BY label""".stripMargin)),
     QueryDef("e_cosine_dedup", eCosineDedup, Some(
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
+      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
         |c AS (
         |  SELECT l.vec_id AS a, r.vec_id AS b,
-        |    list_aggregate(list_transform(list_zip(l.embedding, r.embedding), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
-        |      / (sqrt(list_aggregate(list_transform(l.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |       * sqrt(list_aggregate(list_transform(r.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cosine
+        |    ${cosSql("l.embedding", "r.embedding")} AS cosine
         |  FROM e l JOIN e r ON l.vec_id <> r.vec_id)
         |SELECT a AS vec_id, b AS nearest, round(cosine, 4) AS cosine_r,
         |  cosine >= 0.95 AS is_dup
@@ -583,9 +586,7 @@ object EmbeddingQueries {
         |  SELECT hub AS a, vec_id AS b FROM bs WHERE n > 64 AND vec_id <> hub)),
         |sym AS (SELECT a, b FROM pairs UNION ALL SELECT b AS a, a AS b FROM pairs),
         |c AS (SELECT sym.a, sym.b,
-        |    list_aggregate(list_transform(list_zip(ea.embedding, eb.embedding), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
-        |      / (sqrt(list_aggregate(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |       * sqrt(list_aggregate(list_transform(eb.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cosine
+        |    ${cosSql("ea.embedding", "eb.embedding")} AS cosine
         |  FROM sym JOIN e ea ON ea.vec_id = sym.a JOIN e eb ON eb.vec_id = sym.b)
         |SELECT a AS vec_id, b AS nearest, round(cosine, 4) AS cosine_r,
         |  cosine >= 0.95 AS is_dup

@@ -3,7 +3,6 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.corpus.CorpusFile
 import graft.pipeline._
 import QuerySupport._
 
@@ -48,13 +47,8 @@ object IndexQueries {
     */
   def dSegmentFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val files = t(spark, dir, "documents")
-      .select(col("source").as("repo"),
-        concat(lit("doc/"), col("doc_id")).as("path"),
-        lit("0").as("commit"), col("lang"), col("text").as("content"))
-      .as[CorpusFile]
-    val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
-    val features = DedupPipeline.featurize(files, cfg)
+    val files = docsAsCorpus(spark, dir, nonEmpty = false)
+    val features = DedupPipeline.featurize(files, Fixed256)
     features.flatMap { f =>
       val fps = f.chunks.map(_.fp)
       val segs = Segmenting.contentDefined(avg = 4, min = 2, max = 16)(fps)
@@ -190,11 +184,7 @@ object IndexQueries {
     */
   def dPresetClusters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val files = t(spark, dir, "documents")
-      .select(col("source").as("repo"),
-        concat(lit("doc/"), col("doc_id")).as("path"),
-        lit("0").as("commit"), col("lang"), col("text").as("content"))
-      .as[CorpusFile]
+    val files = docsAsCorpus(spark, dir, nonEmpty = false)
     val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig(
       "rabin", minSize = 64, avgSize = 256, maxSize = 2048))
     val features = DedupPipeline.featurize(files, cfg).persist()
@@ -219,13 +209,8 @@ object IndexQueries {
     */
   def dIndexPresets(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val files = t(spark, dir, "documents")
-      .select(col("source").as("repo"),
-        concat(lit("doc/"), col("doc_id")).as("path"),
-        lit("0").as("commit"), col("lang"), col("text").as("content"))
-      .as[CorpusFile]
-    val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
-    val features = DedupPipeline.featurize(files, cfg)
+    val files = docsAsCorpus(spark, dir, nonEmpty = false)
+    val features = DedupPipeline.featurize(files, Fixed256)
     val presets = IndexPresets.names
     features.flatMap { f =>
       val fps = f.chunks.map(_.fp)

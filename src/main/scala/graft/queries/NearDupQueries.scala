@@ -36,11 +36,7 @@ object NearDupQueries {
     */
   def dDocClusters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val files = par(spark, t(spark, dir, "documents")
-        .select(col("source").as("repo"),
-          concat(lit("doc/"), col("doc_id")).as("path"),
-          lit("0").as("commit"),
-          col("lang"), col("text").as("content")), "path")
+    val files = par(spark, docsAsCorpus(spark, dir, nonEmpty = false).toDF(), "path")
       .as[CorpusFile]
     val cfg = DedupConfig()
     val features = DedupPipeline.featurize(files, cfg)
@@ -197,11 +193,7 @@ object NearDupQueries {
     */
   def dSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val files = t(spark, dir, "documents")
-      .select(col("source").as("repo"),
-        concat(lit("doc/"), col("doc_id")).as("path"),
-        lit("0").as("commit"), col("lang"), col("text").as("content"))
-      .as[CorpusFile]
+    val files = docsAsCorpus(spark, dir, nonEmpty = false)
     val feats = DedupPipeline.featurize(files, DedupConfig()).toDF()
     val cands = DedupPipeline.simhashCandidates(feats, DedupConfig())
     // always non-empty: emit per-file simhash population counts alongside
@@ -213,6 +205,44 @@ object NearDupQueries {
       .na.fill(0L, Seq("cand_pairs"))
   }
 
+  /** Oracle CTE chain shared by [[dMinhashCluster]] and [[dNeardupPrune]]:
+    * banded md5 MinHash over distinct 8-grams, hub-star buckets, the
+    * integer Jaccard verify (3·|∩| ≥ |A|+|B|) and `reach`, the recursive
+    * min-label closure whose per-node minimum is the cluster id.
+    */
+  private val minhashReachSql =
+    """WITH RECURSIVE
+      |d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 8),
+      |grams AS (
+      |  SELECT DISTINCT doc_id, substr(text, CAST(i AS INTEGER), 8) AS g
+      |  FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 7)) AS i FROM d)),
+      |bands AS (SELECT unnest(generate_series(0, 7)) AS band),
+      |sigs AS (
+      |  SELECT doc_id, band, min(md5(CAST(band AS VARCHAR) || ':' || g)) AS sig
+      |  FROM grams, bands GROUP BY doc_id, band),
+      |hubs AS (SELECT band, sig, min(doc_id) AS hub FROM sigs GROUP BY band, sig),
+      |cand AS (
+      |  SELECT DISTINCT h.hub AS a, s.doc_id AS b
+      |  FROM sigs s JOIN hubs h USING (band, sig) WHERE s.doc_id <> h.hub),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
+      |inter AS (
+      |  SELECT c.a, c.b, count(*) AS inter
+      |  FROM cand c
+      |  JOIN grams ga ON ga.doc_id = c.a
+      |  JOIN grams gb ON gb.doc_id = c.b AND gb.g = ga.g
+      |  GROUP BY c.a, c.b),
+      |edges AS (
+      |  SELECT i.a, i.b FROM inter i
+      |  JOIN sizes sa ON sa.doc_id = i.a
+      |  JOIN sizes sb ON sb.doc_id = i.b
+      |  WHERE 3 * i.inter >= sa.n + sb.n),
+      |sym AS (SELECT a AS x, b AS y FROM edges UNION SELECT b, a FROM edges),
+      |reach(node, label) AS (
+      |  SELECT doc_id, doc_id FROM documents
+      |  UNION
+      |  SELECT s.y, r.label FROM reach r JOIN sym s ON s.x = r.node
+      |  WHERE r.label < s.y)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("d_fingerprint", dFingerprint, None),
     QueryDef("d_doc_clusters", dDocClusters, None),
@@ -220,71 +250,11 @@ object NearDupQueries {
     // → integer-arithmetic Jaccard verify → recursive-CTE min-label
     // closure ≡ the Spark job's iterative connected components
     QueryDef("d_minhash_cluster", dMinhashCluster, Some(
-      """WITH RECURSIVE
-        |d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 8),
-        |grams AS (
-        |  SELECT DISTINCT doc_id, substr(text, CAST(i AS INTEGER), 8) AS g
-        |  FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 7)) AS i FROM d)),
-        |bands AS (SELECT unnest(generate_series(0, 7)) AS band),
-        |sigs AS (
-        |  SELECT doc_id, band, min(md5(CAST(band AS VARCHAR) || ':' || g)) AS sig
-        |  FROM grams, bands GROUP BY doc_id, band),
-        |hubs AS (SELECT band, sig, min(doc_id) AS hub FROM sigs GROUP BY band, sig),
-        |cand AS (
-        |  SELECT DISTINCT h.hub AS a, s.doc_id AS b
-        |  FROM sigs s JOIN hubs h USING (band, sig) WHERE s.doc_id <> h.hub),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.a, c.b, count(*) AS inter
-        |  FROM cand c
-        |  JOIN grams ga ON ga.doc_id = c.a
-        |  JOIN grams gb ON gb.doc_id = c.b AND gb.g = ga.g
-        |  GROUP BY c.a, c.b),
-        |edges AS (
-        |  SELECT i.a, i.b FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.a
-        |  JOIN sizes sb ON sb.doc_id = i.b
-        |  WHERE 3 * i.inter >= sa.n + sb.n),
-        |sym AS (SELECT a AS x, b AS y FROM edges UNION SELECT b, a FROM edges),
-        |reach(node, label) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT s.y, r.label FROM reach r JOIN sym s ON s.x = r.node
-        |  WHERE r.label < s.y)
+      s"""$minhashReachSql
         |SELECT node AS doc_id, min(label) AS cluster_id
         |FROM reach GROUP BY node""".stripMargin)),
     QueryDef("d_neardup_prune", dNeardupPrune, Some(
-      """WITH RECURSIVE
-        |d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 8),
-        |grams AS (
-        |  SELECT DISTINCT doc_id, substr(text, CAST(i AS INTEGER), 8) AS g
-        |  FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 7)) AS i FROM d)),
-        |bands AS (SELECT unnest(generate_series(0, 7)) AS band),
-        |sigs AS (
-        |  SELECT doc_id, band, min(md5(CAST(band AS VARCHAR) || ':' || g)) AS sig
-        |  FROM grams, bands GROUP BY doc_id, band),
-        |hubs AS (SELECT band, sig, min(doc_id) AS hub FROM sigs GROUP BY band, sig),
-        |cand AS (
-        |  SELECT DISTINCT h.hub AS a, s.doc_id AS b
-        |  FROM sigs s JOIN hubs h USING (band, sig) WHERE s.doc_id <> h.hub),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.a, c.b, count(*) AS inter
-        |  FROM cand c
-        |  JOIN grams ga ON ga.doc_id = c.a
-        |  JOIN grams gb ON gb.doc_id = c.b AND gb.g = ga.g
-        |  GROUP BY c.a, c.b),
-        |edges AS (
-        |  SELECT i.a, i.b FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.a
-        |  JOIN sizes sb ON sb.doc_id = i.b
-        |  WHERE 3 * i.inter >= sa.n + sb.n),
-        |sym AS (SELECT a AS x, b AS y FROM edges UNION SELECT b, a FROM edges),
-        |reach(node, label) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT s.y, r.label FROM reach r JOIN sym s ON s.x = r.node
-        |  WHERE r.label < s.y),
+      s"""$minhashReachSql,
         |clusters AS (
         |  SELECT node AS doc_id, min(label) AS cluster_id
         |  FROM reach GROUP BY node),

@@ -487,92 +487,75 @@ object SpanQueries {
     }.toDF("a_id", "b_id", "lcs_len")
   }
 
+  /** Oracle CTEs `d` (documents of at least [[DupSpanGram]] code points)
+    * and `pos` (each of their 16-grams with its 1-based start).
+    */
+  private val gramPosSql =
+    """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 16),
+      |pos AS (
+      |  SELECT doc_id, i, substr(text, CAST(i AS INTEGER), 16) AS gram
+      |  FROM (SELECT doc_id, text,
+      |          unnest(generate_series(1, length(text) - 15)) AS i FROM d))""".stripMargin
+
+  /** Oracle island chain over [[gramPosSql]]: `dp` keeps the positions of
+    * grams that repeat in the corpus (or, with `perDoc`, within their own
+    * document) and `isl` numbers them by span — a gap of more than 16
+    * starts a new one, the [[mergeRuns]] rule.
+    */
+  private def gramIslandsSql(perDoc: Boolean): String = {
+    val dup =
+      if (perDoc) """dupg AS (
+        |  SELECT doc_id, gram FROM pos
+        |  GROUP BY doc_id, gram HAVING count(*) >= 2),
+        |dp AS (SELECT p.doc_id, p.i FROM pos p JOIN dupg g USING (doc_id, gram)),"""
+      else """dupg AS (SELECT gram FROM pos GROUP BY gram HAVING count(*) >= 2),
+        |dp AS (SELECT p.doc_id, p.i FROM pos p JOIN dupg g USING (gram)),"""
+    s"""$gramPosSql,
+       |${dup.stripMargin}
+       |brk AS (
+       |  SELECT doc_id, i,
+       |    CASE WHEN i - lag(i) OVER (PARTITION BY doc_id ORDER BY i) <= 16
+       |      THEN 0 ELSE 1 END AS is_brk
+       |  FROM dp),
+       |isl AS (
+       |  SELECT doc_id, i,
+       |    sum(is_brk) OVER (PARTITION BY doc_id ORDER BY i
+       |      ROWS UNBOUNDED PRECEDING) AS span_id
+       |  FROM brk)""".stripMargin
+  }
+
+  /** Oracle of the per-document span totals of [[dDupSpanStats]] (grams
+    * repeated anywhere) and [[dSelfRep]] (grams repeated within the doc):
+    * span count `n`, covered code points `chars` and their share `ppm` in
+    * integer parts per million.
+    */
+  private def spanTotalsSql(perDoc: Boolean, n: String, chars: String,
+      ppm: String): String =
+    s"""${gramIslandsSql(perDoc)},
+       |spans AS (
+       |  SELECT doc_id, min(i) AS span_start,
+       |    max(i) + 16 - min(i) AS span_len
+       |  FROM isl GROUP BY doc_id, span_id),
+       |agg AS (
+       |  SELECT doc_id, count(*) AS $n, sum(span_len) AS $chars
+       |  FROM spans GROUP BY doc_id)
+       |SELECT d.doc_id, COALESCE(a.$n, 0) AS $n,
+       |  CAST(COALESCE(a.$chars, 0) AS BIGINT) AS $chars,
+       |  length(d.text) AS char_len,
+       |  CAST((COALESCE(a.$chars, 0) * 2000000 + length(d.text))
+       |    // (2 * length(d.text)) AS BIGINT) AS $ppm
+       |FROM d LEFT JOIN agg a USING (doc_id)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("d_dup_spans", dDupSpans, Some(
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 16),
-        |pos AS (
-        |  SELECT doc_id, i, substr(text, CAST(i AS INTEGER), 16) AS gram
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, length(text) - 15)) AS i FROM d)),
-        |dupg AS (SELECT gram FROM pos GROUP BY gram HAVING count(*) >= 2),
-        |dp AS (SELECT p.doc_id, p.i FROM pos p JOIN dupg g USING (gram)),
-        |brk AS (
-        |  SELECT doc_id, i,
-        |    CASE WHEN i - lag(i) OVER (PARTITION BY doc_id ORDER BY i) <= 16
-        |      THEN 0 ELSE 1 END AS is_brk
-        |  FROM dp),
-        |isl AS (
-        |  SELECT doc_id, i,
-        |    sum(is_brk) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS UNBOUNDED PRECEDING) AS span_id
-        |  FROM brk)
+      s"""${gramIslandsSql(perDoc = false)}
         |SELECT doc_id, min(i) AS span_start,
         |  max(i) + 16 - min(i) AS span_len, count(*) AS dup_grams
         |FROM isl GROUP BY doc_id, span_id""".stripMargin)),
-    QueryDef("d_dup_span_stats", dDupSpanStats, Some(
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 16),
-        |pos AS (
-        |  SELECT doc_id, i, substr(text, CAST(i AS INTEGER), 16) AS gram
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, length(text) - 15)) AS i FROM d)),
-        |dupg AS (SELECT gram FROM pos GROUP BY gram HAVING count(*) >= 2),
-        |dp AS (SELECT p.doc_id, p.i FROM pos p JOIN dupg g USING (gram)),
-        |brk AS (
-        |  SELECT doc_id, i,
-        |    CASE WHEN i - lag(i) OVER (PARTITION BY doc_id ORDER BY i) <= 16
-        |      THEN 0 ELSE 1 END AS is_brk
-        |  FROM dp),
-        |isl AS (
-        |  SELECT doc_id, i,
-        |    sum(is_brk) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS UNBOUNDED PRECEDING) AS span_id
-        |  FROM brk),
-        |spans AS (
-        |  SELECT doc_id, min(i) AS span_start,
-        |    max(i) + 16 - min(i) AS span_len
-        |  FROM isl GROUP BY doc_id, span_id),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS n_spans, sum(span_len) AS dup_chars
-        |  FROM spans GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(a.n_spans, 0) AS n_spans,
-        |  CAST(COALESCE(a.dup_chars, 0) AS BIGINT) AS dup_chars,
-        |  length(d.text) AS char_len,
-        |  CAST((COALESCE(a.dup_chars, 0) * 2000000 + length(d.text))
-        |    // (2 * length(d.text)) AS BIGINT) AS dup_ppm
-        |FROM d LEFT JOIN agg a USING (doc_id)""".stripMargin)),
-    QueryDef("d_self_rep", dSelfRep, Some(
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 16),
-        |pos AS (
-        |  SELECT doc_id, i, substr(text, CAST(i AS INTEGER), 16) AS gram
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, length(text) - 15)) AS i FROM d)),
-        |dupg AS (
-        |  SELECT doc_id, gram FROM pos
-        |  GROUP BY doc_id, gram HAVING count(*) >= 2),
-        |dp AS (SELECT p.doc_id, p.i FROM pos p JOIN dupg g USING (doc_id, gram)),
-        |brk AS (
-        |  SELECT doc_id, i,
-        |    CASE WHEN i - lag(i) OVER (PARTITION BY doc_id ORDER BY i) <= 16
-        |      THEN 0 ELSE 1 END AS is_brk
-        |  FROM dp),
-        |isl AS (
-        |  SELECT doc_id, i,
-        |    sum(is_brk) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS UNBOUNDED PRECEDING) AS span_id
-        |  FROM brk),
-        |spans AS (
-        |  SELECT doc_id, min(i) AS span_start,
-        |    max(i) + 16 - min(i) AS span_len
-        |  FROM isl GROUP BY doc_id, span_id),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS rep_spans, sum(span_len) AS rep_chars
-        |  FROM spans GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(a.rep_spans, 0) AS rep_spans,
-        |  CAST(COALESCE(a.rep_chars, 0) AS BIGINT) AS rep_chars,
-        |  length(d.text) AS char_len,
-        |  CAST((COALESCE(a.rep_chars, 0) * 2000000 + length(d.text))
-        |    // (2 * length(d.text)) AS BIGINT) AS rep_ppm
-        |FROM d LEFT JOIN agg a USING (doc_id)""".stripMargin)),
+    QueryDef("d_dup_span_stats", dDupSpanStats,
+      Some(spanTotalsSql(perDoc = false, "n_spans", "dup_chars", "dup_ppm"))),
+    QueryDef("d_self_rep", dSelfRep,
+      Some(spanTotalsSql(perDoc = true, "rep_spans", "rep_chars", "rep_ppm"))),
     QueryDef("d_suffix_rank", dSuffixRank, Some(
       """WITH d AS (SELECT doc_id, text FROM documents
         |           WHERE text IS NOT NULL AND substr(md5(text), 1, 1) = '0'),
@@ -599,23 +582,7 @@ object SpanQueries {
         |FROM g JOIN c USING (gram)
         |GROUP BY doc_id, char_len""".stripMargin)),
     QueryDef("d_dup_trim", dDupTrim, Some(
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 16),
-        |pos AS (
-        |  SELECT doc_id, i, substr(text, CAST(i AS INTEGER), 16) AS gram
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, length(text) - 15)) AS i FROM d)),
-        |dupg AS (SELECT gram FROM pos GROUP BY gram HAVING count(*) >= 2),
-        |dp AS (SELECT p.doc_id, p.i FROM pos p JOIN dupg g USING (gram)),
-        |brk AS (
-        |  SELECT doc_id, i,
-        |    CASE WHEN i - lag(i) OVER (PARTITION BY doc_id ORDER BY i) <= 16
-        |      THEN 0 ELSE 1 END AS is_brk
-        |  FROM dp),
-        |isl AS (
-        |  SELECT doc_id, i,
-        |    sum(is_brk) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS UNBOUNDED PRECEDING) AS span_id
-        |  FROM brk),
+      s"""${gramIslandsSql(perDoc = false)},
         |spans AS (
         |  SELECT doc_id, min(i) AS s, max(i) + 16 - min(i) AS l
         |  FROM isl GROUP BY doc_id, span_id),
@@ -647,11 +614,7 @@ object SpanQueries {
         |  md5(COALESCE(k.kt, d.text)) AS kept_md5
         |FROM d LEFT JOIN kept k USING (doc_id)""".stripMargin)),
     QueryDef("d_dup_span_pairs", dDupSpanPairs, Some(
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 16),
-        |pos AS (
-        |  SELECT doc_id, i, substr(text, CAST(i AS INTEGER), 16) AS gram
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, length(text) - 15)) AS i FROM d)),
+      s"""$gramPosSql,
         |keep AS (SELECT gram FROM pos GROUP BY gram HAVING count(*) <= 32),
         |m AS (
         |  SELECT pa.doc_id AS a, pb.doc_id AS b,

@@ -3,7 +3,6 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.corpus.CorpusFile
 import graft.pipeline._
 import QuerySupport._
 
@@ -25,13 +24,13 @@ object StoreQueries {
     */
   private def sliceShaChunks(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val chunker = Fixed256.chunker
     // par(): the fixture table is ONE scan split — without it the whole
     // chunk + sha256 pass (the bulk of d_backup_stats) ran on one core
     par(spark, t(spark, dir, "documents").filter(length(col("text")) > 0)
         .select(col("doc_id"), col("text")), "doc_id").as[(Long, String)]
       .mapPartitions { it =>
-        val cut = graft.chunking.Chunkers.forConfig(
-          graft.chunking.ChunkerConfig("fixed", avgSize = 256))
+        val cut = graft.chunking.Chunkers.forConfig(chunker)
         val md = java.security.MessageDigest.getInstance("SHA-256")
         it.flatMap { case (id, text) =>
           val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -71,14 +70,9 @@ object StoreQueries {
     */
   def dChunkStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val files = t(spark, dir, "documents")
-      .select(col("source").as("repo"),
-        concat(lit("doc/"), col("doc_id")).as("path"),
-        lit("0").as("commit"), col("lang"), col("text").as("content"))
-      .as[CorpusFile]
+    val files = docsAsCorpus(spark, dir, nonEmpty = false)
     // finer chunking so documents (~2 KB) actually split
-    val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
-    val features = DedupPipeline.featurize(files, cfg)
+    val features = DedupPipeline.featurize(files, Fixed256)
     val chunks = DedupPipeline.chunkTable(features)
     chunks.agg(
       count(lit(1)).as("total_chunks"),
@@ -356,8 +350,7 @@ object StoreQueries {
 
   def dRestoreVerify(spark: SparkSession, dir: String): DataFrame = {
     val files = docsAsCorpus(spark, dir, nonEmpty = false)
-    val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
-    Restore.verifyRestore(files, cfg)
+    Restore.verifyRestore(files, Fixed256)
   }
 
   /** The DRIVER-ORACLED restore twin (J5/S10): per-document MD5 of the
@@ -371,8 +364,7 @@ object StoreQueries {
     */
   def dRestoreMd5(spark: SparkSession, dir: String): DataFrame = {
     val files = docsAsCorpus(spark, dir)
-    val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
-    val features = DedupPipeline.featurize(files, cfg).toDF()
+    val features = DedupPipeline.featurize(files, Fixed256).toDF()
     Restore.restoreDigests(features, files, "MD5")
       .join(features.select(col("fileId"), col("path")), Seq("fileId"))
       .select(expr("CAST(substring(path, 5) AS BIGINT)").as("doc_id"),
@@ -421,7 +413,7 @@ object StoreQueries {
   def dBackupSink(spark: SparkSession, dir: String): DataFrame = {
     val files = docsAsCorpus(spark, dir, byteSafe = true)
     val settings = pipeline.DestorSettings(
-      chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
+      chunker = Fixed256.chunker)
     val tmp = java.nio.file.Files.createTempDirectory("graft_sink")
     try {
       val root = tmp.resolve("b1").toString
@@ -453,7 +445,7 @@ object StoreQueries {
   def dBackupMetrics(spark: SparkSession, dir: String): DataFrame = {
     val files = docsAsCorpus(spark, dir, byteSafe = true)
     val settings = pipeline.DestorSettings(
-      chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
+      chunker = Fixed256.chunker)
     val tmp = java.nio.file.Files.createTempDirectory("graft_statsink")
     try {
       val root = tmp.resolve("b1").toString

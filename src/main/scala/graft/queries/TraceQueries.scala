@@ -3,7 +3,6 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.corpus.CorpusFile
 import graft.pipeline._
 import QuerySupport._
 
@@ -17,23 +16,31 @@ object TraceQueries {
     * both sides' aggregate plus a strict set-equality flag (rows-only:
     * the trace carries SHA-1 fps, not SQL-recomputable).
     */
-  def dTraceRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val files = t(spark, dir, "documents")
-      .select(col("source").as("repo"),
-        concat(lit("doc/"), col("doc_id")).as("path"),
-        lit("0").as("commit"), col("lang"), col("text").as("content"))
-      .as[CorpusFile]
-    val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
-    val chunks = DedupPipeline.chunkTableDF(DedupPipeline.featurize(files, cfg).toDF())
+  def dTraceRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    chunkRoundtrip(spark, dir, "graft_trace")(
+      (chunks, tmp) => graft.sources.TraceSource.write(
+        chunks, tmp.resolve("docs.trace").toString),
+      tmp => graft.sources.TraceSource.read(
+        spark, tmp.resolve("docs.trace").toString).toDF())
+
+  /** Round trip of the documents' fixed-256 chunk stream, as (path,
+    * chunkIdx, fp, size) rows, through a trace format: `write` stores the
+    * rows under a scratch directory and `read` loads them back with the
+    * same columns. Output: the read-back aggregate plus a strict
+    * set-equality flag.
+    */
+  private def chunkRoundtrip(spark: SparkSession, dir: String, prefix: String)(
+      write: (DataFrame, java.nio.file.Path) => Unit,
+      read: java.nio.file.Path => DataFrame): DataFrame = {
+    val files = docsAsCorpus(spark, dir, nonEmpty = false)
+    val chunks = DedupPipeline.chunkTableDF(DedupPipeline.featurize(files, Fixed256).toDF())
       .select(concat_ws("@", col("repo"), col("path")).as("path"),
         col("chunkIdx"), col("fp"), col("size"))
       .persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_trace")
+    val tmp = java.nio.file.Files.createTempDirectory(prefix)
     try {
-      val f = tmp.resolve("docs.trace").toString
-      graft.sources.TraceSource.write(chunks, f)
-      val back = graft.sources.TraceSource.read(spark, f).toDF().persist()
+      write(chunks, tmp)
+      val back = read(tmp).persist()
       val ok = chunks.except(back).isEmpty && back.except(chunks).isEmpty
       val out = back.agg(
         countDistinct(col("path")).as("files"),
@@ -222,38 +229,13 @@ object TraceQueries {
     * with the reference's own writer is gated in FslSourceSpec against a
     * fixture generated by compiled reference C (scripts/fsl_fixture.md).
     */
-  def dFslRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val files = t(spark, dir, "documents")
-      .select(col("source").as("repo"),
-        concat(lit("doc/"), col("doc_id")).as("path"),
-        lit("0").as("commit"), col("lang"), col("text").as("content"))
-      .as[CorpusFile]
-    val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig("fixed", avgSize = 256))
-    val chunks = DedupPipeline.chunkTableDF(DedupPipeline.featurize(files, cfg).toDF())
-      .select(concat_ws("@", col("repo"), col("path")).as("path"),
-        col("chunkIdx"), col("fp"), col("size"))
-      .persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fsl")
-    try {
-      val f = tmp.resolve("docs.hashfile").toString
-      graft.sources.FslSource.write(chunks, f, rootPath = "/graft", sysid = "graft")
-      val back = graft.sources.FslSource.read(spark, tmp.toString)
+  def dFslRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    chunkRoundtrip(spark, dir, "graft_fsl")(
+      (chunks, tmp) => graft.sources.FslSource.write(chunks,
+        tmp.resolve("docs.hashfile").toString, rootPath = "/graft", sysid = "graft"),
+      tmp => graft.sources.FslSource.read(spark, tmp.toString)
         .select(col("path"), col("chunkIdx").cast("int").as("chunkIdx"),
-          col("fp"), col("size").cast("int").as("size"))
-        .persist()
-      val ok = chunks.except(back).isEmpty && back.except(chunks).isEmpty
-      val out = back.agg(
-        countDistinct(col("path")).as("files"),
-        count(lit(1)).as("chunks"),
-        sum(col("size")).cast("long").as("bytes"),
-        countDistinct(col("fp")).as("unique_fps"))
-        .withColumn("roundtrip_ok", lit(ok))
-        .localCheckpoint(true)
-      chunks.unpersist(); back.unpersist()
-      out
-    } finally deleteRecursively(tmp)
-  }
+          col("fp"), col("size").cast("int").as("size")))
 
   /** Oracle generator for the two-backup trace-replay variants
     * ([[dTraceVariant]]): the full d_trace_pipeline replay skeleton
