@@ -747,23 +747,6 @@ object CurationQueries {
     */
   private val MixTarget = 24
 
-  /** Exact data-mixture apportionment + selection — the final step of a
-    * training-data pipeline: distribute a global sample budget T across
-    * (lang, source) strata by Hamilton's largest-remainder method
-    * (allocᵢ = ⌊T·cᵢ/C⌋ plus one extra for the R = T−Σ⌊⌋ largest
-    * remainders, ties → (lang, source) asc — EXACT integer arithmetic,
-    * Σalloc = T by construction), then pick each stratum's docs
-    * content-deterministically (md5-prefix order, the d_quota_sample
-    * rank) so the mixture is reproducible with no RNG.
-    *
-    * Scale: the stratum census is a combinable count agg whose
-    * cardinality is METADATA-bounded (langs × sources), so the scalar
-    * totals (C, Σ⌊⌋) crossJoin O(1)-row sides and the remainder rank is
-    * a bounded×bounded broadcast non-equi self-join — corpus size never
-    * touches the apportionment arithmetic; per-stratum selection is ONE
-    * map-side-combinable `top_k_by` (≤T rows per (partition, stratum)
-    * cross the shuffle) trimmed to allocᵢ by the broadcast alloc table.
-    */
   /** n-before rank over a METADATA-BOUNDED table via a broadcast
     * non-equi self-join — never a window: adds `out` = the number of
     * rows strictly ordered before this one under `keys` (per-key
@@ -789,6 +772,23 @@ object CurationQueries {
       .agg(count(col(pref + keys.head._1)).as(out))
   }
 
+  /** Exact data-mixture apportionment + selection — the final step of a
+    * training-data pipeline: distribute a global sample budget T across
+    * (lang, source) strata by Hamilton's largest-remainder method
+    * (allocᵢ = ⌊T·cᵢ/C⌋ plus one extra for the R = T−Σ⌊⌋ largest
+    * remainders, ties → (lang, source) asc — EXACT integer arithmetic,
+    * Σalloc = T by construction), then pick each stratum's docs
+    * content-deterministically (md5-prefix order, the d_quota_sample
+    * rank) so the mixture is reproducible with no RNG.
+    *
+    * Scale: the stratum census is a combinable count agg whose
+    * cardinality is METADATA-bounded (langs × sources), so the scalar
+    * totals (C, Σ⌊⌋) crossJoin O(1)-row sides and the remainder rank is
+    * a bounded×bounded broadcast non-equi self-join — corpus size never
+    * touches the apportionment arithmetic; per-stratum selection is ONE
+    * map-side-combinable `top_k_by` (≤T rows per (partition, stratum)
+    * cross the shuffle) trimmed to allocᵢ by the broadcast alloc table.
+    */
   def dMixAlloc(spark: SparkSession, dir: String): DataFrame = {
     val T = MixTarget
     val docs = t(spark, dir, "documents").filter(col("text").isNotNull)

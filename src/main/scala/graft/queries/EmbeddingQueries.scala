@@ -311,13 +311,6 @@ object EmbeddingQueries {
       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rk
       |  FROM cand) WHERE rk <= 5""".stripMargin
 
-  /** Full IVF k-means replay — oracle for e_ivf_kmeans: the Lloyd
-    * accumulators are integer micro-units (round(x·1e6) bigint sums), so
-    * every refinement round is engine-exact; this SQL unrolls all 5
-    * rounds (assign → per-(list,dim) micro-sum → mean-as-float, empty
-    * lists keep their centroid), then replays the nProbe=4 probe + exact
-    * rerank like [[ivfProbeSql]].
-    */
   /** Shared CTE chain for the integer-Lloyd k-means oracles
     * (e_ivf_kmeans, e_semdedup): seeds = the `nlist` lowest vec_ids,
     * `rounds` refinement rounds with micro-unit bigint accumulators,
@@ -360,6 +353,13 @@ object EmbeddingQueries {
       |  WHERE rk = 1)""".stripMargin
   }
 
+  /** Full IVF k-means replay — oracle for e_ivf_kmeans: the Lloyd
+    * accumulators are integer micro-units (round(x·1e6) bigint sums), so
+    * every refinement round is engine-exact; this SQL unrolls all 5
+    * rounds (assign → per-(list,dim) micro-sum → mean-as-float, empty
+    * lists keep their centroid), then replays the nProbe=4 probe + exact
+    * rerank like [[ivfProbeSql]].
+    */
   private val ivfKmeansSql: String = {
     val rounds = 5
     s"""WITH ${kmeansCteChain(16, rounds)},

@@ -88,12 +88,8 @@ private[graft] object QuerySupport {
       s"(strpos('0123456789abcdef', substr($m, ${off + p}, 1)) - 1) * ${pow}"
     }.mkString("(", " + ", ")")
 
-  /** J5 restore reconstruction over the documents corpus: every file
-    * rebuilt from deduplicated first-writer chunk slices must reproduce
-    * its sha256 (rows-only; the per-row invariant check).
-    */
-  /** The documents→[[CorpusFile]] projection shared by the restore/sink
-    * twins — the stream key downstream is `repo@path@commit` =
+  /** The documents→[[CorpusFile]] projection every documents-corpus
+    * query uses — the stream key downstream is `repo@path@commit` =
     * `source@doc/<id>@0` (concat_ws in backup), which the d_backup_sink
     * oracle's packing ORDER BY replays verbatim, so the path shape is a
     * cross-cutting contract and lives ONCE here. `nonEmpty` drops

@@ -348,6 +348,10 @@ object StoreQueries {
         sum(col("size")).cast("long").as("bytes"))
   }
 
+  /** J5 restore reconstruction over the documents corpus: every file
+    * rebuilt from deduplicated first-writer chunk slices must reproduce
+    * its sha256 (rows-only; the per-row invariant check).
+    */
   def dRestoreVerify(spark: SparkSession, dir: String): DataFrame = {
     val files = docsAsCorpus(spark, dir, nonEmpty = false)
     Restore.verifyRestore(files, Fixed256)

@@ -112,17 +112,6 @@ object TraceQueries {
     } finally deleteRecursively(tmp) // replay finished — drop the temp traces
   }
 
-  /** Two-backup trace replay under a caller-supplied rewrite directive —
-    * the [[dTracePipeline]] fixture (same fp/size derivation, DuckDB
-    * recomputes both) split into TWO jobs (b = suppkey%2+1) and fed to
-    * [[graft.pipeline.TracePipeline]] directly as DataFrames (the
-    * trace-file round trip itself is d_trace_pipeline's job; these
-    * variants exercise the REWRITE algorithms under trace replay). Two
-    * backups suffice for cfl/cbr/cap: unlike HAR (which needs a
-    * previous job's sparse list), the fragmentation detectors fire on
-    * any job whose duplicates reference old containers — i.e. from
-    * backup 2 on. Payload 512, LRU-30 restore, fully value-oracled.
-    */
   /** The shared two-backup trace fixture (b = suppkey%2+1, the
     * [[dTracePipeline]] fp/size derivation — DuckDB recomputes both).
     * Returned persisted; callers unpersist.
@@ -147,6 +136,17 @@ object TraceQueries {
       .persist()
   }
 
+  /** Two-backup trace replay under a caller-supplied rewrite directive —
+    * the [[dTracePipeline]] fixture (same fp/size derivation, DuckDB
+    * recomputes both) split into TWO jobs (b = suppkey%2+1) and fed to
+    * [[graft.pipeline.TracePipeline]] directly as DataFrames (the
+    * trace-file round trip itself is d_trace_pipeline's job; these
+    * variants exercise the REWRITE algorithms under trace replay). Two
+    * backups suffice for cfl/cbr/cap: unlike HAR (which needs a
+    * previous job's sparse list), the fragmentation detectors fire on
+    * any job whose duplicates reference old containers — i.e. from
+    * backup 2 on. Payload 512, LRU-30 restore, fully value-oracled.
+    */
   private def dTraceVariant(spark: SparkSession, dir: String,
       rewriteDirectives: String): DataFrame = {
     val stream0 = traceTwoFixture(spark, dir)
