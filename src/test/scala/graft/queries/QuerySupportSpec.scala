@@ -23,7 +23,8 @@ class QuerySupportSpec extends AnyFunSuite {
       finally it.close()
     }
     val small = onePart("small", (0 until 10).toDF("id"))
-    val big = onePart("big", (0 until 200000).map(i => (i, s"row $i " * 4)).toDF("id", "pad"))
+    val big = onePart("big",
+      spark.range(200000).selectExpr("id", "repeat(concat('row ', id, ' '), 4) AS pad"))
     val p = spark.sparkContext.defaultParallelism
     val key = "spark.sql.files.maxPartitionBytes"
     val before = spark.conf.getOption(key)
