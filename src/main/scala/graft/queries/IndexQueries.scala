@@ -183,7 +183,6 @@ object IndexQueries {
     * similarity loop end to end (rows-only: SHA-1 features).
     */
   def dPresetClusters(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val files = docsAsCorpus(spark, dir, nonEmpty = false)
     val cfg = DedupConfig(chunker = graft.chunking.ChunkerConfig(
       "rabin", minSize = 64, avgSize = 256, maxSize = 2048))

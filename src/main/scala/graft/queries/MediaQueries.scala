@@ -3,7 +3,6 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import QuerySupport._
 
 /** Multimodal decode, resize and frame sampling over synthetic media.
   */
@@ -21,7 +20,6 @@ object MediaQueries {
     * scalar codecs every run.
     */
   def mMediaStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val media = graft.operators.Multimodal.synthesize(spark, 200)
     graft.operators.Multimodal.decode(media).toDF()
       .select(col("mediaId").as("media_id"), col("kind"),
@@ -69,7 +67,6 @@ object MediaQueries {
     * indices) closed-form from range(200).
     */
   def mFrameSample(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val frames = graft.operators.Multimodal.sampleFrames(
       graft.operators.Multimodal.synthesize(spark, 200), stride = 2).toDF()
       // video frame area is structural: w = 16 + (id%4)*8, h = 16

@@ -192,7 +192,6 @@ object NearDupQueries {
     * analog of banded signature dedup is oracle-checked via e_lsh_dedup.
     */
   def dSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val files = docsAsCorpus(spark, dir, nonEmpty = false)
     val feats = DedupPipeline.featurize(files, DedupConfig()).toDF()
     val cands = DedupPipeline.simhashCandidates(feats, DedupConfig())

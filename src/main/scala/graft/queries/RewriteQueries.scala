@@ -3,7 +3,6 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.pipeline._
 import QuerySupport._
 
@@ -75,7 +74,6 @@ object RewriteQueries {
     * ≥ C — which DuckDB replays with a correlated distinct-count.
     */
   def rRestoreLru(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     RestoreSim.simulate(
       recipeFromLineitem(spark, dir).withColumn("stream", col("stream").cast("string")),
       cacheSize = 8, policy = "lru")
@@ -90,7 +88,6 @@ object RewriteQueries {
     * comment for the staleness-free invariant that makes this exact.
     */
   def rRestoreOpt(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     RestoreSim.simulate(
       recipeFromLineitem(spark, dir).withColumn("stream", col("stream").cast("string")),
       cacheSize = 8, policy = "opt")
@@ -107,7 +104,6 @@ object RewriteQueries {
     * stream row by row, then reads = count(distinct (area, container)).
     */
   def rRestoreAsm(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     RestoreSim.simulate(
       recipeFromLineitem(spark, dir)
         .withColumn("stream", col("stream").cast("string"))

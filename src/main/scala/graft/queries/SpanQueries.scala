@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline._
 import QuerySupport._

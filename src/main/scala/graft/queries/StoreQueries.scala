@@ -69,7 +69,6 @@ object StoreQueries {
     * and zero_chunks replays the all-NUL detector on the text slices.
     */
   def dChunkStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val files = docsAsCorpus(spark, dir, nonEmpty = false)
     // finer chunking so documents (~2 KB) actually split
     val features = DedupPipeline.featurize(files, Fixed256)
@@ -107,7 +106,6 @@ object StoreQueries {
     * the 2-row stored_cum frame, bounded by the number of backups).
     */
   def dBackupStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val payload = 16384L
     val chunks = sliceShaChunks(spark, dir)
       .select(col("doc_id"), (pmod(col("doc_id"), lit(2)) + 1).cast("long").as("b"),
