@@ -307,45 +307,39 @@ object CloneQueries {
       |    CAST(sum(CAST(term AS HUGEINT)) % 281474976710656 AS BIGINT) AS sig
       |  FROM terms GROUP BY 1, 2)""".stripMargin
 
+  /** Oracle CTE chain shared by [[dClonePairs]] and [[dCloneGroups]]: per
+    * document token bags (`cnt`), bag sizes (`n`) and the brute-force bag
+    * intersection of every doc pair (`inter`).
+    */
+  private val cloneInterSql =
+    """toks AS MATERIALIZED (
+      |  SELECT doc_id, tok FROM (
+      |    SELECT doc_id,
+      |      unnest(string_split_regex(lower(text), '[^a-z0-9_]+')) AS tok
+      |    FROM documents)
+      |  WHERE tok <> ''),
+      |cnt AS MATERIALIZED (
+      |  SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2),
+      |n AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS a, b.doc_id AS b,
+      |    CAST(sum(least(a.c, b.c)) AS BIGINT) AS inter
+      |  FROM cnt a JOIN cnt b ON b.tok = a.tok AND b.doc_id > a.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     // brute-force bag join, NO prefix filter: hash-green proves the
     // Spark side's prefix filtering loses no pair
     QueryDef("d_clone_pairs", dClonePairs, Some(
-      """WITH toks AS MATERIALIZED (
-        |  SELECT doc_id, tok FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(lower(text), '[^a-z0-9_]+')) AS tok
-        |    FROM documents)
-        |  WHERE tok <> ''),
-        |cnt AS MATERIALIZED (
-        |  SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2),
-        |n AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b,
-        |    CAST(sum(least(a.c, b.c)) AS BIGINT) AS inter
-        |  FROM cnt a JOIN cnt b ON b.tok = a.tok AND b.doc_id > a.doc_id
-        |  GROUP BY 1, 2)
+      s"""WITH $cloneInterSql
         |SELECT i.a, i.b, na.n AS n_a, nb.n AS n_b, i.inter
         |FROM inter i
         |JOIN n na ON na.doc_id = i.a
         |JOIN n nb ON nb.doc_id = i.b
         |WHERE i.inter * 100 >= greatest(na.n, nb.n) * 70""".stripMargin)),
     QueryDef("d_clone_groups", dCloneGroups, Some(
-      """WITH RECURSIVE
-        |toks AS MATERIALIZED (
-        |  SELECT doc_id, tok FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(lower(text), '[^a-z0-9_]+')) AS tok
-        |    FROM documents)
-        |  WHERE tok <> ''),
-        |cnt AS MATERIALIZED (
-        |  SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2),
-        |n AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b,
-        |    CAST(sum(least(a.c, b.c)) AS BIGINT) AS inter
-        |  FROM cnt a JOIN cnt b ON b.tok = a.tok AND b.doc_id > a.doc_id
-        |  GROUP BY 1, 2),
+      s"""WITH RECURSIVE
+        |$cloneInterSql,
         |edges AS MATERIALIZED (
         |  SELECT i.a, i.b FROM inter i
         |  JOIN n na ON na.doc_id = i.a

@@ -900,6 +900,25 @@ object CurationQueries {
         expr("(n_tokens * 2000000 + tot) div (2 * tot)").as("share_ppm"))
   }
 
+  /** Oracle CTE chain shared by [[dWinnow]] and [[dWinnowPairs]]: md5 of
+    * every 8-gram (`grams`) and, in `sel`, the minimum over each window of
+    * 4 consecutive grams — the winnowing fingerprint candidates.
+    */
+  private val winnowSelSql =
+    """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 8),
+      |grams AS (
+      |  SELECT doc_id, i, length(text) - 7 AS ngrams,
+      |    md5(substr(text, CAST(i AS INTEGER), 8)) AS h
+      |  FROM (SELECT doc_id, text,
+      |          unnest(generate_series(1, length(text) - 7)) AS i
+      |        FROM d)),
+      |sel AS (
+      |  SELECT doc_id,
+      |    min(h) OVER (PARTITION BY doc_id ORDER BY i
+      |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
+      |    i, ngrams
+      |  FROM grams)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef("d_exact_dedup", dExactDedup, Some(
       """SELECT sha256(text) AS h, count(*) AS cnt, min(doc_id) AS canonical
@@ -942,34 +961,10 @@ object CurationQueries {
         |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
         |WHERE round(inter / (sa.n + sb.n - inter), 6) >= 0.05""".stripMargin)),
     QueryDef("d_winnow", dWinnow, Some(
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 8),
-        |grams AS (
-        |  SELECT doc_id, i, length(text) - 7 AS ngrams,
-        |    md5(substr(text, CAST(i AS INTEGER), 8)) AS h
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, length(text) - 7)) AS i
-        |        FROM d)),
-        |sel AS (
-        |  SELECT doc_id,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |    i, ngrams
-        |  FROM grams)
+      s"""$winnowSelSql
         |SELECT DISTINCT doc_id, fp FROM sel WHERE i <= ngrams - 3""".stripMargin)),
     QueryDef("d_winnow_pairs", dWinnowPairs, Some(
-      s"""WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 8),
-        |grams AS (
-        |  SELECT doc_id, i, length(text) - 7 AS ngrams,
-        |    md5(substr(text, CAST(i AS INTEGER), 8)) AS h
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, length(text) - 7)) AS i
-        |        FROM d)),
-        |sel AS (
-        |  SELECT doc_id,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |    i, ngrams
-        |  FROM grams),
+      s"""$winnowSelSql,
         |w AS (SELECT DISTINCT doc_id, fp FROM sel WHERE i <= ngrams - 3),
         |fdf AS (SELECT fp, count(*) AS c FROM w GROUP BY 1),
         |kept AS (SELECT w.doc_id, w.fp FROM w JOIN fdf USING (fp) WHERE c <= $NgramDfCap),
