@@ -10,7 +10,7 @@ the oracle SQL, compare to the Spark parquet output (column names and
 their DuckDB types, then rows sorted with values stringified) and print
 MATCH/MISMATCH per query. A column whose oracle type differs from the type
 DuckDB reads from the Spark parquet (say HUGEINT against BIGINT) is a
-TYPE-MISMATCH even when the values print alike: the driver's result hash
+TYPE-MISMATCH even when the values print alike: a hash of the result
 sees the type. Exits non-zero on any MISMATCH or MISSING.
 """
 import sys, json, glob, os

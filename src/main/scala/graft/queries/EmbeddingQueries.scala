@@ -201,8 +201,9 @@ object EmbeddingQueries {
     * default) caps the all-pairs duel. A larger list duels each member
     * against its rim hub only, so it keeps every member the uncapped rule
     * keeps and possibly more (a member that loses only to a non-hub
-    * member survives). Every list at the driver's scales is far below the
-    * cap, so the oracle's all-pairs replay is the exact contract here.
+    * member survives). Every list at the sf0.001-sf0.1 scales is far
+    * below the cap, so the oracle's all-pairs replay is the exact contract
+    * here.
     */
   def eSemDedup(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.semDedup(

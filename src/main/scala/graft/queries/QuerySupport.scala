@@ -7,9 +7,9 @@ import graft.chunking.ChunkerConfig
 import graft.corpus.CorpusFile
 import graft.pipeline.DedupConfig
 
-/** One driver query: its registry name, its Spark build over the driver's
-  * parquet tables in `dir`, and, where its semantics are SQL-expressible,
-  * the DuckDB oracle SQL the driver compares its rows with.
+/** One registered query: its name, its Spark build over the parquet
+  * tables in `dir`, and, where its semantics are SQL-expressible, the
+  * DuckDB oracle SQL its rows are compared with.
   */
 final case class QueryDef(
     name: String,
@@ -43,9 +43,9 @@ private[graft] object QuerySupport {
     // Σ ceil(bytes / maxPartitionBytes) gates identically: a fixture file
     // is one split (repartition), a production table is millions of
     // splits (no-op). Lengths are read fresh on every call (one status per
-    // file; the driver's tables are one file each), so a file rewritten in
-    // place is measured as it is now; an unreadable length skips the
-    // repartition, matching production behavior.
+    // file; each table of the sf test data is one file), so a file
+    // rewritten in place is measured as it is now; an unreadable length
+    // skips the repartition, matching production behavior.
     val p = spark.sparkContext.defaultParallelism
     val files = df.inputFiles
     val maxSplit = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)

@@ -4,11 +4,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden pin of the driver surface: the exact set of query names and
+/** Golden pin of the query surface: the exact set of query names and
   * the SHA-256 of every oracle SQL string (UTF-8 bytes). A refactor of
   * the query registry must leave both byte-identical; a deliberate
   * change to a query name or an oracle updates its pin here, in the
-  * same commit, so the change is visible in review.
+  * same commit, so the change shows in the diff.
   */
 class QueryRegistrySpec extends AnyFunSuite {
   private val pinnedNames: Seq[String] = Seq(
