@@ -128,13 +128,6 @@ object CorpusGen {
       .flatMap(b => filesForBase(seed, b, nRepos).map(_._1))
   }
 
-  def generateWithTruth(spark: SparkSession, nBases: Long, seed: Long = 42L,
-      nRepos: Int = 100): (Dataset[CorpusFile], Dataset[TruthLabel]) = {
-    import spark.implicits._
-    (spark.range(nBases).flatMap(b => filesForBase(seed, b, nRepos).map(_._1)),
-      spark.range(nBases).flatMap(b => filesForBase(seed, b, nRepos).map(_._2)))
-  }
-
   /** Sequential generation for the scalar oracle / unit tests. */
   def generateLocal(nBases: Long, seed: Long = 42L, nRepos: Int = 100): Seq[(CorpusFile, TruthLabel)] =
     (0L until nBases).flatMap(b => filesForBase(seed, b, nRepos))

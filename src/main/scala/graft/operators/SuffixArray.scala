@@ -194,23 +194,6 @@ object SuffixArray {
       .toDF("doc_id", "pos", "_k1", "_k2")
   }
 
-  /** (doc_id, text) → one (doc_id, pos, cp) row per codepoint; pos is
-    * 1-based in codepoint coordinates (SQL substr semantics).
-    */
-  private[graft] def explodeCodepoints(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val cps = text.codePoints().toArray
-        Iterator.tabulate(cps.length)(i => (id, (i + 1).toLong, cps(i).toLong))
-      }
-      .toDF("doc_id", "pos", "cp")
-  }
-
   /** Dense global rank of (_k1, _k2), ascending: range-partition + sort
     * within partitions (equal keys share a partition, so per-partition
     * distinct-key counts compose exactly), one checkpointed

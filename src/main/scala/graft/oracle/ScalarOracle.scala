@@ -31,8 +31,6 @@ object ScalarOracle {
       uniqueChunkCount: Long,
       totalChunkBytes: Long,
       uniqueChunkBytes: Long) {
-    def dedupRatio: Double =
-      if (uniqueChunkBytes == 0) 0.0 else totalChunkBytes.toDouble / uniqueChunkBytes
     /** all same-cluster pairs implied by the clustering */
     def clusterPairs: Set[(Long, Long)] = {
       clusters.groupBy(_._2).values.flatMap { m =>

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *    double-count an accumulator and distort the fixpoint test);
   *  - localCheckpoint truncates lineage (the classic iterative-join
   *    pitfall);
-  *  - hitting maxIter without convergence logs a loud warning instead of
-  *    silently returning split clusters.
+  *  - a fixpoint not reached within maxIter rounds fails the call with an
+  *    IllegalStateException naming the round count: the labels would
+  *    split components, so none are returned.
   *
   * Input: vertices(fileId), edges(a,b). Output: (fileId, clusterId) where
   * clusterId = min fileId of the component; singletons keep their own id.
@@ -99,13 +100,11 @@ object ConnectedComponents {
       prevSum = Some(s)
       iter += 1
     }
-    if (!converged)
-      System.err.println(
-        s"[cc] WARNING: not converged after $maxIter rounds — components " +
-        "wider than the round budget are returned split; raise ccMaxIter")
-    else if (sys.env.contains("GRAFT_CC_VERBOSE"))
-      println(s"[cc] converged rounds=$iter")
     sym.unpersist()
+    if (!converged)
+      throw new IllegalStateException(
+        s"connected components not converged after $iter rounds; the " +
+        "labels would split components — raise ccMaxIter")
 
     val labelsDf = labels.toDF("fileId", "clusterId")
     val singletons = vertices

@@ -22,19 +22,16 @@ object Restore {
   def verifyRestore(corpus: Dataset[CorpusFile], cfg: DedupConfig): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val features = DedupPipeline.featurize(corpus, cfg).toDF().persist()
+    // eager: featurize runs once, before the stages that read it run side
+    // by side — a lazy cache would let each of them build the same blocks
+    val features = DedupPipeline.featurize(corpus, cfg).toDF().localCheckpoint()
     val restored = restoreDigests(features, corpus, "SHA-256")
-    val res = features.select($"fileId", $"sha256")
+    features.select($"fileId", $"sha256")
       .join(restored, Seq("fileId"), "left")
       .agg(count(lit(1)).as("files"),
         sum(when($"sha256" === $"restoredSha", 1L).otherwise(0L)).as("restored_ok"),
         sum(when($"restoredSha".isNull || $"sha256" =!= $"restoredSha", 1L)
           .otherwise(0L)).as("restored_bad"))
-    // aggregate-to-one-row forces the restored plan before unpersist
-    val out = res.collect()
-    features.unpersist()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq, 1), res.schema)
   }
 
   /** Per-file digest of the restore reassembly — the shared core of

@@ -39,7 +39,7 @@ object CurationQueries {
       .map { case (id, text) =>
         val m = pattern.matcher(text)
         var n = 0L
-        var distinctWords = scala.collection.mutable.Set.empty[String]
+        val distinctWords = scala.collection.mutable.Set.empty[String]
         while (m.find()) {
           n += 1
           if (Character.isLetterOrDigit(text.charAt(m.start()))) distinctWords += m.group()
@@ -768,7 +768,7 @@ object CurationQueries {
       else lt || (p === col(k) && less(i + 1))
     }
     df.join(broadcast(peers), less(0), "left")
-      .groupBy(df.columns.map(col): _*)
+      .groupBy(df.columns.toIndexedSeq.map(col): _*)
       .agg(count(col(pref + keys.head._1)).as(out))
   }
 

@@ -76,23 +76,7 @@ object TraceQueries {
     * cumsum, HAR trim, index upsert, LRU stack distance).
     */
   def dTracePipeline(spark: SparkSession, dir: String): DataFrame = {
-    val li = t(spark, dir, "lineitem")
-    val key = col("l_partkey") * 8 + pmod(col("l_orderkey"), lit(8))
-    val md5c = md5(key.cast("string"))
-    val stream0 = DedupPipeline.streamPrefix(
-        li.select(
-          (pmod(col("l_suppkey"), lit(3)) + 1).as("b"),
-          concat(lit("s"), col("l_suppkey").cast("string")).as("path"),
-          col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), lit(1L).as("one")),
-        "path",
-        Seq("l_shipdate", "l_orderkey", "l_linenumber", "l_partkey"),
-        "one", "pre")
-      .withColumn("chunkIdx", col("pre").cast("int"))
-      .withColumn("fp", concat(md5c, substring(md5c, 1, 8)))
-      .withColumn("size", (pmod(key, lit(97)) + 1).cast("int"))
-      .select(col("b"), col("path"), col("chunkIdx"), col("fp"), col("size"))
-      .persist()
+    val stream0 = traceFixture(spark, dir, backups = 3)
     val tmp = java.nio.file.Files.createTempDirectory("graft_trace_pipe")
     try {
       val jobs = Seq(1, 2, 3).map { b =>
@@ -112,17 +96,19 @@ object TraceQueries {
     } finally deleteRecursively(tmp) // replay finished — drop the temp traces
   }
 
-  /** The shared two-backup trace fixture (b = suppkey%2+1, the
-    * [[dTracePipeline]] fp/size derivation — DuckDB recomputes both).
-    * Returned persisted; callers unpersist.
+  /** The lineitem trace fixture of the trace-replay queries: backup
+    * b = suppkey % `backups` + 1, one file per supplier, fp = 40-hex from
+    * md5 of the chunk key and size = key % 97 + 1 (DuckDB recomputes
+    * both; [[traceFixtureSql]] is its oracle). Returned persisted;
+    * callers unpersist.
     */
-  private def traceTwoFixture(spark: SparkSession, dir: String): DataFrame = {
+  private def traceFixture(spark: SparkSession, dir: String, backups: Int): DataFrame = {
     val li = t(spark, dir, "lineitem")
     val key = col("l_partkey") * 8 + pmod(col("l_orderkey"), lit(8))
     val md5c = md5(key.cast("string"))
     DedupPipeline.streamPrefix(
         li.select(
-          (pmod(col("l_suppkey"), lit(2)) + 1).as("b"),
+          (pmod(col("l_suppkey"), lit(backups)) + 1).as("b"),
           concat(lit("s"), col("l_suppkey").cast("string")).as("path"),
           col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), lit(1L).as("one")),
@@ -149,7 +135,7 @@ object TraceQueries {
     */
   private def dTraceVariant(spark: SparkSession, dir: String,
       rewriteDirectives: String): DataFrame = {
-    val stream0 = traceTwoFixture(spark, dir)
+    val stream0 = traceFixture(spark, dir, backups = 2)
     val jobs = Seq(1, 2).map(b => stream0.filter(col("b") === b).drop("b"))
     val settings = pipeline.DestorConfig.parse(
       s"simulation-level all\n$rewriteDirectives\nrestore-cache lru 30\n")
@@ -173,7 +159,7 @@ object TraceQueries {
     * (no-rewrite write predicate: written ⇔ first occurrence).
     */
   def sBackupChain(spark: SparkSession, dir: String): DataFrame = {
-    val stream0 = traceTwoFixture(spark, dir)
+    val stream0 = traceFixture(spark, dir, backups = 2)
     val settings = pipeline.DestorConfig.parse(
       "rewrite-algorithm no\nrestore-cache lru 30\nsimulation-level all\n")
     val tmp = java.nio.file.Files.createTempDirectory("graft_bkchain")
@@ -237,6 +223,163 @@ object TraceQueries {
         .select(col("path"), col("chunkIdx").cast("int").as("chunkIdx"),
           col("fp"), col("size").cast("int").as("size")))
 
+  /** The oracle of [[traceFixture]]: `WITH li AS (…), tr AS (…)` — the
+    * lineitem chunk stream with its backup `b` and 1-based per-backup
+    * `seq`.
+    */
+  private def traceFixtureSql(backups: Int): String =
+    s"""WITH li AS (
+       |  SELECT l_suppkey % $backups + 1 AS b,
+       |    's' || CAST(l_suppkey AS VARCHAR) AS path,
+       |    md5(CAST(l_partkey * 8 + l_orderkey % 8 AS VARCHAR)) AS h,
+       |    CAST((l_partkey * 8 + l_orderkey % 8) % 97 + 1 AS BIGINT) AS size,
+       |    l_shipdate, l_orderkey, l_linenumber, l_partkey
+       |  FROM lineitem),
+       |tr AS (
+       |  SELECT b, path, h || substr(h, 1, 8) AS fp, size,
+       |    CAST(row_number() OVER (PARTITION BY b
+       |      ORDER BY path, l_shipdate, l_orderkey, l_linenumber, l_partkey) AS BIGINT) AS seq
+       |  FROM li)""".stripMargin
+
+  /** `p{k}`: backup k's written rows (`src` rows where `pred`) packed in
+    * seq order into 512-byte containers, numbered from 0 for backup 1 and
+    * from `base{k}.nc` after it.
+    */
+  private def packSql(k: Int, src: String, pred: String): String = {
+    val (nc, base) = if (k == 1) ("", "") else ("nc + ", s", base$k")
+    s"""p$k AS (
+       |  SELECT fp, seq, CAST(${nc}floor(greatest(cum - 1, 0) / 512.0) AS BIGINT) AS cid
+       |  FROM (SELECT fp, seq, sum(size) OVER (ORDER BY seq
+       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |        FROM $src WHERE $pred)$base)""".stripMargin
+  }
+
+  /** `fc{k}`: each fp's first container in backup k. */
+  private def firstCidSql(k: Int): String =
+    s"fc$k AS (SELECT fp, min_by(cid, seq) AS firstCid FROM p$k GROUP BY 1)"
+
+  /** `r{k}`: backup k's recipe — each chunk's container is its own
+    * written copy's, else the index's, else the backup's first copy's.
+    */
+  private def recipeSql(k: Int): String =
+    s"""r$k AS MATERIALIZED (
+       |  SELECT w$k.seq, w$k.path, w$k.fp, w$k.size, w$k.dup, w$k.w,
+       |    coalesce(p$k.cid,
+       |      CASE WHEN w$k.idxCid IS NOT NULL THEN w$k.idxCid ELSE fc$k.firstCid END) AS cid
+       |  FROM w$k LEFT JOIN p$k ON p$k.seq = w$k.seq LEFT JOIN fc$k ON fc$k.fp = w$k.fp)""".stripMargin
+
+  /** Packing and recipe of backup k ≥ 2 from its write predicate `w{k}`. */
+  private def storeSql(k: Int): String =
+    s"${packSql(k, s"w$k", "w")},\n${firstCidSql(k)},\n${recipeSql(k)}"
+
+  /** `x{k}`/`m{k}`: LRU-30 restore of recipe `r{k}` by stack distance —
+    * a container read misses iff 30 or more distinct containers were read
+    * since its previous read.
+    */
+  private def lruSql(k: Int): String =
+    s"""x$k AS (SELECT seq, cid, lag(seq) OVER (PARTITION BY cid ORDER BY seq) AS prevSeq FROM r$k),
+       |m$k AS (SELECT CASE WHEN prevSeq IS NULL THEN 1
+       |         WHEN (SELECT count(DISTINCT y.cid) FROM r$k y
+       |               WHERE y.seq > x$k.prevSeq AND y.seq < x$k.seq) >= 30 THEN 1
+       |         ELSE 0 END AS miss FROM x$k)""".stripMargin
+
+  /** `u{k}`/`t{k}`/`har{k}`: HAR's sparse containers of backup k — those
+    * under half full by referenced bytes, smallest first, up to 5% of the
+    * backup's bytes.
+    */
+  private def harSql(k: Int): String =
+    s"""u$k AS (SELECT cid, CAST(sum(size) AS BIGINT) AS refB FROM r$k GROUP BY 1),
+       |t$k AS (SELECT CAST(sum(refB) AS BIGINT) AS total FROM u$k),
+       |har$k AS (SELECT cid FROM (
+       |    SELECT cid, CAST(sum(refB) OVER (ORDER BY refB, cid
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+       |    FROM u$k WHERE refB / 512.0 < 0.5), t$k
+       |  WHERE cum <= CAST(floor(0.05 * total) AS BIGINT))""".stripMargin
+
+  /** `s{k}`: backup k's chunk, unique and rewritten counts from `r{k}`. */
+  private def statsSql(k: Int): String =
+    s"""s$k AS (SELECT CAST($k AS BIGINT) AS backup_id,
+       |  count(DISTINCT path) AS files, count(*) AS chunks,
+       |  CAST(sum(size) AS BIGINT) AS data_size,
+       |  CAST(sum(CASE WHEN NOT dup THEN 1 ELSE 0 END) AS BIGINT) AS unique_chunks,
+       |  CAST(sum(CASE WHEN NOT dup THEN size ELSE 0 END) AS BIGINT) AS unique_size,
+       |  CAST(sum(CASE WHEN dup AND w THEN 1 ELSE 0 END) AS BIGINT) AS rewritten_chunks,
+       |  CAST(sum(CASE WHEN dup AND w THEN size ELSE 0 END) AS BIGINT) AS rewritten_size
+       |  FROM r$k)""".stripMargin
+
+  /** The result: one `TraceJobStats` row per backup 1..`backups`, from
+    * `s{k}`, `p{k}`, `base{k}` and `m{k}`; `sparse(k)` is backup k's
+    * sparse-container count. The first branch names the columns.
+    */
+  private def summarySql(backups: Int, sparse: Int => String): String =
+    (1 to backups).map { k =>
+      def as(name: String) = if (k == 1) s" AS $name" else ""
+      val written =
+        if (k == 1) "(SELECT CAST(coalesce(max(cid) + 1, 0) AS BIGINT) FROM p1)"
+        else s"CAST(coalesce((SELECT max(cid) FROM p$k) - (SELECT nc FROM base$k) + 1, 0) AS BIGINT)"
+      s"""SELECT s$k.*,
+         |  s$k.unique_size + s$k.rewritten_size${as("stored_size")},
+         |  $written${as("containers_written")},
+         |  ${sparse(k)}${as("sparse_containers")},
+         |  (SELECT CAST(sum(miss) AS BIGINT) FROM m$k)${as("container_reads")},
+         |  round(s$k.data_size / 1048576.0 / (SELECT sum(miss) FROM m$k), 6)${as("speed_factor")},
+         |  round(ceil(s$k.data_size / 4194304.0) / (SELECT sum(miss) FROM m$k), 6)${as("cfl")}
+         |FROM s$k""".stripMargin
+    }.mkString("\nUNION ALL\n")
+
+  /** Oracle of [[dTracePipeline]]: the three-backup replay under the
+    * shipped HAR/LRU-30 config. Backup 1 packs its first occurrences;
+    * backups 2 and 3 dedup against the index left by the one before,
+    * rewrite duplicates held in the previous backup's HAR containers,
+    * and upsert the index (latest copy wins).
+    */
+  private val tracePipelineOracle: String =
+    s"""${traceFixtureSql(3)},
+       |f1 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 1 GROUP BY 1),
+       |j1 AS (SELECT tr.*, tr.seq = f1.firstSeq AS uniq
+       |       FROM tr JOIN f1 USING (fp) WHERE b = 1),
+       |${packSql(1, "j1", "uniq")},
+       |idx1 AS (SELECT fp, cid FROM p1),
+       |r1 AS MATERIALIZED (
+       |  SELECT j1.seq, j1.path, j1.fp, j1.size, NOT j1.uniq AS dup, idx1.cid
+       |  FROM j1 JOIN idx1 USING (fp)),
+       |${lruSql(1)},
+       |${harSql(1)},
+       |f2 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 2 GROUP BY 1),
+       |j2 AS (SELECT tr.*, f2.firstSeq, idx1.cid AS idxCid
+       |       FROM tr JOIN f2 USING (fp) LEFT JOIN idx1 USING (fp) WHERE b = 2),
+       |d2 AS (SELECT *, (idxCid IS NOT NULL OR seq > firstSeq) AS dup FROM j2),
+       |w2 AS (SELECT *, (NOT dup) OR (idxCid IS NOT NULL
+       |         AND idxCid IN (SELECT cid FROM har1)) AS w FROM d2),
+       |base2 AS (SELECT coalesce(max(cid) + 1, 0) AS nc FROM p1),
+       |${storeSql(2)},
+       |${lruSql(2)},
+       |${harSql(2)},
+       |l2 AS (SELECT fp, max_by(cid, seq) AS cid FROM p2 GROUP BY 1),
+       |idx2 AS (SELECT fp, coalesce(l2.cid, idx1.cid) AS cid
+       |         FROM idx1 FULL JOIN l2 USING (fp)),
+       |f3 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 3 GROUP BY 1),
+       |j3 AS (SELECT tr.*, f3.firstSeq, idx2.cid AS idxCid
+       |       FROM tr JOIN f3 USING (fp) LEFT JOIN idx2 USING (fp) WHERE b = 3),
+       |d3 AS (SELECT *, (idxCid IS NOT NULL OR seq > firstSeq) AS dup FROM j3),
+       |w3 AS (SELECT *, (NOT dup) OR (idxCid IS NOT NULL
+       |         AND idxCid IN (SELECT cid FROM har2)) AS w FROM d3),
+       |base3 AS (SELECT coalesce((SELECT max(cid) + 1 FROM p2),
+       |                          (SELECT nc FROM base2)) AS nc),
+       |${storeSql(3)},
+       |${lruSql(3)},
+       |${harSql(3)},
+       |s1 AS (SELECT CAST(1 AS BIGINT) AS backup_id,
+       |  count(DISTINCT path) AS files, count(*) AS chunks,
+       |  CAST(sum(size) AS BIGINT) AS data_size,
+       |  CAST(sum(CASE WHEN NOT dup THEN 1 ELSE 0 END) AS BIGINT) AS unique_chunks,
+       |  CAST(sum(CASE WHEN NOT dup THEN size ELSE 0 END) AS BIGINT) AS unique_size,
+       |  CAST(0 AS BIGINT) AS rewritten_chunks, CAST(0 AS BIGINT) AS rewritten_size
+       |  FROM r1),
+       |${statsSql(2)},
+       |${statsSql(3)}
+       |${summarySql(3, k => s"(SELECT count(*) FROM har$k)")}""".stripMargin
+
   /** Oracle generator for the two-backup trace-replay variants
     * ([[dTraceVariant]]): the full d_trace_pipeline replay skeleton
     * (fixture fps DuckDB re-derives, cumulative packing, latest-wins
@@ -249,34 +392,8 @@ object TraceQueries {
     * degenerate tails, so the oracle replays the formula, not a proof
     * about it). HAR is off in these variants → sparse_containers ≡ 0.
     */
-  private def traceTwoOracle(algo: Int => String): String = {
-    def stats(k: Int) =
-      s"""s$k AS (SELECT CAST($k AS BIGINT) AS backup_id,
-         |  count(DISTINCT path) AS files, count(*) AS chunks,
-         |  CAST(sum(size) AS BIGINT) AS data_size,
-         |  CAST(sum(CASE WHEN NOT dup THEN 1 ELSE 0 END) AS BIGINT) AS unique_chunks,
-         |  CAST(sum(CASE WHEN NOT dup THEN size ELSE 0 END) AS BIGINT) AS unique_size,
-         |  CAST(sum(CASE WHEN dup AND w THEN 1 ELSE 0 END) AS BIGINT) AS rewritten_chunks,
-         |  CAST(sum(CASE WHEN dup AND w THEN size ELSE 0 END) AS BIGINT) AS rewritten_size
-         |  FROM r$k)""".stripMargin
-    def lru(k: Int) =
-      s"""x$k AS (SELECT seq, cid, lag(seq) OVER (PARTITION BY cid ORDER BY seq) AS prevSeq FROM r$k),
-         |m$k AS (SELECT CASE WHEN prevSeq IS NULL THEN 1
-         |         WHEN (SELECT count(DISTINCT y.cid) FROM r$k y
-         |               WHERE y.seq > x$k.prevSeq AND y.seq < x$k.seq) >= 30 THEN 1
-         |         ELSE 0 END AS miss FROM x$k)""".stripMargin
-    s"""WITH li AS (
-       |  SELECT l_suppkey % 2 + 1 AS b,
-       |    's' || CAST(l_suppkey AS VARCHAR) AS path,
-       |    md5(CAST(l_partkey * 8 + l_orderkey % 8 AS VARCHAR)) AS h,
-       |    CAST((l_partkey * 8 + l_orderkey % 8) % 97 + 1 AS BIGINT) AS size,
-       |    l_shipdate, l_orderkey, l_linenumber, l_partkey
-       |  FROM lineitem),
-       |tr AS (
-       |  SELECT b, path, h || substr(h, 1, 8) AS fp, size,
-       |    CAST(row_number() OVER (PARTITION BY b
-       |      ORDER BY path, l_shipdate, l_orderkey, l_linenumber, l_partkey) AS BIGINT) AS seq
-       |  FROM li),
+  private def traceTwoOracle(algo: Int => String): String =
+    s"""${traceFixtureSql(2)},
        |f1 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 1 GROUP BY 1),
        |d1 AS MATERIALIZED (
        |  SELECT tr.seq, tr.path, tr.fp, tr.size,
@@ -285,19 +402,11 @@ object TraceQueries {
        |    CAST(-1 AS BIGINT) AS mcid
        |  FROM tr JOIN f1 USING (fp) WHERE b = 1),
        |${algo(1)},
-       |p1 AS (
-       |  SELECT fp, seq, CAST(floor(greatest(cum - 1, 0) / 512.0) AS BIGINT) AS cid
-       |  FROM (SELECT fp, seq, sum(size) OVER (ORDER BY seq
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |        FROM w1 WHERE w)),
-       |fc1 AS (SELECT fp, min_by(cid, seq) AS firstCid FROM p1 GROUP BY 1),
+       |${packSql(1, "w1", "w")},
+       |${firstCidSql(1)},
        |lc1 AS (SELECT fp, max_by(cid, seq) AS cid FROM p1 GROUP BY 1),
-       |r1 AS MATERIALIZED (
-       |  SELECT w1.seq, w1.path, w1.fp, w1.size, w1.dup, w1.w,
-       |    coalesce(p1.cid,
-       |      CASE WHEN w1.idxCid IS NOT NULL THEN w1.idxCid ELSE fc1.firstCid END) AS cid
-       |  FROM w1 LEFT JOIN p1 ON p1.seq = w1.seq LEFT JOIN fc1 ON fc1.fp = w1.fp),
-       |${lru(1)},
+       |${recipeSql(1)},
+       |${lruSql(1)},
        |f2 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 2 GROUP BY 1),
        |d2 AS MATERIALIZED (
        |  SELECT tr.seq, tr.path, tr.fp, tr.size, lc1.cid AS idxCid,
@@ -306,38 +415,11 @@ object TraceQueries {
        |  FROM tr JOIN f2 USING (fp) LEFT JOIN lc1 USING (fp) WHERE b = 2),
        |${algo(2)},
        |base2 AS (SELECT coalesce(max(cid) + 1, 0) AS nc FROM p1),
-       |p2 AS (
-       |  SELECT fp, seq, CAST(nc + floor(greatest(cum - 1, 0) / 512.0) AS BIGINT) AS cid
-       |  FROM (SELECT fp, seq, sum(size) OVER (ORDER BY seq
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |        FROM w2 WHERE w), base2),
-       |fc2 AS (SELECT fp, min_by(cid, seq) AS firstCid FROM p2 GROUP BY 1),
-       |r2 AS MATERIALIZED (
-       |  SELECT w2.seq, w2.path, w2.fp, w2.size, w2.dup, w2.w,
-       |    coalesce(p2.cid,
-       |      CASE WHEN w2.idxCid IS NOT NULL THEN w2.idxCid ELSE fc2.firstCid END) AS cid
-       |  FROM w2 LEFT JOIN p2 ON p2.seq = w2.seq LEFT JOIN fc2 ON fc2.fp = w2.fp),
-       |${lru(2)},
-       |${stats(1)},
-       |${stats(2)}
-       |SELECT s1.*,
-       |  s1.unique_size + s1.rewritten_size AS stored_size,
-       |  (SELECT CAST(coalesce(max(cid) + 1, 0) AS BIGINT) FROM p1) AS containers_written,
-       |  CAST(0 AS BIGINT) AS sparse_containers,
-       |  (SELECT CAST(sum(miss) AS BIGINT) FROM m1) AS container_reads,
-       |  round(s1.data_size / 1048576.0 / (SELECT sum(miss) FROM m1), 6) AS speed_factor,
-       |  round(ceil(s1.data_size / 4194304.0) / (SELECT sum(miss) FROM m1), 6) AS cfl
-       |FROM s1
-       |UNION ALL
-       |SELECT s2.*,
-       |  s2.unique_size + s2.rewritten_size,
-       |  CAST(coalesce((SELECT max(cid) FROM p2) - (SELECT nc FROM base2) + 1, 0) AS BIGINT),
-       |  CAST(0 AS BIGINT),
-       |  (SELECT CAST(sum(miss) AS BIGINT) FROM m2),
-       |  round(s2.data_size / 1048576.0 / (SELECT sum(miss) FROM m2), 6),
-       |  round(ceil(s2.data_size / 4194304.0) / (SELECT sum(miss) FROM m2), 6)
-       |FROM s2""".stripMargin
-  }
+       |${storeSql(2)},
+       |${lruSql(2)},
+       |${statsSql(1)},
+       |${statsSql(2)}
+       |${summarySql(2, _ => "CAST(0 AS BIGINT)")}""".stripMargin
 
   /** W2 CFL write predicate over marked stream k: runs of consecutive
     * same-container rows; rewrite a duplicate iff its run's bytes fall
@@ -419,156 +501,7 @@ object TraceQueries {
     // r_har_sparse pattern), index upsert, sparse rewriting at backup 3,
     // LRU-30 restore replay via the stack-distance equivalence (the
     // r_restore_lru pattern)
-    QueryDef("d_trace_pipeline", dTracePipeline, Some(
-      """WITH li AS (
-        |  SELECT l_suppkey % 3 + 1 AS b,
-        |    's' || CAST(l_suppkey AS VARCHAR) AS path,
-        |    md5(CAST(l_partkey * 8 + l_orderkey % 8 AS VARCHAR)) AS h,
-        |    CAST((l_partkey * 8 + l_orderkey % 8) % 97 + 1 AS BIGINT) AS size,
-        |    l_shipdate, l_orderkey, l_linenumber, l_partkey
-        |  FROM lineitem),
-        |tr AS (
-        |  SELECT b, path, h || substr(h, 1, 8) AS fp, size,
-        |    CAST(row_number() OVER (PARTITION BY b
-        |      ORDER BY path, l_shipdate, l_orderkey, l_linenumber, l_partkey) AS BIGINT) AS seq
-        |  FROM li),
-        |f1 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 1 GROUP BY 1),
-        |j1 AS (SELECT tr.*, tr.seq = f1.firstSeq AS uniq
-        |       FROM tr JOIN f1 USING (fp) WHERE b = 1),
-        |p1 AS (
-        |  SELECT fp, seq, CAST(floor(greatest(cum - 1, 0) / 512.0) AS BIGINT) AS cid
-        |  FROM (SELECT fp, seq, sum(size) OVER (ORDER BY seq
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |        FROM j1 WHERE uniq)),
-        |idx1 AS (SELECT fp, cid FROM p1),
-        |r1 AS MATERIALIZED (
-        |  SELECT j1.seq, j1.path, j1.fp, j1.size, NOT j1.uniq AS dup, idx1.cid
-        |  FROM j1 JOIN idx1 USING (fp)),
-        |x1 AS (SELECT seq, cid, lag(seq) OVER (PARTITION BY cid ORDER BY seq) AS prevSeq FROM r1),
-        |m1 AS (SELECT CASE WHEN prevSeq IS NULL THEN 1
-        |         WHEN (SELECT count(DISTINCT y.cid) FROM r1 y
-        |               WHERE y.seq > x1.prevSeq AND y.seq < x1.seq) >= 30 THEN 1
-        |         ELSE 0 END AS miss FROM x1),
-        |u1 AS (SELECT cid, CAST(sum(size) AS BIGINT) AS refB FROM r1 GROUP BY 1),
-        |t1 AS (SELECT CAST(sum(refB) AS BIGINT) AS total FROM u1),
-        |har1 AS (SELECT cid FROM (
-        |    SELECT cid, CAST(sum(refB) OVER (ORDER BY refB, cid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |    FROM u1 WHERE refB / 512.0 < 0.5), t1
-        |  WHERE cum <= CAST(floor(0.05 * total) AS BIGINT)),
-        |f2 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 2 GROUP BY 1),
-        |j2 AS (SELECT tr.*, f2.firstSeq, idx1.cid AS idxCid
-        |       FROM tr JOIN f2 USING (fp) LEFT JOIN idx1 USING (fp) WHERE b = 2),
-        |d2 AS (SELECT *, (idxCid IS NOT NULL OR seq > firstSeq) AS dup FROM j2),
-        |w2 AS (SELECT *, (NOT dup) OR (idxCid IS NOT NULL
-        |         AND idxCid IN (SELECT cid FROM har1)) AS w FROM d2),
-        |base2 AS (SELECT coalesce(max(cid) + 1, 0) AS nc FROM p1),
-        |p2 AS (
-        |  SELECT fp, seq, CAST(nc + floor(greatest(cum - 1, 0) / 512.0) AS BIGINT) AS cid
-        |  FROM (SELECT fp, seq, sum(size) OVER (ORDER BY seq
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |        FROM w2 WHERE w), base2),
-        |fc2 AS (SELECT fp, min_by(cid, seq) AS firstCid FROM p2 GROUP BY 1),
-        |r2 AS MATERIALIZED (
-        |  SELECT w2.seq, w2.path, w2.fp, w2.size, w2.dup, w2.w,
-        |    coalesce(p2.cid,
-        |      CASE WHEN w2.idxCid IS NOT NULL THEN w2.idxCid ELSE fc2.firstCid END) AS cid
-        |  FROM w2 LEFT JOIN p2 ON p2.seq = w2.seq LEFT JOIN fc2 ON fc2.fp = w2.fp),
-        |x2 AS (SELECT seq, cid, lag(seq) OVER (PARTITION BY cid ORDER BY seq) AS prevSeq FROM r2),
-        |m2 AS (SELECT CASE WHEN prevSeq IS NULL THEN 1
-        |         WHEN (SELECT count(DISTINCT y.cid) FROM r2 y
-        |               WHERE y.seq > x2.prevSeq AND y.seq < x2.seq) >= 30 THEN 1
-        |         ELSE 0 END AS miss FROM x2),
-        |u2 AS (SELECT cid, CAST(sum(size) AS BIGINT) AS refB FROM r2 GROUP BY 1),
-        |t2 AS (SELECT CAST(sum(refB) AS BIGINT) AS total FROM u2),
-        |har2 AS (SELECT cid FROM (
-        |    SELECT cid, CAST(sum(refB) OVER (ORDER BY refB, cid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |    FROM u2 WHERE refB / 512.0 < 0.5), t2
-        |  WHERE cum <= CAST(floor(0.05 * total) AS BIGINT)),
-        |l2 AS (SELECT fp, max_by(cid, seq) AS cid FROM p2 GROUP BY 1),
-        |idx2 AS (SELECT fp, coalesce(l2.cid, idx1.cid) AS cid
-        |         FROM idx1 FULL JOIN l2 USING (fp)),
-        |f3 AS (SELECT fp, min(seq) AS firstSeq FROM tr WHERE b = 3 GROUP BY 1),
-        |j3 AS (SELECT tr.*, f3.firstSeq, idx2.cid AS idxCid
-        |       FROM tr JOIN f3 USING (fp) LEFT JOIN idx2 USING (fp) WHERE b = 3),
-        |d3 AS (SELECT *, (idxCid IS NOT NULL OR seq > firstSeq) AS dup FROM j3),
-        |w3 AS (SELECT *, (NOT dup) OR (idxCid IS NOT NULL
-        |         AND idxCid IN (SELECT cid FROM har2)) AS w FROM d3),
-        |base3 AS (SELECT coalesce((SELECT max(cid) + 1 FROM p2),
-        |                          (SELECT nc FROM base2)) AS nc),
-        |p3 AS (
-        |  SELECT fp, seq, CAST(nc + floor(greatest(cum - 1, 0) / 512.0) AS BIGINT) AS cid
-        |  FROM (SELECT fp, seq, sum(size) OVER (ORDER BY seq
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |        FROM w3 WHERE w), base3),
-        |fc3 AS (SELECT fp, min_by(cid, seq) AS firstCid FROM p3 GROUP BY 1),
-        |r3 AS MATERIALIZED (
-        |  SELECT w3.seq, w3.path, w3.fp, w3.size, w3.dup, w3.w,
-        |    coalesce(p3.cid,
-        |      CASE WHEN w3.idxCid IS NOT NULL THEN w3.idxCid ELSE fc3.firstCid END) AS cid
-        |  FROM w3 LEFT JOIN p3 ON p3.seq = w3.seq LEFT JOIN fc3 ON fc3.fp = w3.fp),
-        |x3 AS (SELECT seq, cid, lag(seq) OVER (PARTITION BY cid ORDER BY seq) AS prevSeq FROM r3),
-        |m3 AS (SELECT CASE WHEN prevSeq IS NULL THEN 1
-        |         WHEN (SELECT count(DISTINCT y.cid) FROM r3 y
-        |               WHERE y.seq > x3.prevSeq AND y.seq < x3.seq) >= 30 THEN 1
-        |         ELSE 0 END AS miss FROM x3),
-        |u3 AS (SELECT cid, CAST(sum(size) AS BIGINT) AS refB FROM r3 GROUP BY 1),
-        |t3 AS (SELECT CAST(sum(refB) AS BIGINT) AS total FROM u3),
-        |har3 AS (SELECT cid FROM (
-        |    SELECT cid, CAST(sum(refB) OVER (ORDER BY refB, cid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |    FROM u3 WHERE refB / 512.0 < 0.5), t3
-        |  WHERE cum <= CAST(floor(0.05 * total) AS BIGINT)),
-        |s1 AS (SELECT CAST(1 AS BIGINT) AS backup_id,
-        |  count(DISTINCT path) AS files, count(*) AS chunks,
-        |  CAST(sum(size) AS BIGINT) AS data_size,
-        |  CAST(sum(CASE WHEN NOT dup THEN 1 ELSE 0 END) AS BIGINT) AS unique_chunks,
-        |  CAST(sum(CASE WHEN NOT dup THEN size ELSE 0 END) AS BIGINT) AS unique_size,
-        |  CAST(0 AS BIGINT) AS rewritten_chunks, CAST(0 AS BIGINT) AS rewritten_size
-        |  FROM r1),
-        |s2 AS (SELECT CAST(2 AS BIGINT) AS backup_id,
-        |  count(DISTINCT path) AS files, count(*) AS chunks,
-        |  CAST(sum(size) AS BIGINT) AS data_size,
-        |  CAST(sum(CASE WHEN NOT dup THEN 1 ELSE 0 END) AS BIGINT) AS unique_chunks,
-        |  CAST(sum(CASE WHEN NOT dup THEN size ELSE 0 END) AS BIGINT) AS unique_size,
-        |  CAST(sum(CASE WHEN dup AND w THEN 1 ELSE 0 END) AS BIGINT) AS rewritten_chunks,
-        |  CAST(sum(CASE WHEN dup AND w THEN size ELSE 0 END) AS BIGINT) AS rewritten_size
-        |  FROM r2),
-        |s3 AS (SELECT CAST(3 AS BIGINT) AS backup_id,
-        |  count(DISTINCT path) AS files, count(*) AS chunks,
-        |  CAST(sum(size) AS BIGINT) AS data_size,
-        |  CAST(sum(CASE WHEN NOT dup THEN 1 ELSE 0 END) AS BIGINT) AS unique_chunks,
-        |  CAST(sum(CASE WHEN NOT dup THEN size ELSE 0 END) AS BIGINT) AS unique_size,
-        |  CAST(sum(CASE WHEN dup AND w THEN 1 ELSE 0 END) AS BIGINT) AS rewritten_chunks,
-        |  CAST(sum(CASE WHEN dup AND w THEN size ELSE 0 END) AS BIGINT) AS rewritten_size
-        |  FROM r3)
-        |SELECT s1.*,
-        |  s1.unique_size + s1.rewritten_size AS stored_size,
-        |  (SELECT CAST(coalesce(max(cid) + 1, 0) AS BIGINT) FROM p1) AS containers_written,
-        |  (SELECT count(*) FROM har1) AS sparse_containers,
-        |  (SELECT CAST(sum(miss) AS BIGINT) FROM m1) AS container_reads,
-        |  round(s1.data_size / 1048576.0 / (SELECT sum(miss) FROM m1), 6) AS speed_factor,
-        |  round(ceil(s1.data_size / 4194304.0) / (SELECT sum(miss) FROM m1), 6) AS cfl
-        |FROM s1
-        |UNION ALL
-        |SELECT s2.*,
-        |  s2.unique_size + s2.rewritten_size,
-        |  CAST(coalesce((SELECT max(cid) FROM p2) - (SELECT nc FROM base2) + 1, 0) AS BIGINT),
-        |  (SELECT count(*) FROM har2),
-        |  (SELECT CAST(sum(miss) AS BIGINT) FROM m2),
-        |  round(s2.data_size / 1048576.0 / (SELECT sum(miss) FROM m2), 6),
-        |  round(ceil(s2.data_size / 4194304.0) / (SELECT sum(miss) FROM m2), 6)
-        |FROM s2
-        |UNION ALL
-        |SELECT s3.*,
-        |  s3.unique_size + s3.rewritten_size,
-        |  CAST(coalesce((SELECT max(cid) FROM p3) - (SELECT nc FROM base3) + 1, 0) AS BIGINT),
-        |  (SELECT count(*) FROM har3),
-        |  (SELECT CAST(sum(miss) AS BIGINT) FROM m3),
-        |  round(s3.data_size / 1048576.0 / (SELECT sum(miss) FROM m3), 6),
-        |  round(ceil(s3.data_size / 4194304.0) / (SELECT sum(miss) FROM m3), 6)
-        |FROM s3""".stripMargin)),
+    QueryDef("d_trace_pipeline", dTracePipeline, Some(tracePipelineOracle)),
     QueryDef("s_backup_chain", sBackupChain, Some(traceTwoOracle(noAlgo))),
     QueryDef("d_trace_cfl", dTraceCfl, Some(traceTwoOracle(cflAlgo))),
     QueryDef("d_trace_cbr", dTraceCbr, Some(traceTwoOracle(cbrAlgo))),

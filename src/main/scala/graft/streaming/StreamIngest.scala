@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.corpus.CorpusFile
@@ -24,7 +24,6 @@ object StreamIngest {
     */
   def start(corpus: Dataset[CorpusFile], indexRoot: String,
       cfg: DedupConfig = DedupConfig()): StreamingQuery = {
-    val spark = corpus.sparkSession
     corpus.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$indexRoot/_checkpoint")

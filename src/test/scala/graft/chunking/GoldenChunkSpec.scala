@@ -1,7 +1,6 @@
 package graft.chunking
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.Random
 
 /** Bit-exactness gate for the CDC ports: boundary lists produced by the
   * REFERENCE C implementations (compiled from /root/reference/src/chunking

@@ -61,7 +61,6 @@ class SuffixArraySpec extends AnyFunSuite {
     val got = SuffixArray.prefixRanks(docs.toDF("doc_id", "text"), 4L)
       .as[(Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    val text = docs.toMap
     // positions with >= 4 cps remaining: same rank iff same first 4 cps
     val deep = for {
       (id, t) <- docs; i <- 1 to t.length - 3

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession
 
 /** Unit semantics for sampling, segmenting, and champion selection —
   * the destor-parity fine print.

@@ -237,6 +237,9 @@ class ExtrasSpec extends AnyFunSuite {
     assert(resized.length === 30)
     val metas = media.collect().map(m => m.mediaId -> m.meta).toMap
     resized.foreach { r =>
+      // kind and source dimensions carry the input's meta through
+      val m = metas(r.mediaId)
+      assert((r.kind, r.width, r.height) === (m.kind, m.width, m.height))
       if (r.kind == "image") {
         if (math.max(r.width, r.height) > 12)
           assert(math.max(r.newWidth, r.newHeight) === 12) // longest side hits the clamp

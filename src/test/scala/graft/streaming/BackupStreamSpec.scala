@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
-import graft.pipeline.{ClusterJob, DestorConfig, TableIO, TracePipeline,
+import graft.pipeline.{DestorConfig, TableIO, TracePipeline,
   TraceJobStats}
 
 /** Continuous chained backup ([[StreamIngest.backupStream]]): each

@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.corpus.{CorpusFile, CorpusGen}
-import graft.pipeline.DedupConfig
 
 class StreamIngestSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -97,7 +96,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("stateful dedup stream: first writer wins across micro-batches") {
-    import StreamIngest.{ChunkEvent, DedupDecision}
+    import StreamIngest.ChunkEvent
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[ChunkEvent]
     val out = StreamIngest.dedupStream(stream.toDS())
@@ -125,7 +124,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("streaming commit chain: introduced vs carried across micro-batches") {
-    import StreamIngest.{VersionEvent, VersionDecision}
+    import StreamIngest.VersionEvent
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[VersionEvent]
     val out = StreamIngest.commitStream(stream.toDS())
@@ -187,7 +186,7 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("streaming quota: per-domain cap persists across micro-batches") {
-    import StreamIngest.{QuotaEvent, QuotaVerdict}
+    import StreamIngest.QuotaEvent
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val stream = MemoryStream[QuotaEvent]

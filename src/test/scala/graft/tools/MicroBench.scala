@@ -38,7 +38,6 @@ object MicroBench {
     }
     time("gen+chunksonly") {
       files.mapPartitions { it =>
-        val sha1 = java.security.MessageDigest.getInstance("SHA-1")
         it.map { f =>
           val bytes = f.content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           val bounds = graft.chunking.Chunkers.boundaries(bytes, cfg.chunker)
