@@ -279,8 +279,8 @@ object RepoDedup {
   /** Fork FAMILIES: connected components over [[forkPairs]] edges;
     * every repo (singletons included) gets family = the
     * lexicographically smallest repo name of its component, plus the
-    * component size. CC runs on 64-bit name hashes (log-diameter
-    * pointer jumping); the name mapping back out keeps the output
+    * component size. CC runs on 64-bit name hashes (ids in no order
+    * along a chain); the name mapping back out keeps the output
     * digest-free and deterministic. Because a silent rid collision
     * would merge two unrelated repos into one family — and forkPrune
     * would then DROP a non-fork repo — uniqueness is asserted loudly

@@ -795,8 +795,8 @@ object Similarity {
 
   /** IVF top-k: probe the nProbe nearest lists per query, exact-cosine
     * rerank inside the probed candidates. One shuffle on listId.
-    */
-  /** kmeansIters = 0 keeps raw seed centroids: on a structure-less
+    *
+    * kmeansIters = 0 keeps raw seed centroids: on a structure-less
     * (uniform) corpus a finer data-point partition probes marginally
     * better (measured 0.85 vs 0.81 recall@5 at nProbe 4/16 on the test
     * embeddings), while on clustered/skewed corpora Lloyd refinement is
@@ -808,7 +808,10 @@ object Similarity {
     import spark.implicits._
     val cents = if (kmeansIters > 0) kmeansCentroids(embeddings, nlist, kmeansIters)
       else centroids(embeddings, nlist)
-    val assigned = assign(embeddings, cents).persist()
+    // eager: the probe queries and the join's list side both read it and
+    // run as concurrent stages — a lazy cache would let each build the
+    // same blocks
+    val assigned = assign(embeddings, cents).localCheckpoint()
     val bc = spark.sparkContext.broadcast(cents)
     val queries = assigned.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
@@ -839,8 +842,7 @@ object Similarity {
         (col("pos") + 1).cast("long").as("rk"),
         round(graft.functions.SortableBits.invert(col("col.score")), 4)
           .as("cosine_r"))
-      .localCheckpoint(true) // materialize (small: k rows/query) → free cache
-    assigned.unpersist()
+      .localCheckpoint(true) // materialize (small: k rows/query)
     out
   }
 }

@@ -1,7 +1,7 @@
 package graft.oracle
 
 import graft.corpus.CorpusFile
-import graft.pipeline.{DedupConfig, DedupPipeline, FileFeatures, Shingles}
+import graft.pipeline.{ConnectedComponents, DedupConfig, DedupPipeline, FileFeatures, Shingles}
 
 /** Sequential in-JVM reference implementation of the dedup-cluster
   * semantics (SURVEY.md §5): single-threaded, no Spark, exact all-pairs
@@ -10,19 +10,6 @@ import graft.pipeline.{DedupConfig, DedupPipeline, FileFeatures, Shingles}
   * BASELINE.json north rule).
   */
 object ScalarOracle {
-
-  final class UnionFind {
-    private val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x
-      else { val r = find(p); parent(x) = r; r }
-    }
-    def union(a: Long, b: Long): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-  }
 
   final case class OracleRun(
       features: Seq[FileFeatures],
@@ -47,7 +34,7 @@ object ScalarOracle {
     val feats = files.map(f => DedupPipeline.featurizeOne(f, cfg, sha1, sha256))
 
     // exact all-pairs Jaccard ≥ τ (+ sha256-equal fallback for empty sets)
-    val uf = new UnionFind
+    val uf = new ConnectedComponents.UnionFind
     val pairs = scala.collection.mutable.Set.empty[(Long, Long)]
     val arr = feats.toArray
     var i = 0

@@ -152,9 +152,9 @@ object CloneQueries {
 
   /** Clone GROUPS: connected components over the [[dClonePairs]] edges —
     * every doc (null-text and token-free docs included, as singletons)
-    * labeled with the min doc_id of its clone class. Reuses the
-    * log-diameter pointer-jumping CC; the oracle closes the same edge
-    * set with a recursive min-label CTE.
+    * labeled with the min doc_id of its clone class. Reuses
+    * [[ConnectedComponents.run]]; the oracle closes the same edge set
+    * with a recursive min-label CTE.
     */
   def dCloneGroups(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents").select(col("doc_id"))

@@ -61,9 +61,10 @@ object NearDupQueries {
     *    10^6 docs yields 10^6 edges, never 10^12 pairs;
     *  - verify threshold in pure integer arithmetic
     *    (3·|∩| ≥ |A|+|B| ⇔ Jaccard ≥ 0.5) — no float-order drift;
-    *  - clustering via [[ConnectedComponents.run]] — the real iterative
-    *    min-label/pointer-jump job, here proven value-identical to the
-    *    declarative transitive closure.
+    *  - clustering via [[ConnectedComponents.run]] — the engine's own CC
+    *    (driver union-find up to its edge cap, min-label/pointer-jump
+    *    rounds above), here proven value-identical to the declarative
+    *    transitive closure.
     */
   def dMinhashCluster(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir, "documents")

@@ -61,13 +61,13 @@ class JobBudgetSpec extends AnyFunSuite {
   test("ClusterJob.run, fresh and resumed, stays within its job budget") {
     val root = freshDir()
     val corpus = corpusOf(files)
-    within("fresh run", jobsOf(ClusterJob.run(corpus, root, "jb-run")), 41)
+    within("fresh run", jobsOf(ClusterJob.run(corpus, root, "jb-run")), 31)
     within("resumed run", jobsOf(ClusterJob.run(corpus, root, "jb-run")), 12)
   }
 
   test("config-driven ClusterJob.run stays within its job budget") {
     within("config run", jobsOf(ClusterJob.run(corpusOf(files), freshDir(),
-      "jb-cfg", settings)), 71)
+      "jb-cfg", settings)), 60)
   }
 
   test("backup (fresh and chained) and expire stay within their job budgets") {
@@ -81,6 +81,16 @@ class JobBudgetSpec extends AnyFunSuite {
       39)
     within("expire", jobsOf(ClusterJob.expire(
       spark, Seq(b1, b2), "b1", ex, "jb-ex", 4096L)), 23)
+  }
+
+  test("ConnectedComponents.run on a small graph stays within its job budget") {
+    // the driver-side union-find path: one job collects the edges, the
+    // rest read the labels and the anti-joined singletons
+    import spark.implicits._
+    val vertices = (0L until 2000L).toDF("fileId")
+    val edges = (0L until 1000L).map(i => (i / 10 * 10, i)).toDF("a", "b")
+    within("ConnectedComponents.run, collected", jobsOf(
+      ConnectedComponents.run(vertices, edges).collect()), 3)
   }
 
   test("Restore.materialize stays within its job budget") {
