@@ -306,10 +306,18 @@ object ClusterJob {
     * and appends no duplicate metrics; the returned stats are rebuilt
     * from the committed stage tables so fresh and resumed runs return
     * identical values.
+    *
+    * A snapshot of at most `localCap` chunks ([[TracePipeline.LocalCap]]
+    * unless a test passes another) runs the store step on the driver: one
+    * bounded collect, one index lookup, then the stage writes, with the
+    * restore sim folded from the recipe the driver holds. A larger one
+    * runs it distributed. Both write the same tables (see
+    * [[TracePipeline]]); `localCap = 0` forces the distributed plan.
     */
   def backup(corpus: Dataset[CorpusFile], root: String, runId: String,
       settings: DestorSettings, prevRoot: Option[String] = None,
-      payload: Long = Rewrite.ContainerPayload): TraceJobStats =
+      payload: Long = Rewrite.ContainerPayload,
+      localCap: Int = TracePipeline.LocalCap): TraceJobStats =
     RunLog(corpus.sparkSession, root, runId) { log =>
       val chunks = log.stage("chunks") {
         DedupPipeline.chunkTableDF(
@@ -322,7 +330,7 @@ object ClusterJob {
           .select(
             concat_ws("@", col("repo"), col("path"), col("commit")).as("path"),
             col("chunkIdx"), col("fp"), col("size")),
-        root, settings, prevRoot, payload, log)
+        root, settings, prevRoot, payload, localCap, log)
     }
 
   /** The chunk-stream core of [[backup]]: one chained backup job over an
@@ -336,13 +344,14 @@ object ClusterJob {
     */
   def backupChunkStream(chunkStream: DataFrame, root: String, runId: String,
       settings: DestorSettings, prevRoot: Option[String] = None,
-      payload: Long = Rewrite.ContainerPayload): TraceJobStats =
+      payload: Long = Rewrite.ContainerPayload,
+      localCap: Int = TracePipeline.LocalCap): TraceJobStats =
     RunLog(chunkStream.sparkSession, root, runId)(
-      backupCore(chunkStream, root, settings, prevRoot, payload, _))
+      backupCore(chunkStream, root, settings, prevRoot, payload, localCap, _))
 
   private def backupCore(chunkStream: DataFrame, root: String,
       settings: DestorSettings, prevRoot: Option[String], payload: Long,
-      log: RunLog): TraceJobStats = {
+      localCap: Int, log: RunLog): TraceJobStats = {
     val spark = chunkStream.sparkSession
     import spark.implicits._
     // a table read with just the columns this job uses: a declared schema
@@ -410,7 +419,8 @@ object ClusterJob {
     // materialization: the stats, the HAR monitor and the restore sim
     // read the committed final_recipe. An empty corpus snapshot is a valid
     // no-op backup (oneJob takes empty input).
-    val (fr, base) =
+    val label = s"b$backupId"
+    val (fr, base, local) =
       if (storeStages.forall(t => TableIO.committed(s"$root/$t"))) {
         def committed(t: String) = spark.read.format(TableIO.Format)
           .load(s"$root/$t").drop("_lineage")
@@ -419,30 +429,36 @@ object ClusterJob {
           if (settings.rewrite.enableHar) committed("har_sparse").count()
           else 0L
         (fr, TracePipeline.recipeStats(backupId, fr, nextCid)
-          .copy(sparse_containers = sparseCount))
+          .copy(sparse_containers = sparseCount), None)
       } else {
-        val r = TracePipeline.oneJob(backupId,
-          TracePipeline.sequence(chunkStream, s"b$backupId"), prevIndex,
+        val r = TracePipeline.oneJob(backupId, chunkStream, label, prevIndex,
           prevSparse, nextCid, settings, payload, (name, df) => {
             val (t, n) = log.observedStage(name, count(lit(1)))(df)
             (t.drop("_lineage"), n.getLong(0))
-          })
-        (r.finalRec, r.stats)
+          }, localCap)
+        (r.finalRec, r.stats, r.local)
       }
     // an empty committed recipe is a no-op backup (fresh OR resumed): the
-    // restore sim has nothing to replay. The sim has one row (one stream),
-    // so its max() aggregates read that row.
+    // restore sim has nothing to replay. The sim has one row (one stream):
+    // a recipe the driver holds is folded there and written as that row,
+    // else the max() aggregates observed on the write read it.
     val doSim = (settings.simulationLevel == "restore" ||
       settings.simulationLevel == "all") && base.chunks > 0
     val sim =
-      if (doSim) {
-        val (_, r) = log.observedStage("restore_sim",
-            max(col("containerReads")), max(col("speedFactor")),
-            max(col("cfl")))(
-          settings.restoreSim(fr.select(col("stream"), col("seq"),
-            col("containerId"), col("size"))))
-        (r.getLong(0), r.getDouble(1), r.getDouble(2))
-      } else (0L, 0.0, 0.0)
+      if (!doSim) (0L, 0.0, 0.0)
+      else local match {
+        case Some(l) =>
+          val s = settings.restoreSimLocal(label, l.accesses)
+          log.stage("restore_sim")(Seq(s).toDF())
+          (s.containerReads, s.speedFactor, s.cfl)
+        case None =>
+          val (_, r) = log.observedStage("restore_sim",
+              max(col("containerReads")), max(col("speedFactor")),
+              max(col("cfl")))(
+            settings.restoreSim(fr.select(col("stream"), col("seq"),
+              col("containerId"), col("size"))))
+          (r.getLong(0), r.getDouble(1), r.getDouble(2))
+      }
     val stats = base.copy(
       container_reads = sim._1, speed_factor = sim._2, cfl = sim._3)
     if (freshFinal)

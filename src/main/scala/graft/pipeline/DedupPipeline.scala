@@ -267,6 +267,19 @@ object DedupPipeline {
         .cast("long"))
       .drop("pre")
 
+  /** [[pack]]'s rule over one stream held on the driver: `sizes` in
+    * stream order → each row's container id, in the same arithmetic. */
+  private[graft] def packLocal(sizes: Array[Long], base: Long,
+      payload: Long): Array[Long] = {
+    var pre = 0L
+    sizes.map { size =>
+      val c = base + math.floor(math.max(pre + size - 1, 0L).toDouble /
+        payload).toLong
+      pre += size
+      c
+    }
+  }
+
   /** [[streamPrefix]] plus the sum of `valueCol` over ALL rows, which its
     * counts job collects anyway (each partition reports its own total), so
     * a caller that needs the grand total pays no query for it. */

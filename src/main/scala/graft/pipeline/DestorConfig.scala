@@ -68,6 +68,22 @@ final case class DestorSettings(
         throw new IllegalArgumentException(s"unknown rewrite: $other")
     }
 
+  /** [[rewritePass]] over one stream held on the driver: each row's
+    * `outOfOrder` flag. */
+  def rewritePassLocal(s: Rewrite.LocalStream,
+      payload: Long = Rewrite.ContainerPayload): Array[Boolean] =
+    rewrite.algorithm match {
+      case "no" => new Array[Boolean](s.length)
+      case "cap" =>
+        Rewrite.capLocal(s, rewrite.bufferSize, rewrite.cappingLevel)
+      case "cbr" => Rewrite.cbrLocal(s, rewrite.bufferSize,
+        rewrite.cbrLimit, rewrite.cbrMinimalUtility, payload)
+      case "cfl" =>
+        Rewrite.cflLocal(s, rewrite.cflUsageThreshold, payload)
+      case other =>
+        throw new IllegalArgumentException(s"unknown rewrite: $other")
+    }
+
   /** The configured restore-cache simulation — `restore-cache opt 1024`
     * as one call (window size only applies to OPT,
     * reference src/restore.c:12-40).
@@ -75,6 +91,13 @@ final case class DestorSettings(
   def restoreSim(recipe: DataFrame): DataFrame =
     RestoreSim.simulate(recipe, restoreCacheSize, restoreCache,
       restoreOptWindow).toDF()
+
+  /** [[restoreSim]] of one stream held on the driver: its
+    * (containerId, size) accesses in seq order. */
+  def restoreSimLocal(stream: String,
+      accesses: Iterator[(Long, Int)]): RestoreSim.StreamRestoreStats =
+    RestoreSim.simulateStream(stream, accesses, restoreCacheSize,
+      restoreCache, restoreOptWindow)
 
   /** The `simulation-level` dispatch (reference src/destor.c:263-366 +
     * do_backup.c:31-37): ONLY `simulation-level all` routes backup input

@@ -174,15 +174,26 @@ object RestoreSim {
               def hasNext: Boolean = peek.hasNext && peek.head._1 == stream
               def next(): (Long, Int) = { val r = peek.next(); (r._3, r._4) }
             }
-            policy match {
-              case "asm" => asmStats(stream, acc, cacheSize)
-              case "opt" => optStats(stream, acc, cacheSize, optLookahead)
-              case _ => lruStats(stream, acc, cacheSize)
-            }
+            simulateStream(stream, acc, cacheSize, policy, optLookahead)
           }
         }
       }
   }
+
+  /** One stream's cache replay: `accesses` are its (containerId, size)
+    * pairs in seq order. [[simulate]] folds each stream of a distributed
+    * recipe through it; a caller holding a recipe on the driver calls it
+    * directly. */
+  def simulateStream(stream: String, accesses: Iterator[(Long, Int)],
+      cacheSize: Int, policy: String,
+      optLookahead: Int): StreamRestoreStats =
+    policy match {
+      case "asm" => asmStats(stream, accesses, cacheSize)
+      case "opt" => optStats(stream, accesses, cacheSize, optLookahead)
+      case "lru" => lruStats(stream, accesses, cacheSize)
+      case other =>
+        throw new IllegalArgumentException(s"unknown policy: $other")
+    }
 
   /** Run-length container access records (reference S7: consecutive-dedup
     * of recipe container ids, src/recipe/recipestore.c:372-399) — the OPT

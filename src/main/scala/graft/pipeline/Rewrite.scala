@@ -27,6 +27,31 @@ object Rewrite {
 
   val ContainerPayload: Long = (4L * 1024 * 1024) - (32 * 1024)
 
+  /** ONE stream of the input contract above held on the driver, in seq
+    * order: row i has seq i + 1. Each pass's `…Local` fold reads it and
+    * returns the `outOfOrder` flags its DataFrame statement computes for
+    * that stream, row for row. */
+  final case class LocalStream(size: Array[Int], containerId: Array[Long],
+      dup: Array[Boolean]) {
+    def length: Int = size.length
+
+    /** (containerId, size) in seq order: a restore-cache replay's input. */
+    def accesses: Iterator[(Long, Int)] = containerId.iterator.zip(size)
+  }
+
+  /** Row indices of each container id, each list in seq order. */
+  private def rowsByContainer(s: LocalStream): Iterable[Array[Int]] = {
+    val m = scala.collection.mutable.LongMap
+      .empty[scala.collection.mutable.ArrayBuilder.ofInt]
+    var i = 0
+    while (i < s.length) {
+      m.getOrElseUpdate(s.containerId(i),
+        new scala.collection.mutable.ArrayBuilder.ofInt) += i
+      i += 1
+    }
+    m.values.map(_.result())
+  }
+
   /** W4/T2 CAP capping (reference: src/cap_rewrite.c:10-107): tumbling
     * 1024-chunk buffers per stream; rank containers by referenced bytes
     * desc; duplicate chunks of containers ranked below cappingLevel are
@@ -48,6 +73,31 @@ object Rewrite {
         Seq("stream", "bufferId", "containerId"), "left")
       .withColumn("outOfOrder", col("dup") && !coalesce(col("inTop"), lit(false)))
       .drop("inTop")
+  }
+
+  /** [[cap]] over one driver-held stream. */
+  def capLocal(s: LocalStream, bufferSize: Int = 1024,
+      cappingLevel: Int = 14): Array[Boolean] = {
+    val out = new Array[Boolean](s.length)
+    var lo = 0
+    while (lo < s.length) {
+      // the tumbling buffer of seq lo + 1: seq / bufferSize, as in cap
+      val buf = (lo + 1L) / bufferSize
+      var hi = lo
+      val refBytes = scala.collection.mutable.LongMap.empty[Long]
+      while (hi < s.length && (hi + 1L) / bufferSize == buf) {
+        if (s.dup(hi))
+          refBytes(s.containerId(hi)) =
+            refBytes.getOrElse(s.containerId(hi), 0L) + s.size(hi)
+        hi += 1
+      }
+      val top = refBytes.toArray.sortBy { case (c, b) => (-b, c) }
+        .take(cappingLevel).map(_._1).toSet
+      (lo until hi).foreach(i =>
+        out(i) = s.dup(i) && !top.contains(s.containerId(i)))
+      lo = hi
+    }
+    out
   }
 
   /** W3/A7 CBR context-based rewriting (reference: src/cbr_rewrite.c):
@@ -119,6 +169,52 @@ object Rewrite {
     out
   }
 
+  /** [[cbr]] over one driver-held stream. */
+  def cbrLocal(s: LocalStream, bufferSize: Int = 1024, limit: Double = 0.05,
+      minUtility: Double = 0.5,
+      payload: Long = ContainerPayload): Array[Boolean] = {
+    val n = s.length
+    val byContainer = rowsByContainer(s)
+    // the context window: the container's rows in [seq, seq + bufferSize]
+    val utility = new Array[Double](n)
+    byContainer.foreach { rows =>
+      var hi = 0
+      var ctxBytes = 0L
+      rows.indices.foreach { p =>
+        while (hi < rows.length && rows(hi) - rows(p) <= bufferSize) {
+          ctxBytes += s.size(rows(hi)); hi += 1
+        }
+        val i = rows(p)
+        if (s.dup(i)) {
+          val coverage = ctxBytes / payload.toDouble
+          // round(…, 6) as Spark rounds a double: HALF_UP on its decimal
+          utility(i) =
+            if (coverage >= 1) 0.0
+            else java.math.BigDecimal.valueOf(1.0 - coverage)
+              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        }
+        ctxBytes -= s.size(i)
+      }
+    }
+    val tEff = math.max(minUtility, cbrQuantile(
+      utility.groupMapReduce(identity)(_ => 1L)(_ + _).toArray, limit))
+    // neighbor propagation along each container's record runs
+    val out = new Array[Boolean](n)
+    byContainer.foreach { rows =>
+      var prev = -1
+      var notFrag = false
+      rows.foreach { i =>
+        if (s.dup(i)) {
+          if (prev < 0 || i - prev > bufferSize) notFrag = false
+          out(i) = utility(i) >= tEff && !notFrag && i + 1L + bufferSize <= n
+          if (utility(i) < tEff) notFrag = true
+          prev = i
+        }
+      }
+    }
+    out
+  }
+
   /** CBR's discrete (1−limit)-quantile over the run's utilities — the
     * batch analog of the reference's 10k-bucket running histogram
     * (src/cbr_rewrite.c:38-55): the smallest utility whose cumulative
@@ -129,9 +225,14 @@ object Rewrite {
     * size — never the utility rows — and the cumulative scan runs there.
     */
   private[pipeline] def cbrThreshold(utilities: DataFrame,
+      limit: Double): Double =
+    cbrQuantile(utilities.groupBy(col("utility")).agg(count(lit(1)))
+      .collect().map(r => (r.getDouble(0), r.getLong(1))), limit)
+
+  /** The cumulative scan of [[cbrThreshold]] over (utility, count) pairs. */
+  private def cbrQuantile(counts: Array[(Double, Long)],
       limit: Double): Double = {
-    val hist = utilities.groupBy(col("utility")).agg(count(lit(1)))
-      .collect().map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
+    val hist = counts.sortBy(_._1)
     val n = hist.iterator.map(_._2).sum
     val k = math.ceil((1.0 - limit) * n).toLong
     var cum = 0L
@@ -158,6 +259,24 @@ object Rewrite {
       .withColumn("outOfOrder",
         col("dup") && col("runBytes") < usageThreshold * payload)
       .drop("newRun")
+  }
+
+  /** [[cflRuns]] over one driver-held stream. */
+  def cflLocal(s: LocalStream, usageThreshold: Double = 0.03,
+      payload: Long = ContainerPayload): Array[Boolean] = {
+    val out = new Array[Boolean](s.length)
+    var lo = 0
+    while (lo < s.length) {
+      var hi = lo
+      var runBytes = 0L
+      while (hi < s.length && s.containerId(hi) == s.containerId(lo)) {
+        runBytes += s.size(hi); hi += 1
+      }
+      val small = runBytes < usageThreshold * payload
+      (lo until hi).foreach(i => out(i) = s.dup(i) && small)
+      lo = hi
+    }
+    out
   }
 
   /** A5/W5 HAR (reference: src/har_rewrite.c): per-container utilization
@@ -191,6 +310,25 @@ object Rewrite {
       .filter(col("utilization") < utilizationThreshold &&
         col("pre") + col("refBytes") <= cap)
       .select(col("containerId"), col("refBytes"), col("utilization"))
+  }
+
+  /** [[harSparseContainers]]' container ids over one driver-held final
+    * recipe. */
+  def harSparseLocal(recipe: LocalStream, utilizationThreshold: Double = 0.5,
+      rewriteLimit: Double = 0.05,
+      payload: Long = ContainerPayload): Array[Long] = {
+    val util = scala.collection.mutable.LongMap.empty[Long]
+    recipe.accesses.foreach { case (c, size) =>
+      util(c) = util.getOrElse(c, 0L) + size
+    }
+    val ordered = util.toArray.sortBy { case (c, b) => (b, c) }
+    val cap = (rewriteLimit * ordered.iterator.map(_._2).sum).toLong
+    var pre = 0L
+    ordered.flatMap { case (c, b) =>
+      val keep = b / payload.toDouble < utilizationThreshold && pre + b <= cap
+      pre += b
+      if (keep) Some(c) else None
+    }
   }
 
   /** J7 inherited-sparse marking (reference: src/har_rewrite.c:197-207):

@@ -5,6 +5,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-backup-job output row of [[TracePipeline.run]] — the backup.log
   * contract fields that apply to trace replay plus the restore-locality
@@ -22,13 +23,15 @@ final case class TraceJobStats(
   * the upserted fingerprint index and the trimmed HAR sparse list for the
   * NEXT job, each materialized once by the caller's
   * [[TracePipeline.Materialize]] — safe to use after the job's internal
-  * caches are freed — plus the job's backup.log counters
-  * ([[TracePipeline.recipeStats]] over `finalRec`, with the sparse-list
-  * size; the restore-sim fields are left 0).
+  * caches are freed — plus the job's backup.log counters (the
+  * [[TracePipeline.recipeStats]] scalars of `finalRec`, with the
+  * sparse-list size; the restore-sim fields are left 0). `local` is the
+  * final recipe as the driver holds it when the store step ran there
+  * (seq order), for a restore-cache fold without a Spark job.
   */
 final case class TraceJobResult(
     finalRec: DataFrame, newIndex: DataFrame, sparse: DataFrame,
-    stats: TraceJobStats)
+    stats: TraceJobStats, local: Option[Rewrite.LocalStream])
 
 /** Trace-driven pipeline — the reference's `simulation-level all`
   * evaluation mode (src/destor.c:263-366 dispatch; src/trace_phase.c:
@@ -55,8 +58,8 @@ final case class TraceJobResult(
   *     indexed container id;
   *  4. write predicate: unique ∨ sparse(HAR, previous job's list) ∨
   *     outOfOrder(configured algorithm). Every WRITTEN occurrence packs
-  *     into fresh containers in stream order (cumulative-size packing via
-  *     the two-phase distributed prefix sum — rewriting trades capacity
+  *     into fresh containers in stream order (cumulative-size packing,
+  *     [[DedupPipeline.pack]]'s rule — rewriting trades capacity
   *     for locality, per-occurrence, matching the open-container write
   *     path); container ids continue across jobs;
   *  5. final recipe container ids: written rows point at their packed
@@ -74,9 +77,26 @@ final case class TraceJobResult(
   *  7. the configured restore cache replays the final recipe
   *     ([[RestoreSim.simulate]] — LRU/OPT/ASM per `restore-cache`).
   *
-  * Per-job aggregates are collected driver-side (a bounded handful of
-  * scalars per backup, like the reference's backup.log line); all
-  * per-chunk work stays distributed.
+  * Two paths run these semantics, chosen per job by its size. One
+  * bounded collect (`limit(cap + 1)`, one Spark job, no count) reads the
+  * job's raw chunk stream:
+  *
+  *  - at most [[LocalCap]] chunks: the driver runs steps 1–6 as the
+  *    sequential fold destor itself runs (src/filter_phase.c,
+  *    src/rewrite_phase.c). One more job looks the job's fingerprints up
+  *    in the index (a semi-join against their broadcast set, so the
+  *    index may be any size) and reads the previous sparse list; the
+  *    final recipe and the sparse list are written from local relations
+  *    of one partition each, and the index stays the distributed
+  *    `index ∪ copies → max`. Step 7 folds the driver's recipe through
+  *    the same cache code ([[RestoreSim.simulateStream]]).
+  *  - above it: the collected prefix is dropped and every per-chunk step
+  *    runs distributed (two-phase prefix sums and run detection, never a
+  *    whole-stream window); only per-job scalars reach the driver.
+  *
+  * Both paths return the same rows and stats; `localCap = 0` forces the
+  * distributed one. [[LocalCap]]'s doc gives the measurements it comes
+  * from.
   *
   * [[oneJob]] is the single-backup core; [[graft.pipeline.ClusterJob
   * .backup]] reuses it verbatim for REAL corpora (read+chunk+hash feeding
@@ -100,10 +120,41 @@ object TracePipeline {
     (c, Await.result(obs.future, Duration.Inf).getLong(0))
   }
 
+  /** Chunk count up to which [[oneJob]] runs the store step on the
+    * driver.
+    *
+    * Measured on a 4-core host in a `local[4]` session (4 shuffle
+    * partitions, adaptive execution on, as perfbench runs), one sample per
+    * size: a chained `ClusterJob.backupChunkStream` under cbr 1024 + HAR +
+    * an LRU restore sim at a 256 KiB payload, over a 4-partition parquet
+    * stream of n chunks, 70% of them fingerprints the previous backup
+    * wrote:
+    *  - distributed path (`localCap = 0`): 5.7–10.4 s at 10^3 chunks,
+    *    5.7–6.7 s at 10^4, 10.9–11.2 s at 10^5, 17.8 s at 3·10^5, 39.6 s
+    *    at 10^6;
+    *  - driver path: 1.9–2.3 s at 10^3, 1.8–2.1 s at 10^4, 4.7–5.2 s at
+    *    10^5, 12.2 s at 3·10^5, 32.3 s at 10^6. Past 10^5 both add about
+    *    30 µs per chunk, so the driver path stays ahead by the per-job
+    *    cost it saves (`JobBudgetSpec` pins a chained `backup` at 12 jobs
+    *    on this path and 40 distributed) and never wins by more;
+    *  - driver bytes (Spark's SizeEstimator): 217 per collected chunk,
+    *    229 per recipe tuple and 197 per local-relation row, which are
+    *    alive together while the recipe is written — about 650 per chunk
+    *    before the fingerprint maps.
+    * No measured size is slower on the driver, so memory sets the cap:
+    * 10^5 chunks hold the driver at about 80 MB, 8% of spark-submit's
+    * default 1 GiB `spark.driver.memory` (the bound
+    * [[ConnectedComponents.LocalEdgeCap]] keeps), with a one-partition
+    * recipe task of about 20 MB. Above the cap the stream's plan runs
+    * twice (once up to the cap) and each of its partitions ships up to
+    * cap + 1 rows to the bounded collect, the price of not counting it.
+    */
+  val LocalCap: Int = 100000
+
   /** A job's chunk stream (path, chunkIdx, fp, size) as ONE stream
     * labelled `label`, with a contiguous 1-based `seq` in (path, chunkIdx)
     * order — two-phase distributed rank, never a window sort. */
-  private[graft] def sequence(chunks: DataFrame, label: String): DataFrame =
+  private def sequence(chunks: DataFrame, label: String): DataFrame =
     DedupPipeline.streamPrefix(
         chunks.select(col("path"),
           col("chunkIdx").cast("long").as("chunkIdx"), col("fp"),
@@ -112,19 +163,161 @@ object TracePipeline {
         "stream", Seq("path", "chunkIdx"), "one", "pre")
       .withColumn("seq", col("pre") + 1L).drop("one", "pre")
 
-  /** One backup job against the cumulative store. `seqd` is the job's
-    * [[sequence]]d chunk stream (columns path, chunkIdx, fp, size, stream,
-    * seq) and may be empty (a valid no-op backup: empty recipe, index
-    * carried unchanged, empty HAR monitor); `index` is fp → idxCid (the
-    * latest written copy per fingerprint); `prevSparse` is the previous
-    * job's trimmed sparse-container list (containerId); `nextCid` is the
-    * first free container id. When HAR is off, `sparse` returns
-    * `prevSparse` unchanged (the reference only maintains the monitor
-    * when rewrite-enable-har is set). `materialize` is the ONLY
-    * materialization of each result table; the stats and the HAR monitor
-    * read the materialized recipe.
+  /** One backup job against the cumulative store. `chunks` is the job's
+    * raw chunk stream (columns path, chunkIdx, fp, size), replayed as ONE
+    * stream labelled `label`; it may be empty (a valid no-op backup: empty
+    * recipe, index carried unchanged, empty HAR monitor). `index` is fp →
+    * idxCid (the latest written copy per fingerprint); `prevSparse` is
+    * the previous job's trimmed sparse-container list (containerId);
+    * `nextCid` is the first free container id. When HAR is off, `sparse`
+    * returns `prevSparse` unchanged (the reference only maintains the
+    * monitor when rewrite-enable-har is set). `materialize` is the ONLY
+    * materialization of each result table. A stream of at most
+    * `localCap` chunks runs on the driver, a longer one distributed (see
+    * the object's doc); both give the same tables and stats.
     */
-  private[graft] def oneJob(backupId: Long, seqd: DataFrame,
+  private[graft] def oneJob(backupId: Long, chunks: DataFrame, label: String,
+      index: DataFrame, prevSparse: DataFrame, nextCid: Long,
+      settings: DestorSettings, payload: Long, materialize: Materialize,
+      localCap: Int = LocalCap): TraceJobResult = {
+    require(localCap >= 0 && localCap < Int.MaxValue,
+      s"localCap $localCap outside [0, Int.MaxValue)")
+    collectBounded(chunks, localCap) match {
+      case Some(rows) => localJob(backupId, rows, label, index, prevSparse,
+        nextCid, settings, payload, materialize)
+      case None => distributedJob(backupId, sequence(chunks, label), index,
+        prevSparse, nextCid, settings, payload, materialize)
+    }
+  }
+
+  /** One collected chunk-stream row. The path stays UTF-8, so the driver
+    * sorts it in Spark's string order (by byte). */
+  private final case class Raw(path: UTF8String, chunkIdx: Long, fp: String,
+      size: Int)
+
+  /** The stream's rows when it holds at most `cap` of them, else None, in
+    * ONE job: a root limit's RDD is Spark's CollectLimit shuffle into one
+    * partition, where collect() would scan partitions in growing batches,
+    * one job per batch. */
+  private def collectBounded(chunks: DataFrame, cap: Int): Option[Array[Raw]] = {
+    val rows = chunks.select(col("path"), col("chunkIdx").cast("long"),
+        col("fp"), col("size").cast("int"))
+      .limit(cap + 1).queryExecution.toRdd
+      .mapPartitions { it =>
+        val buf = Array.newBuilder[Raw]
+        var path: UTF8String = null
+        it.foreach { r =>
+          // a row's strings point into a reused buffer: copy the path once
+          // per run of equal paths, so a file's chunks share one object
+          val p = r.getUTF8String(0)
+          if (path == null || path != p) path = p.clone()
+          buf += Raw(path, r.getLong(1), r.getUTF8String(2).toString,
+            r.getInt(3))
+        }
+        Iterator.single(buf.result())
+      }
+      .collect().flatten
+    if (rows.length <= cap) Some(rows) else None
+  }
+
+  /** [[oneJob]] on the driver: the fold of [[distributedJob]], statement
+    * for statement, over the collected stream. */
+  private def localJob(backupId: Long, raw: Array[Raw], label: String,
+      index: DataFrame, prevSparse: DataFrame, nextCid: Long,
+      settings: DestorSettings, payload: Long,
+      materialize: Materialize): TraceJobResult = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val har = settings.rewrite.enableHar
+    val rows = raw.sortWith { (a, b) =>
+      val c = a.path.compareTo(b.path)
+      if (c != 0) c < 0 else a.chunkIdx < b.chunkIdx
+    }
+    val n = rows.length
+    val fp = rows.map(_.fp)
+    val size = rows.map(_.size)
+    // ONE job reads this job's index entries and, for HAR, the previous
+    // sparse list: nulls tag the sparse rows
+    val (idx, prevSparseIds) =
+      if (n == 0) (Map.empty[String, Long], Set.empty[Long])
+      else {
+        val hits = index.select(col("fp"), col("idxCid"))
+          .join(broadcast(fp.distinct.toSeq.toDF("fp")), Seq("fp"),
+            "left_semi")
+        val got = (if (har) hits.union(prevSparse.select(
+            lit(null).cast("string"), col("containerId")))
+          else hits).collect()
+        val (entries, sparse) = got.partition(!_.isNullAt(0))
+        (entries.map(r => r.getString(0) -> r.getLong(1)).toMap,
+          sparse.map(_.getLong(1)).toSet)
+      }
+    // 1. first-writer duplicate marking
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    val dup = fp.map { f => val first = seen.add(f); idx.contains(f) || !first }
+    val marked = Rewrite.LocalStream(size,
+      fp.map(idx.getOrElse(_, -1L)), dup)
+    // 2-4. the rewrite pass, HAR marking, the write predicate
+    val outOfOrder = settings.rewritePassLocal(marked, payload)
+    val write = Array.tabulate(n) { i =>
+      !dup(i) || (har && prevSparseIds.contains(marked.containerId(i))) ||
+        outOfOrder(i)
+    }
+    // 5. packing; 6. the final container ids
+    val packCid = DedupPipeline.packLocal(
+      Array.tabulate(n)(i => if (write(i)) size(i).toLong else 0L),
+      nextCid, payload)
+    val firstCopyCid = scala.collection.mutable.HashMap.empty[String, Long]
+    (0 until n).foreach(i =>
+      if (write(i)) firstCopyCid.getOrElseUpdate(fp(i), packCid(i)))
+    val containerId = Array.tabulate(n) { i =>
+      if (write(i)) packCid(i) else idx.getOrElse(fp(i), firstCopyCid(fp(i)))
+    }
+    // 7. the recipeStats scalars; rows are in path order, so a file starts
+    // where the path changes
+    val path = new Array[String](n)
+    var files = 0L
+    var dataSize, uniqueChunks, uniqueSize, rewrittenChunks, rewrittenSize = 0L
+    var maxWritten = -1L
+    (0 until n).foreach { i =>
+      if (i > 0 && rows(i).path == rows(i - 1).path) path(i) = path(i - 1)
+      else { path(i) = rows(i).path.toString; files += 1 }
+      dataSize += size(i)
+      if (!dup(i)) { uniqueChunks += 1; uniqueSize += size(i) }
+      else if (write(i)) { rewrittenChunks += 1; rewrittenSize += size(i) }
+      if (write(i)) maxWritten = math.max(maxWritten, packCid(i))
+    }
+    val stats = TraceJobStats(backupId, files, n, dataSize, uniqueChunks,
+      uniqueSize, rewrittenChunks, rewrittenSize, uniqueSize + rewrittenSize,
+      if (maxWritten < 0) 0L else maxWritten - nextCid + 1L,
+      0L, 0L, 0.0, 0.0)
+    // the local relations are written as one partition each, the layout
+    // the distributed path's writes have at this size
+    val (finalRec, _) = materialize("final_recipe", (0 until n)
+      .map(i => (label, i + 1L, path(i), fp(i), size(i), dup(i), write(i),
+        containerId(i)))
+      .toDF("stream", "seq", "path", "fp", "size", "dup", "write",
+        "containerId")
+      .coalesce(1))
+    // 8. the HAR trim
+    val recipe = Rewrite.LocalStream(size, containerId, dup)
+    val (sparseList, sparseCount) =
+      if (har)
+        materialize("har_sparse", Rewrite.harSparseLocal(recipe,
+            settings.rewrite.harUtilizationThreshold,
+            settings.rewrite.harRewriteLimit, payload)
+          .toSeq.toDF("containerId").coalesce(1))
+      else (prevSparse, 0L)
+    val (newIndex, _) = materialize("index", upsert(index,
+      (0 until n).filter(write(_)).map(i => (fp(i), packCid(i)))
+        .toDF("fp", "idxCid")))
+    TraceJobResult(finalRec, newIndex, sparseList,
+      stats.copy(sparse_containers = sparseCount), Some(recipe))
+  }
+
+  /** [[oneJob]] distributed. `seqd` is the job's [[sequence]]d chunk
+    * stream (columns path, chunkIdx, fp, size, stream, seq); the stats and
+    * the HAR monitor read the materialized recipe. */
+  private def distributedJob(backupId: Long, seqd: DataFrame,
       index: DataFrame, prevSparse: DataFrame, nextCid: Long,
       settings: DestorSettings, payload: Long,
       materialize: Materialize): TraceJobResult = {
@@ -179,14 +372,16 @@ object TracePipeline {
               settings.rewrite.harRewriteLimit, payload)
             .select(col("containerId")))
       else (prevSparse, 0L)
-    // latest copy wins: the max over the old entry and this job's copies
-    val (newIndex, _) = materialize("index",
-      index.select(col("fp"), col("idxCid"))
-        .union(copies)
-        .groupBy(col("fp")).agg(max(col("idxCid")).as("idxCid")))
+    val (newIndex, _) = materialize("index", upsert(index, copies))
     TraceJobResult(finalRec, newIndex, sparseList,
-      stats.copy(sparse_containers = sparseCount))
+      stats.copy(sparse_containers = sparseCount), None)
   }
+
+  /** The index after a job: latest copy wins, the max over the old
+    * entry and the job's written copies (fp, packCid). */
+  private def upsert(index: DataFrame, copies: DataFrame): DataFrame =
+    index.select(col("fp"), col("idxCid")).union(copies)
+      .groupBy(col("fp")).agg(max(col("idxCid")).as("idxCid"))
 
   /** The backup.log scalars of one job's final recipe in ONE aggregate:
     * files, chunks, data/unique/rewritten sizes, stored size and the
@@ -215,7 +410,8 @@ object TracePipeline {
   }
 
   def run(jobs: Seq[DataFrame], settings: DestorSettings,
-      payload: Long = Rewrite.ContainerPayload): DataFrame = {
+      payload: Long = Rewrite.ContainerPayload,
+      localCap: Int = LocalCap): DataFrame = {
     require(jobs.nonEmpty, "TracePipeline: no trace jobs")
     val spark = jobs.head.sparkSession
     import spark.implicits._
@@ -228,15 +424,21 @@ object TracePipeline {
       // an empty trace job (a trace of just `stream end`) is a valid no-op
       // backup: zero stats, the index/cid state carries unchanged and the
       // HAR monitor of an empty recipe is empty
-      val r = oneJob(b, sequence(job0, s"b$b"), index, prevSparse, nextCid,
-        settings, payload, checkpoint)
+      val label = s"b$b"
+      val r = oneJob(b, job0, label, index, prevSparse, nextCid, settings,
+        payload, checkpoint, localCap)
       val rs =
         if (r.stats.chunks == 0) (0L, 0.0, 0.0)
-        else settings.restoreSim(
-            r.finalRec.select(col("stream"), col("seq"), col("containerId"),
-              col("size")))
-          .select(col("containerReads"), col("speedFactor"), col("cfl"))
-          .as[(Long, Double, Double)].head()
+        else r.local match {
+          case Some(l) =>
+            val s = settings.restoreSimLocal(label, l.accesses)
+            (s.containerReads, s.speedFactor, s.cfl)
+          case None => settings.restoreSim(
+              r.finalRec.select(col("stream"), col("seq"),
+                col("containerId"), col("size")))
+            .select(col("containerReads"), col("speedFactor"), col("cfl"))
+            .as[(Long, Double, Double)].head()
+        }
       stats += r.stats.copy(
         container_reads = rs._1, speed_factor = rs._2, cfl = rs._3)
       index = r.newIndex

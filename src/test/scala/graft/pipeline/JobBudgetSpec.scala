@@ -75,12 +75,15 @@ class JobBudgetSpec extends AnyFunSuite {
     val n = files.size
     within("fresh backup", jobsOf(ClusterJob.backup(
       corpusOf(files.take(n * 2 / 3)), b1, "jb-b1", settings, None, 4096L)),
-      35)
+      8)
     within("chained backup", jobsOf(ClusterJob.backup(
       corpusOf(files.drop(n / 3)), b2, "jb-b2", settings, Some(b1), 4096L)),
-      39)
+      12)
     within("expire", jobsOf(ClusterJob.expire(
       spark, Seq(b1, b2), "b1", ex, "jb-ex", 4096L)), 23)
+    within("chained backup, distributed store step", jobsOf(
+      ClusterJob.backup(corpusOf(files.drop(n / 3)), freshDir(), "jb-b2d",
+        settings, Some(b1), 4096L, localCap = 0)), 40)
   }
 
   test("ConnectedComponents.run on a small graph stays within its job budget") {
