@@ -72,6 +72,16 @@ object ClusterJob {
         (df, Await.result(obs.future, Duration.Inf))
       }
 
+    /** [[stage]] plus a fresh stage's row count, observed on its write;
+      * None for a resumed stage, whose count would cost a query. */
+    def countedStage(name: String)(
+        f: => DataFrame): (DataFrame, Option[Long]) =
+      if (TableIO.committed(s"$root/$name")) (stage(name)(f), None)
+      else {
+        val (df, r) = observedStage(name, count(lit(1)))(f)
+        (df, Some(r.getLong(0)))
+      }
+
     def flush(): Unit =
       if (rows.nonEmpty) TableIO.appendMetrics(spark, root, runId, rows.toSeq)
   }
@@ -311,15 +321,18 @@ object ClusterJob {
     * unless a test passes another) runs the store step on the driver: one
     * bounded collect, one index lookup, then the stage writes, with the
     * restore sim folded from the recipe the driver holds. A larger one
-    * runs it distributed. Both write the same tables (see
-    * [[TracePipeline]]); `localCap = 0` forces the distributed plan.
+    * runs it distributed, without the bounded collect when this call
+    * wrote the chunks stage and so counted it. Both write the same tables
+    * (see [[TracePipeline]]); `localCap = 0` forces the distributed plan.
     */
   def backup(corpus: Dataset[CorpusFile], root: String, runId: String,
       settings: DestorSettings, prevRoot: Option[String] = None,
       payload: Long = Rewrite.ContainerPayload,
       localCap: Int = TracePipeline.LocalCap): TraceJobStats =
     RunLog(corpus.sparkSession, root, runId) { log =>
-      val chunks = log.stage("chunks") {
+      // a fresh chunks write counts its rows for free, so a snapshot above
+      // the cap goes straight to the distributed store step
+      val (chunks, size) = log.countedStage("chunks") {
         DedupPipeline.chunkTableDF(
             DedupPipeline.featurize(corpus, settings.dedupConfig).toDF())
           .select(col("repo"), col("path"), col("commit"), col("chunkIdx"),
@@ -330,7 +343,7 @@ object ClusterJob {
           .select(
             concat_ws("@", col("repo"), col("path"), col("commit")).as("path"),
             col("chunkIdx"), col("fp"), col("size")),
-        root, settings, prevRoot, payload, localCap, log)
+        size, root, settings, prevRoot, payload, localCap, log)
     }
 
   /** The chunk-stream core of [[backup]]: one chained backup job over an
@@ -344,14 +357,16 @@ object ClusterJob {
     */
   def backupChunkStream(chunkStream: DataFrame, root: String, runId: String,
       settings: DestorSettings, prevRoot: Option[String] = None,
-      payload: Long = Rewrite.ContainerPayload,
-      localCap: Int = TracePipeline.LocalCap): TraceJobStats =
+      payload: Long = Rewrite.ContainerPayload): TraceJobStats =
     RunLog(chunkStream.sparkSession, root, runId)(
-      backupCore(chunkStream, root, settings, prevRoot, payload, localCap, _))
+      backupCore(chunkStream, None, root, settings, prevRoot, payload,
+        TracePipeline.LocalCap, _))
 
-  private def backupCore(chunkStream: DataFrame, root: String,
-      settings: DestorSettings, prevRoot: Option[String], payload: Long,
-      localCap: Int, log: RunLog): TraceJobStats = {
+  /** `streamSize` is the chunk stream's row count when the caller knows
+    * it for free ([[TracePipeline.oneJob]]). */
+  private def backupCore(chunkStream: DataFrame, streamSize: Option[Long],
+      root: String, settings: DestorSettings, prevRoot: Option[String],
+      payload: Long, localCap: Int, log: RunLog): TraceJobStats = {
     val spark = chunkStream.sparkSession
     import spark.implicits._
     // a table read with just the columns this job uses: a declared schema
@@ -435,7 +450,7 @@ object ClusterJob {
           prevSparse, nextCid, settings, payload, (name, df) => {
             val (t, n) = log.observedStage(name, count(lit(1)))(df)
             (t.drop("_lineage"), n.getLong(0))
-          }, localCap)
+          }, localCap, streamSize)
         (r.finalRec, r.stats, r.local)
       }
     // an empty committed recipe is a no-op backup (fresh OR resumed): the

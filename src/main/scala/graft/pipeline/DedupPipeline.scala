@@ -256,7 +256,9 @@ object DedupPipeline {
     * continuing from `base`; the clamp puts a zero-size row at a
     * stream's start in the first container. `pre` is [[streamPrefix]]'s,
     * so no task sorts a whole stream. `sizeCol` must be LongType. This
-    * is the one statement of the packing rule; every packer calls it.
+    * is the distributed statement of the packing rule; every distributed
+    * packer calls it. [[packLocal]] is its driver-side form and must stay
+    * in step with it (StoreStepSpec checks that the two agree).
     */
   private[graft] def pack(df: DataFrame, streamCol: String,
       orderCols: Seq[String], sizeCol: String, base: Long, payload: Long,

@@ -136,7 +136,7 @@ object TracePipeline {
     *    10^5, 12.2 s at 3·10^5, 32.3 s at 10^6. Past 10^5 both add about
     *    30 µs per chunk, so the driver path stays ahead by the per-job
     *    cost it saves (`JobBudgetSpec` pins a chained `backup` at 12 jobs
-    *    on this path and 40 distributed) and never wins by more;
+    *    on this path and 39 distributed) and never wins by more;
     *  - driver bytes (Spark's SizeEstimator): 217 per collected chunk,
     *    229 per recipe tuple and 197 per local-relation row, which are
     *    alive together while the recipe is written — about 650 per chunk
@@ -145,9 +145,29 @@ object TracePipeline {
     * 10^5 chunks hold the driver at about 80 MB, 8% of spark-submit's
     * default 1 GiB `spark.driver.memory` (the bound
     * [[ConnectedComponents.LocalEdgeCap]] keeps), with a one-partition
-    * recipe task of about 20 MB. Above the cap the stream's plan runs
-    * twice (once up to the cap) and each of its partitions ships up to
-    * cap + 1 rows to the bounded collect, the price of not counting it.
+    * recipe task of about 20 MB.
+    *
+    * Above the cap, a caller that knows the stream's size skips the
+    * bounded collect (`ClusterJob.backup` counts its chunks stage on the
+    * write). Otherwise the collect reads up to cap + 1 rows of each
+    * partition (the whole plan up to its last shuffle) and drops them in
+    * its one final task, so no row reaches the driver. Measured against
+    * the store step before the driver path existed (every stream
+    * distributed, no collect), same streams (cbr 1024 + HAR + LRU, 256 KiB
+    * payload, 4-partition parquet, 70% of the second stream's
+    * fingerprints in the first), default cap, a JVM warmed by one
+    * distributed backup of 1.5·10^5 chunks, 4 samples each (median,
+    * range):
+    *  - chained `backupChunkStream`, 2·10^5 chunks: 12.8 s (12.4–13.6)
+    *    → 13.8 s (12.3–14.3); 10^6: 32.3 s (31.4–34.4) → 36.0 s
+    *    (35.8–36.9);
+    *  - `TracePipeline.run` of two such jobs, both above the cap,
+    *    2·10^5: 26.4 s (24.7–29.1) → 25.9 s (24.2–27.7); 10^6: 76.6 s
+    *    (71.9–90.5) → 88.0 s (80.6–90.4).
+    * So a stream of unknown size above the cap costs up to about 15%
+    * more than before. The collect's plan alone read in 0.24–0.35 s at
+    * both sizes; the rest of the gap is not traced. No benchmark workload
+    * holds a backup above the cap.
     */
   val LocalCap: Int = 100000
 
@@ -174,15 +194,19 @@ object TracePipeline {
     * monitor when rewrite-enable-har is set). `materialize` is the ONLY
     * materialization of each result table. A stream of at most
     * `localCap` chunks runs on the driver, a longer one distributed (see
-    * the object's doc); both give the same tables and stats.
+    * the object's doc); both give the same tables and stats. A caller
+    * that knows the stream's `size` passes it, and a stream above the cap
+    * then skips the bounded collect.
     */
   private[graft] def oneJob(backupId: Long, chunks: DataFrame, label: String,
       index: DataFrame, prevSparse: DataFrame, nextCid: Long,
       settings: DestorSettings, payload: Long, materialize: Materialize,
-      localCap: Int = LocalCap): TraceJobResult = {
+      localCap: Int = LocalCap, size: Option[Long] = None): TraceJobResult = {
     require(localCap >= 0 && localCap < Int.MaxValue,
       s"localCap $localCap outside [0, Int.MaxValue)")
-    collectBounded(chunks, localCap) match {
+    val collected =
+      if (size.exists(_ > localCap)) None else collectBounded(chunks, localCap)
+    collected match {
       case Some(rows) => localJob(backupId, rows, label, index, prevSparse,
         nextCid, settings, payload, materialize)
       case None => distributedJob(backupId, sequence(chunks, label), index,
@@ -198,7 +222,10 @@ object TracePipeline {
   /** The stream's rows when it holds at most `cap` of them, else None, in
     * ONE job: a root limit's RDD is Spark's CollectLimit shuffle into one
     * partition, where collect() would scan partitions in growing batches,
-    * one job per batch. */
+    * one job per batch. A partition above the cap drops its rows, so a
+    * stream above it does not reach the driver. (The optimizer drops the
+    * limit of a plan known to hold at most cap + 1 rows; its partitions
+    * then arrive as they are, and the driver checks their sum.) */
   private def collectBounded(chunks: DataFrame, cap: Int): Option[Array[Raw]] = {
     val rows = chunks.select(col("path"), col("chunkIdx").cast("long"),
         col("fp"), col("size").cast("int"))
@@ -214,10 +241,11 @@ object TracePipeline {
           buf += Raw(path, r.getLong(1), r.getUTF8String(2).toString,
             r.getInt(3))
         }
-        Iterator.single(buf.result())
+        Iterator.single(Some(buf.result()).filter(_.length <= cap))
       }
-      .collect().flatten
-    if (rows.length <= cap) Some(rows) else None
+    val parts = rows.collect()
+    if (parts.exists(_.isEmpty)) None
+    else Some(parts.flatMap(_.get)).filter(_.length <= cap)
   }
 
   /** [[oneJob]] on the driver: the fold of [[distributedJob]], statement

@@ -83,7 +83,7 @@ class JobBudgetSpec extends AnyFunSuite {
       spark, Seq(b1, b2), "b1", ex, "jb-ex", 4096L)), 23)
     within("chained backup, distributed store step", jobsOf(
       ClusterJob.backup(corpusOf(files.drop(n / 3)), freshDir(), "jb-b2d",
-        settings, Some(b1), 4096L, localCap = 0)), 40)
+        settings, Some(b1), 4096L, localCap = 0)), 39)
   }
 
   test("ConnectedComponents.run on a small graph stays within its job budget") {

@@ -15,6 +15,7 @@ import graft.SparkTestSession
   * off and every restore cache.
   */
 class StoreStepSpec extends AnyFunSuite {
+  import StoreStepSpec.Store
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -62,23 +63,19 @@ class StoreStepSpec extends AnyFunSuite {
 
   private val Caches = Seq("lru", "opt", "asm")
 
-  /** One job's store as both paths must agree on it. */
-  private final case class Store(
-      recipe: Seq[(String, Long, String, String, Int, Boolean, Boolean, Long)],
-      index: Seq[(String, Long)], sparse: Seq[Long], stats: TraceJobStats,
-      sims: Seq[RestoreSim.StreamRestoreStats])
-
   /** Replay `js` through oneJob, chained as [[TracePipeline.run]] chains
-    * them; each job must take the path its size and `localCap` select. */
+    * them; each job must take the path its size and `localCap` select.
+    * `sized` passes each job's chunk count as a caller that knows it does. */
   private def replay(js: Seq[DataFrame], s: DestorSettings,
-      localCap: Int): Seq[Store] = {
+      localCap: Int, sized: Boolean = false): Seq[Store] = {
     var index = Seq.empty[(String, Long)].toDF("fp", "idxCid")
     var prevSparse = Seq.empty[Long].toDF("containerId")
     var nextCid = 0L
     js.zipWithIndex.map { case (chunks, i) =>
       val label = s"b${i + 1}"
       val r = TracePipeline.oneJob(i + 1L, chunks, label, index, prevSparse,
-        nextCid, s, Payload, TracePipeline.checkpoint, localCap)
+        nextCid, s, Payload, TracePipeline.checkpoint, localCap,
+        if (sized) Some(chunks.count()) else None)
       assert(r.local.isDefined === (chunks.count() <= localCap),
         s"job $label took the wrong path at localCap $localCap")
       val recipeCols = Seq("stream", "seq", "path", "fp", "size", "dup",
@@ -156,6 +153,14 @@ class StoreStepSpec extends AnyFunSuite {
     val reference = replay(first, s, 0)
     assert(replay(first, s, n) === reference)
     assert(replay(first, s, n - 1) === reference)
+    // the optimizer drops the limit of a plan of known size; one of
+    // unknown size keeps it, and its rows reach one CollectLimit partition
+    val opaque = first.map(df => spark.createDataFrame(df.rdd, df.schema))
+    assert(replay(opaque, s, n) === reference)
+    assert(replay(opaque, s, n - 1) === reference)
+    // a caller that knows the size skips the collect above the cap
+    assert(replay(first, s, n, sized = true) === reference)
+    assert(replay(first, s, n - 1, sized = true) === reference)
     val longer = Seq(job(5, n + 1, 300))
     assert(replay(longer, s, n) === replay(longer, s, n + 1))
   }
@@ -166,4 +171,12 @@ class StoreStepSpec extends AnyFunSuite {
       .as[TraceJobStats].collect().toSeq
     assert(stats(TracePipeline.LocalCap) === stats(0))
   }
+}
+
+object StoreStepSpec {
+  /** One job's store as both paths must agree on it. */
+  private final case class Store(
+      recipe: Seq[(String, Long, String, String, Int, Boolean, Boolean, Long)],
+      index: Seq[(String, Long)], sparse: Seq[Long], stats: TraceJobStats,
+      sims: Seq[RestoreSim.StreamRestoreStats])
 }
