@@ -362,6 +362,12 @@ object ClusterJob {
       backupCore(chunkStream, None, root, settings, prevRoot, payload,
         TracePipeline.LocalCap, _))
 
+  /** A committed stage table read with just the columns a job uses: a
+    * declared schema runs no parquet footer-inference job. */
+  private def load(spark: SparkSession, root: String, table: String,
+      schema: String): DataFrame =
+    spark.read.schema(schema).format(TableIO.Format).load(s"$root/$table")
+
   /** `streamSize` is the chunk stream's row count when the caller knows
     * it for free ([[TracePipeline.oneJob]]). */
   private def backupCore(chunkStream: DataFrame, streamSize: Option[Long],
@@ -369,19 +375,15 @@ object ClusterJob {
       payload: Long, localCap: Int, log: RunLog): TraceJobStats = {
     val spark = chunkStream.sparkSession
     import spark.implicits._
-    // a table read with just the columns this job uses: a declared schema
-    // runs no parquet footer-inference job
-    def load(r: String, table: String, schema: String): DataFrame =
-      spark.read.schema(schema).format(TableIO.Format).load(s"$r/$table")
     val (prevIndex, prevSparse, nextCid, backupId) = prevRoot match {
       case Some(p) =>
         require(TableIO.committed(s"$p/index"),
           s"prevRoot $p has no committed index stage — chain only from a " +
             "completed backup() root")
-        val idx = load(p, "index", "fp STRING, idxCid BIGINT")
+        val idx = load(spark, p, "index", "fp STRING, idxCid BIGINT")
         val sp =
           if (TableIO.committed(s"$p/har_sparse"))
-            load(p, "har_sparse", "containerId BIGINT")
+            load(spark, p, "har_sparse", "containerId BIGINT")
           else Seq.empty[Long].toDF("containerId")
         // ONE aggregate reads both scalars. The store's high-water
         // container id: every written container holds someone's latest
@@ -397,7 +399,7 @@ object ClusterJob {
         val noId = lit(null).cast("long")
         val labels = Seq("final_recipe", "recipes")
           .find(t => TableIO.committed(s"$p/$t")).toSeq.map { t =>
-            load(p, t, "stream STRING").select(noId.as("cid"),
+            load(spark, p, t, "stream STRING").select(noId.as("cid"),
               regexp_extract(col("stream"), "^b(\\d+)$", 1).cast("long")
                 .as("bid"))
           }
@@ -447,7 +449,7 @@ object ClusterJob {
           .copy(sparse_containers = sparseCount), None)
       } else {
         val r = TracePipeline.oneJob(backupId, chunkStream, label, prevIndex,
-          prevSparse, nextCid, settings, payload, (name, df) => {
+          prevSparse, nextCid, settings, payload, (name, df, _) => {
             val (t, n) = log.observedStage(name, count(lit(1)))(df)
             (t.drop("_lineage"), n.getLong(0))
           }, localCap, streamSize)
@@ -546,11 +548,8 @@ object ClusterJob {
         s"chain root $r has no committed final_recipe/recipes stage — " +
           "expire only completed backup()/expire() roots")
     }
-    // each chain root's recipe is read (one footer-inference job) once
-    val recs = chainRoots.map { r =>
-      r -> spark.read.format(TableIO.Format).load(s"$r/${recTable(r).get}")
-        .drop("_lineage")
-    }.toMap
+    val recs = chainRoots.map(r =>
+      r -> load(spark, r, recTable(r).get, TracePipeline.RecipeSchema)).toMap
     val chain = chainRoots.map(recs).reduce(_ unionByName _)
     // `expiredBackup` selects ONE backup: either a stream label ("b2") —
     // required when the chain has been compacted before, since a

@@ -8,16 +8,11 @@ import org.apache.spark.sql.functions._
   * jumping above [[LocalEdgeCap]].
   *
   * Scale design:
-  *  - one bounded collect chooses the path: `edges.limit(cap + 1)` runs as
-  *    ONE Spark job (each map task keeps ≤ cap + 1 edges, one reduce task
-  *    packs the first cap + 1 into a single `Array[Long]`) plus whatever
-  *    shuffle stages the edge plan itself holds. No counting job. At most
-  *    cap edges ⇒ the local path; more ⇒ the collected prefix is dropped
-  *    and the distributed path runs. Above the cap an uncached edge plan
-  *    is therefore computed twice (once up to the cap), the price of not
-  *    counting it.
+  *  - one [[DriverFold.collect]] of the edges chooses the path in ONE
+  *    Spark job plus the edge plan's own stages; above the cap an
+  *    uncached edge plan is thus computed twice (once up to the cap).
   *  - local path: one iterative [[UnionFind]] labels the edge vertices on
-  *    the driver; the labels become a local relation.
+  *    the driver, handed back as a [[DriverFold.table]].
   *  - distributed path: iteration runs over *edge vertices only*; each
   *    round does (a) one hop of neighbor-min propagation and (b) one
   *    pointer-jump (label ← label's label), so the label frontier doubles
@@ -45,33 +40,24 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Edge count up to which [[run]] labels on the driver.
+  /** Edge count up to which [[run]] labels on the driver, within
+    * [[DriverFold]]'s budget: at most 272 B an edge (Spark's
+    * SizeEstimator: 16 a collected edge, 128 a labeled vertex).
     *
-    * Measured on a 4-core host in a `local[4]` session (4 shuffle
-    * partitions, adaptive execution on, as perfbench runs), on a path
-    * 0 - 1 - … - n and on a hub graph (n leaves over 4 hubs), edges
-    * checkpointed in 4 partitions; each figure is `run(...).count()`:
-    *  - distributed cost per round: 0.3–0.5 s at 10^4 edges, 0.8–0.9 s at
-    *    10^5, 2.5–2.9 s at 10^6 (7–10 jobs a round). The hub graph
-    *    settles in the 2 rounds the fixpoint test needs: 0.9–1.3 s up to
-    *    10^5 edges, 2.4 s at 2·10^5, 2.6 s at 3·10^5, 4.3 s at 5·10^5,
-    *    6.6 s at 10^6. The path needs log-diameter rounds: 9.5 s at 10^4
-    *    edges, 19–23 s at 10^5–2·10^5, 44 s at 5·10^5, 106 s at 10^6.
-    *  - local path: 0.3–0.4 s up to 10^4 edges, 1.0–1.6 s at 10^5, 2.0–2.3
-    *    s at 2·10^5, 2.7–2.9 s at 3·10^5, 4.5–5.3 s at 5·10^5, 10–12 s at
-    *    10^6, in 4 jobs with the count. Of that, the union-find takes
-    *    0.25–0.5 µs per edge and the local relation 2 µs per label.
-    *  - driver bytes: 14–16 per collected edge (two packed longs, also the
-    *    task result), then ≈ 145 per labeled vertex (56 union-find entry
-    *    and label pair, 88 local-relation row) — ≤ 300 B per edge when
-    *    every edge brings two new vertices.
-    * The local path is 8–13× faster on the path at every size; on the hub
-    * graph the two tie between 2·10^5 (2.25 vs 2.37 s) and 3·10^5 (2.66
-    * vs 2.60 s) edges. The cap is that crossover, 2.5·10^5: no measured
-    * shape is slower on the driver below it, and it holds the driver at
-    * ≤ 80 MB, 8% of spark-submit's default 1 GiB `spark.driver.memory`,
-    * with a task result of ≤ 4 MB against the default 1 GiB
-    * `spark.driver.maxResultSize`.
+    * Measured on a 4-core host, `local[4]`, 4 shuffle partitions,
+    * adaptive execution on, on a path 0 - 1 - … - n and a hub graph (n
+    * leaves over 4 hubs), edges checkpointed in 4 partitions; each figure
+    * is `run(...).count()`. Distributed, 7–10 jobs a round: the hub graph
+    * settles in 2 rounds, 0.9–1.3 s up to 10^5 edges, 2.4 s at 2·10^5,
+    * 2.6 s at 3·10^5, 6.6 s at 10^6; the path needs log-diameter rounds,
+    * 9.5 s at 10^4 edges, 19–23 s at 10^5–2·10^5, 106 s at 10^6. On the
+    * driver, 4 jobs with the count: 0.3–0.4 s up to 10^4 edges, 1.0–1.6 s
+    * at 10^5, 2.0–2.3 s at 2·10^5, 2.7–2.9 s at 3·10^5, 10–12 s at 10^6.
+    * So a path labels 8–13× faster on the driver at every size; the hub
+    * graph ties between 2·10^5 (2.25 vs 2.37 s) and 3·10^5 (2.66 vs 2.60
+    * s) edges: the cap is that crossover. With the columnar collect and
+    * hand-off, hub-graph medians of 6 before → after: 0.98 → 1.01 s at
+    * 10^5 edges, 1.77 → 1.80 s at 2·10^5 (spreads 0.17, 0.26 s).
     */
   val LocalEdgeCap: Int = 250000
 
@@ -101,37 +87,25 @@ object ConnectedComponents {
       if (ra != rb) parent.update(math.max(ra, rb), math.min(ra, rb))
     }
 
+    /** Every id passed to `union`. */
+    def ids: Array[Long] = parent.keys.toArray
+
     /** (id, root) for every id passed to `union`. */
-    def labels: Array[(Long, Long)] = parent.keys.toArray.map(v => (v, find(v)))
+    def labels: Array[(Long, Long)] = ids.map(v => (v, find(v)))
   }
 
   def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25,
       localEdgeCap: Int = LocalEdgeCap): DataFrame = {
-    require(localEdgeCap >= 0 && localEdgeCap < Int.MaxValue,
-      s"localEdgeCap $localEdgeCap outside [0, Int.MaxValue)")
-    val spark = vertices.sparkSession
-    import spark.implicits._
-
-    // (a0, b0, a1, b1, …) of the first cap + 1 edges, one packed array.
-    // A root limit's RDD is Spark's CollectLimit shuffle into one
-    // partition: one job, where collect() would scan partitions in
-    // growing batches, one job per batch.
-    val packed = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .limit(localEdgeCap + 1).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val buf = Array.newBuilder[Long]
-        rows.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
-        Iterator.single(buf.result())
-      }
-      .collect().flatten
-    val labels =
-      if (packed.length / 2 <= localEdgeCap) {
+    val labels = DriverFold.collect(edges.select(col("a").cast("long"),
+        col("b").cast("long")), localEdgeCap) match {
+      case Some(e) =>
         val uf = new UnionFind
-        var i = 0
-        while (i < packed.length) { uf.union(packed(i), packed(i + 1)); i += 2 }
-        uf.labels.toSeq.toDF("fileId", "clusterId")
-      } else propagate(edges, maxIter).toDF("fileId", "clusterId")
-
+        (0 until e.rows).foreach(i => uf.union(e.longs(0)(i), e.longs(1)(i)))
+        val ids = uf.ids
+        DriverFold.table(vertices.sparkSession, "fileId BIGINT, " +
+          "clusterId BIGINT", ids.length)(i => Array(ids(i), uf.find(ids(i))))
+      case None => propagate(edges, maxIter).toDF("fileId", "clusterId")
+    }
     val singletons = vertices
       .join(labels, Seq("fileId"), "left_anti")
       .select(col("fileId"), col("fileId").as("clusterId"))

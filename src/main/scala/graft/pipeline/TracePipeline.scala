@@ -77,97 +77,70 @@ final case class TraceJobResult(
   *  7. the configured restore cache replays the final recipe
   *     ([[RestoreSim.simulate]] — LRU/OPT/ASM per `restore-cache`).
   *
-  * Two paths run these semantics, chosen per job by its size. One
-  * bounded collect (`limit(cap + 1)`, one Spark job, no count) reads the
-  * job's raw chunk stream:
+  * Two paths run these semantics, chosen per job by its size with one
+  * [[DriverFold.collect]] of its raw chunk stream:
   *
   *  - at most [[LocalCap]] chunks: the driver runs steps 1–6 as the
-  *    sequential fold destor itself runs (src/filter_phase.c,
-  *    src/rewrite_phase.c). One more job looks the job's fingerprints up
-  *    in the index (a semi-join against their broadcast set, so the
-  *    index may be any size) and reads the previous sparse list; the
-  *    final recipe and the sparse list are written from local relations
-  *    of one partition each, and the index stays the distributed
-  *    `index ∪ copies → max`. Step 7 folds the driver's recipe through
-  *    the same cache code ([[RestoreSim.simulateStream]]).
-  *  - above it: the collected prefix is dropped and every per-chunk step
-  *    runs distributed (two-phase prefix sums and run detection, never a
-  *    whole-stream window); only per-job scalars reach the driver.
+  *    sequential fold destor itself runs. One more job looks the job's
+  *    fingerprints up in the index (a semi-join against their broadcast
+  *    set, so the index may be any size) and reads the previous sparse
+  *    list; the recipe and the sparse list are [[DriverFold.table]]s, and
+  *    the index stays the distributed `index ∪ copies → max`. Step 7
+  *    folds the driver's recipe ([[RestoreSim.simulateStream]]).
+  *  - above it: every per-chunk step runs distributed (two-phase prefix
+  *    sums and run detection, never a whole-stream window).
   *
   * Both paths return the same rows and stats; `localCap = 0` forces the
-  * distributed one. [[LocalCap]]'s doc gives the measurements it comes
-  * from.
+  * distributed one.
   *
   * [[oneJob]] is the single-backup core; [[graft.pipeline.ClusterJob
   * .backup]] reuses it verbatim for REAL corpora (read+chunk+hash feeding
   * the same dedup→rewrite→pack store semantics, roots chained exactly
   * like successive trace jobs chain in memory): here each result table is
-  * localCheckpointed, there its checkpointed stage write is its one
+  * [[checkpoint]]ed, there its checkpointed stage write is its one
   * materialization.
   */
 object TracePipeline {
 
-  /** How [[oneJob]] materializes each result table: given the table's
-    * stage name ("final_recipe", "har_sparse", "index") and its plan,
-    * returns the materialized table and its row count. */
-  type Materialize = (String, DataFrame) => (DataFrame, Long)
+  /** How [[oneJob]] materializes each result table: given its stage name
+    * ("final_recipe", "har_sparse", "index"), its plan and, for a
+    * [[DriverFold.table]], its row count, returns the table and count. */
+  type Materialize = (String, DataFrame, Option[Long]) => (DataFrame, Long)
 
-  /** In-memory materialization: an eager localCheckpoint, the row count
-    * observed on the same job. */
-  val checkpoint: Materialize = (_, df) => {
-    val obs = Observation()
-    val c = df.observe(obs, count(lit(1))).localCheckpoint(true)
-    (c, Await.result(obs.future, Duration.Inf).getLong(0))
+  /** In-memory materialization: a driver-held table as it is, any other
+    * an eager localCheckpoint that counts its rows in the same job. */
+  val checkpoint: Materialize = {
+    case (_, df, Some(rows)) => (df, rows)
+    case (_, df, None) =>
+      val obs = Observation()
+      val c = df.observe(obs, count(lit(1))).localCheckpoint(true)
+      (c, Await.result(obs.future, Duration.Inf).getLong(0))
   }
 
+  /** The columns `final_recipe` and expire's `recipes` are written with. */
+  private[pipeline] val RecipeSchema = "stream STRING, seq BIGINT, path " +
+    "STRING, fp STRING, size INT, dup BOOLEAN, write BOOLEAN, containerId BIGINT"
+
   /** Chunk count up to which [[oneJob]] runs the store step on the
-    * driver.
+    * driver, within [[DriverFold]]'s budget.
     *
-    * Measured on a 4-core host in a `local[4]` session (4 shuffle
-    * partitions, adaptive execution on, as perfbench runs), one sample per
-    * size: a chained `ClusterJob.backupChunkStream` under cbr 1024 + HAR +
-    * an LRU restore sim at a 256 KiB payload, over a 4-partition parquet
-    * stream of n chunks, 70% of them fingerprints the previous backup
-    * wrote:
-    *  - distributed path (`localCap = 0`): 5.7–10.4 s at 10^3 chunks,
-    *    5.7–6.7 s at 10^4, 10.9–11.2 s at 10^5, 17.8 s at 3·10^5, 39.6 s
-    *    at 10^6;
-    *  - driver path: 1.9–2.3 s at 10^3, 1.8–2.1 s at 10^4, 4.7–5.2 s at
-    *    10^5, 12.2 s at 3·10^5, 32.3 s at 10^6. Past 10^5 both add about
-    *    30 µs per chunk, so the driver path stays ahead by the per-job
-    *    cost it saves (`JobBudgetSpec` pins a chained `backup` at 12 jobs
-    *    on this path and 39 distributed) and never wins by more;
-    *  - driver bytes (Spark's SizeEstimator): 217 per collected chunk,
-    *    229 per recipe tuple and 197 per local-relation row, which are
-    *    alive together while the recipe is written — about 650 per chunk
-    *    before the fingerprint maps.
-    * No measured size is slower on the driver, so memory sets the cap:
-    * 10^5 chunks hold the driver at about 80 MB, 8% of spark-submit's
-    * default 1 GiB `spark.driver.memory` (the bound
-    * [[ConnectedComponents.LocalEdgeCap]] keeps), with a one-partition
-    * recipe task of about 20 MB.
+    * Measured on a 4-core host, `local[4]`, 4 shuffle partitions,
+    * adaptive execution on: a chained `ClusterJob.backupChunkStream`
+    * under cbr 1024 + HAR + an LRU restore sim at a 256 KiB payload, over
+    * a 4-partition parquet stream of n chunks, 70% of them fingerprints
+    * the previous backup wrote. Distributed (`localCap = 0`): 5.7–6.7 s
+    * at 10^4 chunks, 10.9–11.2 s at 10^5, 39.6 s at 10^6; on the driver
+    * 1.8–2.1 s, 4.7–5.2 s and 32.3 s, never slower, so memory sets the
+    * cap. The columnar collect and hand-off, medians of 6 before → after:
+    * 1.48 → 1.46 s at 10^4 chunks, 4.14 → 3.54 s at 10^5 (spreads 0.38,
+    * 0.70 s). Spark's SizeEstimator: 203 B a collected chunk and 150 a
+    * recipe-table row, alive together while the recipe is written — 353
+    * B a chunk before the fingerprint maps, from about 650.
     *
-    * Above the cap, a caller that knows the stream's size skips the
-    * bounded collect (`ClusterJob.backup` counts its chunks stage on the
-    * write). Otherwise the collect reads up to cap + 1 rows of each
-    * partition (the whole plan up to its last shuffle) and drops them in
-    * its one final task, so no row reaches the driver. Measured against
-    * the store step before the driver path existed (every stream
-    * distributed, no collect), same streams (cbr 1024 + HAR + LRU, 256 KiB
-    * payload, 4-partition parquet, 70% of the second stream's
-    * fingerprints in the first), default cap, a JVM warmed by one
-    * distributed backup of 1.5·10^5 chunks, 4 samples each (median,
-    * range):
-    *  - chained `backupChunkStream`, 2·10^5 chunks: 12.8 s (12.4–13.6)
-    *    → 13.8 s (12.3–14.3); 10^6: 32.3 s (31.4–34.4) → 36.0 s
-    *    (35.8–36.9);
-    *  - `TracePipeline.run` of two such jobs, both above the cap,
-    *    2·10^5: 26.4 s (24.7–29.1) → 25.9 s (24.2–27.7); 10^6: 76.6 s
-    *    (71.9–90.5) → 88.0 s (80.6–90.4).
-    * So a stream of unknown size above the cap costs up to about 15%
-    * more than before. The collect's plan alone read in 0.24–0.35 s at
-    * both sizes; the rest of the gap is not traced. No benchmark workload
-    * holds a backup above the cap.
+    * Above the cap a caller that knows the stream's size skips the
+    * collect; a stream of unknown size ran up to 15% slower than before
+    * the driver path (medians of 4 at 10^6 chunks: `backupChunkStream`
+    * 32.3 → 36.0 s, `run` 76.6 → 88.0 s).
     */
   val LocalCap: Int = 100000
 
@@ -192,20 +165,17 @@ object TracePipeline {
     * `nextCid` is the first free container id. When HAR is off, `sparse`
     * returns `prevSparse` unchanged (the reference only maintains the
     * monitor when rewrite-enable-har is set). `materialize` is the ONLY
-    * materialization of each result table. A stream of at most
-    * `localCap` chunks runs on the driver, a longer one distributed (see
-    * the object's doc); both give the same tables and stats. A caller
-    * that knows the stream's `size` passes it, and a stream above the cap
-    * then skips the bounded collect.
+    * materialization of each result table. A caller that knows the
+    * stream's `size` passes it, and a stream above `localCap` then skips
+    * the bounded collect.
     */
   private[graft] def oneJob(backupId: Long, chunks: DataFrame, label: String,
       index: DataFrame, prevSparse: DataFrame, nextCid: Long,
       settings: DestorSettings, payload: Long, materialize: Materialize,
       localCap: Int = LocalCap, size: Option[Long] = None): TraceJobResult = {
-    require(localCap >= 0 && localCap < Int.MaxValue,
-      s"localCap $localCap outside [0, Int.MaxValue)")
-    val collected =
-      if (size.exists(_ > localCap)) None else collectBounded(chunks, localCap)
+    val collected = if (size.exists(_ > localCap)) None else DriverFold.collect(
+      chunks.select(col("path"), col("chunkIdx").cast("long"), col("fp"),
+        col("size").cast("int")), localCap)
     collected match {
       case Some(rows) => localJob(backupId, rows, label, index, prevSparse,
         nextCid, settings, payload, materialize)
@@ -214,73 +184,43 @@ object TracePipeline {
     }
   }
 
-  /** One collected chunk-stream row. The path stays UTF-8, so the driver
-    * sorts it in Spark's string order (by byte). */
-  private final case class Raw(path: UTF8String, chunkIdx: Long, fp: String,
-      size: Int)
-
-  /** The stream's rows when it holds at most `cap` of them, else None, in
-    * ONE job: a root limit's RDD is Spark's CollectLimit shuffle into one
-    * partition, where collect() would scan partitions in growing batches,
-    * one job per batch. A partition above the cap drops its rows, so a
-    * stream above it does not reach the driver. (The optimizer drops the
-    * limit of a plan known to hold at most cap + 1 rows; its partitions
-    * then arrive as they are, and the driver checks their sum.) */
-  private def collectBounded(chunks: DataFrame, cap: Int): Option[Array[Raw]] = {
-    val rows = chunks.select(col("path"), col("chunkIdx").cast("long"),
-        col("fp"), col("size").cast("int"))
-      .limit(cap + 1).queryExecution.toRdd
-      .mapPartitions { it =>
-        val buf = Array.newBuilder[Raw]
-        var path: UTF8String = null
-        it.foreach { r =>
-          // a row's strings point into a reused buffer: copy the path once
-          // per run of equal paths, so a file's chunks share one object
-          val p = r.getUTF8String(0)
-          if (path == null || path != p) path = p.clone()
-          buf += Raw(path, r.getLong(1), r.getUTF8String(2).toString,
-            r.getInt(3))
-        }
-        Iterator.single(Some(buf.result()).filter(_.length <= cap))
-      }
-    val parts = rows.collect()
-    if (parts.exists(_.isEmpty)) None
-    else Some(parts.flatMap(_.get)).filter(_.length <= cap)
-  }
-
   /** [[oneJob]] on the driver: the fold of [[distributedJob]], statement
     * for statement, over the collected stream. */
-  private def localJob(backupId: Long, raw: Array[Raw], label: String,
-      index: DataFrame, prevSparse: DataFrame, nextCid: Long,
+  private def localJob(backupId: Long, raw: DriverFold.Columns,
+      label: String, index: DataFrame, prevSparse: DataFrame, nextCid: Long,
       settings: DestorSettings, payload: Long,
       materialize: Materialize): TraceJobResult = {
     val spark = index.sparkSession
-    import spark.implicits._
     val har = settings.rewrite.enableHar
-    val rows = raw.sortWith { (a, b) =>
-      val c = a.path.compareTo(b.path)
-      if (c != 0) c < 0 else a.chunkIdx < b.chunkIdx
+    // (path, chunkIdx) order; UTF8String compares by byte, as Spark does
+    val (rawPath, rawIdx) = (raw.strings(0), raw.longs(1))
+    val order = Array.range(0, raw.rows).sortWith { (a, b) =>
+      val c = rawPath(a).compareTo(rawPath(b))
+      if (c != 0) c < 0 else rawIdx(a) < rawIdx(b)
     }
-    val n = rows.length
-    val fp = rows.map(_.fp)
-    val size = rows.map(_.size)
+    val n = order.length
+    val path = order.map(rawPath(_))
+    val fp = order.map(raw.strings(2)(_))
+    val size = order.map(raw.ints(3)(_))
     // ONE job reads this job's index entries and, for HAR, the previous
     // sparse list: nulls tag the sparse rows
     val (idx, prevSparseIds) =
-      if (n == 0) (Map.empty[String, Long], Set.empty[Long])
+      if (n == 0) (Map.empty[UTF8String, Long], Set.empty[Long])
       else {
+        val fps = fp.distinct
         val hits = index.select(col("fp"), col("idxCid"))
-          .join(broadcast(fp.distinct.toSeq.toDF("fp")), Seq("fp"),
-            "left_semi")
+          .join(broadcast(DriverFold.table(spark, "fp STRING", fps.length)(
+            i => Array(fps(i)))), Seq("fp"), "left_semi")
         val got = (if (har) hits.union(prevSparse.select(
             lit(null).cast("string"), col("containerId")))
           else hits).collect()
         val (entries, sparse) = got.partition(!_.isNullAt(0))
-        (entries.map(r => r.getString(0) -> r.getLong(1)).toMap,
+        (entries.map(r => UTF8String.fromString(r.getString(0)) ->
+            r.getLong(1)).toMap,
           sparse.map(_.getLong(1)).toSet)
       }
     // 1. first-writer duplicate marking
-    val seen = scala.collection.mutable.HashSet.empty[String]
+    val seen = scala.collection.mutable.HashSet.empty[UTF8String]
     val dup = fp.map { f => val first = seen.add(f); idx.contains(f) || !first }
     val marked = Rewrite.LocalStream(size,
       fp.map(idx.getOrElse(_, -1L)), dup)
@@ -294,7 +234,7 @@ object TracePipeline {
     val packCid = DedupPipeline.packLocal(
       Array.tabulate(n)(i => if (write(i)) size(i).toLong else 0L),
       nextCid, payload)
-    val firstCopyCid = scala.collection.mutable.HashMap.empty[String, Long]
+    val firstCopyCid = scala.collection.mutable.HashMap.empty[UTF8String, Long]
     (0 until n).foreach(i =>
       if (write(i)) firstCopyCid.getOrElseUpdate(fp(i), packCid(i)))
     val containerId = Array.tabulate(n) { i =>
@@ -302,13 +242,11 @@ object TracePipeline {
     }
     // 7. the recipeStats scalars; rows are in path order, so a file starts
     // where the path changes
-    val path = new Array[String](n)
     var files = 0L
     var dataSize, uniqueChunks, uniqueSize, rewrittenChunks, rewrittenSize = 0L
     var maxWritten = -1L
     (0 until n).foreach { i =>
-      if (i > 0 && rows(i).path == rows(i - 1).path) path(i) = path(i - 1)
-      else { path(i) = rows(i).path.toString; files += 1 }
+      if (i == 0 || path(i) != path(i - 1)) files += 1
       dataSize += size(i)
       if (!dup(i)) { uniqueChunks += 1; uniqueSize += size(i) }
       else if (write(i)) { rewrittenChunks += 1; rewrittenSize += size(i) }
@@ -318,26 +256,23 @@ object TracePipeline {
       uniqueSize, rewrittenChunks, rewrittenSize, uniqueSize + rewrittenSize,
       if (maxWritten < 0) 0L else maxWritten - nextCid + 1L,
       0L, 0L, 0.0, 0.0)
-    // the local relations are written as one partition each, the layout
-    // the distributed path's writes have at this size
-    val (finalRec, _) = materialize("final_recipe", (0 until n)
-      .map(i => (label, i + 1L, path(i), fp(i), size(i), dup(i), write(i),
-        containerId(i)))
-      .toDF("stream", "seq", "path", "fp", "size", "dup", "write",
-        "containerId")
-      .coalesce(1))
+    val stream = UTF8String.fromString(label)
+    val (finalRec, _) = materialize("final_recipe", DriverFold.table(spark,
+      RecipeSchema, n)(i => Array(stream, i + 1L, path(i), fp(i), size(i),
+      dup(i), write(i), containerId(i))).coalesce(1), Some(n.toLong))
     // 8. the HAR trim
     val recipe = Rewrite.LocalStream(size, containerId, dup)
-    val (sparseList, sparseCount) =
-      if (har)
-        materialize("har_sparse", Rewrite.harSparseLocal(recipe,
-            settings.rewrite.harUtilizationThreshold,
-            settings.rewrite.harRewriteLimit, payload)
-          .toSeq.toDF("containerId").coalesce(1))
-      else (prevSparse, 0L)
+    val (sparseList, sparseCount) = if (!har) (prevSparse, 0L) else {
+      val ids = Rewrite.harSparseLocal(recipe,
+        settings.rewrite.harUtilizationThreshold,
+        settings.rewrite.harRewriteLimit, payload)
+      materialize("har_sparse", DriverFold.table(spark, "containerId BIGINT",
+        ids.length)(i => Array(ids(i))).coalesce(1), Some(ids.length.toLong))
+    }
+    val copies = (0 until n).filter(write(_)).toArray
     val (newIndex, _) = materialize("index", upsert(index,
-      (0 until n).filter(write(_)).map(i => (fp(i), packCid(i)))
-        .toDF("fp", "idxCid")))
+      DriverFold.table(spark, "fp STRING, idxCid BIGINT", copies.length)(
+        i => Array(fp(copies(i)), packCid(copies(i))))), None)
     TraceJobResult(finalRec, newIndex, sparseList,
       stats.copy(sparse_containers = sparseCount), Some(recipe))
   }
@@ -390,7 +325,7 @@ object TracePipeline {
           when(col("idxCid").isNotNull, col("idxCid"))
             .otherwise(col("firstCopyCid"))))
       .select(col("stream"), col("seq"), col("path"), col("fp"),
-        col("size"), col("dup"), col("write"), col("containerId")))
+        col("size"), col("dup"), col("write"), col("containerId")), None)
     val stats = recipeStats(backupId, finalRec, nextCid)
     val (sparseList, sparseCount) =
       if (settings.rewrite.enableHar)
@@ -398,9 +333,9 @@ object TracePipeline {
           Rewrite.harSparseContainers(finalRec,
               settings.rewrite.harUtilizationThreshold,
               settings.rewrite.harRewriteLimit, payload)
-            .select(col("containerId")))
+            .select(col("containerId")), None)
       else (prevSparse, 0L)
-    val (newIndex, _) = materialize("index", upsert(index, copies))
+    val (newIndex, _) = materialize("index", upsert(index, copies), None)
     TraceJobResult(finalRec, newIndex, sparseList,
       stats.copy(sparse_containers = sparseCount), None)
   }

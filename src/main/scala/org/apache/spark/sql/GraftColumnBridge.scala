@@ -1,13 +1,16 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge to the sql-private Column↔Expression converters (Spark 4 made
-  * Column API-agnostic; classic conversions are private[sql]). Minimal
-  * surface: exactly what custom Catalyst expressions need to expose a
-  * user-facing Column.
+/** Bridge to the sql-private Column↔Expression converters and the
+  * plan-to-DataFrame factory (Spark 4 made Column API-agnostic; classic
+  * conversions are private[sql]). Minimal surface: what custom Catalyst
+  * expressions and driver-built tables need to reach the public API.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

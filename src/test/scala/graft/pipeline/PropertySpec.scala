@@ -112,8 +112,9 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("index key truncation preserves prefix order for every key size (property)") {
-    val fpGen = Gen.listOfN(2, Gen.chooseNum(Long.MinValue, Long.MaxValue))
-      .map { case List(a, b) => f"$a%016x$b%016x" + "00000000" }
+    val long = Gen.chooseNum(Long.MinValue, Long.MaxValue)
+    val fpGen = Gen.zip(long, long)
+      .map { case (a, b) => f"$a%016x$b%016x" + "00000000" }
     forAll(Gen.zip(Gen.listOfN(20, fpGen), Gen.chooseNum(1, 20))) {
       case (fps, kb) =>
         val full = fps.sorted
