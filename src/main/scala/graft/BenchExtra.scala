@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Measure
 
 /** Supplementary noop-sink benchmark (optimization guide §1.4): times each
   * headline query with `df.write.format("noop")` — which computes EVERY
@@ -15,30 +15,18 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Measure.envCpus(32)
     val names = if (args.nonEmpty) args.toSeq else Bench.headline
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(cpus, extra = Measure.SmallSplits)
     SparkEntry.queries("q1_agg")(spark, sfDir).count() // session warm-up
     SparkEntry.queries("d_exact_dedup")(spark, sfDir).count()
     val results = names.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
         spark.sparkContext.setJobDescription(s"noop: $name")
-        def sample(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val best = math.min(sample(), sample()) // best-of-2, like Bench
+        val best = Measure.bestOf(2)(Measure.timed( // best-of-2, like Bench
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
         spark.sparkContext.setJobDescription(null)
-        name -> best
+        name -> best.wallSec
       }
     }
     val qs = results.map { case (k, s) => s""""$k":$s""" }.mkString("{", ",", "}")

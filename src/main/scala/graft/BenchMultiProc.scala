@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Measure
 
 /** Multi-process scaling evidence: the SAME dedup-cluster job on REAL
   * separate executor JVMs via Spark's local-cluster mode — task binaries,
@@ -30,38 +30,20 @@ object BenchMultiProc {
     .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
 
   /** One leg: warm-up + best-of-2 pipeline runs on a local-cluster of
-    * `workers` executor processes × `cores` each. Returns
-    * (files, bestWallSec, executorCpuSecOfBestRun).
-    */
-  private def once(workers: Int, cores: Int, nBases: Long,
-      warm: Long): (Long, Double, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local-cluster[$workers,$cores,6144]")
-      .config("spark.sql.shuffle.partitions", (workers * cores).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .config("spark.executor.memory", "5g")
+    * `workers` executor processes × `cores` each; the CPU of the best run
+    * is its executor CPU. */
+  private def once(workers: Int, cores: Int, nBases: Long, warm: Long) = {
+    val spark = Measure.session(workers * cores, extra = Measure.SmallSplits ++ Map(
+      "spark.master" -> s"local-cluster[$workers,$cores,6144]",
+      "spark.executor.memory" -> "5g",
       // executors are fresh JVMs: they need the app classes and the JDK17
       // module opens that spark-submit would normally inject
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.executor.extraClassPath" -> sys.props("java.class.path"),
+      "spark.executor.extraJavaOptions" -> addOpens))
     val meter = new ExecCpuMeter(spark.sparkContext)
-    Bench.runPipeline(spark, warm) // JIT/codegen warm-up in every executor
-    val c0 = meter.settledNs()
-    val a = Bench.runPipeline(spark, nBases)
-    val c1 = meter.settledNs()
-    val b = Bench.runPipeline(spark, nBases)
-    val c2 = meter.settledNs()
-    val res = if (a._2 <= b._2) (a._1, a._2, (c1 - c0) / 1e9)
-      else (b._1, b._2, (c2 - c1) / 1e9)
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    res
+    // the warm-up JITs and codegens in every executor
+    Measure.bestOf(2, Bench.runPipeline(spark, warm),
+      () => meter.settledNs() / 1e9)(Bench.runPipeline(spark, nBases))
   }
 
   def main(args: Array[String]): Unit = {
@@ -75,20 +57,20 @@ object BenchMultiProc {
     val nBases = args.headOption.map(_.toLong).getOrElse(10000L)
     val rounds = args.lift(1).map(_.toInt).getOrElse(2)
     val warm = math.max(nBases / 10, 1000)
-    // interleaved legs + per-leg minimum, per the BASELINE.md noise rules
-    val runs = (1 to rounds).map { _ => (once(1, 2, nBases, warm), once(4, 2, nBases, warm)) }
-    val (files1, t1, cpu1) = runs.map(_._1).minBy(_._2)
-    val (files2, t2, cpu2) = runs.map(_._2).minBy(_._2)
-    require(files1 == files2)
-    val thrA = files1 / t1
-    val thrB = files2 / t2
+    // interleaved legs + per-leg best, per the BASELINE.md noise rules
+    val (legA, legB) = Measure.interleaved(rounds,
+      () => once(1, 2, nBases, warm), () => once(4, 2, nBases, warm))
+    val (a, b) = (legA.minBy(_.wallSec), legB.minBy(_.wallSec))
+    require(a.result == b.result)
+    val thrA = a.result / a.wallSec
+    val thrB = b.result / b.wallSec
     val eff = thrB / (4.0 * thrA)
-    val workEff = cpu1 / cpu2
+    val workEff = a.cpuSec / b.cpuSec
     println(
-      f"""{"metric":"multiproc_scaling_efficiency","value":$eff%.4f,"files":$files1,""" +
+      f"""{"metric":"multiproc_scaling_efficiency","value":$eff%.4f,"files":${a.result},""" +
       f""""executorsA":1,"executorsB":4,"coresPerExecutor":2,""" +
-      f""""secA":$t1%.2f,"secB":$t2%.2f,""" +
+      f""""secA":${a.wallSec}%.2f,"secB":${b.wallSec}%.2f,""" +
       f""""filesPerSecA":$thrA%.1f,"filesPerSecB":$thrB%.1f,""" +
-      f""""execCpuSecA":$cpu1%.1f,"execCpuSecB":$cpu2%.1f,"workEfficiency":$workEff%.4f}""")
+      f""""execCpuSecA":${a.cpuSec}%.1f,"execCpuSecB":${b.cpuSec}%.1f,"workEfficiency":$workEff%.4f}""")
   }
 }

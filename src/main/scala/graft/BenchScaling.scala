@@ -1,48 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Measure
 
 /** Scaling-efficiency evidence for the north rule: the same dedup-cluster
   * job on the same input at local[N] and local[4N] (sandbox stand-in for
   * N vs 4N executors). Prints one JSON line with both throughputs and
   * eff = thr(4N) / (4 · thr(N)).
   *
-  * Run: sbt "runMain graft.BenchScaling [nBases] [N]"
+  * Run: sbt "runMain graft.BenchScaling [nBases] [N] [rounds]"
   */
 object BenchScaling {
 
-  private def processCpuSec(): Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-      .getProcessCpuTime / 1e9
-
-  private def once(cores: Int, nBases: Long, warmBases: Long): (Long, Double, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // corpus parquet is ~300 MB compressed; split small enough that
-      // featurize parallelism is never input-bound at any core count
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JIT + codegen warm-up inside this session, then best-of-2 measured;
-    // CPU time of the best run = contention-independent work measure
-    Bench.runPipeline(spark, warmBases)
-    val c0 = processCpuSec()
-    val a = Bench.runPipeline(spark, nBases)
-    val c1 = processCpuSec()
-    val b = Bench.runPipeline(spark, nBases)
-    val c2 = processCpuSec()
-    val res =
-      if (a._2 <= b._2) (a._1, a._2, c1 - c0) else (b._1, b._2, c2 - c1)
-    spark.stop()
-    // allow a fresh context with a different master
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    res
+  /** A fresh session at `cores`: warm-up, then best-of-2 pipeline runs;
+    * the process CPU of the best run is the contention-independent work
+    * measure. */
+  private def once(cores: Int, nBases: Long, warmBases: Long) = {
+    val spark = Measure.session(cores, extra = Measure.SmallSplits)
+    Measure.bestOf(2, Bench.runPipeline(spark, warmBases))(
+      Bench.runPipeline(spark, nBases))
   }
 
   def main(args: Array[String]): Unit = {
@@ -50,26 +25,23 @@ object BenchScaling {
     val n = args.lift(1).map(_.toInt).getOrElse(8)
     val rounds = args.lift(2).map(_.toInt).getOrElse(2)
     val warm = math.max(nBases / 10, 1000)
-    // interleave the two legs and take the per-leg minimum: the sandbox
-    // host's load drifts on the minutes scale, and alternation keeps a
-    // noise spike from landing on only one leg
-    val runs = (1 to rounds).map { _ =>
-      (once(n, nBases, warm), once(4 * n, nBases, warm))
-    }
-    val (files1, t1, cpu1) = runs.map(_._1).minBy(_._2)
-    val (files2, t2, cpu2) = runs.map(_._2).minBy(_._2)
-    require(files1 == files2)
-    val thrN = files1 / t1
-    val thr4N = files2 / t2
+    // interleave the two legs and take the per-leg best: the sandbox
+    // host's load drifts on the minutes scale
+    val (legN, leg4N) = Measure.interleaved(rounds,
+      () => once(n, nBases, warm), () => once(4 * n, nBases, warm))
+    val (a, b) = (legN.minBy(_.wallSec), leg4N.minBy(_.wallSec))
+    require(a.result == b.result)
+    val thrN = a.result / a.wallSec
+    val thr4N = b.result / b.wallSec
     val eff = thr4N / (4.0 * thrN)
     // work efficiency: total CPU burned at 4N vs N for identical output —
     // ≈1.0 means no parallel overhead, i.e. the job scales on
     // uncontended hardware even when shared-host wall clock is noisy
-    val workEff = cpu1 / cpu2
+    val workEff = a.cpuSec / b.cpuSec
     println(
-      f"""{"metric":"scaling_efficiency","value":$eff%.4f,"files":$files1,""" +
-      f""""coresN":$n,"cores4N":${4 * n},"secN":$t1%.2f,"sec4N":$t2%.2f,""" +
+      f"""{"metric":"scaling_efficiency","value":$eff%.4f,"files":${a.result},""" +
+      f""""coresN":$n,"cores4N":${4 * n},"secN":${a.wallSec}%.2f,"sec4N":${b.wallSec}%.2f,""" +
       f""""filesPerSecN":$thrN%.1f,"filesPerSec4N":$thr4N%.1f,""" +
-      f""""cpuSecN":$cpu1%.1f,"cpuSec4N":$cpu2%.1f,"workEfficiency":$workEff%.4f}""")
+      f""""cpuSecN":${a.cpuSec}%.1f,"cpuSec4N":${b.cpuSec}%.1f,"workEfficiency":$workEff%.4f}""")
   }
 }

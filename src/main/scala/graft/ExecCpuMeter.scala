@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{ListenerBusDrain, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Sums per-task `executorCpuTime` via a SparkListener — CPU actually
@@ -16,25 +16,13 @@ final class ExecCpuMeter(sc: SparkContext) {
       if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
   })
 
-  /** The counter once the async listener bus has drained. Listener
-    * events arrive AFTER the action returns; require THREE consecutive
-    * quiet 150 ms samples (one quiet sample can coincide with a driver
-    * GC pause mid-drain) before trusting the value, or trailing
-    * onTaskEnd events from one run leak into the next run's window.
+  /** The counter once every task-end event posted before the call has
+    * reached the listener: listener events arrive after the action
+    * returns, so a read without the drain would leak one run's trailing
+    * tasks into the next run's window.
     */
   def settledNs(): Long = {
-    var quiet = 0
-    var prev = cpuNs.get
-    var spins = 0
-    while (quiet < 3 && spins < 100) {
-      Thread.sleep(150)
-      val v = cpuNs.get
-      if (v == prev) quiet += 1 else { quiet = 0; prev = v }
-      spins += 1
-    }
-    if (quiet < 3)
-      System.err.println("[cpumeter] WARNING: listener bus still " +
-        "draining after 15s; CPU attribution may bleed between runs")
-    prev
+    ListenerBusDrain(sc)
+    cpuNs.get
   }
 }

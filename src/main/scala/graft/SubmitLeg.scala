@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Measure
 
 /** One `spark-submit` scaling leg — the literal reading of the north
   * rule's "run via spark-submit on a multi-executor cluster at two
@@ -18,23 +18,16 @@ object SubmitLeg {
   def main(args: Array[String]): Unit = {
     val nBases = args.headOption.map(_.toLong).getOrElse(10000L)
     val warm = math.max(nBases / 10, 1000L)
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate() // master + partitions + memory all from spark-submit
-    spark.sparkContext.setLogLevel("WARN")
+    // master, partitions and memory come from spark-submit, whose
+    // settings win over the session defaults
+    val spark = Measure.session(2)
     val meter = new ExecCpuMeter(spark.sparkContext)
-    Bench.runPipeline(spark, warm) // JIT/codegen warm-up in every executor
-    val c0 = meter.settledNs()
-    val a = Bench.runPipeline(spark, nBases)
-    val c1 = meter.settledNs()
-    val b = Bench.runPipeline(spark, nBases)
-    val c2 = meter.settledNs()
-    val (files, sec, cpu) =
-      if (a._2 <= b._2) (a._1, a._2, (c1 - c0) / 1e9)
-      else (b._1, b._2, (c2 - c1) / 1e9)
+    // the warm-up JITs and codegens in every executor
+    val best = Measure.bestOf(2, Bench.runPipeline(spark, warm),
+      () => meter.settledNs() / 1e9)(Bench.runPipeline(spark, nBases))
     println(
-      f"""{"metric":"submit_leg","files":$files,"sec":$sec%.3f,""" +
-      f""""execCpuSec":$cpu%.2f,"master":"${spark.sparkContext.master}"}""")
+      f"""{"metric":"submit_leg","files":${best.result},"sec":${best.wallSec}%.3f,""" +
+      f""""execCpuSec":${best.cpuSec}%.2f,"master":"${spark.sparkContext.master}"}""")
     spark.stop()
   }
 }

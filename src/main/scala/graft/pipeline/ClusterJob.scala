@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row,
   SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.CorpusFile
+import graft.obs.Measure
 
 /** The spark-submit job of the north rule: corpus table in → checkpointed
   * stage tables out (signatures, chunks, containers, recipe, pairs,
@@ -439,11 +440,10 @@ object ClusterJob {
     val label = s"b$backupId"
     val (fr, base, local) =
       if (storeStages.forall(t => TableIO.committed(s"$root/$t"))) {
-        def committed(t: String) = spark.read.format(TableIO.Format)
-          .load(s"$root/$t").drop("_lineage")
-        val fr = committed("final_recipe")
+        val fr = load(spark, root, "final_recipe", TracePipeline.RecipeSchema)
         val sparseCount =
-          if (settings.rewrite.enableHar) committed("har_sparse").count()
+          if (settings.rewrite.enableHar)
+            load(spark, root, "har_sparse", "containerId BIGINT").count()
           else 0L
         (fr, TracePipeline.recipeStats(backupId, fr, nextCid)
           .copy(sparse_containers = sparseCount), None)
@@ -682,15 +682,10 @@ object ClusterJob {
           java.nio.charset.StandardCharsets.UTF_8))
       }
     val cfg = settings.fold(DedupConfig())(_.dedupConfig)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_CPUS and SPARK_GRAFT_MASTER serve sbt runs; under
+    // spark-submit its --master and --conf settings win
+    val spark = Measure.session(Measure.envCpus(8),
+      extra = sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toMap)
     import spark.implicits._
     def corpus(path: String) = spark.read.parquet(path).as[CorpusFile]
     val report: Any = mode match {

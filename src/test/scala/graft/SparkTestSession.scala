@@ -2,18 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.obs.Measure
+
 /** One shared local session for all suites (sbt forks a single test JVM). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Measure.session(4, extra = Map(
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.shuffle.partitions" -> "8"))
 }

@@ -81,6 +81,11 @@ class JobBudgetSpec extends AnyFunSuite {
       12)
     within("expire", jobsOf(ClusterJob.expire(
       spark, Seq(b1, b2), "b1", ex, "jb-ex", 4096L)), 21)
+    // every store stage is committed: the call reads its tables back
+    // with declared schemas, so no footer-inference job runs
+    within("resumed chained backup", jobsOf(ClusterJob.backup(
+      corpusOf(files.drop(n / 3)), b2, "jb-b2", settings, Some(b1), 4096L)),
+      11)
     within("chained backup, distributed store step", jobsOf(
       ClusterJob.backup(corpusOf(files.drop(n / 3)), freshDir(), "jb-b2d",
         settings, Some(b1), 4096L, localCap = 0)), 39)

@@ -1,22 +1,34 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Physical-plan inspection front-end over [[PlanAudit]]: prints
-  * PushedFilters / ReadSchema pruning / broadcast joins / whole-stage
-  * codegen spans for the headline queries, then exits nonzero if any
-  * plan violates the audit rules (the same rules `PlanAuditSpec`
-  * enforces inside `sbt test`).
-  * Run: sbt "Test/runMain graft.tools.ExplainPlans"
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.obs.Measure
+
+/** Physical-plan inspection.
+  *
+  * `ExplainPlans [sfDir]` prints the [[PlanAudit]] plans of the headline
+  * queries (PushedFilters / ReadSchema pruning / broadcast joins /
+  * whole-stage codegen spans), then exits nonzero if any plan violates the
+  * audit rules (the same rules `PlanAuditSpec` enforces inside `sbt test`).
+  *
+  * `ExplainPlans <suffix> <sfDir> <name>...` writes each named query's
+  * `explain("formatted")` to plans/r06/<name>_<suffix>.txt — the
+  * round-6 optimization evidence files. Its session mirrors graft.Bench
+  * (local[SPARK_GRAFT_CPUS], default 32, as many shuffle partitions, AQE
+  * on, 8 MiB splits), so the captured plans are the benched plans.
+  *
+  * Run: sbt "Test/runMain graft.tools.ExplainPlans [args]"
   */
 object ExplainPlans {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.length >= 3) dump(args(0), args(1), args.drop(2).toSeq)
+    else audit(args)
+
+  private def audit(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session(4, "ERROR")
     val audits = PlanAudit.auditAll(spark, dir)
     for (a <- audits) {
       println(s"\n===== ${a.name} =====")
@@ -30,5 +42,19 @@ object ExplainPlans {
       sys.exit(1)
     }
     println(s"\nplan audit clean: ${audits.size} queries")
+  }
+
+  private def dump(suffix: String, sfDir: String, names: Seq[String]): Unit = {
+    val spark = Measure.session(Measure.envCpus(32),
+      "ERROR", Measure.SmallSplits)
+    val outDir = Paths.get("plans", "r06")
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      val plan = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(FormattedMode)
+      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), plan)
+      println(s"[plandump] wrote ${name}_$suffix.txt (${plan.length} chars)")
+    }
+    spark.stop()
   }
 }

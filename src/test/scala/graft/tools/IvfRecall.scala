@@ -1,14 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.obs.Measure
 import graft.operators.Similarity
 object IvfRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session(8, "ERROR")
     import spark.implicits._
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val brute = graft.Queries.all("e_ann_topk")(spark, dir)

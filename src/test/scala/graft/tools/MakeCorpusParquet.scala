@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Measure
 
 /** Scratch: write a small CorpusFile parquet (two overlapping snapshots)
   * for driving the ClusterJob CLI by hand.
@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
 object MakeCorpusParquet {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_corpus")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Spark's default partition count, which this tool has always run with
+    val spark = Measure.session(4, "ERROR",
+      Map("spark.sql.shuffle.partitions" -> "200"))
     val all = graft.corpus.CorpusGen.generateLocal(nBases = 30).map(_._1)
       .sortBy(f => (f.repo, f.path, f.commit))
     val n = all.size

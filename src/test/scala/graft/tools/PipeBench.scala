@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Measure
 
 /** Isolated pipeline-leg timing: fresh session, warm-up, best-of-K —
   * exactly the Bench methodology, without the 3-minute query sweep.
@@ -9,27 +9,16 @@ import org.apache.spark.sql.SparkSession
 object PipeBench {
   def main(args: Array[String]): Unit = {
     val nBases = args.headOption.map(_.toLong).getOrElse(20000L)
-    val cores = args.lift(1).getOrElse("32")
+    val cores = args.lift(1).map(_.toInt).getOrElse(32)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    graft.Bench.runPipeline(spark, math.max(nBases / 10, 1000)) // warm-up
-    val times = (0 until reps).map { _ =>
-      val c0 = os.getProcessCpuTime
+    val spark = Measure.session(cores, extra = Measure.SmallSplits)
+    val best = Measure.bestOf(reps,
+        graft.Bench.runPipeline(spark, math.max(nBases / 10, 1000))) {
       val (n, s) = graft.Bench.runPipeline(spark, nBases)
-      val cpu = (os.getProcessCpuTime - c0) / 1e9
-      println(f"[pipe] $n files ${s}%.2f s wall  $cpu%.1f s cpu  ${n / s}%.0f files/s")
-      (s, cpu)
+      println(f"[pipe] $n files ${s}%.2f s wall  ${n / s}%.0f files/s")
+      (n, s)
     }
-    println(f"[pipe] best wall ${times.map(_._1).min}%.2f s, min cpu ${times.map(_._2).min}%.1f s over $reps reps")
+    println(f"[pipe] best wall ${best.wallSec}%.2f s, cpu of that run ${best.cpuSec}%.1f s over $reps reps")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Measure
 
 /** Smoke every registered query at every sf dir (driver runs different
   * sfs per phase). Run: sbt "Test/runMain graft.tools.SmokeAllSf"
@@ -9,11 +9,7 @@ import org.apache.spark.sql.SparkSession
 object SmokeAllSf {
   def main(args: Array[String]): Unit = {
     val filter = args.headOption.getOrElse("")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session(16, "ERROR")
     var bad = 0
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"
