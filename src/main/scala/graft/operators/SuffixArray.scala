@@ -2,16 +2,15 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.pipeline.DedupPipeline
 
 /** Distributed GENERALIZED SUFFIX ARRAY by prefix doubling — the literal
   * "suffix-array substring matching" structure (Lee et al. 2021 build it
   * single-node per shard; Flick & Aluru, SC'15, give the distributed
   * sort-based formulation this follows), re-expressed Spark-first: no
   * suffix string is ever materialized or shuffled — only (doc, pos,
-  * rank) triples — and every global rank is a two-phase range-partition
-  * + O(partitions) offset broadcast (the
-  * [[graft.pipeline.DedupPipeline.streamPrefix]] pattern inlined over
-  * sorted partitions), never a global window.
+  * rank) triples — and every global rank is one run count of
+  * [[graft.pipeline.DedupPipeline.segmentedScan]], never a global window.
   *
   * Semantics: ranks all suffixes of all documents in one global
   * lexicographic order (codepoint order — identical to UTF-8 byte order,
@@ -21,30 +20,31 @@ import org.apache.spark.sql.functions._
   * suffix)` — which is how DuckDB replays the whole structure for the
   * `d_suffix_rank` oracle.
   *
-  * Algorithm: the base rank orders by the first 2·⌊63/bits⌋ codepoints —
-  * bits = ⌈log2(maxCp+2)⌉, codepoints packed fixed-width into the two
-  * 63-bit sort keys (see [[explodePacked]]; r6 — 18 codepoints on an
-  * ASCII corpus, replacing the one-codepoint base plus four doubling
-  * rounds); each later round re-keys
-  * every suffix by (rank_cover(pos), rank_cover(pos+s) or 0) with shift
-  * s = min(cover, limit−cover) — 0 for "suffix ends within s" sorts
-  * first, shorter-prefix-first — and re-densifies; once cover ≥ limit
-  * ranks order by the full suffix (the variable shift lands on `limit`
-  * exactly, so bounded prefixRanks tie on true L-prefix equality). Ties
-  * that survive all rounds are genuinely identical suffixes. Two early
-  * exits, both read off the rank pass's own stats (no extra job): all
-  * ranks distinct, or a FIXED POINT — the distinct-rank count did not
-  * grow in a round, so no class split occurred; equal keys chain
-  * r(p+m·s) = r(q+m·s) for every m, which pins every codepoint of both
-  * suffixes, hence no class can ever split again.
+  * Algorithm: the stats pass that finds the longest document also finds
+  * the largest codepoint, which fixes a fixed-width packing ((cp+1) in
+  * bits = ⌈log2(maxCp+2)⌉, ⌊63/bits⌋ codepoints per 63-bit sort key,
+  * 0-padded past the suffix end so a suffix that is a prefix of a longer
+  * one sorts first; [[explodePacked]]). The base rank orders by the first
+  * c1+c2 codepoints the two keys hold: 18 on an ASCII corpus, 6 on an
+  * astral one, so prefixRanks(16) on ASCII needs no doubling round. Each
+  * later round re-keys every suffix by (rank_cover(pos), rank_cover(pos+s)
+  * or 0) with shift s = min(cover, limit−cover) — 0 for "suffix ends
+  * within s" sorts first — and re-densifies, so the loop lands on `limit`
+  * exactly (bounded prefixRanks tie on true L-prefix equality) and ranks
+  * order by the full suffix once cover ≥ limit. Ties that survive all
+  * rounds are genuinely identical suffixes. Two early exits, both read
+  * off the scan's summary totals (no extra job): all ranks distinct, or a
+  * FIXED POINT — the distinct-rank count did not grow in a round, so no
+  * class split occurred; equal keys chain r(p+m·s) = r(q+m·s) for every m
+  * (s ≤ cover), which pins every codepoint of both suffixes, hence no
+  * class can ever split again.
   *
   * Scale shape: the initial explode is one 24-byte row per text
   * codepoint (the suffix array is Θ(corpus length) by definition — the
   * same inherent volume [[graft.queries.SpanQueries.dDupSpans]] documents); each
-  * round is ONE doc-keyed hash join (the rank(pos+k) shift) + ONE range
-  * partition with in-partition sort whose two mapPartitions passes
-  * assign dense ranks from broadcast per-partition offsets (equal keys
-  * land in one partition under RangePartitioner, so offsets are exact).
+  * round is ONE doc-keyed hash join (the rank(pos+k) shift) + ONE
+  * segmented scan (range partition, in-partition sort, a summary job
+  * and a lazy rank pass from broadcast per-partition offsets).
   * Per-round lineage is truncated by localCheckpoint (the
   * iterative-join rule [[graft.pipeline.ConnectedComponents]] follows;
   * blocks are MEMORY_AND_DISK, so storage pressure spills rather than
@@ -79,28 +79,8 @@ object SuffixArray {
     doubling(docs, L)
   }
 
-  /** The doubling loop, covering min(bound, maxLen) codepoints.
-    *
-    * r6 optimization, two parts, both order-preserving so the final dense
-    * ranks are UNCHANGED:
-    *  - ADAPTIVE WIDE BASE: the stats pass that finds the longest
-    *    document also finds the largest codepoint, which fixes a
-    *    fixed-width packing — (cp+1) in bits = ⌈log2(maxCp+2)⌉, 63/bits
-    *    codepoints per 63-bit sort key, 0-padded past the suffix end so a
-    *    shorter suffix that is a prefix of a longer one still sorts
-    *    first. Lexicographic order on the two packed longs equals
-    *    codepoint order, so an ASCII corpus (7 bits/cp → 9 cps/key) gets
-    *    rank_18 from ONE range-sort — the former one-codepoint base plus
-    *    FOUR doubling rounds — and even an astral-codepoint corpus
-    *    (21 bits) still gets rank_6. prefixRanks(16) on ASCII needs ZERO
-    *    doubling rounds (c1 = 9, c2 = 7 lands exactly).
-    *  - EXACT LANDING: a round may shift by any s ≤ cover (key
-    *    (rank_cover(pos), rank_cover(pos+s)) orders by the first cover+s
-    *    codepoints), so the loop lands on `limit` exactly instead of
-    *    overshooting to the next power of two. The fixed-point exit stays
-    *    sound for s < cover: equal keys chain r(p+m·s) = r(q+m·s) for all
-    *    m, which pins every codepoint of both suffixes.
-    */
+  /** The doubling loop of the object doc, covering min(bound, maxLen)
+    * codepoints. */
   private def doubling(docs: DataFrame, bound: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -194,59 +174,18 @@ object SuffixArray {
       .toDF("doc_id", "pos", "_k1", "_k2")
   }
 
-  /** Dense global rank of (_k1, _k2), ascending: range-partition + sort
-    * within partitions (equal keys share a partition, so per-partition
-    * distinct-key counts compose exactly), one checkpointed
-    * materialization, then a stats pass (per-partition rows + distinct
-    * keys → broadcast offsets — also the loop's convergence signal,
-    * free) and a lazy map pass assigning `srank`. Returns
-    * ((doc_id, pos, srank), total distinct keys, total rows).
+  /** Dense global rank of (_k1, _k2), ascending: one segmented scan
+    * counting key changes over the single stream of all rows, into a
+    * fixed `spark.sql.shuffle.partitions` ranges. The summary job's totals
+    * are the loop's convergence signal, free. Returns ((doc_id, pos,
+    * srank), total distinct keys, total rows).
     */
   private[graft] def denseRankSorted(keyed: DataFrame): (DataFrame, Long, Long) = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    val p = spark.sessionState.conf.numShufflePartitions
-    // The range-partition id is FROZEN into the checkpointed rows
-    // (spark_partition_id() evaluated at materialization, above the
-    // sort): the lazy rank pass below reads it from the row, never from
-    // TaskContext — a downstream coalesce() merges parent partitions
-    // into one task and would otherwise feed every parent offset 0.
-    // LAZY localCheckpoint (r6): the stats pass below is the first action
-    // and scans every partition exactly once, so it materializes the
-    // checkpoint blocks AND collects the stats in ONE job — the eager
-    // form paid a separate materialization job per doubling round.
-    val sorted = keyed
-      .select(col("doc_id"), col("pos"), col("_k1"), col("_k2"))
-      .repartitionByRange(p, col("_k1"), col("_k2"))
-      .sortWithinPartitions(col("_k1"), col("_k2"))
-      .withColumn("_pid", spark_partition_id().cast("long"))
-      .as[(Long, Long, Long, Long, Long)]
-      .localCheckpoint(eager = false)
-    val stats = sorted.mapPartitions { it =>
-      var pid = -1L; var n = 0L; var d = 0L
-      var pk1 = 0L; var pk2 = 0L; var first = true
-      while (it.hasNext) {
-        val r = it.next(); n += 1; pid = r._5
-        if (first || r._3 != pk1 || r._4 != pk2) { d += 1; first = false }
-        pk1 = r._3; pk2 = r._4
-      }
-      if (n == 0) Iterator.empty else Iterator.single((pid, n, d))
-    }.collect().sortBy(_._1)
-    var cum = 0L; var rowsTotal = 0L
-    val offsets = stats.map { case (pid, n, d) =>
-      val o = pid -> cum; cum += d; rowsTotal += n; o
-    }.toMap
-    val bc = spark.sparkContext.broadcast(offsets)
-    val ranked = sorted.mapPartitions { it =>
-      var curPid = -1L; var rank = 0L
-      var pk1 = 0L; var pk2 = 0L; var first = true
-      it.map { r =>
-        if (r._5 != curPid) { curPid = r._5; rank = bc.value(curPid); first = true }
-        if (first || r._3 != pk1 || r._4 != pk2) { rank += 1; first = false }
-        pk1 = r._3; pk2 = r._4
-        (r._1, r._2, rank)
-      }
-    }.toDF("doc_id", "pos", "srank")
-    (ranked, cum, rowsTotal)
+    val (ranked, rows, distinct) = DedupPipeline.segmentedScan(
+      keyed.select(col("doc_id"), col("pos"), col("_k1"), col("_k2")),
+      None, Seq("_k1", "_k2"),
+      Some(keyed.sparkSession.sessionState.conf.numShufflePartitions),
+      DedupPipeline.RunCount(Seq("_k1", "_k2"), "_new", "srank"))
+    (ranked.select(col("doc_id"), col("pos"), col("srank")), distinct, rows)
   }
 }

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import graft.chunking.{ChunkerConfig, Chunkers}
 import graft.corpus.CorpusFile
 import graft.functions.Hash64
@@ -53,13 +55,6 @@ final case class UniqueChunk(fp: String, size: Int, repo: String,
     path: String, commit: String, chunkIdx: Int)
 
 final case class PackedChunk(fp: String, size: Int, containerId: Long)
-
-/** Per-partition boundary summary of [[DedupPipeline.streamRuns]] —
-  * top-level (not nested/private) so the encoder stays codegen-friendly.
-  */
-final case class RunsPart(pid: Int, firstStream: String,
-    firstChain: Long, runsFirst: Long, lastStream: String,
-    lastChain: Long, runsLast: Long)
 
 /** Spark-native dedup + near-dup clustering pipeline (SURVEY.md §7.1).
   *
@@ -205,17 +200,10 @@ object DedupPipeline {
 
   /** Recipe with stream identity and per-stream sequence — the input
     * contract for the rewrite/restore analytics (stream = repo; order =
-    * (path, commit, chunkIdx) within the stream).
-    *
-    * The per-stream rank is TWO-PHASE DISTRIBUTED (range-partition on the
-    * full ordering, per-(partition, repo) counts, broadcast prefix
-    * offsets: [[streamPrefix]] of 1s), never a per-repo window: a
-    * mega-repo with 10^9 chunks would funnel its whole stream through
-    * one window-sort task. Repos are contiguous under the range
-    * partitioning, so each partition carries only a handful of distinct
-    * repo offsets and the driver-side count exchange is O(partitions).
-    * The result is localCheckpoint-materialized so the sampled range
-    * boundaries the offsets were computed against can be freed safely.
+    * (path, commit, chunkIdx) within the stream). The per-stream rank is
+    * [[streamPrefix]] of 1s, never a per-repo window: a mega-repo with
+    * 10^9 chunks would funnel its whole stream through one window-sort
+    * task.
     */
   def streamRecipe(rec: DataFrame): DataFrame =
     streamPrefix(rec.withColumn("one", lit(1L)),
@@ -225,22 +213,9 @@ object DedupPipeline {
       .drop("one", "pre")
 
   /** Exclusive per-stream running prefix sum of `valueCol` (a bigint
-    * column) over rows ordered by `orderCols` within `streamCol`, added
-    * as column `out` — TWO-PHASE DISTRIBUTED: range-partition on the full
-    * ordering, per-(partition, stream) totals, broadcast prefix offsets,
-    * one running-sum map. Never a per-stream window: a mega-stream with
-    * 10^9 rows would funnel one window-sort task. Streams are contiguous under the range
-    * partitioning, so each partition carries only a handful of distinct
-    * stream offsets and the driver exchange is O(partitions). The SORTED
-    * input is localCheckpoint-materialized inside the counts job
-    * (partition ids frozen
-    * into the rows) and the offset pass stays LAZY on top of it — the
-    * offsets can never drift from the blocks they were computed against,
-    * and the data is written once, not twice (r6). Stream keys may be
-    * any atomic type (grouped by their string rendering, injective within
-    * one column type) but must be non-null (enforced loudly); `valueCol`
-    * must be LongType (validated up front); values may be any sign — only
-    * exactly-zero offsets are elided (they are the lookup default).
+    * column, values of any sign) over rows ordered by `orderCols` within
+    * `streamCol`, added as column `out`: the running-sum fold of
+    * [[segmentedScan]], never a per-stream window.
     */
   private[graft] def streamPrefix(df: DataFrame, streamCol: String,
       orderCols: Seq[String], valueCol: String, out: String): DataFrame =
@@ -283,222 +258,214 @@ object DedupPipeline {
   }
 
   /** [[streamPrefix]] plus the sum of `valueCol` over ALL rows, which its
-    * counts job collects anyway (each partition reports its own total), so
+    * summary job collects anyway (each partition reports its own total), so
     * a caller that needs the grand total pays no query for it. */
   private[graft] def streamPrefixTotal(df: DataFrame, streamCol: String,
       orderCols: Seq[String], valueCol: String,
       out: String): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    require(df.schema(valueCol).dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"streamPrefix: $valueCol must be LongType, " +
-        s"got ${df.schema(valueCol).dataType}")
-    val sortCols = (streamCol +: orderCols).map(col)
-    // ONE eager materialization (r6: formerly persist + a SECOND full
-    // checkpoint write of the result — the data was written and re-read
-    // twice). The range-partition id is FROZEN into the checkpointed rows
-    // (the SuffixArray.denseRankSorted pattern): the lazy offset pass
-    // below reads it from the row, never from TaskContext — a downstream
-    // coalesce() merges parent partitions into one task and would
-    // otherwise feed every parent offset 0.
-    val ordered = df.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_spfx_pid", org.apache.spark.sql.functions.spark_partition_id())
-      .localCheckpoint(eager = false) // the counts pass below is the
-      // first action and scans every partition once: it materializes the
-      // blocks AND collects the boundary sums in ONE job (r6)
-    val sIdx = ordered.schema.fieldIndex(streamCol)
-    val vIdx = ordered.schema.fieldIndex(valueCol)
-    val pIdx = ordered.schema.fieldIndex("_spfx_pid")
-    require(pIdx == ordered.schema.length - 1,
-      "streamPrefix: _spfx_pid must be the last column")
-    // Streams are CONTIGUOUS under the range partitioning, so only a
-    // partition's FIRST and LAST stream can cross a partition boundary —
-    // emitting just those two keeps the driver exchange and the broadcast
-    // at O(partitions) even with millions of single-partition streams
-    // (whose base offset is 0 and needs no entry).
-    val counts = ordered.mapPartitions { it =>
-      var pid = -1
-      var firstStream: String = null; var firstSum = 0L
-      var curStream: String = null; var curSum = 0L
-      var partTotal = 0L
-      it.foreach { r =>
-        val k0 = r.get(sIdx); val v = r.getLong(vIdx)
-        require(k0 != null, s"streamPrefix: null $streamCol key unsupported")
-        val k = k0.toString
-        pid = r.getInt(pIdx)
-        partTotal += v
-        if (curStream == null) { curStream = k; curSum = v }
-        else if (k == curStream) curSum += v
-        else {
-          if (firstStream == null) { firstStream = curStream; firstSum = curSum }
-          curStream = k; curSum = v
-        }
-      }
-      // the partition total rides on the partition's first row only
-      if (curStream == null) Iterator.empty
-      else if (firstStream == null)
-        Iterator((pid, curStream, curSum, partTotal))
-      else Iterator((pid, firstStream, firstSum, partTotal),
-        (pid, curStream, curSum, 0L))
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.STRING,
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)).collect()
-    val offsets: Map[Int, Map[String, Long]] = {
-      val m = scala.collection.mutable.Map
-        .empty[Int, scala.collection.mutable.Map[String, Long]]
-      counts.groupBy(_._2).foreach { case (stream, rows) =>
-        var cum = 0L
-        rows.sortBy(_._1).foreach { case (pid, _, n, _) =>
-          if (cum != 0) // zero offsets are the getOrElse default
-            m.getOrElseUpdate(pid, scala.collection.mutable.Map.empty)(stream) = cum
-          cum += n
-        }
-      }
-      m.map { case (k, v) => (k, v.toMap) }.toMap
-    }
-    val offB = spark.sparkContext.broadcast(offsets)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      ordered.schema.dropRight(1)) // drop _spfx_pid
-      .add(out, org.apache.spark.sql.types.LongType, nullable = false)
-    // LAZY offset pass: rows are sorted by (stream, order) within each
-    // frozen pid, so the running sum resets exactly at (pid, stream) run
-    // boundaries — no per-row map updates, no second materialization.
-    val prefixed = ordered.mapPartitions { it =>
-      val off = offB.value
-      var curPid = -1; var curKey: String = null; var running = 0L
-      it.map { r =>
-        val pid = r.getInt(pIdx)
-        val k = String.valueOf(r.get(sIdx))
-        if (pid != curPid || k != curKey) {
-          curPid = pid; curKey = k
-          running = off.getOrElse(pid, Map.empty[String, Long]).getOrElse(k, 0L)
-        }
-        val before = running
-        running += r.getLong(vIdx)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1) :+ before)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    (prefixed, counts.map(_._4).sum)
+    val (prefixed, _, total) = segmentedScan(df, Some(streamCol), orderCols,
+      None, RunningSum(valueCol, out))
+    (prefixed, total)
   }
 
   /** Per-stream consecutive-run detection over rows ordered by
     * `orderCols` within `streamCol`: adds `newRunOut` (boolean — the
     * row's `chainCol` differs from the previous row's within the stream,
     * or the row opens the stream) and `runIdOut` (1-based dense run
-    * counter per stream). This is the distributed replacement for
-    * `lag(chain)` + `sum(newRun)` over `Window.partitionBy(stream)`:
-    * range-partition on the full ordering, ONE per-partition boundary
-    * summary (first/last stream, boundary chain values, run counts —
-    * O(partitions) rows to the driver), a driver fold chaining boundary
-    * streams in partition order, one broadcast of per-partition
-    * (baseRuns, continuesRun) pairs, one running map. A mega-stream with
-    * 10^9 rows never funnels one window-sort task. Streams are contiguous
-    * under the range partitioning, so only a partition's FIRST stream can
-    * continue a run from the previous partition. `chainCol` must be
-    * LongType (validated); stream keys non-null, any atomic type. The
-    * SORTED input is localCheckpoint-materialized inside the summaries
-    * job with frozen
-    * partition ids and the run pass stays lazy, like [[streamPrefix]].
+    * counter per stream). The run-count fold of [[segmentedScan]] over
+    * one bigint key: the distributed form of `lag(chain)` + `sum(newRun)`
+    * over `Window.partitionBy(stream)`, whose one task would sort a whole
+    * mega-stream.
     */
   private[graft] def streamRuns(df: DataFrame, streamCol: String,
       orderCols: Seq[String], chainCol: String, newRunOut: String,
-      runIdOut: String): DataFrame = {
-    val spark = df.sparkSession
-    require(df.schema(chainCol).dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"streamRuns: $chainCol must be LongType, " +
-        s"got ${df.schema(chainCol).dataType}")
-    val sortCols = (streamCol +: orderCols).map(col)
-    // ONE eager materialization with frozen partition ids — see
-    // [[streamPrefix]] (r6: formerly persist + a second full checkpoint
-    // write of the result).
-    val ordered = df.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_srun_pid", org.apache.spark.sql.functions.spark_partition_id())
-      .localCheckpoint(eager = false) // lazy: the summaries pass below
-      // materializes the blocks in the same job (see streamPrefix)
-    val sIdx = ordered.schema.fieldIndex(streamCol)
-    val cIdx = ordered.schema.fieldIndex(chainCol)
-    val pIdx = ordered.schema.fieldIndex("_srun_pid")
-    require(pIdx == ordered.schema.length - 1,
-      "streamRuns: _srun_pid must be the last column")
-    val summaries = ordered.mapPartitions { it =>
-      var pid = -1
-      var firstStream: String = null; var firstChain = 0L; var runsFirst = 0L
-      var curStream: String = null; var prevChain = 0L; var runs = 0L
-      var inFirst = true
-      it.foreach { r =>
-        val k0 = r.get(sIdx)
-        require(k0 != null, s"streamRuns: null $streamCol key unsupported")
-        val k = k0.toString
-        val c = r.getLong(cIdx)
-        pid = r.getInt(pIdx)
-        if (curStream == null) {
-          firstStream = k; firstChain = c; curStream = k; runs = 1
-        } else if (k != curStream) {
-          if (inFirst) { runsFirst = runs; inFirst = false }
-          curStream = k; runs = 1
-        } else if (c != prevChain) runs += 1
-        prevChain = c
-      }
-      if (curStream == null) Iterator.empty
-      else {
-        if (inFirst) runsFirst = runs
-        Iterator.single(RunsPart(pid, firstStream,
-          firstChain, runsFirst, curStream, prevChain, runs))
-      }
-    }(org.apache.spark.sql.Encoders.product[RunsPart]).collect().sortBy(_.pid)
-    // driver fold: chain the boundary stream across partitions in pid
-    // order — state is (stream, its last chain value, its runs so far)
-    val inherited = scala.collection.mutable.Map.empty[Int, (Long, Boolean)]
-    var stStream: String = null; var stChain = 0L; var stRuns = 0L
-    summaries.foreach { p =>
-      val (base, cont) =
-        if (stStream != null && stStream == p.firstStream)
-          (stRuns, stChain == p.firstChain)
-        else (0L, false)
-      if (base != 0L || cont) inherited(p.pid) = (base, cont)
-      if (p.lastStream == p.firstStream)
-        stRuns = base + p.runsFirst - (if (cont) 1L else 0L)
-      else stRuns = p.runsLast
-      stStream = p.lastStream; stChain = p.lastChain
+      runIdOut: String): DataFrame =
+    segmentedScan(df, Some(streamCol), orderCols, None,
+      RunCount(Seq(chainCol), newRunOut, runIdOut))._1
+
+  /** A fold that [[segmentedScan]] runs along each stream: the bigint
+    * columns it reads and the columns it adds. */
+  private[graft] sealed abstract class ScanFold(val cols: Seq[String],
+      val added: Seq[StructField])
+
+  /** Exclusive running sum of the bigint column `value`, added as `out`. */
+  private[graft] final case class RunningSum(value: String, out: String)
+      extends ScanFold(Seq(value), Seq(StructField(out, LongType, false)))
+
+  /** Run count over the bigint columns `keys`: a row opens a run when it
+    * opens its stream or any key differs from the previous row's. Adds
+    * `newRunOut` (boolean) and `runIdOut` (the 1-based run id within the
+    * stream). */
+  private[graft] final case class RunCount(keys: Seq[String],
+      newRunOut: String, runIdOut: String) extends ScanFold(keys,
+    Seq(StructField(newRunOut, BooleanType, false),
+      StructField(runIdOut, LongType, false)))
+
+  /** A partition's summary: pid, rows, fold total, and its first and
+    * last stream as (key, fold from empty, first or last row's keys). */
+  private type ScanPart = (Int, Long, Long, (String, Long, Array[Long]),
+    (String, Long, Array[Long]))
+
+  /** The one distributed ordered scan, behind [[streamPrefix]],
+    * [[streamRuns]] and the suffix array's dense rank: `fold` runs along
+    * each stream (`stream` None: all rows are one stream) in `order`, as
+    * destor's sequential folds run over a backup stream
+    * (src/filter_phase.c:135-190, src/cfl_rewrite.c), never as a window
+    * whose one task sorts a whole stream. Each step runs once:
+    *  1. range-partition on (stream +: order) — into `partitions` if
+    *     given, a count adaptive execution keeps, else into the session
+    *     default, which it may coalesce — and sort within partitions;
+    *  2. freeze the partition id into the rows;
+    *  3. take a lazy localCheckpoint;
+    *  4. collect each partition's summary (the fold over its first and
+    *     its last stream, its rows and fold total) in the job that
+    *     materializes the checkpoint;
+    *  5. chain the summaries on the driver and broadcast one carry-in
+    *     per (pid, stream);
+    *  6. run a lazy per-row pass from the carry-ins.
+    * Two invariants make it exact. Equal keys share a partition under
+    * range partitioning, so streams are contiguous and only a partition's
+    * first stream can continue from the partition before: the driver gets
+    * O(partitions) rows, whatever the number of streams. The partition id
+    * is frozen: the per-row pass reads it from the row, never from
+    * TaskContext, since a downstream coalesce() runs several checkpointed
+    * partitions in one task and each would otherwise take the carry-in of
+    * the task's id. Stream keys may be any atomic type (compared by their
+    * string rendering) but not null; the fold's columns must be LongType.
+    * Returns the rows with the fold's columns added, the row count, and
+    * the fold total: the value's sum, or the number of runs.
+    */
+  private[graft] def segmentedScan(df: DataFrame, stream: Option[String],
+      order: Seq[String], partitions: Option[Int],
+      fold: ScanFold): (DataFrame, Long, Long) = {
+    fold.cols.foreach { c =>
+      val t = df.schema(c).dataType
+      require(t == LongType, s"segmentedScan: $c must be LongType, got $t")
     }
-    val inhB = spark.sparkContext.broadcast(inherited.toMap)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      ordered.schema.dropRight(1)) // drop _srun_pid
-      .add(newRunOut, org.apache.spark.sql.types.BooleanType,
-        nullable = false)
-      .add(runIdOut, org.apache.spark.sql.types.LongType, nullable = false)
-    // LAZY pass over the checkpointed blocks: "first row of a partition"
-    // is detected by the FROZEN pid changing, so the logic survives a
-    // downstream coalesce that concatenates parent partitions in order.
-    ordered.mapPartitions { it =>
-      val inh = inhB.value
-      var curPid = Int.MinValue
-      var curStream: String = null; var prevChain = 0L; var runId = 0L
-      it.map { r =>
-        val pid = r.getInt(pIdx)
-        val k = String.valueOf(r.get(sIdx))
-        val c = r.getLong(cIdx)
-        val isNew =
-          if (pid != curPid) {
-            // `cont` already encodes the chain comparison against the
-            // previous partition's LAST row (decided in the driver fold)
-            val (base, cont) = inh.getOrElse(pid, (0L, false))
-            curPid = pid; curStream = k
-            if (cont) { runId = base; false }
-            else { runId = base + 1; true }
-          } else if (k != curStream) {
-            curStream = k; runId = 1; true
-          } else if (c != prevChain) { runId += 1; true }
-          else false
-        prevChain = c
-        org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1) :+ isNew :+ runId)
+    val sum = fold.isInstanceOf[RunningSum]
+    val sortCols = (stream.toSeq ++ order).map(col)
+    val ordered = partitions
+      .fold(df.repartitionByRange(sortCols: _*))(
+        df.repartitionByRange(_, sortCols: _*))
+      .sortWithinPartitions(sortCols: _*)
+      .withColumn("_scan_pid", spark_partition_id())
+      .localCheckpoint(eager = false)
+    val width = ordered.schema.length - 1
+    require(ordered.schema.fieldIndex("_scan_pid") == width,
+      "segmentedScan: _scan_pid must be the last column")
+    val sIdx = stream.fold(-1)(ordered.schema.fieldIndex)
+    val vIdx = fold.cols.map(ordered.schema.fieldIndex).toArray
+    val parts = ordered.mapPartitions { it =>
+      val c = new ScanCursor(sum, sIdx, vIdx)
+      var pid = -1; var rows = 0L; var total = 0L
+      var first: (String, Long, Array[Long]) = null
+      var firstKeys: Array[Long] = null
+      it.foreach { r =>
+        val s = c.streamOf(r)
+        if (s != c.stream) {
+          if (c.stream != null) {
+            total += c.acc
+            if (first == null) first = (c.stream, c.acc, firstKeys)
+          }
+          c.open(s, 0L, null)
+        }
+        c.step(r)
+        if (rows == 0) { pid = r.getInt(width); firstKeys = c.keys.clone() }
+        rows += 1
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+      if (rows == 0) Iterator.empty
+      else {
+        val last = (c.stream, c.acc, c.keys.clone())
+        Iterator.single[ScanPart]((pid, rows, total + c.acc,
+          if (first == null) (c.stream, c.acc, firstKeys) else first, last))
+      }
+    }(Encoders.product[ScanPart]).collect().sortBy(_._1)
+    // the driver chain: the stream open at the end of the partitions so
+    // far, its fold state and the keys of its last row
+    val carries = scala.collection.mutable.Map.empty[Int, (Long, Array[Long])]
+    var open: String = null; var acc = 0L; var keys: Array[Long] = null
+    var rows = 0L; var total = 0L
+    parts.foreach { case (pid, n, t, (fs, fAcc, fKeys), (ls, lAcc, lKeys)) =>
+      rows += n; total += t
+      var firstAcc = fAcc
+      if (fs == open) {
+        // run count: a run that crosses the boundary is counted once
+        val continues = !sum && java.util.Arrays.equals(keys, fKeys)
+        if (continues) total -= 1
+        if (acc != 0L) carries(pid) = (acc, keys) // 0 is the default
+        firstAcc = acc + fAcc - (if (continues) 1L else 0L)
+      }
+      acc = if (ls == fs) firstAcc else lAcc
+      open = ls; keys = lKeys
+    }
+    val carryB = df.sparkSession.sparkContext.broadcast(carries.toMap)
+    val outWidth = width + fold.added.length
+    val out = ordered.mapPartitions { it =>
+      val carry = carryB.value
+      val c = new ScanCursor(sum, sIdx, vIdx)
+      var pid = Int.MinValue
+      it.map { r =>
+        val p = r.getInt(width)
+        val s = c.streamOf(r)
+        if (p != pid) {
+          pid = p
+          val (a, ks) = carry.getOrElse(p, (0L, null))
+          c.open(s, a, ks)
+        } else if (s != c.stream) c.open(s, 0L, null)
+        val v = c.step(r)
+        val row = new Array[Any](outWidth)
+        var i = 0
+        while (i < width) { row(i) = r.get(i); i += 1 }
+        if (sum) row(width) = v
+        else { row(width) = c.newRun; row(width + 1) = v }
+        new GenericRow(row): Row
+      }
+    }(Encoders.row(StructType(ordered.schema.fields.take(width) ++ fold.added)))
+    (out, rows, total)
+  }
+
+  /** One [[segmentedScan]] walk of a partition: the fold's state along
+    * the current stream. */
+  private final class ScanCursor(sum: Boolean, sIdx: Int, vIdx: Array[Int]) {
+    var stream: String = null
+    /** The running sum, or the runs so far. */
+    var acc = 0L
+    /** The previous row's keys (run count), valid when `hasKeys`. */
+    val keys = new Array[Long](if (sum) 0 else vIdx.length)
+    var hasKeys = false
+    /** Whether the last row stepped opened a run. */
+    var newRun = false
+
+    def streamOf(r: Row): String =
+      if (sIdx < 0) ""
+      else {
+        val k = r.get(sIdx)
+        require(k != null, "segmentedScan: null stream key unsupported")
+        k.toString
+      }
+
+    /** Opens stream `s` at fold state `a`, after a row with keys `ks`
+      * (null: none — the stream's first row opens a run). */
+    def open(s: String, a: Long, ks: Array[Long]): Unit = {
+      stream = s; acc = a; hasKeys = ks != null
+      if (hasKeys) System.arraycopy(ks, 0, keys, 0, keys.length)
+    }
+
+    /** Folds `r` in: the running sum before it, or its run id. */
+    def step(r: Row): Long =
+      if (sum) { val before = acc; acc += r.getLong(vIdx(0)); before }
+      else {
+        var same = hasKeys
+        var i = 0
+        while (i < keys.length) {
+          val v = r.getLong(vIdx(i))
+          if (v != keys(i)) { same = false; keys(i) = v }
+          i += 1
+        }
+        hasKeys = true; newRun = !same
+        if (newRun) acc += 1
+        acc
+      }
   }
 
   // ------------------------------------------------------------------
@@ -519,9 +486,7 @@ object DedupPipeline {
     * (hub star, O(n) pairs) — quadratic pair-gen on a mega-bucket is
     * never attempted (SURVEY.md §7.4 risk 3), yet a mega-cluster of
     * near-identical files still links through its hub and connected
-    * components recovers the whole cluster. The fold keeps O(maxBucket)
-    * state: past the cap it streams, tracking only the running min, and
-    * emits star pairs for the buffered prefix + the streamed tail.
+    * components recovers the whole cluster. The fold is [[hubStarPairs]].
     */
   def candidatePairs(features: Dataset[FileSig], cfg: DedupConfig): DataFrame = {
     val spark = features.sparkSession
@@ -539,36 +504,44 @@ object DedupPipeline {
       }
       .groupByKey(_._1)
       .flatMapGroups { (_: Long, it: Iterator[(Long, Long)]) =>
-        val ids = new scala.collection.mutable.ArrayBuffer[Long](8)
-        var overflow = false
-        while (it.hasNext && !overflow) {
-          ids += it.next()._2
-          if (ids.length > maxBucket) overflow = true
-        }
-        if (!overflow) {
-          val sorted = ids.distinct.sorted
-          for {
-            i <- sorted.indices.iterator
-            j <- (i + 1) until sorted.length
-          } yield (sorted(i), sorted(j))
-        } else {
-          // hot bucket: stream the tail with O(1) extra state, emit
-          // hub-star pairs (hub = min id of the whole bucket)
-          var hub = Long.MaxValue
-          ids.foreach(v => if (v < hub) hub = v)
-          val tail = new scala.collection.mutable.ArrayBuffer[Long](8)
-          while (it.hasNext) {
-            val v = it.next()._2
-            if (v < hub) { tail += hub; hub = v } else tail += v
-          }
-          val h = hub
-          (ids.iterator ++ tail.iterator)
-            .filter(_ != h)
-            .map(v => if (h < v) (h, v) else (v, h))
-        }
+        hubStarPairs(it.map(_._2), maxBucket)(identity)((_, _) => true)
       }
       .toDF("a", "b")
       .distinct()
+  }
+
+  /** The bounded per-bucket fold of both LSH candidate sources: the
+    * (lower id, higher id) pairs of a bucket's members whose `near` gate
+    * holds. Up to `maxBucket` members it emits every such pair. Above it
+    * the bucket is hot: it buffers the first `maxBucket + 1`, then
+    * streams the rest tracking only the running min-id hub, and emits the
+    * hub-star pairs around that hub — O(n) pairs, O(maxBucket) state.
+    * Hot buckets may repeat a pair; callers dedup.
+    */
+  private def hubStarPairs[T](it: Iterator[T], maxBucket: Int)(
+      id: T => Long)(near: (T, T) => Boolean): Iterator[(Long, Long)] = {
+    val buf = new scala.collection.mutable.ArrayBuffer[T](8)
+    while (it.hasNext && buf.length <= maxBucket) buf += it.next()
+    if (buf.length <= maxBucket) {
+      val sorted = buf.distinct.sortBy(id)
+      for {
+        i <- sorted.indices.iterator
+        j <- (i + 1) until sorted.length
+        if near(sorted(i), sorted(j))
+      } yield (id(sorted(i)), id(sorted(j)))
+    } else {
+      var hub = buf.head
+      buf.foreach(v => if (id(v) < id(hub)) hub = v)
+      val tail = new scala.collection.mutable.ArrayBuffer[T](8)
+      while (it.hasNext) {
+        val v = it.next()
+        if (id(v) < id(hub)) { tail += hub; hub = v } else tail += v
+      }
+      val h = hub; val hid = id(h)
+      (buf.iterator ++ tail.iterator)
+        .filter(v => id(v) != hid && near(h, v))
+        .map { v => val vid = id(v); if (hid < vid) (hid, vid) else (vid, hid) }
+    }
   }
 
   /** destor-preset candidate pairs — the reference's OWN similarity loop
@@ -701,9 +674,9 @@ object DedupPipeline {
     *
     * Hot buckets above cfg.shingle.maxBucket are LINEARIZED like the
     * MinHash path, not dropped: every member within the Hamming radius of
-    * the bucket's min-id hub pairs with the hub (O(n) pairs, O(maxBucket)
-    * state) — a mega-cluster of hamming-close files still links through
-    * its hub and connected components recovers the whole cluster.
+    * the bucket's min-id hub pairs with the hub ([[hubStarPairs]] with the
+    * Hamming gate) — a mega-cluster of hamming-close files still links
+    * through its hub and connected components recovers the whole cluster.
     */
   def simhashCandidates(features: DataFrame, cfg: DedupConfig): DataFrame = {
     val spark = features.sparkSession
@@ -721,36 +694,8 @@ object DedupPipeline {
     bands
       .groupByKey(_._1)
       .flatMapGroups { (_: Long, it: Iterator[(Long, Long, Long)]) =>
-        val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](8)
-        var overflow = false
-        while (it.hasNext && !overflow) {
-          val r = it.next()
-          rows += ((r._2, r._3))
-          if (rows.length > maxBucket) overflow = true
-        }
-        if (!overflow) {
-          val sorted = rows.distinct.sortBy(_._1)
-          for {
-            i <- sorted.indices.iterator
-            j <- (i + 1) until sorted.length
-            if Shingles.hamming(sorted(i)._2, sorted(j)._2) <= radius
-          } yield (sorted(i)._1, sorted(j)._1)
-        } else {
-          // hot bucket: stream the tail with O(1) extra state, emit
-          // hub-star pairs gated by the Hamming radius vs the hub
-          var hub: (Long, Long) = rows.head
-          rows.foreach(r => if (r._1 < hub._1) hub = r)
-          val tail = new scala.collection.mutable.ArrayBuffer[(Long, Long)](8)
-          while (it.hasNext) {
-            val r = it.next()
-            val v = (r._2, r._3)
-            if (v._1 < hub._1) { tail += hub; hub = v } else tail += v
-          }
-          val h = hub
-          (rows.iterator ++ tail.iterator)
-            .filter(v => v._1 != h._1 && Shingles.hamming(h._2, v._2) <= radius)
-            .map(v => if (h._1 < v._1) (h._1, v._1) else (v._1, h._1))
-        }
+        hubStarPairs(it.map(r => (r._2, r._3)), maxBucket)(_._1)(
+          (x, y) => Shingles.hamming(x._2, y._2) <= radius)
       }
       .toDF("a", "b")
       .distinct()
@@ -762,13 +707,12 @@ object DedupPipeline {
 
   /** Join candidate pairs back to per-file shingle sets and keep pairs
     * with exact Jaccard ≥ τ. Two shuffles (one per side); the shingle
-    * arrays are the only payload moved.
-    */
-  /** Hub-star linearization makes the `a` join key deliberately hot (one
-    * hub fronts a whole mega-bucket), so the a-side signature lookup goes
-    * through the hot-key split join: hub signatures broadcast, the star's
-    * million rows never shuffle. The b side stays a plain join — spokes
-    * are distinct within a bucket, so no single b dominates.
+    * arrays are the only payload moved. Hub-star linearization makes the
+    * `a` join key deliberately hot (one hub fronts a whole mega-bucket),
+    * so the a-side signature lookup goes through the hot-key split join:
+    * hub signatures broadcast, the star's million rows never shuffle. The
+    * b side stays a plain join — spokes are distinct within a bucket, so
+    * no single b dominates.
     */
   def verifiedPairs(pairs: DataFrame, features: Dataset[FileSig],
       cfg: DedupConfig, hotKeyThreshold: Long = 100000L): DataFrame = {

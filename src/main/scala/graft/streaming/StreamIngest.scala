@@ -188,21 +188,6 @@ object StreamIngest {
   final case class DedupDecision(fp: String, file: String, size: Int,
       unique: Boolean, dupsSoFar: Long)
 
-  /** J1 dedup lookup as a STATEFUL streaming operator
-    * (flatMapGroupsWithState): chunks grouped by fingerprint; keyed
-    * GroupState holds the first writer, so across micro-batches exactly
-    * one occurrence per fp is emitted `unique = true` and every later one
-    * is marked duplicate with a running count — destor's fingerprint-index
-    * hit path (reference src/index/index.c:264-273) with the kv store
-    * replaced by Spark's managed state store (checkpointed, versioned —
-    * the resume story comes free).
-    *
-    * Scale notes: state is per-fp O(1) and hash-partitioned by key across
-    * executors; no timeout is set because a dedup index never expires —
-    * at 100 TB you'd back this with RocksDB state store, same code.
-    * Within one micro-batch the iterator is folded in (file, seq) order so
-    * the first writer is deterministic regardless of shuffle arrival.
-    */
   /** One streamed document for [[neardupStream]]. */
   final case class DocEvent(docId: Long, text: String)
 
@@ -504,6 +489,21 @@ object StreamIngest {
       }
   }
 
+  /** J1 dedup lookup as a STATEFUL streaming operator
+    * (flatMapGroupsWithState): chunks grouped by fingerprint; keyed
+    * GroupState holds the first writer, so across micro-batches exactly
+    * one occurrence per fp is emitted `unique = true` and every later one
+    * is marked duplicate with a running count — destor's fingerprint-index
+    * hit path (reference src/index/index.c:264-273) with the kv store
+    * replaced by Spark's managed state store (checkpointed, versioned —
+    * the resume story comes free).
+    *
+    * Scale notes: state is per-fp O(1) and hash-partitioned by key across
+    * executors; no timeout is set because a dedup index never expires —
+    * at 100 TB you'd back this with RocksDB state store, same code.
+    * Within one micro-batch the iterator is folded in (file, seq) order so
+    * the first writer is deterministic regardless of shuffle arrival.
+    */
   def dedupStream(chunks: Dataset[ChunkEvent]): Dataset[DedupDecision] = {
     import chunks.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}

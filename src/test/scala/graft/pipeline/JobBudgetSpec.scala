@@ -7,6 +7,7 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkTestSession
 import graft.corpus.CorpusGen
+import graft.operators.SuffixArray
 
 /** The Spark-job budget of every public call on a fixed CorpusGen input.
   * At this scale the engine pays per job — planning, scheduling and
@@ -99,6 +100,22 @@ class JobBudgetSpec extends AnyFunSuite {
     val edges = (0L until 1000L).map(i => (i / 10 * 10, i)).toDF("a", "b")
     within("ConnectedComponents.run, collected", jobsOf(
       ConnectedComponents.run(vertices, edges).collect()), 3)
+  }
+
+  test("the segmented scans stay within their job budgets") {
+    // each scan call: the range bounds' sample, the shuffle, the summary
+    // job that materializes the checkpoint; SuffixArray.ranks adds its
+    // text stats and one scan per doubling round
+    import spark.implicits._
+    val docs = (1L to 12L).map(id => id -> ("abcab" * (id.toInt + 3)))
+      .toDF("doc_id", "text")
+    within("SuffixArray.ranks, counted", jobsOf(
+      SuffixArray.ranks(docs).count()), 20)
+    val runs = (0 until 600).map(i => (i % 3L, i.toLong, i / 7 % 5L))
+      .toDF("stream", "seq", "containerId")
+    within("DedupPipeline.streamRuns, counted", jobsOf(
+      DedupPipeline.streamRuns(runs, "stream", Seq("seq"), "containerId",
+        "newRun", "runId").count()), 5)
   }
 
   test("Restore.materialize stays within its job budget") {

@@ -236,15 +236,21 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("runIdW", sum(when($"newRunW", 1L).otherwise(0L))
         .over(w.rowsBetween(
           org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-    val bad = got.join(expect.select($"stream", $"seq", $"newRunW", $"runIdW"),
-        Seq("stream", "seq"))
-      .filter($"newRun" =!= $"newRunW" || $"runId" =!= $"runIdW")
-      .count()
-    assert(bad === 0L)
-    // run ids are dense 1..K per stream
-    val dense = got.groupBy($"stream")
-      .agg(max($"runId").as("mx"), countDistinct($"runId").as("k"))
-      .filter($"mx" =!= $"k").count()
-    assert(dense === 0L)
+    // 8 range partitions that runs straddle, read downstream by one
+    // coalesce(1) task: the carry-ins must follow the frozen partition id
+    val straddled = graft.SparkTestSession.uncoalesced(DedupPipeline.streamRuns(
+      df, "stream", Seq("seq"), "containerId", "newRun", "runId"))
+    Seq(got, straddled.coalesce(1)).foreach { out =>
+      val bad = out.join(expect.select($"stream", $"seq", $"newRunW", $"runIdW"),
+          Seq("stream", "seq"))
+        .filter($"newRun" =!= $"newRunW" || $"runId" =!= $"runIdW")
+        .count()
+      assert(bad === 0L)
+      // run ids are dense 1..K per stream
+      val dense = out.groupBy($"stream")
+        .agg(max($"runId").as("mx"), countDistinct($"runId").as("k"))
+        .filter($"mx" =!= $"k").count()
+      assert(dense === 0L)
+    }
   }
 }

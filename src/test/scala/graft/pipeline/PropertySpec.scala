@@ -182,16 +182,22 @@ class PropertySpec extends AnyFunSuite {
       // unique order key per stream so the ordering is total
       val data = xs.zipWithIndex.map { case ((s, _, v), i) => (s, i, v) }
       val df = data.toDF("stream", "k", "v")
-      val got = DedupPipeline.streamPrefix(df, "stream", Seq("k"), "v", "pre")
-        .select($"stream", $"k", $"pre").as[(String, Int, Long)]
-        .collect().map(r => (r._1, r._2) -> r._3).toMap
+      val prefixed = DedupPipeline.streamPrefix(df, "stream", Seq("k"), "v", "pre")
       val expect = data.groupBy(_._1).flatMap { case (_, rs) =>
         var cum = 0L
         rs.sortBy(_._2).map { case (s, k, v) =>
           val out = (s, k) -> cum; cum += v; out
         }
       }.toMap
-      assert(got == expect)
+      // 8 range partitions that streams straddle, read downstream by one
+      // coalesce(1) task: the carry-ins must follow the frozen partition id
+      val straddled = graft.SparkTestSession.uncoalesced(
+        DedupPipeline.streamPrefix(df, "stream", Seq("k"), "v", "pre"))
+      Seq(prefixed, straddled.coalesce(1)).foreach { out =>
+        val got = out.select($"stream", $"k", $"pre").as[(String, Int, Long)]
+          .collect().map(r => (r._1, r._2) -> r._3).toMap
+        assert(got == expect)
+      }
     }
   }
 
