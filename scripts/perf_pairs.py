@@ -11,18 +11,26 @@ printed with its `correct` and `failed` values. Then, for each end-to-end
 metric that the parent's BENCHMARK.json lists, it prints both medians, the
 parent's quartiles, the pairs the change won (ties count for neither) and
 whether the change's median is within the metric's relative bound of the
-parent's.
+parent's. Last, it prints each side's median wall seconds per phase of the
+timed job (`ingest`, `restore`, `expire`, ...), read from the `[perfbench]
+job:` line run.py echoes for every timed JVM, so an untraced batch shows
+which layer moved.
 
 Self-test: python3 -m unittest discover -s scripts
 """
 import argparse
 import json
 import pathlib
+import re
 import statistics
 import subprocess
 import sys
 
 SIDES = ("parent", "change")
+
+# run.py echoes one per timed JVM, e.g. "[perfbench] job: ingest 9.260 s,
+# restore 3.190 s, expire 4.870 s; cpu 45.91 s, executor cpu 4.58 s, ..."
+JOB_LINE = re.compile(r"^\[perfbench\] job: ([^;]*);")
 
 
 def schedule(pairs, seed0):
@@ -41,12 +49,26 @@ def parse_result(stdout):
     return res if isinstance(res, dict) and "metrics" in res else None
 
 
+def parse_phases(stdout):
+    """{phase: median wall s over the run's timed JVMs} from its job lines."""
+    walls = {}
+    for line in stdout.splitlines():
+        m = JOB_LINE.match(line)
+        if not m:
+            continue
+        for part in m.group(1).split(", "):
+            name, value, _unit = part.rsplit(" ", 2)
+            walls.setdefault(name, []).append(float(value))
+    return {k: statistics.median(v) for k, v in walls.items()}
+
+
 def run_side(checkout, workload, seed):
+    """The run's result (or None) and its phases."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", "10", "--trace", "0"],
         cwd=checkout, capture_output=True, text=True)
-    return parse_result(p.stdout)
+    return parse_result(p.stdout), parse_phases(p.stdout)
 
 
 def better(metric, change, parent):
@@ -95,6 +117,31 @@ def summarize(end_to_end, results):
     return rows
 
 
+def phase_medians(phases):
+    """{side: {phase: median over the side's runs}}; `phases` is a list of
+    {"parent": parse_phases-dict, "change": ...}, one per pair."""
+    out = {}
+    for side in SIDES:
+        walls = {}
+        for pair in phases:
+            for k, v in pair[side].items():
+                walls.setdefault(k, []).append(v)
+        out[side] = {k: statistics.median(v) for k, v in walls.items()}
+    return out
+
+
+def format_phases(medians):
+    """One line per phase, in the parent's order, then any the change adds."""
+    names = list(medians["parent"])
+    names += [k for k in medians["change"] if k not in names]
+
+    def cell(side, k):
+        v = medians[side].get(k)
+        return "-" if v is None else f"{v:.3f} s"
+    return [f"phase {k:<10} parent {cell('parent', k)}  "
+            f"change {cell('change', k)}" for k in names]
+
+
 def format_run(seed, side, res):
     if res is None:
         return f"seed {seed} {side:<6} no result (run.py printed no JSON)"
@@ -124,18 +171,22 @@ def main(argv=None):
     a = ap.parse_args(argv)
     spec = json.loads((pathlib.Path(a.parent) / "BENCHMARK.json").read_text())
     dirs = {"parent": a.parent, "change": a.change}
-    results = []
+    results, phases = [], []
     for seed, order in schedule(a.pairs, a.seed0):
-        pair = {}
+        pair, walls = {}, {}
         for side in order:
-            pair[side] = run_side(dirs[side], a.workload, seed)
+            pair[side], walls[side] = run_side(dirs[side], a.workload, seed)
             print(format_run(seed, side, pair[side]), flush=True)
         results.append(pair)
+        phases.append(walls)
     print(f"{a.workload}: {a.pairs} pairs, seeds {a.seed0}.."
           f"{a.seed0 + a.pairs - 1}; medians, parent quartiles in brackets")
     rows = summarize(spec["end_to_end"], results)
     for row in rows:
         print(format_row(row))
+    print("median wall s per phase of the timed job:")
+    for line in format_phases(phase_medians(phases)):
+        print(line)
     bad = [r for r in results for s in SIDES
            if r[s] is None or not r[s]["correct"] or r[s]["failed"]]
     return 1 if bad or not all(r.get("within_bound") for r in rows) else 0

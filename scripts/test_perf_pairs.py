@@ -26,6 +26,12 @@ def stdout(job_s, mbps, **kw):
             f"[perfbench]   job_s 1 s\n{line(job_s, mbps, **kw)}\n")
 
 
+def job_line(ingest, restore, expire):
+    return (f"[perfbench] job: ingest {ingest:.3f} s, restore {restore:.3f} "
+            f"s, expire {expire:.3f} s; cpu 45.91 s, executor cpu 4.58 s, "
+            "peak rss 812 MB\n")
+
+
 class PerfPairsTest(unittest.TestCase):
 
     def test_schedule_alternates_which_side_runs_first(self):
@@ -78,6 +84,34 @@ class PerfPairsTest(unittest.TestCase):
         run = perf_pairs.format_run(
             1, "parent", perf_pairs.parse_result(stdout(10, 2, failed=2)))
         self.assertIn("correct=True failed=2/5", run)
+
+    def test_parse_phases_takes_the_median_of_every_timed_jvm(self):
+        out = (job_line(9.26, 3.19, 4.87) + job_line(8.0, 3.0, 5.0)
+               + job_line(10.0, 2.0, 6.0) + stdout(12.5, 1.7))
+        self.assertEqual(perf_pairs.parse_phases(out),
+                         {"ingest": 9.26, "restore": 3.0, "expire": 5.0})
+        self.assertEqual(perf_pairs.parse_phases(stdout(12.5, 1.7)), {})
+
+    def test_phase_medians_per_side_and_format(self):
+        phases = [
+            {"parent": perf_pairs.parse_phases(job_line(9.0, 3.0, 5.0)),
+             "change": perf_pairs.parse_phases(job_line(9.2, 2.5, 1.5))},
+            {"parent": perf_pairs.parse_phases(job_line(10.0, 3.2, 4.8)),
+             "change": perf_pairs.parse_phases(job_line(9.0, 2.7, 1.3))},
+            {"parent": perf_pairs.parse_phases(job_line(11.0, 3.4, 4.9)),
+             "change": {}}]  # a run that died before its job line
+        med = perf_pairs.phase_medians(phases)
+        self.assertEqual(med["parent"],
+                         {"ingest": 10.0, "restore": 3.2, "expire": 4.9})
+        self.assertEqual(med["change"],
+                         {"ingest": 9.1, "restore": 2.6, "expire": 1.4})
+        lines = perf_pairs.format_phases(med)
+        self.assertEqual(len(lines), 3)
+        self.assertIn("expire", lines[2])
+        self.assertIn("parent 4.900 s", lines[2])
+        self.assertIn("change 1.400 s", lines[2])
+        med["change"]["compact"] = 0.5
+        self.assertIn("parent -", perf_pairs.format_phases(med)[3])
 
 
 if __name__ == "__main__":

@@ -6,6 +6,7 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row,
   SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.corpus.CorpusFile
 import graft.obs.Measure
 
@@ -525,19 +526,44 @@ object ClusterJob {
     * monitor state (migrated containers are densely packed), so the next
     * backup starts with an empty sparse list — the reference's monitor
     * is likewise rebuilt from post-delete containers. Resume-by-skip
-    * like every stage job; stats are rebuilt from the committed tables.
+    * like every stage job; a resumed call returns the fresh call's stats.
+    *
+    * Two paths, chosen by the chain's size with one [[DriverFold.collect]]
+    * of its (root, stream, fp, containerId, size) rows:
+    *
+    *  - at most [[TracePipeline.LocalCap]] rows: the driver runs
+    *    [[GC.expireLocal]] and answers the label checks, every stats value
+    *    and the backup-id high-water mark from the rows it holds. The
+    *    migration and the index are [[DriverFold.table]]s; the recipes are
+    *    the chain joined with the broadcast migration. 6 Spark jobs where
+    *    the distributed plan runs 21. Spark's SizeEstimator: 128 B a
+    *    collected row, about 160 B more for the fold's result, so 10^5 rows
+    *    hold about 29 MB, within [[DriverFold]]'s budget (the fold itself
+    *    took 0.43 s there).
+    *  - above it: [[GC.expireChain]], the label checks and a stats query,
+    *    distributed, after that one collect job (none at `localCap = 0`);
+    *    the stats are rebuilt from the committed tables.
+    *
+    * Both write the same tables, stats and run log (StoreStepSpec).
     */
   def expire(spark: SparkSession, chainRoots: Seq[String],
       expiredBackup: String, outRoot: String, runId: String,
       payload: Long = Rewrite.ContainerPayload): ExpireStats =
+    expire(spark, chainRoots, expiredBackup, outRoot, runId, payload,
+      TracePipeline.LocalCap)
+
+  /** [[expire]] with the row count up to which its fold runs on the
+    * driver; `localCap = 0` forces the distributed plan. */
+  private[pipeline] def expire(spark: SparkSession, chainRoots: Seq[String],
+      expiredBackup: String, outRoot: String, runId: String, payload: Long,
+      localCap: Int): ExpireStats =
     RunLog(spark, outRoot, runId)(
-      expireCore(spark, chainRoots, expiredBackup, outRoot, payload, _))
+      expireCore(spark, chainRoots, expiredBackup, outRoot, payload,
+        localCap, _))
 
   private def expireCore(spark: SparkSession, chainRoots: Seq[String],
-      expiredBackup: String, outRoot: String, payload: Long,
+      expiredBackup: String, outRoot: String, payload: Long, localCap: Int,
       log: RunLog): ExpireStats = {
-    import spark.implicits._
-    import log.stage
     // a chain root is a backup() root (final_recipe) OR a previous
     // expire() root (recipes, multi-label) — retention composes: the
     // compacted root chains into the next backup AND into the next expiry
@@ -549,15 +575,97 @@ object ClusterJob {
           "expire only completed backup()/expire() roots")
     }
     val recs = chainRoots.map(r =>
-      r -> load(spark, r, recTable(r).get, TracePipeline.RecipeSchema)).toMap
-    val chain = chainRoots.map(recs).reduce(_ unionByName _)
+      r -> load(spark, r, recTable(r).get, TracePipeline.RecipeSchema))
+    // version = the backup's stream label
+    val chain = recs.map(_._2).reduce(_ unionByName _)
+      .withColumn("version", col("stream"))
+    // no chain that passes the label check is empty, so none fits cap 0
+    val collected = Option.when(localCap > 0)(DriverFold.collect(
+        recs.zipWithIndex.map { case ((_, df), i) =>
+          df.select(lit(i).as("root"), col("stream"), col("fp"),
+            col("containerId"), col("size"))
+        }.reduce(_ union _), localCap)).flatten
+    val freshMig = !TableIO.committed(s"$outRoot/migration")
+    val (stats, maxBid) = collected match {
+      case Some(rows) => localExpiry(spark, chain, rows, chainRoots,
+        expiredBackup, payload, log)
+      case None => distributedExpiry(spark, chain, recs.toMap,
+        expiredBackup, payload, log)
+    }
+    if (freshMig) {
+      log.add("backup", "backup_id" -> maxBid.toDouble)
+      log.add("expire",
+        "rows_before" -> stats.rowsBefore.toDouble,
+        "rows_after" -> stats.rowsAfter.toDouble,
+        "migrated_chunks" -> stats.migratedChunks.toDouble,
+        "migrated_bytes" -> stats.migratedBytes.toDouble,
+        "containers_before" -> stats.containersBefore.toDouble,
+        "containers_after" -> stats.containersAfter.toDouble,
+        "index_fps" -> stats.indexFps.toDouble)
+    }
+    stats
+  }
+
+  /** A backup's stream label, "bN" for backup id N. */
+  private val BackupLabel = "^b(\\d+)$"
+
+  /** [[expire]] on the driver: [[GC.expireLocal]] over the collected
+    * chain (root index, stream, fp, containerId, size). The label checks
+    * and every stats value come from those rows; the migration and the
+    * index are driver tables, and the recipes are the chain joined with
+    * the broadcast migration. */
+  private def localExpiry(spark: SparkSession, chain: DataFrame,
+      rows: DriverFold.Columns, chainRoots: Seq[String], expiredBackup: String,
+      payload: Long, log: RunLog): (ExpireStats, Long) = {
+    val (root, stream) = (rows.ints(0), rows.strings(1))
+    val expired =
+      if (chainRoots.contains(expiredBackup)) {
+        val labels = (0 until rows.rows)
+          .filter(i => chainRoots(root(i)) == expiredBackup)
+          .map(stream(_)).distinct
+        require(labels.length == 1,
+          s"expiredBackup root $expiredBackup carries ${labels.length} " +
+            "stream labels — pass the label of the one backup to expire")
+        labels.head.toString
+      } else {
+        require(stream.contains(UTF8String.fromString(expiredBackup)),
+          s"no chain root carries stream label '$expiredBackup'")
+        expiredBackup
+      }
+    val e = GC.expireLocal(stream, rows.strings(2), rows.longs(3),
+      rows.ints(4), expired, payload)
+    val migration = DriverFold.table(spark, GC.MigrationSchema,
+      e.migFp.length)(i => Array(e.migFp(i), e.migOldCid(i), e.migSize(i),
+      e.migNewCid(i)))
+    log.stage("migration")(migration.coalesce(1))
+    log.stage("recipes")(
+      GC.rewrite(chain, expired, broadcast(migration)).drop("version"))
+    log.stage("index")(DriverFold.table(spark, GC.IndexSchema,
+      e.indexFp.length)(i => Array(e.indexFp(i), e.indexCid(i))).coalesce(1))
+    val after = e.survives.indices.filter(e.survives(_))
+    val label = BackupLabel.r
+    val bids = after.map(stream(_)).distinct.flatMap(s =>
+      label.findFirstMatchIn(s.toString).flatMap(_.group(1).toLongOption))
+    (ExpireStats(expired, rows.rows, after.length, e.migFp.length,
+      e.migSize.sum, rows.longs(3).distinct.length,
+      after.map(e.containerId(_)).distinct.length, e.indexFp.length),
+      if (bids.isEmpty) 1L else bids.max)
+  }
+
+  /** [[expire]] distributed: [[GC.expireChain]], the label checks and the
+    * stats as queries. */
+  private def distributedExpiry(spark: SparkSession, chain: DataFrame,
+      recs: Map[String, DataFrame], expiredBackup: String, payload: Long,
+      log: RunLog): (ExpireStats, Long) = {
+    import spark.implicits._
+    import log.stage
     // `expiredBackup` selects ONE backup: either a stream label ("b2") —
     // required when the chain has been compacted before, since a
     // compacted root carries several labels — or, convenience for
     // uncompacted chains, a chain-root path whose recipe has exactly one
     // label (which that root then carries)
     val expired =
-      if (chainRoots.contains(expiredBackup)) {
+      if (recs.contains(expiredBackup)) {
         val labels = recs(expiredBackup).select(col("stream")).distinct()
           .as[String].collect()
         require(labels.length == 1,
@@ -570,10 +678,8 @@ object ClusterJob {
         expiredBackup
       }
     // the whole expiry computes lazily and at most once (pure resumes
-    // never force it); version = the backup's stream label
-    lazy val res = GC.expireChain(
-      chain.withColumn("version", col("stream")), expired, payload)
-    val freshMig = !TableIO.committed(s"$outRoot/migration")
+    // never force it)
+    lazy val res = GC.expireChain(chain, expired, payload)
     val migration = stage("migration")(res.migration)
     val recipes = stage("recipes") {
       res.recipes.drop("version")
@@ -590,7 +696,7 @@ object ClusterJob {
     val r = Seq(
         tagged(0, chain, col("containerId"), noValue),
         tagged(1, recipes, col("containerId"),
-          regexp_extract(col("stream"), "^b(\\d+)$", 1)),
+          regexp_extract(col("stream"), BackupLabel, 1)),
         tagged(2, migration, noValue, col("size")),
         tagged(3, index, noValue, noValue))
       .reduce(_ union _)
@@ -598,21 +704,9 @@ object ClusterJob {
         coalesce(sum(when(col("t") === 2, col("v"))), lit(0L)),
         max(when(col("t") === 1, col("v"))), cnt(3))
       .head()
-    val maxBid = if (r.isNullAt(6)) 1L else r.getLong(6)
-    val stats = ExpireStats(expired, r.getLong(0), r.getLong(2), r.getLong(4),
-      r.getLong(5), r.getLong(1), r.getLong(3), r.getLong(7))
-    if (freshMig) {
-      log.add("backup", "backup_id" -> maxBid.toDouble)
-      log.add("expire",
-        "rows_before" -> stats.rowsBefore.toDouble,
-        "rows_after" -> stats.rowsAfter.toDouble,
-        "migrated_chunks" -> stats.migratedChunks.toDouble,
-        "migrated_bytes" -> stats.migratedBytes.toDouble,
-        "containers_before" -> stats.containersBefore.toDouble,
-        "containers_after" -> stats.containersAfter.toDouble,
-        "index_fps" -> stats.indexFps.toDouble)
-    }
-    stats
+    (ExpireStats(expired, r.getLong(0), r.getLong(2), r.getLong(4),
+      r.getLong(5), r.getLong(1), r.getLong(3), r.getLong(7)),
+      if (r.isNullAt(6)) 1L else r.getLong(6))
   }
 
   /** `destor -t` body, shared by the CLI arm and TraceCliSpec: chunk +

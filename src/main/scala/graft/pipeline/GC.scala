@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Garbage collection after version deletion (reference: src/do_delete.c,
   * src/cma.c) — the compaction job of SURVEY.md §3.3.
@@ -141,6 +142,11 @@ object GC {
     * Input contract: version:string (the backup label), fp, containerId,
     * size. Re-running on the rewritten output with the same expired
     * version is a no-op (its rows are gone, so the dead set is empty).
+    *
+    * This is the distributed statement of the expiry; [[expireLocal]] is
+    * its driver-side form for a chain of at most
+    * [[TracePipeline.LocalCap]] rows ([[ClusterJob.expire]] picks one) and
+    * must stay in step with it (StoreStepSpec checks that the two agree).
     */
   def expireChain(recipes: DataFrame, expiredVersion: String,
       payload: Long = Rewrite.ContainerPayload): ChainExpiry = {
@@ -165,14 +171,94 @@ object GC {
         col("sz").as("size"), col("new_cid"))
       .localCheckpoint(true)
     copies.unpersist()
-    val rewritten = recipes.filter(col("version") =!= expiredVersion)
+    val rewritten = rewrite(recipes, expiredVersion, migration)
+    val index = rewritten.groupBy(col("fp"))
+      .agg(max(col("containerId")).as("idxCid"))
+    ChainExpiry(migration, rewritten, index)
+  }
+
+  /** [[expireChain]]'s step 4: the surviving recipes, each copy that
+    * `migration` moves pointed at its new container. */
+  private[pipeline] def rewrite(recipes: DataFrame, expiredVersion: String,
+      migration: DataFrame): DataFrame =
+    recipes.filter(col("version") =!= expiredVersion)
       .join(migration.select(col("fp"), col("old_cid").as("containerId"),
           col("new_cid")), Seq("fp", "containerId"), "left")
       .withColumn("containerId", coalesce(col("new_cid"), col("containerId")))
       .drop("new_cid")
-    val index = rewritten.groupBy(col("fp"))
-      .agg(max(col("containerId")).as("idxCid"))
-    ChainExpiry(migration, rewritten, index)
+
+  /** The columns of [[expireChain]]'s migration and index tables. */
+  private[pipeline] val MigrationSchema =
+    "fp STRING, old_cid BIGINT, size BIGINT, new_cid BIGINT"
+  private[pipeline] val IndexSchema = "fp STRING, idxCid BIGINT"
+
+  /** [[expireChain]] over a chain the driver holds: the migration in
+    * (old_cid, fp) order, one array per column; each row's container id
+    * after compaction and whether its backup survives; the fp → max
+    * surviving container index. */
+  private[pipeline] final case class LocalExpiry(
+      migFp: Array[UTF8String], migOldCid: Array[Long], migSize: Array[Long],
+      migNewCid: Array[Long], survives: Array[Boolean],
+      containerId: Array[Long], indexFp: Array[UTF8String],
+      indexCid: Array[Long])
+
+  /** [[expireChain]]'s fold, statement for statement, over a chain of
+    * `version`, `fp`, `containerId` and `size` columns the driver holds
+    * (destor's sequential mark-and-migrate, src/do_delete.c:130-265).
+    * Sorting the rows by (containerId, fp) lays each copy out as one run
+    * and each container as consecutive copies, so liveness, the affected
+    * containers and the migration order all come from one pass. Spark's
+    * SizeEstimator: a row as [[ClusterJob.expire]] collects it is 128 B
+    * and the result about 160 B more, so the 10^5 rows of
+    * [[TracePipeline.LocalCap]] hold about 29 MB, within [[DriverFold]]'s
+    * budget. */
+  private[pipeline] def expireLocal(version: Array[UTF8String],
+      fp: Array[UTF8String], containerId: Array[Long], size: Array[Int],
+      expiredVersion: String, payload: Long): LocalExpiry = {
+    val n = fp.length
+    val expired = UTF8String.fromString(expiredVersion)
+    val survives = version.map(_ != expired)
+    val order = Array.range(0, n).sortWith { (a, b) =>
+      if (containerId(a) != containerId(b)) containerId(a) < containerId(b)
+      else fp(a).compareTo(fp(b)) < 0
+    }
+    def sameCopy(k: Int) = k > 0 &&
+      containerId(order(k)) == containerId(order(k - 1)) &&
+      fp(order(k)) == fp(order(k - 1))
+    // 1. one copy per (fp, containerId) run of `order`: its first position,
+    // min(size), live iff a surviving backup references it
+    val copyAt = (0 until n).filter(!sameCopy(_)).toArray
+    val copyEnd = copyAt.drop(1) :+ n
+    val copySize = copyAt.indices.map(c =>
+      (copyAt(c) until copyEnd(c)).map(k => size(order(k))).min).toArray
+    val live = copyAt.indices.map(c =>
+      (copyAt(c) until copyEnd(c)).exists(k => survives(order(k)))).toArray
+    def cidOf(c: Int) = containerId(order(copyAt(c)))
+    // 2. the affected containers: those holding a dead copy
+    val affected = copyAt.indices.filter(!live(_)).map(cidOf).toSet
+    // 3. fresh containers continue past the chain's high-water id
+    val base = if (n == 0) 0L else containerId(order(n - 1)) + 1L
+    // the survivors of affected containers, packed in (cid, fp) order
+    val moved = copyAt.indices.filter(c => live(c) && affected(cidOf(c)))
+      .toArray
+    val migNewCid = DedupPipeline.packLocal(
+      moved.map(copySize(_).toLong), base, payload)
+    // 4. every row of a moved copy points at its new container
+    val rewritten = containerId.clone()
+    moved.indices.foreach { m =>
+      (copyAt(moved(m)) until copyEnd(moved(m))).foreach(k =>
+        rewritten(order(k)) = migNewCid(m))
+    }
+    // 5. the inherited index: fp → max surviving container id
+    val index = scala.collection.mutable.HashMap.empty[UTF8String, Long]
+    (0 until n).foreach { i =>
+      if (survives(i))
+        index(fp(i)) = math.max(index.getOrElse(fp(i), Long.MinValue),
+          rewritten(i))
+    }
+    LocalExpiry(moved.map(c => fp(order(copyAt(c)))), moved.map(cidOf),
+      moved.map(copySize(_).toLong), migNewCid, survives, rewritten,
+      index.keys.toArray, index.values.toArray)
   }
 
   /** J8 CMA manifest merge: container → last-referencing version,

@@ -156,14 +156,16 @@ object Restore {
     val spark = corpus.sparkSession
     import spark.implicits._
     val chunks = DedupPipeline.chunkTableDF(features)
-    val unique = DedupPipeline.uniqueChunks(chunks.as[ChunkRow])
     val corpusBin = corpus.select($"repo", $"path", $"commit",
       encode($"content", "UTF-8").as("bin"))
-    val ownerSlices = unique
-      .select($"fp", $"repo", $"path", $"commit", $"chunkIdx")
-      .join(chunks.select($"fp", $"repo", $"path", $"commit", $"chunkIdx",
-          $"offset", $"size"),
-        Seq("fp", "repo", "path", "commit", "chunkIdx"))
+    // [[DedupPipeline.uniqueChunks]]' first writer: its order key is unique
+    // per chunk position, so the owner's slice rides in the same aggregate
+    val ownerSlices = chunks.groupBy($"fp")
+      .agg(min(struct($"repo", $"path", $"commit", $"chunkIdx", $"offset",
+        $"size")).as("first"))
+      .select($"fp", $"first.repo".as("repo"), $"first.path".as("path"),
+        $"first.commit".as("commit"), $"first.offset".as("offset"),
+        $"first.size".as("size"))
       .join(corpusBin, Seq("repo", "path", "commit"))
       .select($"fp", expr("substring(bin, offset + 1, size)").as("bytes"))
     chunks

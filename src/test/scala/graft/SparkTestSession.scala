@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 import graft.obs.Measure
@@ -18,5 +22,19 @@ object SparkTestSession {
     spark.conf.set(key, "false")
     try body
     finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body`'s result and the Spark jobs it started. */
+  def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { val r = body; ListenerBusDrain(sc); (r, n.get) }
+    finally sc.removeSparkListener(l)
   }
 }

@@ -214,23 +214,37 @@ class PropertySpec extends AnyFunSuite {
       } yield (s"s$s", v))
       base <- Gen.chooseNum(0L, 1000L)
     } yield (xs, base)
-    def packed(data: Seq[(String, Int, Long)], base: Long) =
+    def pack(data: Seq[(String, Int, Long)], base: Long) =
       DedupPipeline.pack(data.toDF("stream", "k", "sz").repartition(8),
-          "stream", Seq("k"), "sz", base, payload, "cid")
-        .select($"k", $"cid").as[(Int, Long)].collect().toMap
+        "stream", Seq("k"), "sz", base, payload, "cid")
+    def ids(out: org.apache.spark.sql.DataFrame) =
+      out.select($"k", $"cid").as[(Int, Long)].collect().toMap
     forAll(rows, n = 12) { case (xs, base) =>
       // the very first row weighs 0, so a stream can open on a zero-size row
       val data = xs.zipWithIndex.map { case ((s, v), i) =>
         (s, i, if (i == 0) 0L else v) }
-      val expect = data.groupBy(_._1).flatMap { case (_, rs) =>
+      val byStream = data.groupBy(_._1).values.map(_.sortBy(_._2))
+      val expect = byStream.flatMap { rs =>
         var cum = 0L
-        rs.sortBy(_._2).map { case (_, k, v) =>
+        rs.map { case (_, k, v) =>
           cum += v; k -> (base + math.max(cum - 1, 0L) / payload)
         }
+      }.toMap
+      assert(ids(pack(data, base)) == expect)
+      // 8 range partitions that streams straddle, read downstream by one
+      // coalesce(1) task: each carry-in must reach its partition's rows
+      val straddled = graft.SparkTestSession.uncoalesced(pack(data, base))
+      assert(ids(straddled.coalesce(1)) == expect)
+      // the driver folds' packer gives each stream the same ids
+      byStream.foreach { rs =>
+        val local = DedupPipeline.packLocal(rs.map(_._3).toArray, base,
+          payload)
+        rs.map(_._2).zip(local).foreach { case (k, cid) =>
+          assert(cid == expect(k), s"packLocal at k = $k")
+        }
       }
-      assert(packed(data, base) == expect)
     }
-    assert(packed(Seq.empty, 7L).isEmpty)
+    assert(ids(pack(Seq.empty, 7L)).isEmpty)
   }
 
   test("utf8Offsets equal getBytes(UTF_8) prefix lengths, lone surrogates included (property)") {

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.util.Random
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -12,10 +12,12 @@ import graft.SparkTestSession
   * (`localCap = 0`) must write identical final recipes, indexes and HAR
   * sparse lists, return identical stats, and replay to identical
   * restore-cache stats, under every rewrite algorithm with HAR on and
-  * off and every restore cache.
+  * off and every restore cache. [[ClusterJob.expire]]'s two paths must
+  * likewise write identical migrations, recipes and indexes over the
+  * chained backups, with identical stats and run-log values.
   */
 class StoreStepSpec extends AnyFunSuite {
-  import StoreStepSpec.Store
+  import StoreStepSpec.{Expiry, Store}
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -165,6 +167,100 @@ class StoreStepSpec extends AnyFunSuite {
     assert(replay(longer, s, n) === replay(longer, s, n + 1))
   }
 
+  private def freshDir(): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_store_").toFile
+    d.deleteOnExit()
+    d.getAbsolutePath
+  }
+
+  /** [[jobs]] as chained backup roots under cbr + HAR, so rewriting leaves
+    * fingerprints with several copies, then a fifth backup of the fourth
+    * job's stream with rewriting off: every copy it references is also
+    * referenced by the backup that wrote it, so expiring it kills none. */
+  private lazy val roots: Seq[String] = {
+    var prev = Option.empty[String]
+    (jobs :+ jobs(3)).zipWithIndex.map { case (chunks, i) =>
+      val root = freshDir()
+      ClusterJob.backupChunkStream(chunks, root, s"ss-b${i + 1}",
+        if (i < jobs.size) settingsOf("cbr", har = true)
+        else settingsOf("no", har = false), prev, Payload)
+      prev = Some(root)
+      root
+    }
+  }
+
+  /** The jobs a driver-path expire runs: the bounded collect, the three
+    * stage writes (the recipes' with its broadcast) and the run log. */
+  private val LocalExpireJobs = 6
+
+  /** Expire `expired` from `chain` at `localCap` into a fresh root; the
+    * distributed side runs uncoalesced, so its scans keep 8 partitions.
+    * Each call must take the path `local` names. */
+  private def expiry(chain: Seq[String], expired: String, localCap: Int,
+      local: Boolean): Expiry = {
+    val out = freshDir()
+    val (stats, jobs) = SparkTestSession.withJobs(
+      if (local) ClusterJob.expire(spark, chain, expired, out, "ss-ex",
+        Payload, localCap)
+      else SparkTestSession.uncoalesced(ClusterJob.expire(spark, chain,
+        expired, out, "ss-ex", Payload, localCap)))
+    assert((jobs <= LocalExpireJobs) === local,
+      s"expire $expired at localCap $localCap ran $jobs jobs")
+    def rows(table: String) = {
+      val df = spark.read.parquet(s"$out/$table").drop("_lineage")
+      (df.columns.toSeq, df.collect().map(_.toSeq.mkString("|")).sorted.toSeq)
+    }
+    val metrics = spark.read.parquet(s"$out/metrics")
+      .select($"stage", $"metric", $"value").collect().map {
+        case Row(st: String, m: String, v: Double) =>
+          // the timing rows' values differ from run to run
+          (st, m, if (m.endsWith("_sec")) 0.0 else v)
+      }.sorted.toSeq
+    Expiry(stats, rows("migration"), rows("recipes"), rows("index"), metrics)
+  }
+
+  /** Both paths expire `expired` from `chain` alike; the local result. */
+  private def agree(chain: Seq[String], expired: String): Expiry = {
+    val local = expiry(chain, expired, TracePipeline.LocalCap, local = true)
+    assert(local === expiry(chain, expired, 0, local = false),
+      s"expiring $expired")
+    local
+  }
+
+  test("expire: the local and distributed paths write the same tables, " +
+      "stats and run log") {
+    val migrated = Seq("b1", "b3", "b4").map(agree(roots, _))
+    assert(migrated.forall(_.stats.migratedChunks > 0), "nothing migrated")
+    // a root path selects the one label its recipe carries
+    assert(agree(roots, roots(2)).stats.expiredVersion === "b3")
+    // b5 shares every copy it references: an empty dead set
+    val noop = agree(roots, "b5")
+    assert(noop.stats.migratedChunks === 0L && noop.migration._2.isEmpty)
+    assert(noop.stats.containersAfter === noop.stats.containersBefore)
+    // a label of a compacted root, which carries b3, b4 and b5
+    val compacted = freshDir()
+    ClusterJob.expire(spark, roots, "b1", compacted, "ss-c", Payload)
+    assert(agree(Seq(compacted), "b3").stats.rowsBefore ===
+      migrated.head.stats.rowsAfter)
+    // both paths refuse the same selections: a root with several labels,
+    // and a label no row carries (the second backup is empty)
+    for (chain <- Seq(Seq(compacted), roots); bad <- Seq(compacted, "b2")) {
+      val errors = Seq(TracePipeline.LocalCap, 0).map(cap =>
+        intercept[IllegalArgumentException](ClusterJob.expire(spark, chain,
+          bad, freshDir(), "ss-bad", Payload, cap)).getMessage)
+      assert(errors.distinct.size === 1, errors)
+    }
+  }
+
+  test("expire: a chain of exactly localCap rows runs locally, one more " +
+      "distributed, with the same result") {
+    val n = roots.map(r => spark.read.parquet(s"$r/final_recipe").count())
+      .sum.toInt
+    val reference = expiry(roots, "b3", 0, local = false)
+    assert(expiry(roots, "b3", n, local = true) === reference)
+    assert(expiry(roots, "b3", n - 1, local = false) === reference)
+  }
+
   test("TracePipeline.run returns the same stats on both paths") {
     val s = settingsOf("cap", har = true).copy(restoreCache = "opt")
     def stats(localCap: Int) = TracePipeline.run(jobs, s, Payload, localCap)
@@ -179,4 +275,11 @@ object StoreStepSpec {
       recipe: Seq[(String, Long, String, String, Int, Boolean, Boolean, Long)],
       index: Seq[(String, Long)], sparse: Seq[Long], stats: TraceJobStats,
       sims: Seq[RestoreSim.StreamRestoreStats])
+
+  /** One expiry as both paths must agree on it: each table's columns and
+    * rows, and the run log's (stage, metric, value) rows with the timings
+    * zeroed. */
+  private final case class Expiry(stats: ClusterJob.ExpireStats,
+      migration: (Seq[String], Seq[String]), recipes: (Seq[String], Seq[String]),
+      index: (Seq[String], Seq[String]), metrics: Seq[(String, String, Double)])
 }
