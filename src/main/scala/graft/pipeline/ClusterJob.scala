@@ -46,6 +46,14 @@ object ClusterJob {
       kv.foreach { case (m, v) => rows += TableIO.Metric(stage, m, v, ts) }
     }
 
+    /** Each numeric field of `stats` as a row of `stage`, its name in
+      * snake case (rowsBefore → rows_before). */
+    def addStats(stage: String, stats: Product): Unit =
+      add(stage, stats.productElementNames.zip(stats.productIterator).collect {
+        case (k, v: Number) =>
+          k.replaceAll("([A-Z])", "_$1").toLowerCase -> v.doubleValue
+      }.toSeq: _*)
+
     /** Compute-or-load a stage table ([[TableIO.stage]]), logging its
       * wall/cpu rows when this call computes it. */
     def stage(name: String)(f: => DataFrame): DataFrame = {
@@ -221,7 +229,6 @@ object ClusterJob {
 
   private def runDirectives(spark: SparkSession, root: String,
       settings: DestorSettings, log: RunLog): Unit = {
-    import spark.implicits._
     import log.stage
     lazy val streamRec = DedupPipeline.streamRecipe(
       spark.read.format(TableIO.Format).load(s"$root/recipe")
@@ -235,7 +242,7 @@ object ClusterJob {
         val hared =
           if (settings.rewrite.enableHar)
             // first backup of this root: no previous sparse list
-            Rewrite.harMark(passed, Seq.empty[Long].toDF("containerId"))
+            Rewrite.harMark(passed, StoreChain.empty(spark).sparse)
           else passed
         Rewrite.writePredicate(hared)
           .select(col("stream"), col("seq"), col("size"), col("containerId"),
@@ -266,10 +273,7 @@ object ClusterJob {
       if (doRewrite) {
         val marked = spark.read.format(TableIO.Format)
           .load(s"$root/rewrite").drop("_lineage")
-        val base = marked.agg(max(col("containerId"))).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0) + 1L
-        }
+        val base = StoreChain.nextCid(marked)
         val repacked = DedupPipeline.pack(
             marked.filter(col("dup") && col("write"))
               .select(col("stream"), col("seq"),
@@ -283,20 +287,16 @@ object ClusterJob {
             coalesce(col("newCid"), col("containerId")))
           .select(col("stream"), col("seq"), col("containerId"), col("size"))
       } else streamRec
-    if (settings.simulationLevel == "restore" ||
-        settings.simulationLevel == "all")
+    if (settings.runsRestoreSim)
       stage("restore_sim")(settings.restoreSim(simRecipe()))
   }
 
   /** ONE incremental backup job against a chained container store — the
     * Spark analog of successive `destor /path` invocations sharing a
-    * working directory (reference src/do_backup.c: the jobs share the
-    * fingerprint index, the container pool and HAR's inter-job sparse
-    * list; src/har_rewrite.c:59-117 loads the previous job's monitor
-    * state from disk). Each backup gets its OWN checkpoint root; the
-    * chain link is `prevRoot` — the completed previous backup's root,
-    * whose committed `index` (fp → latest written container) and
-    * `har_sparse` stages are this job's inherited store state.
+    * working directory. Each backup gets its OWN checkpoint root; the
+    * chain link is `prevRoot`, a completed backup or expire root whose
+    * committed tables hold the state this job inherits
+    * ([[StoreChain.fromRoot]]).
     *
     * The per-chunk semantics are EXACTLY [[TracePipeline.oneJob]] — the
     * same dedup-against-cumulative-index → configured rewrite (+ HAR
@@ -304,33 +304,31 @@ object ClusterJob {
     * latest-wins index upsert that the trace replay runs in memory —
     * with the read+chunk+hash phases real (the config's chunk-*
     * directives) instead of trace-fed, and every handoff table a
-    * checkpointed resumable stage:
-    *
-    *   chunks       — the chunk table of this corpus snapshot
-    *   final_recipe — stream/seq/path/fp/size/dup/write/containerId
-    *   index        — cumulative fp → container (for the NEXT backup)
-    *   har_sparse   — trimmed sparse list (when HAR is on; NEXT backup)
-    *   restore_sim  — configured cache replay (simulation-level
-    *                  restore|all)
-    *
-    * plus a 14-field `backup` metrics block (the backup.log line).
+    * checkpointed resumable stage: `chunks` (the snapshot's chunk table),
+    * the chain root's `final_recipe`, `index` and, when HAR is on,
+    * `har_sparse` ([[StoreChain]]), and `restore_sim` (the configured
+    * cache replay, [[DestorSettings.runsRestoreSim]]); plus a 14-field
+    * `backup` metrics block (the backup.log line).
     * Resume-by-skip: re-submitting with the same root recomputes nothing
     * and appends no duplicate metrics; the returned stats are rebuilt
     * from the committed stage tables so fresh and resumed runs return
     * identical values.
     *
-    * A snapshot of at most `localCap` chunks ([[TracePipeline.LocalCap]]
-    * unless a test passes another) runs the store step on the driver: one
-    * bounded collect, one index lookup, then the stage writes, with the
-    * restore sim folded from the recipe the driver holds. A larger one
-    * runs it distributed, without the bounded collect when this call
-    * wrote the chunks stage and so counted it. Both write the same tables
-    * (see [[TracePipeline]]); `localCap = 0` forces the distributed plan.
+    * The store step takes [[TracePipeline]]'s size fork at
+    * [[TracePipeline.LocalCap]] chunks; a snapshot above it skips the
+    * bounded collect when this call wrote, and so counted, its chunks.
     */
   def backup(corpus: Dataset[CorpusFile], root: String, runId: String,
       settings: DestorSettings, prevRoot: Option[String] = None,
-      payload: Long = Rewrite.ContainerPayload,
-      localCap: Int = TracePipeline.LocalCap): TraceJobStats =
+      payload: Long = Rewrite.ContainerPayload): TraceJobStats =
+    backup(corpus, root, runId, settings, prevRoot, payload,
+      TracePipeline.LocalCap)
+
+  /** [[backup]] with the chunk count up to which its store step runs on
+    * the driver; `localCap = 0` forces the distributed plan. */
+  private[pipeline] def backup(corpus: Dataset[CorpusFile], root: String,
+      runId: String, settings: DestorSettings, prevRoot: Option[String],
+      payload: Long, localCap: Int): TraceJobStats =
     RunLog(corpus.sparkSession, root, runId) { log =>
       // a fresh chunks write counts its rows for free, so a snapshot above
       // the cap goes straight to the distributed store step
@@ -364,72 +362,14 @@ object ClusterJob {
       backupCore(chunkStream, None, root, settings, prevRoot, payload,
         TracePipeline.LocalCap, _))
 
-  /** A committed stage table read with just the columns a job uses: a
-    * declared schema runs no parquet footer-inference job. */
-  private def load(spark: SparkSession, root: String, table: String,
-      schema: String): DataFrame =
-    spark.read.schema(schema).format(TableIO.Format).load(s"$root/$table")
-
   /** `streamSize` is the chunk stream's row count when the caller knows
     * it for free ([[TracePipeline.oneJob]]). */
   private def backupCore(chunkStream: DataFrame, streamSize: Option[Long],
       root: String, settings: DestorSettings, prevRoot: Option[String],
       payload: Long, localCap: Int, log: RunLog): TraceJobStats = {
     val spark = chunkStream.sparkSession
-    import spark.implicits._
-    val (prevIndex, prevSparse, nextCid, backupId) = prevRoot match {
-      case Some(p) =>
-        require(TableIO.committed(s"$p/index"),
-          s"prevRoot $p has no committed index stage — chain only from a " +
-            "completed backup() root")
-        val idx = load(spark, p, "index", "fp STRING, idxCid BIGINT")
-        val sp =
-          if (TableIO.committed(s"$p/har_sparse"))
-            load(spark, p, "har_sparse", "containerId BIGINT")
-          else Seq.empty[Long].toDF("containerId")
-        // ONE aggregate reads both scalars. The store's high-water
-        // container id: every written container holds someone's latest
-        // copy, so the index max IS it. The backup id: max surviving "bN"
-        // stream label in the prev root's committed recipe table + 1 — the
-        // recipe is part of the resumability contract (metrics are not: a
-        // hard kill can lose the metrics rows, and a guessed id would
-        // duplicate a stream label that expire-by-label later deletes).
-        // `final_recipe` is a backup() root; `recipes` an expire() root.
-        // Fallback (a zero-row recipe, i.e. a valid empty backup): the
-        // metrics backup_id row, scanned only then. Neither present ⇒
-        // fail loudly.
-        val noId = lit(null).cast("long")
-        val labels = Seq("final_recipe", "recipes")
-          .find(t => TableIO.committed(s"$p/$t")).toSeq.map { t =>
-            load(spark, p, t, "stream STRING").select(noId.as("cid"),
-              regexp_extract(col("stream"), "^b(\\d+)$", 1).cast("long")
-                .as("bid"))
-          }
-        val ids = (idx.select(col("idxCid").as("cid"), noId.as("bid")) +:
-            labels).reduce(_ union _)
-          .agg(max(col("cid")), max(col("bid"))).head()
-        val nc = if (ids.isNullAt(0)) 0L else ids.getLong(0) + 1L
-        val fromLabels =
-          if (ids.isNullAt(1)) None else Some(ids.getLong(1) + 1L)
-        lazy val fromMetrics =
-          try spark.read.format(TableIO.Format).load(s"$p/metrics")
-            .filter(col("stage") === "backup" &&
-              col("metric") === "backup_id")
-            .agg(max(col("value"))).head() match {
-            case r if r.isNullAt(0) => None
-            case r => Some(r.getDouble(0).toLong + 1L)
-          }
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        val bid = fromLabels.orElse(fromMetrics).getOrElse(
-          throw new IllegalStateException(
-            s"prevRoot $p has neither 'bN' stream labels in its recipe " +
-              "table nor a backup_id metrics row — cannot derive the next " +
-              "backup id"))
-        (idx, sp, nc, bid)
-      case None =>
-        (Seq.empty[(String, Long)].toDF("fp", "idxCid"),
-          Seq.empty[Long].toDF("containerId"), 0L, 1L)
-    }
+    val prev = prevRoot.fold(StoreChain.empty(spark))(
+      StoreChain.fromRoot(spark, _))
     val storeStages = Seq("final_recipe", "index") ++
       (if (settings.rewrite.enableHar) Seq("har_sparse") else Nil)
     val freshFinal = !TableIO.committed(s"$root/final_recipe")
@@ -438,63 +378,37 @@ object ClusterJob {
     // materialization: the stats, the HAR monitor and the restore sim
     // read the committed final_recipe. An empty corpus snapshot is a valid
     // no-op backup (oneJob takes empty input).
-    val label = s"b$backupId"
     val (fr, base, local) =
       if (storeStages.forall(t => TableIO.committed(s"$root/$t"))) {
-        val fr = load(spark, root, "final_recipe", TracePipeline.RecipeSchema)
+        val fr = StoreChain.recipe(spark, root).get
         val sparseCount =
-          if (settings.rewrite.enableHar)
-            load(spark, root, "har_sparse", "containerId BIGINT").count()
+          if (settings.rewrite.enableHar) StoreChain.sparse(spark, root).count()
           else 0L
-        (fr, TracePipeline.recipeStats(backupId, fr, nextCid)
+        (fr, TracePipeline.recipeStats(prev.backupId, fr, prev.nextCid)
           .copy(sparse_containers = sparseCount), None)
       } else {
-        val r = TracePipeline.oneJob(backupId, chunkStream, label, prevIndex,
-          prevSparse, nextCid, settings, payload, (name, df, _) => {
+        val r = TracePipeline.oneJob(prev, chunkStream, settings, payload,
+          (name, df, _) => {
             val (t, n) = log.observedStage(name, count(lit(1)))(df)
             (t.drop("_lineage"), n.getLong(0))
           }, localCap, streamSize)
         (r.finalRec, r.stats, r.local)
       }
     // an empty committed recipe is a no-op backup (fresh OR resumed): the
-    // restore sim has nothing to replay. The sim has one row (one stream):
-    // a recipe the driver holds is folded there and written as that row,
-    // else the max() aggregates observed on the write read it.
-    val doSim = (settings.simulationLevel == "restore" ||
-      settings.simulationLevel == "all") && base.chunks > 0
+    // restore sim has nothing to replay. The sim has one row (one stream),
+    // whose values the max() aggregates observed on its write read.
     val sim =
-      if (!doSim) (0L, 0.0, 0.0)
-      else local match {
-        case Some(l) =>
-          val s = settings.restoreSimLocal(label, l.accesses)
-          log.stage("restore_sim")(Seq(s).toDF())
-          (s.containerReads, s.speedFactor, s.cfl)
-        case None =>
-          val (_, r) = log.observedStage("restore_sim",
-              max(col("containerReads")), max(col("speedFactor")),
-              max(col("cfl")))(
-            settings.restoreSim(fr.select(col("stream"), col("seq"),
-              col("containerId"), col("size"))))
-          (r.getLong(0), r.getDouble(1), r.getDouble(2))
+      if (!settings.runsRestoreSim || base.chunks == 0) (0L, 0.0, 0.0)
+      else {
+        val (_, r) = log.observedStage("restore_sim",
+            max(col("containerReads")), max(col("speedFactor")),
+            max(col("cfl")))(
+          TracePipeline.restoreSim(settings, prev.label, fr, local))
+        (r.getLong(0), r.getDouble(1), r.getDouble(2))
       }
     val stats = base.copy(
       container_reads = sim._1, speed_factor = sim._2, cfl = sim._3)
-    if (freshFinal)
-      log.add("backup",
-        "backup_id" -> stats.backup_id.toDouble,
-        "files" -> stats.files.toDouble,
-        "chunks" -> stats.chunks.toDouble,
-        "data_size" -> stats.data_size.toDouble,
-        "unique_chunks" -> stats.unique_chunks.toDouble,
-        "unique_size" -> stats.unique_size.toDouble,
-        "rewritten_chunks" -> stats.rewritten_chunks.toDouble,
-        "rewritten_size" -> stats.rewritten_size.toDouble,
-        "stored_size" -> stats.stored_size.toDouble,
-        "containers_written" -> stats.containers_written.toDouble,
-        "sparse_containers" -> stats.sparse_containers.toDouble,
-        "container_reads" -> stats.container_reads.toDouble,
-        "speed_factor" -> stats.speed_factor,
-        "cfl" -> stats.cfl)
+    if (freshFinal) log.addStats("backup", stats) // the backup.log line
     stats
   }
 
@@ -506,8 +420,8 @@ object ClusterJob {
   /** Retention over a COMPLETED backup chain — the `destor -d<jobid>`
     * analog for [[backup]] roots (reference: the delete pipeline run
     * between backup jobs, src/do_delete.c). Reads every chain root's
-    * committed recipe table (`final_recipe` for backup roots, `recipes`
-    * for previous expire roots — retention composes along the chain),
+    * recipe table ([[StoreChain.recipe]]: an expire root is a chain root
+    * too, so retention composes along the chain),
     * expires the backup selected by `expiredBackup` (a stream label such
     * as "b2", or an uncompacted root path) via [[GC.expireChain]]
     * (copy-level liveness — the multi-copy store rewriting produces),
@@ -517,15 +431,11 @@ object ClusterJob {
     *   recipes   — every surviving backup's recipe on the post-compaction
     *               layout (version/stream, seq, path, fp, size, dup,
     *               write, containerId)
-    *   index     — fp → latest surviving container (the `backup()` chain
-    *               contract, so the NEXT backup chains from THIS root)
+    *   index     — fp → latest surviving container
     *
     * plus a `backup_id` metrics row carrying the chain's surviving
-    * high-water id so the next chained backup numbers itself correctly.
-    * No `har_sparse` is written: compaction invalidates utilization
-    * monitor state (migrated containers are densely packed), so the next
-    * backup starts with an empty sparse list — the reference's monitor
-    * is likewise rebuilt from post-delete containers. Resume-by-skip
+    * high-water id, so the NEXT backup chains from THIS root
+    * ([[StoreChain.fromRoot]]; no `har_sparse` is written). Resume-by-skip
     * like every stage job; a resumed call returns the fresh call's stats.
     *
     * Two paths, chosen by the chain's size with one [[DriverFold.collect]]
@@ -536,10 +446,8 @@ object ClusterJob {
     *    and the backup-id high-water mark from the rows it holds. The
     *    migration and the index are [[DriverFold.table]]s; the recipes are
     *    the chain joined with the broadcast migration. 6 Spark jobs where
-    *    the distributed plan runs 21. Spark's SizeEstimator: 128 B a
-    *    collected row, about 160 B more for the fold's result, so 10^5 rows
-    *    hold about 29 MB, within [[DriverFold]]'s budget (the fold itself
-    *    took 0.43 s there).
+    *    the distributed plan runs 21; the driver's bytes are in
+    *    [[GC.expireLocal]]'s doc.
     *  - above it: [[GC.expireChain]], the label checks and a stats query,
     *    distributed, after that one collect job (none at `localCap = 0`);
     *    the stats are rebuilt from the committed tables.
@@ -564,18 +472,13 @@ object ClusterJob {
   private def expireCore(spark: SparkSession, chainRoots: Seq[String],
       expiredBackup: String, outRoot: String, payload: Long, localCap: Int,
       log: RunLog): ExpireStats = {
-    // a chain root is a backup() root (final_recipe) OR a previous
-    // expire() root (recipes, multi-label) — retention composes: the
-    // compacted root chains into the next backup AND into the next expiry
-    def recTable(r: String): Option[String] =
-      Seq("final_recipe", "recipes").find(t => TableIO.committed(s"$r/$t"))
-    chainRoots.foreach { r =>
-      require(recTable(r).isDefined,
+    val recs = chainRoots.map { r =>
+      val rec = StoreChain.recipe(spark, r)
+      require(rec.isDefined,
         s"chain root $r has no committed final_recipe/recipes stage — " +
           "expire only completed backup()/expire() roots")
+      r -> rec.get
     }
-    val recs = chainRoots.map(r =>
-      r -> load(spark, r, recTable(r).get, TracePipeline.RecipeSchema))
     // version = the backup's stream label
     val chain = recs.map(_._2).reduce(_ unionByName _)
       .withColumn("version", col("stream"))
@@ -594,20 +497,10 @@ object ClusterJob {
     }
     if (freshMig) {
       log.add("backup", "backup_id" -> maxBid.toDouble)
-      log.add("expire",
-        "rows_before" -> stats.rowsBefore.toDouble,
-        "rows_after" -> stats.rowsAfter.toDouble,
-        "migrated_chunks" -> stats.migratedChunks.toDouble,
-        "migrated_bytes" -> stats.migratedBytes.toDouble,
-        "containers_before" -> stats.containersBefore.toDouble,
-        "containers_after" -> stats.containersAfter.toDouble,
-        "index_fps" -> stats.indexFps.toDouble)
+      log.addStats("expire", stats)
     }
     stats
   }
-
-  /** A backup's stream label, "bN" for backup id N. */
-  private val BackupLabel = "^b(\\d+)$"
 
   /** [[expire]] on the driver: [[GC.expireLocal]] over the collected
     * chain (root index, stream, fp, containerId, size). The label checks
@@ -640,12 +533,11 @@ object ClusterJob {
     log.stage("migration")(migration.coalesce(1))
     log.stage("recipes")(
       GC.rewrite(chain, expired, broadcast(migration)).drop("version"))
-    log.stage("index")(DriverFold.table(spark, GC.IndexSchema,
-      e.indexFp.length)(i => Array(e.indexFp(i), e.indexCid(i))).coalesce(1))
+    log.stage("index")(
+      StoreChain.indexTable(spark, e.indexFp, e.indexCid).coalesce(1))
     val after = e.survives.indices.filter(e.survives(_))
-    val label = BackupLabel.r
-    val bids = after.map(stream(_)).distinct.flatMap(s =>
-      label.findFirstMatchIn(s.toString).flatMap(_.group(1).toLongOption))
+    val bids = after.map(stream(_)).distinct
+      .flatMap(s => StoreChain.backupId(s.toString))
     (ExpireStats(expired, rows.rows, after.length, e.migFp.length,
       e.migSize.sum, rows.longs(3).distinct.length,
       after.map(e.containerId(_)).distinct.length, e.indexFp.length),
@@ -696,7 +588,7 @@ object ClusterJob {
     val r = Seq(
         tagged(0, chain, col("containerId"), noValue),
         tagged(1, recipes, col("containerId"),
-          regexp_extract(col("stream"), BackupLabel, 1)),
+          StoreChain.backupId(col("stream"))),
         tagged(2, migration, noValue, col("size")),
         tagged(3, index, noValue, noValue))
       .reduce(_ union _)

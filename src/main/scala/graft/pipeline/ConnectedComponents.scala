@@ -94,8 +94,14 @@ object ConnectedComponents {
     def labels: Array[(Long, Long)] = ids.map(v => (v, find(v)))
   }
 
-  def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25,
-      localEdgeCap: Int = LocalEdgeCap): DataFrame = {
+  def run(vertices: DataFrame, edges: DataFrame,
+      maxIter: Int = 25): DataFrame =
+    run(vertices, edges, maxIter, LocalEdgeCap)
+
+  /** [[run]] with the edge count up to which the driver labels the graph;
+    * `localEdgeCap = 0` forces propagation. */
+  private[pipeline] def run(vertices: DataFrame, edges: DataFrame,
+      maxIter: Int, localEdgeCap: Int): DataFrame = {
     val labels = DriverFold.collect(edges.select(col("a").cast("long"),
         col("b").cast("long")), localEdgeCap) match {
       case Some(e) =>

@@ -92,12 +92,10 @@ final case class DestorSettings(
     RestoreSim.simulate(recipe, restoreCacheSize, restoreCache,
       restoreOptWindow).toDF()
 
-  /** [[restoreSim]] of one stream held on the driver: its
-    * (containerId, size) accesses in seq order. */
-  def restoreSimLocal(stream: String,
-      accesses: Iterator[(Long, Int)]): RestoreSim.StreamRestoreStats =
-    RestoreSim.simulateStream(stream, accesses, restoreCacheSize,
-      restoreCache, restoreOptWindow)
+  /** Whether a job runs the restore simulation: `simulation-level
+    * restore` or `all`. */
+  def runsRestoreSim: Boolean =
+    simulationLevel == "restore" || simulationLevel == "all"
 
   /** The `simulation-level` dispatch (reference src/destor.c:263-366 +
     * do_backup.c:31-37): ONLY `simulation-level all` routes backup input

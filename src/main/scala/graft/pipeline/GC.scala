@@ -80,10 +80,7 @@ object GC {
     val survivors = store
       .join(dead, Seq("fp"), "left_anti")
       .join(affected, Seq("cid"), "left_semi")
-    val base = recipe.agg(max(col("containerId"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0) + 1L
-    }
+    val base = StoreChain.nextCid(recipe)
     val migration = DedupPipeline.pack(
         survivors.select(col("fp"), col("cid"),
           col("size").cast("long").as("sz"), lit("all").as("s")),
@@ -159,10 +156,7 @@ object GC {
       .select(col("containerId")).distinct()
     val survivors = copies.filter(col("live"))
       .join(affected, Seq("containerId"), "left_semi")
-    val base = copies.agg(max(col("containerId"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0) + 1L
-    }
+    val base = StoreChain.nextCid(copies)
     val migration = DedupPipeline.pack(
         survivors.select(col("fp"), col("containerId").as("cid"),
           col("size").cast("long").as("sz"), lit("all").as("s")),
@@ -187,10 +181,9 @@ object GC {
       .withColumn("containerId", coalesce(col("new_cid"), col("containerId")))
       .drop("new_cid")
 
-  /** The columns of [[expireChain]]'s migration and index tables. */
+  /** The columns of [[expireChain]]'s migration table. */
   private[pipeline] val MigrationSchema =
     "fp STRING, old_cid BIGINT, size BIGINT, new_cid BIGINT"
-  private[pipeline] val IndexSchema = "fp STRING, idxCid BIGINT"
 
   /** [[expireChain]] over a chain the driver holds: the migration in
     * (old_cid, fp) order, one array per column; each row's container id

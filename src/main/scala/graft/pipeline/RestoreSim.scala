@@ -33,10 +33,8 @@ object RestoreSim {
     * within one area every needed container is read exactly once and all
     * its chunks in the area are filled on that read.
     */
-  private def asmStats(stream: String, accesses: Iterator[(Long, Int)],
-      cacheSize: Int): StreamRestoreStats = {
-    var chunks = 0L
-    var bytes = 0L
+  private def asmReads(accesses: Iterator[(Long, Int)],
+      cacheSize: Int): Long = {
     var reads = 0L
     val areaCapacity = (cacheSize - 1).toLong * ContainerSize
     var areaBytes = 0L
@@ -47,25 +45,17 @@ object RestoreSim {
         areaContainers.clear()
         areaBytes = 0
       }
-      chunks += 1; bytes += size
       areaBytes += size
       areaContainers += cid
     }
-    reads += areaContainers.size
-    val sf = if (reads == 0) 0.0 else bytes / (1024.0 * 1024.0) / reads
-    val cfl = if (reads == 0) 0.0
-      else math.ceil(bytes.toDouble / ContainerSize) / reads
-    StreamRestoreStats(stream, chunks, bytes, reads, sf, cfl)
+    reads + areaContainers.size
   }
 
-  private def lruStats(stream: String, accesses: Iterator[(Long, Int)],
-      cacheSize: Int): StreamRestoreStats = {
-    var chunks = 0L
-    var bytes = 0L
+  private def lruReads(accesses: Iterator[(Long, Int)],
+      cacheSize: Int): Long = {
     var reads = 0L
     val cache = new java.util.LinkedHashMap[Long, java.lang.Boolean](16, 0.75f, true)
-    accesses.foreach { case (cid, size) =>
-      chunks += 1; bytes += size
+    accesses.foreach { case (cid, _) =>
       if (!cache.containsKey(cid)) {
         reads += 1
         cache.put(cid, java.lang.Boolean.TRUE)
@@ -74,10 +64,7 @@ object RestoreSim {
         }
       } else cache.get(cid) // touch for recency
     }
-    val sf = if (reads == 0) 0.0 else bytes / (1024.0 * 1024.0) / reads
-    val cfl = if (reads == 0) 0.0
-      else math.ceil(bytes.toDouble / ContainerSize) / reads
-    StreamRestoreStats(stream, chunks, bytes, reads, sf, cfl)
+    reads
   }
 
   /** Belady-OPT with a BOUNDED lookahead window (reference:
@@ -91,10 +78,8 @@ object RestoreSim {
     * (src/optimal_restore.c:117). Ties break toward the larger container
     * id — deterministic, unlike a hash-map maxBy.
     */
-  private def optStats(stream: String, accesses: Iterator[(Long, Int)],
-      cacheSize: Int, lookahead: Int): StreamRestoreStats = {
-    var chunks = 0L
-    var bytes = 0L
+  private def optReads(accesses: Iterator[(Long, Int)],
+      cacheSize: Int, lookahead: Int): Long = {
     var reads = 0L
     val buf = new java.util.ArrayDeque[(Long, Int)]()
     // cid -> queue of global positions of its buffered accesses
@@ -111,11 +96,10 @@ object RestoreSim {
     val inCache = scala.collection.mutable.Set.empty[Long]
     fill()
     while (!buf.isEmpty) {
-      val (cid, size) = buf.removeFirst()
+      val cid = buf.removeFirst()._1
       val q = positions(cid)
       q.removeFirst()
       if (q.isEmpty) positions.remove(cid)
-      chunks += 1; bytes += size
       if (!inCache.contains(cid)) {
         reads += 1
         if (inCache.size >= cacheSize) {
@@ -136,10 +120,7 @@ object RestoreSim {
       }
       if (buf.size * 2 <= lookahead) fill()
     }
-    val sf = if (reads == 0) 0.0 else bytes / (1024.0 * 1024.0) / reads
-    val cfl = if (reads == 0) 0.0
-      else math.ceil(bytes.toDouble / ContainerSize) / reads
-    StreamRestoreStats(stream, chunks, bytes, reads, sf, cfl)
+    reads
   }
 
   /** Simulate the restore cache per stream. Input: recipe with
@@ -186,14 +167,22 @@ object RestoreSim {
     * directly. */
   def simulateStream(stream: String, accesses: Iterator[(Long, Int)],
       cacheSize: Int, policy: String,
-      optLookahead: Int): StreamRestoreStats =
-    policy match {
-      case "asm" => asmStats(stream, accesses, cacheSize)
-      case "opt" => optStats(stream, accesses, cacheSize, optLookahead)
-      case "lru" => lruStats(stream, accesses, cacheSize)
+      optLookahead: Int): StreamRestoreStats = {
+    var chunks, bytes = 0L
+    val counted = accesses.map { a => chunks += 1; bytes += a._2; a }
+    val reads = policy match {
+      case "asm" => asmReads(counted, cacheSize)
+      case "opt" => optReads(counted, cacheSize, optLookahead)
+      case "lru" => lruReads(counted, cacheSize)
       case other =>
         throw new IllegalArgumentException(s"unknown policy: $other")
     }
+    // the ratios of the object doc, both 0 without a read
+    val sf = if (reads == 0) 0.0 else bytes / (1024.0 * 1024.0) / reads
+    val cfl = if (reads == 0) 0.0
+      else math.ceil(bytes.toDouble / ContainerSize) / reads
+    StreamRestoreStats(stream, chunks, bytes, reads, sf, cfl)
+  }
 
   /** Run-length container access records (reference S7: consecutive-dedup
     * of recipe container ids, src/recipe/recipestore.c:372-399) — the OPT

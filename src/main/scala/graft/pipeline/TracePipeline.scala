@@ -117,10 +117,6 @@ object TracePipeline {
       (c, Await.result(obs.future, Duration.Inf).getLong(0))
   }
 
-  /** The columns `final_recipe` and expire's `recipes` are written with. */
-  private[pipeline] val RecipeSchema = "stream STRING, seq BIGINT, path " +
-    "STRING, fp STRING, size INT, dup BOOLEAN, write BOOLEAN, containerId BIGINT"
-
   /** Chunk count up to which [[oneJob]] runs the store step on the
     * driver, within [[DriverFold]]'s budget.
     *
@@ -158,38 +154,34 @@ object TracePipeline {
 
   /** One backup job against the cumulative store. `chunks` is the job's
     * raw chunk stream (columns path, chunkIdx, fp, size), replayed as ONE
-    * stream labelled `label`; it may be empty (a valid no-op backup: empty
-    * recipe, index carried unchanged, empty HAR monitor). `index` is fp →
-    * idxCid (the latest written copy per fingerprint); `prevSparse` is
-    * the previous job's trimmed sparse-container list (containerId);
-    * `nextCid` is the first free container id. When HAR is off, `sparse`
-    * returns `prevSparse` unchanged (the reference only maintains the
+    * stream labelled with `prev`'s label; it may be empty (a valid no-op
+    * backup: empty recipe, index carried unchanged, empty HAR monitor).
+    * `prev` is the chain state the job inherits. When HAR is off, `sparse`
+    * returns `prev.sparse` unchanged (the reference only maintains the
     * monitor when rewrite-enable-har is set). `materialize` is the ONLY
     * materialization of each result table. A caller that knows the
     * stream's `size` passes it, and a stream above `localCap` then skips
     * the bounded collect.
     */
-  private[graft] def oneJob(backupId: Long, chunks: DataFrame, label: String,
-      index: DataFrame, prevSparse: DataFrame, nextCid: Long,
+  private[graft] def oneJob(prev: StoreChain.State, chunks: DataFrame,
       settings: DestorSettings, payload: Long, materialize: Materialize,
       localCap: Int = LocalCap, size: Option[Long] = None): TraceJobResult = {
     val collected = if (size.exists(_ > localCap)) None else DriverFold.collect(
       chunks.select(col("path"), col("chunkIdx").cast("long"), col("fp"),
         col("size").cast("int")), localCap)
     collected match {
-      case Some(rows) => localJob(backupId, rows, label, index, prevSparse,
-        nextCid, settings, payload, materialize)
-      case None => distributedJob(backupId, sequence(chunks, label), index,
-        prevSparse, nextCid, settings, payload, materialize)
+      case Some(rows) => localJob(prev, rows, settings, payload, materialize)
+      case None => distributedJob(prev, sequence(chunks, prev.label),
+        settings, payload, materialize)
     }
   }
 
   /** [[oneJob]] on the driver: the fold of [[distributedJob]], statement
     * for statement, over the collected stream. */
-  private def localJob(backupId: Long, raw: DriverFold.Columns,
-      label: String, index: DataFrame, prevSparse: DataFrame, nextCid: Long,
+  private def localJob(prev: StoreChain.State, raw: DriverFold.Columns,
       settings: DestorSettings, payload: Long,
       materialize: Materialize): TraceJobResult = {
+    val StoreChain.State(backupId, index, prevSparse, nextCid) = prev
     val spark = index.sparkSession
     val har = settings.rewrite.enableHar
     // (path, chunkIdx) order; UTF8String compares by byte, as Spark does
@@ -256,23 +248,22 @@ object TracePipeline {
       uniqueSize, rewrittenChunks, rewrittenSize, uniqueSize + rewrittenSize,
       if (maxWritten < 0) 0L else maxWritten - nextCid + 1L,
       0L, 0L, 0.0, 0.0)
-    val stream = UTF8String.fromString(label)
+    val stream = UTF8String.fromString(prev.label)
     val (finalRec, _) = materialize("final_recipe", DriverFold.table(spark,
-      RecipeSchema, n)(i => Array(stream, i + 1L, path(i), fp(i), size(i),
-      dup(i), write(i), containerId(i))).coalesce(1), Some(n.toLong))
+      StoreChain.RecipeSchema, n)(i => Array(stream, i + 1L, path(i), fp(i),
+      size(i), dup(i), write(i), containerId(i))).coalesce(1), Some(n.toLong))
     // 8. the HAR trim
     val recipe = Rewrite.LocalStream(size, containerId, dup)
     val (sparseList, sparseCount) = if (!har) (prevSparse, 0L) else {
       val ids = Rewrite.harSparseLocal(recipe,
         settings.rewrite.harUtilizationThreshold,
         settings.rewrite.harRewriteLimit, payload)
-      materialize("har_sparse", DriverFold.table(spark, "containerId BIGINT",
-        ids.length)(i => Array(ids(i))).coalesce(1), Some(ids.length.toLong))
+      materialize("har_sparse", StoreChain.sparseTable(spark, ids).coalesce(1),
+        Some(ids.length.toLong))
     }
     val copies = (0 until n).filter(write(_)).toArray
-    val (newIndex, _) = materialize("index", upsert(index,
-      DriverFold.table(spark, "fp STRING, idxCid BIGINT", copies.length)(
-        i => Array(fp(copies(i)), packCid(copies(i))))), None)
+    val (newIndex, _) = materialize("index", upsert(index, StoreChain
+      .indexTable(spark, copies.map(fp(_)), copies.map(packCid(_)))), None)
     TraceJobResult(finalRec, newIndex, sparseList,
       stats.copy(sparse_containers = sparseCount), Some(recipe))
   }
@@ -280,10 +271,10 @@ object TracePipeline {
   /** [[oneJob]] distributed. `seqd` is the job's [[sequence]]d chunk
     * stream (columns path, chunkIdx, fp, size, stream, seq); the stats and
     * the HAR monitor read the materialized recipe. */
-  private def distributedJob(backupId: Long, seqd: DataFrame,
-      index: DataFrame, prevSparse: DataFrame, nextCid: Long,
+  private def distributedJob(prev: StoreChain.State, seqd: DataFrame,
       settings: DestorSettings, payload: Long,
       materialize: Materialize): TraceJobResult = {
+    val StoreChain.State(backupId, index, prevSparse, nextCid) = prev
     val first = seqd.groupBy(col("fp")).agg(min(col("seq")).as("firstSeq"))
     // every rewrite pass reads its input more than once (cbr: context
     // window + per-stream max; cap, cfl: a self-join), so the joins run
@@ -372,42 +363,41 @@ object TracePipeline {
       r.getLong(4) + r.getLong(6), containersWritten, 0L, 0L, 0.0, 0.0)
   }
 
+  /** The configured restore sim of one job's recipe as a one-row table:
+    * the driver's fold of `local` (stream `label`) when the store step ran
+    * there, else [[RestoreSim.simulate]] over `finalRec`. */
+  private[pipeline] def restoreSim(settings: DestorSettings, label: String,
+      finalRec: DataFrame, local: Option[Rewrite.LocalStream]): DataFrame =
+    local match {
+      case Some(l) => finalRec.sparkSession.createDataFrame(Seq(
+        RestoreSim.simulateStream(label, l.accesses, settings.restoreCacheSize,
+          settings.restoreCache, settings.restoreOptWindow)))
+      case None => settings.restoreSim(finalRec.select(col("stream"),
+        col("seq"), col("containerId"), col("size")))
+    }
+
   def run(jobs: Seq[DataFrame], settings: DestorSettings,
-      payload: Long = Rewrite.ContainerPayload,
-      localCap: Int = LocalCap): DataFrame = {
+      payload: Long = Rewrite.ContainerPayload): DataFrame =
+    run(jobs, settings, payload, LocalCap)
+
+  /** [[run]] with the chunk count up to which each job's store step runs
+    * on the driver; `localCap = 0` forces the distributed plan. */
+  private[pipeline] def run(jobs: Seq[DataFrame], settings: DestorSettings,
+      payload: Long, localCap: Int): DataFrame = {
     require(jobs.nonEmpty, "TracePipeline: no trace jobs")
     val spark = jobs.head.sparkSession
     import spark.implicits._
-    var index = Seq.empty[(String, Long)].toDF("fp", "idxCid")
-    var prevSparse = Seq.empty[Long].toDF("containerId")
-    var nextCid = 0L
-    val stats = scala.collection.mutable.ArrayBuffer.empty[TraceJobStats]
-    jobs.zipWithIndex.foreach { case (job0, i) =>
-      val b = i + 1L
-      // an empty trace job (a trace of just `stream end`) is a valid no-op
-      // backup: zero stats, the index/cid state carries unchanged and the
-      // HAR monitor of an empty recipe is empty
-      val label = s"b$b"
-      val r = oneJob(b, job0, label, index, prevSparse, nextCid, settings,
-        payload, checkpoint, localCap)
-      val rs =
+    var state = StoreChain.empty(spark)
+    val stats = jobs.map { chunks =>
+      val r = oneJob(state, chunks, settings, payload, checkpoint, localCap)
+      val (reads, sf, cfl) =
         if (r.stats.chunks == 0) (0L, 0.0, 0.0)
-        else r.local match {
-          case Some(l) =>
-            val s = settings.restoreSimLocal(label, l.accesses)
-            (s.containerReads, s.speedFactor, s.cfl)
-          case None => settings.restoreSim(
-              r.finalRec.select(col("stream"), col("seq"),
-                col("containerId"), col("size")))
-            .select(col("containerReads"), col("speedFactor"), col("cfl"))
-            .as[(Long, Double, Double)].head()
-        }
-      stats += r.stats.copy(
-        container_reads = rs._1, speed_factor = rs._2, cfl = rs._3)
-      index = r.newIndex
-      nextCid += r.stats.containers_written
-      prevSparse = r.sparse
+        else restoreSim(settings, state.label, r.finalRec, r.local)
+          .select(col("containerReads"), col("speedFactor"), col("cfl"))
+          .as[(Long, Double, Double)].head()
+      state = state.after(r)
+      r.stats.copy(container_reads = reads, speed_factor = sf, cfl = cfl)
     }
-    spark.createDataset(stats.toSeq).toDF()
+    spark.createDataset(stats).toDF()
   }
 }

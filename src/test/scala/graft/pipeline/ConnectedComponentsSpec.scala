@@ -126,7 +126,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       // cap 0 forces the distributed path on every non-empty edge set
       Seq("local" -> ConnectedComponents.LocalEdgeCap, "distributed" -> 0)
         .foreach { case (path, cap) =>
-          val out = ConnectedComponents.run(vertices, edges,
+          val out = ConnectedComponents.run(vertices, edges, maxIter = 25,
             localEdgeCap = cap).as[(Long, Long)].collect()
           assert(out.length === expected.size, s"$shape, $path: one row per vertex")
           assert(out.toSet === expected, s"$shape, $path")

@@ -1,14 +1,11 @@
 package graft.pipeline
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.SparkTestSession.withJobs
 
 /** [[DriverFold.collect]] returns a plan's rows iff it holds at most
   * `cap` of them, in exactly one Spark job, whether the limit reaches the
@@ -19,20 +16,6 @@ class DriverFoldSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val Cap = 10
-
-  /** `body`'s result and the Spark jobs it started. */
-  private def withJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try { val r = body; ListenerBusDrain(sc); (r, n.get) }
-    finally sc.removeSparkListener(l)
-  }
 
   private def collectOnce(plan: DataFrame): Option[DriverFold.Columns] = {
     val (r, jobs) = withJobs(DriverFold.collect(plan, Cap))

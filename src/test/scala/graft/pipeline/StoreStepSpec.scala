@@ -3,7 +3,6 @@ package graft.pipeline
 import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -70,13 +69,11 @@ class StoreStepSpec extends AnyFunSuite {
     * `sized` passes each job's chunk count as a caller that knows it does. */
   private def replay(js: Seq[DataFrame], s: DestorSettings,
       localCap: Int, sized: Boolean = false): Seq[Store] = {
-    var index = Seq.empty[(String, Long)].toDF("fp", "idxCid")
-    var prevSparse = Seq.empty[Long].toDF("containerId")
-    var nextCid = 0L
-    js.zipWithIndex.map { case (chunks, i) =>
-      val label = s"b${i + 1}"
-      val r = TracePipeline.oneJob(i + 1L, chunks, label, index, prevSparse,
-        nextCid, s, Payload, TracePipeline.checkpoint, localCap,
+    var state = StoreChain.empty(spark)
+    js.map { chunks =>
+      val label = state.label
+      val r = TracePipeline.oneJob(state, chunks, s, Payload,
+        TracePipeline.checkpoint, localCap,
         if (sized) Some(chunks.count()) else None)
       assert(r.local.isDefined === (chunks.count() <= localCap),
         s"job $label took the wrong path at localCap $localCap")
@@ -85,24 +82,15 @@ class StoreStepSpec extends AnyFunSuite {
       assert(r.finalRec.columns.toSeq === recipeCols)
       val sims =
         if (r.stats.chunks == 0) Nil
-        else Caches.map { c =>
-          val sc = s.copy(restoreCache = c)
-          r.local match {
-            case Some(l) => sc.restoreSimLocal(label, l.accesses)
-            case None => RestoreSim.simulate(
-                r.finalRec.select(col("stream"), col("seq"),
-                  col("containerId"), col("size")),
-                sc.restoreCacheSize, c, sc.restoreOptWindow).head()
-          }
-        }
+        else Caches.map(c => TracePipeline.restoreSim(
+            s.copy(restoreCache = c), label, r.finalRec, r.local)
+          .as[RestoreSim.StreamRestoreStats].head())
       val out = Store(
         r.finalRec.as[(String, Long, String, String, Int, Boolean, Boolean,
           Long)].collect().sortBy(_._2).toSeq,
         r.newIndex.as[(String, Long)].collect().sorted.toSeq,
         r.sparse.as[Long].collect().sorted.toSeq, r.stats, sims)
-      index = r.newIndex
-      prevSparse = r.sparse
-      nextCid += r.stats.containers_written
+      state = state.after(r)
       out
     }
   }
@@ -123,7 +111,9 @@ class StoreStepSpec extends AnyFunSuite {
         "and distributed store steps agree under every restore cache") {
       val s = settingsOf(algorithm, har)
       val local = replay(jobs, s, TracePipeline.LocalCap)
-      val distributed = replay(jobs, s, 0)
+      // uncoalesced, so the scans of the store step (sequence, pack, the
+      // rewrite passes) keep 8 range partitions that the stream straddles
+      val distributed = SparkTestSession.uncoalesced(replay(jobs, s, 0))
       local.zip(distributed).zipWithIndex.foreach { case ((l, d), i) =>
         assert(l.stats === d.stats, s"stats of job ${i + 1}")
         assert(l.recipe === d.recipe, s"final recipe of job ${i + 1}")
@@ -152,7 +142,7 @@ class StoreStepSpec extends AnyFunSuite {
     val s = settingsOf("cbr", har = true)
     val first = jobs.take(1)
     val n = first.head.count().toInt
-    val reference = replay(first, s, 0)
+    val reference = SparkTestSession.uncoalesced(replay(first, s, 0))
     assert(replay(first, s, n) === reference)
     assert(replay(first, s, n - 1) === reference)
     // the optimizer drops the limit of a plan of known size; one of
@@ -265,7 +255,8 @@ class StoreStepSpec extends AnyFunSuite {
     val s = settingsOf("cap", har = true).copy(restoreCache = "opt")
     def stats(localCap: Int) = TracePipeline.run(jobs, s, Payload, localCap)
       .as[TraceJobStats].collect().toSeq
-    assert(stats(TracePipeline.LocalCap) === stats(0))
+    assert(stats(TracePipeline.LocalCap) ===
+      SparkTestSession.uncoalesced(stats(0)))
   }
 }
 
